@@ -24,9 +24,10 @@ import org.apache.spark.sql.DataFrame
   *
   * Contract notes:
   *  - Branches MAY construct queries and run `ensure*` builders
-  *    (optimization r16): [[BuildTimer]] serializes outermost builder
-  *    frames on a global lock, so concurrent builds neither
-  *    double-accrue the meter nor race a cold artifact write.
+  *    (optimization r16): [[BuildTimer]] accrues the interval UNION of
+  *    concurrent outermost builder frames, so overlapping builds do not
+  *    double-accrue the meter, and cold artifact writes go through the
+  *    per-path lock in `Artifacts.buildGate`, so they do not race.
   *  - `localCheckpoint` keeps every row on the executors (block
   *    manager), so this is NOT a driver collect; result rows and schema
   *    are unchanged, only the evaluation order is.

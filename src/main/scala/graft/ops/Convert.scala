@@ -1,6 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.TimeoutException
+
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.schema.{HogiaSchema, HogiaTable}
@@ -54,10 +59,21 @@ object Convert {
     * (`JdbcTableIO.truncateLoad` + `HogiaTable.indexDdl`). */
   def reverseTransform(table: HogiaTable, df: DataFrame): DataFrame = df
 
+  /** How long [[konvertera]] waits for a table's row count once the sink
+    * has returned. The listener that delivers it normally takes
+    * milliseconds; the bound only has to outlast a backed-up listener bus. */
+  val CountWait: FiniteDuration = 30.seconds
+
   /** Run the full conversion, reference table order preserved. Returns
     * per-table row counts (the reference's `number_of_rows` progress
     * metric, `hhek2sqlite.go:1137-1146` — computed here from the write
-    * result, not an extra pre-scan). */
+    * result, not an extra pre-scan): an [[Observation]] on the frame
+    * handed to the sink counts the rows as the sink's own action runs.
+    *
+    * Observations complete through an asynchronous listener, so the wait
+    * for each count is bounded by [[CountWait]]: a sink that returns
+    * without running its frame fails the conversion with the table's
+    * name instead of hanging it. */
   def konvertera(
       spark: SparkSession,
       source: TableIO,
@@ -68,8 +84,17 @@ object Convert {
       val in = source.read(spark, table)
       val out =
         if (reverse) reverseTransform(table, in) else forwardTransform(table, in)
-      sink.truncateLoad(out, table)
-      table.name -> sink.read(spark, table).count()
+      val written = Observation()
+      sink.truncateLoad(out.observe(written, count(lit(1)).as("rows")), table)
+      val rows =
+        try Await.result(written.future, CountWait).getLong(0)
+        catch {
+          case _: TimeoutException =>
+            throw new IllegalStateException(
+              s"${table.name}: the sink returned without writing the frame " +
+                s"it was handed (no row count within $CountWait)")
+        }
+      table.name -> rows
     }.toMap
 
   /** Build the golden fixture content (mirror of GOTEST1.MDB, specified

@@ -309,8 +309,9 @@ object JetFile {
       val tdef = catalog(table)
       val cols = columnsByObject.getOrElse(tdef, Seq.empty)
       val colByName = cols.map(c => c.name -> c).toMap
+      val toCp1252 = new Cp1252
       val target = idx.columns.zip(key).map { case (cn, v) =>
-        keyPart(colByName(cn).jetType, v, s"$table.$cn")
+        keyPart(colByName(cn).jetType, v, s"$table.$cn", toCp1252)
       }.reduce(_ ++ _)
       var pagesTouched = 0
       val hits = Seq.newBuilder[(Int, Int)]
@@ -391,17 +392,22 @@ object JetFile {
   private def isFixedType(c: Col): Boolean = jetCode(c)._1 < 10
 
   /** Strings travel as Windows-1252 (single-byte, pre-Unicode Jet);
-    * unmappable characters fail loudly rather than write `?`. */
-  private def toCp1252(s: String, col: String): Array[Byte] =
-    try {
-      val bb = java.nio.charset.Charset.forName("windows-1252").newEncoder()
-        .encode(java.nio.CharBuffer.wrap(s))
-      java.util.Arrays.copyOfRange(bb.array(), bb.position(), bb.limit())
-    } catch {
-      case e: java.nio.charset.CharacterCodingException =>
-        throw new IllegalArgumentException(
-          s"$col value not representable in Windows-1252: '$s'", e)
-    }
+    * unmappable characters fail loudly rather than write `?`. One per
+    * [[write]] call: the encoder resets itself on every `encode`, but is
+    * not thread-safe. */
+  private final class Cp1252 {
+    private val encoder = java.nio.charset.Charset.forName("windows-1252").newEncoder()
+
+    def apply(s: String, col: String): Array[Byte] =
+      try {
+        val bb = encoder.encode(java.nio.CharBuffer.wrap(s))
+        java.util.Arrays.copyOfRange(bb.array(), bb.position(), bb.limit())
+      } catch {
+        case e: java.nio.charset.CharacterCodingException =>
+          throw new IllegalArgumentException(
+            s"$col value not representable in Windows-1252: '$s'", e)
+      }
+  }
 
   // ---- index key encoding ------------------------------------------------
 
@@ -415,7 +421,7 @@ object JetFile {
     * transform is undocumented — this canonical form is this codec's
     * own, shared by writer and reader, which is what the lookup
     * contract needs. */
-  private def keyPart(jetType: Int, v: Any, col: String): Array[Byte] = {
+  private def keyPart(jetType: Int, v: Any, col: String, toCp1252: Cp1252): Array[Byte] = {
     if (v == null) return Array(0x00.toByte)
     val body: Array[Byte] = jetType match {
       case 4 =>
@@ -510,7 +516,7 @@ object JetFile {
     * observable to callers (ADVICE r4). */
   private def encodeUserRow(table: HogiaTable, row: Row,
       interiorNulls: java.util.concurrent.atomic.AtomicLong,
-      memoWriter: Array[Byte] => Array[Byte]): Array[Byte] = {
+      memoWriter: Array[Byte] => Array[Byte], toCp1252: Cp1252): Array[Byte] = {
     val fixedCols = table.cols.filter(isFixedType)
     val varCols = table.cols.filter(!isFixedType(_))
     val mask = new Array[Byte]((fixedCols.size + 7) / 8)
@@ -573,6 +579,7 @@ object JetFile {
     * coercion matches the reference's F6 NULL→"" rule but must be
     * observable, ADVICE r4). */
   def write(path: String, tables: Seq[(HogiaTable, Seq[Row])]): Map[String, Long] = {
+    val toCp1252 = new Cp1252
     val pages = scala.collection.mutable.ArrayBuffer[Array[Byte]]()
     def newPage(tpe: Int): Int = {
       val a = new Array[Byte](PageSize)
@@ -706,7 +713,7 @@ object JetFile {
     val indexRows = Seq.newBuilder[(String, graft.schema.Index, Int)]
     val coerced = tables.map { case (t, rows) =>
       val nulls = new java.util.concurrent.atomic.AtomicLong()
-      val placements = dataPages(tdefOf(t.name), rows.map(encodeUserRow(t, _, nulls, writeMemo)))
+      val placements = dataPages(tdefOf(t.name), rows.map(encodeUserRow(t, _, nulls, writeMemo, toCp1252)))
       if (nulls.get() > 0)
         System.err.println(s"[jet] ${t.name}: ${nulls.get()} interior NULL " +
           "TEXT value(s) stored as '' (Jet row format marks only trailing NULLs)")
@@ -719,7 +726,7 @@ object JetFile {
           val parts = ix.columns.map { cn =>
             val c = colByName.getOrElse(cn, throw new IllegalArgumentException(
               s"index ${ix.name}: no column $cn in ${t.name}"))
-            keyPart(jetCode(c)._1, r.get(r.fieldIndex(cn)), s"${t.name}.$cn")
+            keyPart(jetCode(c)._1, r.get(r.fieldIndex(cn)), s"${t.name}.$cn", toCp1252)
           }
           (parts.reduce(_ ++ _), parts.forall(_.length > 1), place)
         }.sortBy(e => (e._1, e._3))(entryOrdering)
@@ -824,12 +831,12 @@ final class JetTableIO(path: String) extends TableIO {
   }
 
   override def truncateLoad(df: DataFrame, table: HogiaTable): Unit = {
-    TableIO.guardSingleFile(df, table, "Jet/MDB") // loud before the collect
-    if (loaded.isEmpty && Files.exists(Paths.get(path)))
-      Files.delete(Paths.get(path))
     val ordered = df.select(table.cols.map(c =>
       org.apache.spark.sql.functions.col(s"`${c.name}`")): _*)
-    loaded += table.name -> ((table, ordered.collect().toSeq))
+    val rows = TableIO.collectSingleFile(ordered, table, "Jet/MDB") // loud before the file is touched
+    if (loaded.isEmpty && Files.exists(Paths.get(path)))
+      Files.delete(Paths.get(path))
+    loaded += table.name -> ((table, rows.toSeq))
     JetFile.write(path, loaded.values.toSeq)
   }
 

@@ -42,8 +42,8 @@ final class JetScriptTableIO(path: String) extends TableIO {
   private var started = false
   private var written: Map[String, DataFrame] = Map.empty
 
-  /** Echoes the frame the emitted script would load — lets the convert
-    * pipeline's read-back row accounting run against a write-only sink. */
+  /** Echoes the frame the emitted script would load — lets a caller read
+    * back what this write-only sink emitted. */
   override def read(spark: SparkSession, table: HogiaTable): DataFrame =
     written.getOrElse(table.name,
       throw new IllegalStateException(s"${table.name} not yet emitted"))

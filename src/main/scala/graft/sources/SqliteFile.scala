@@ -597,9 +597,9 @@ final class SqliteTableIO(path: String) extends TableIO {
       table.schema)
 
   override def truncateLoad(df: DataFrame, table: HogiaTable): Unit = {
-    TableIO.guardSingleFile(df, table, "SQLite") // loud before the collect
+    val rows = TableIO.collectSingleFile(df, table, "SQLite") // loud before the file is touched
     if (loaded.isEmpty && Files.exists(Paths.get(path))) Files.delete(Paths.get(path))
-    loaded += table.name -> ((table, df.collect().toSeq))
+    loaded += table.name -> ((table, rows.toSeq))
     SqliteFile.write(path, loaded.values.toSeq)
   }
 

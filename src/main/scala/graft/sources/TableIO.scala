@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 
 import graft.schema.HogiaTable
 
@@ -30,31 +30,39 @@ object TableIO {
     * table through the driver (the reference's own single-threaded
     * writer shape). Without a guard a 10⁸-row table OOMs the driver
     * mid-collect; with it the export fails LOUDLY with routing guidance
-    * before any materialization. Configurable per session via
-    * `spark.graft.singleFileMaxRows`. The probe is `limit(cap+1).count()`
-    * — it stops scanning at cap+1 rows, so the guard costs O(cap) even
-    * on a 100 TB input. */
+    * before the file is touched. Configurable per session via
+    * `spark.graft.singleFileMaxRows`. The guard is the collect itself:
+    * `limit(cap+1).collect()` stops scanning at cap+1 rows, so the driver
+    * never holds more than cap+1 rows even on a 100 TB input, and no
+    * separate counting job runs. */
   val SingleFileMaxRowsKey = "spark.graft.singleFileMaxRows"
   val SingleFileMaxRowsDefault = 10000000L
 
-  private[sources] def guardSingleFile(df: DataFrame, table: HogiaTable,
-      sink: String): Unit = {
+  /** The rows of `df` for a single-file sink, or the routing error when
+    * there are more than the cap. */
+  private[sources] def collectSingleFile(df: DataFrame, table: HogiaTable,
+      sink: String): Array[Row] = {
     val cap = df.sparkSession.conf
       .getOption(SingleFileMaxRowsKey).map(_.toLong)
       .getOrElse(SingleFileMaxRowsDefault)
-    // limit() takes an Int, so for caps past 2^31-1 a clamped limit
-    // could never exceed the cap and the guard would silently pass —
-    // fall back to a full count there (a user raising the cap that far
-    // asked for the scan; the guard must still be enforceable)
-    val n =
-      if (cap + 1 <= Int.MaxValue.toLong) df.limit((cap + 1).toInt.max(1)).count()
-      else df.count()
-    if (n > cap)
+    def refuse(): Nothing =
       throw new IllegalArgumentException(
         s"${table.name}: more than $cap rows bound for the single-file " +
           s"$sink sink, which materializes on the driver. Export this " +
           "table through JdbcTableIO (cluster-parallel) or ParquetTableIO " +
           s"instead, or raise $SingleFileMaxRowsKey knowingly.")
+    // limit() takes an Int, so for caps past 2^31-1 a clamped limit
+    // could never exceed the cap and the guard would silently pass —
+    // fall back to a full count there (a user raising the cap that far
+    // asked for the scan; the guard must still be enforceable)
+    if (cap + 1 <= Int.MaxValue.toLong) {
+      val rows = df.limit((cap + 1).toInt.max(1)).collect()
+      if (rows.length > cap) refuse()
+      rows
+    } else {
+      if (df.count() > cap) refuse()
+      df.collect()
+    }
   }
 }
 

@@ -215,6 +215,25 @@ class JetFileSpec extends SparkSpecBase {
     assert(back.getAs[String]("Text") == "sista")
   }
 
+  test("text outside Windows-1252 fails loudly: row values, index keys and lookups") {
+    val dir = Files.createTempDirectory("graft_jet_cp1252").toString
+    val t = HogiaSchema.byName("Personer")
+    def row(id: Long, namn: String) =
+      new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
+        Array[Any](id, namn, "1990", "Man"), t.schema)
+    // the writer's one encoder serves every value before the bad one
+    val e = intercept[IllegalArgumentException](JetFile.write(s"$dir/bad.mdb",
+      Seq(t -> Seq(row(1L, "Åsa €"), row(2L, "Zoë"), row(3L, "Zoë 漢")))))
+    assert(e.getMessage == "Personer.Namn value not representable in Windows-1252: 'Zoë 漢'")
+    assert(!Files.exists(java.nio.file.Paths.get(s"$dir/bad.mdb")))
+    JetFile.write(s"$dir/ok.mdb", Seq(t -> Seq(row(1L, "Åsa €"), row(2L, "Zoë"))))
+    val db = JetFile.open(s"$dir/ok.mdb")
+    assert(db.indexLookup("Personer", "idxNamn", Seq("zoë"))._1.map(_("Löpnr")) == Seq(2L))
+    val e2 = intercept[IllegalArgumentException](
+      db.indexLookup("Personer", "idxNamn", Seq("漢")))
+    assert(e2.getMessage == "Personer.Namn value not representable in Windows-1252: '漢'")
+  }
+
   test("indexes materialize as B-tree pages; point lookup touches only the descent path") {
     val dir = Files.createTempDirectory("graft_jet_idx").toString
     val mdbPath = s"$dir/idx.mdb"
