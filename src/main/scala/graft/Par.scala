@@ -53,33 +53,20 @@ object Par {
     val pool = Executors.newFixedThreadPool(math.min(parallelism, tasks.size))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     val group = s"graft-par-${groupSeq.incrementAndGet()}"
-    val debug = sys.env.get("SPARK_GRAFT_PAR_DEBUG").contains("1")
-    val t0 = System.nanoTime()
     try {
       val fs = tasks.zipWithIndex.map { case (f, i) => Future {
         // job-group properties are thread-local: tag this branch's jobs
         sc.setJobGroup(group, s"$group branch $i", interruptOnCancel = true)
-        try {
-          val s0 = System.nanoTime()
-          val r = f()
-          if (debug) System.err.println(
-            f"[par] branch $i ${(System.nanoTime() - s0) / 1e9}%.2fs " +
-              f"(at ${(System.nanoTime() - t0) / 1e9}%.2fs)")
-          r
-        } finally sc.clearJobGroup()
+        try f() finally sc.clearJobGroup()
       } }
-      val r =
-        try Await.result(Future.sequence(fs), Duration.Inf)
-        catch {
-          case e: Throwable =>
-            // first failure: stop the siblings' running jobs before
-            // propagating — a detached branch must not outlive the call
-            try sc.cancelJobGroup(group) catch { case _: Throwable => () }
-            throw e
-        }
-      if (debug) System.err.println(
-        f"[par] all ${tasks.size} branches ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
+      try Await.result(Future.sequence(fs), Duration.Inf)
+      catch {
+        case e: Throwable =>
+          // first failure: stop the siblings' running jobs before
+          // propagating — a detached branch must not outlive the call
+          try sc.cancelJobGroup(group) catch { case _: Throwable => () }
+          throw e
+      }
     } finally pool.shutdown()
   }
 

@@ -16,6 +16,7 @@ object Profile {
         .config("spark.ui.enabled", "false"), "profile")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    GraftExtensions.install(spark)
     def time[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime()
       val r = f
@@ -35,7 +36,6 @@ object Profile {
         val emb = graft.queries.Tables.embeddings(spark, sfDir)
         val (cb, dim, _) = time("pq:train")(
           graft.operators.Similarity.pqTrain(emb, 8, 256, iters = 1))
-        graft.functions.PqOps.register(spark)
         // serve phase reuses the trained model (pqTopK would retrain)
         time("pq:serve") {
           val (qid, dot, nrm) =
@@ -142,8 +142,6 @@ object Profile {
       // bloom build / final certify action)
       case "bloom_phases" =>
         import org.apache.spark.sql.functions._
-        graft.functions.Sketch.register(spark)
-        graft.functions.BloomOps.register(spark)
         val docs = graft.queries.Tables.documents(spark, sfDir)
         val toks = graft.operators.Curation.gramToks(col("text"))
         val grams = docs.select(col("doc_id"),
@@ -175,8 +173,6 @@ object Profile {
       // micro-breakdown of bloom build/probe costs on cached grams
       case "bloom_micro" =>
         import org.apache.spark.sql.functions._
-        graft.functions.Sketch.register(spark)
-        graft.functions.BloomOps.register(spark)
         val docs = graft.queries.Tables.documents(spark, sfDir)
         val toks = graft.operators.Curation.gramToks(col("text"))
         val grams = docs.select(col("doc_id"),
@@ -302,7 +298,6 @@ object Profile {
         import org.apache.spark.sql.functions._
         val spark2 = spark
         import spark2.implicits._
-        graft.functions.QualityModel.register(spark)
         val recs = graft.operators.Crawl.ensureWarcFiles(spark, sfDir)
           .select("warc").as[Array[Byte]]
           .flatMap(bytes => graft.sources.WarcFile.decodeWarcGz(bytes).map(r =>
@@ -348,7 +343,6 @@ object Profile {
       // tokenize-vs-kernel split of the quality scoring stage
       case "quality_micro" =>
         import org.apache.spark.sql.functions._
-        graft.functions.QualityModel.register(spark)
         val docs = graft.queries.Tables.documents(spark, sfDir)
         def noop2(df: org.apache.spark.sql.DataFrame): Unit =
           df.write.format("noop").mode("overwrite").save()
@@ -366,7 +360,6 @@ object Profile {
       // q_split_leakage): sketch / df / prefix / candidates / verify
       case "jaccard_phases" =>
         import org.apache.spark.sql.functions._
-        graft.functions.Sketch.register(spark)
         val docs = graft.queries.Tables.documents(spark, sfDir)
         def noopJ(df: org.apache.spark.sql.DataFrame): Unit =
           df.write.format("noop").mode("overwrite").save()
@@ -456,7 +449,6 @@ object Profile {
       // grams / leakage / packing)
       case "curation_phases" =>
         import org.apache.spark.sql.functions._
-        graft.functions.Sketch.register(spark)
         val docs = graft.queries.Tables.documents(spark, sfDir)
         val (wmap, wOov, bias) = time("cur:train")(
           graft.operators.Curation.nbFrozenModel(docs, col("lang") === "en"))

@@ -27,7 +27,14 @@ object SparkEntry {
     // every gate must carry an oracle and vice versa — a one-sided key
     // is a silently weaker (or dead) gate, refused at assembly
     graft.queries.Registry.requireAligned(m.keySet, oracleSql.keySet)
-    m
+    // every entry installs graft's SQL functions and plan rules on its
+    // session first, so plan shape never depends on session history
+    m.map { case (name, q) =>
+      name -> ((s: SparkSession, dir: String) => {
+        GraftExtensions.install(s)
+        q(s, dir)
+      })
+    }
   }
 
   def oracleSql: Map[String, String] =

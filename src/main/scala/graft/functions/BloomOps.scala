@@ -1,18 +1,19 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.graft.Bridge
 
-/** Registry shims over Spark's OWN Bloom-filter expressions
+/** Column builders over Spark's OWN Bloom-filter expressions
   * (`BloomFilterAggregate` / `BloomFilterMightContain` — the machinery
   * behind Catalyst's InjectRuntimeFilter), which ship in every Spark
   * distribution but are not exposed in the public function registry.
-  * Registering them under `graft_*` names makes the membership-sketch
-  * path available to SQL and the Column API without reimplementing a
-  * Bloom filter: identical bit layout, hashing, and serialized form as
-  * the optimizer's runtime filters.
+  * `GraftExtensions` also registers them as `graft_bloom_agg` /
+  * `graft_might_contain`, so the membership-sketch path is available to
+  * SQL and the Column API without reimplementing a Bloom filter:
+  * identical bit layout, hashing, and serialized form as the
+  * optimizer's runtime filters.
   *
   * `might_contain` type-checks its filter argument as a constant or
   * scalar subquery only, so the built filter travels as a BINARY
@@ -24,22 +25,14 @@ import org.apache.spark.sql.functions.{call_function, lit}
   */
 object BloomOps {
 
-  def register(spark: SparkSession): Unit = FnOnce(spark, "graft_bloom_agg") { reg =>
-    reg.createOrReplaceTempFunction("graft_bloom_agg",
-      exprs => new BloomFilterAggregate(exprs(0), exprs(1), exprs(2)),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_might_contain",
-      exprs => BloomFilterMightContain(exprs(0), exprs(1)), "built-in")
-  }
-
   /** Aggregate a long/string/binary column into a serialized Bloom
-    * filter (`numBits/8` bytes regardless of input size). Call
-    * [[register]] first. */
+    * filter (`numBits/8` bytes regardless of input size). */
   def bloomAgg(c: Column, estimatedItems: Long, numBits: Long): Column =
-    call_function("graft_bloom_agg", c, lit(estimatedItems), lit(numBits))
+    Bridge.column(new BloomFilterAggregate(Bridge.expression(c),
+      Literal(estimatedItems), Literal(numBits)).toAggregateExpression())
 
   /** Probe a driver-held serialized filter. False positives bounded by
     * the numBits/items sizing; false negatives impossible. */
   def mightContain(bloom: Array[Byte], c: Column): Column =
-    call_function("graft_might_contain", lit(bloom), c)
+    Bridge.column(BloomFilterMightContain(Literal(bloom), Bridge.expression(c)))
 }

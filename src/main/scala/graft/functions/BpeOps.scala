@@ -1,12 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, typedlit}
+import org.apache.spark.sql.functions.typedlit
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -99,24 +100,17 @@ final class BpeModel(pairs: Array[(String, String, UTF8String)])
 
 object BpeOps {
 
-  def register(spark: SparkSession): Unit = FnOnce(spark, "graft_bpe_encode") { reg =>
-    reg.createOrReplaceTempFunction("graft_bpe_encode",
-      exprs => BpeEncode(exprs(0), exprs(1), flat = false), "built-in")
-    reg.createOrReplaceTempFunction("graft_bpe_encode_all",
-      exprs => BpeEncode(exprs(0), exprs(1), flat = true), "built-in")
-  }
-
-  private def mergesLit(merges: Seq[(String, String)]): Column =
-    typedlit(merges.map(p => (p._1, p._2)))
+  private def mergesLit(merges: Seq[(String, String)]): Expression =
+    Bridge.expression(typedlit(merges.map(p => (p._1, p._2))))
 
   /** `graft_bpe_encode(word, merges)` — unit array of one word. */
   def encode(word: Column, merges: Seq[(String, String)]): Column =
-    call_function("graft_bpe_encode", word, mergesLit(merges))
+    Bridge.column(BpeEncode(Bridge.expression(word), mergesLit(merges), flat = false))
 
   /** `graft_bpe_encode_all(tokens, merges)` — flattened units of a
     * whole token array. */
   def encodeAll(tokens: Column, merges: Seq[(String, String)]): Column =
-    call_function("graft_bpe_encode_all", tokens, mergesLit(merges))
+    Bridge.column(BpeEncode(Bridge.expression(tokens), mergesLit(merges), flat = true))
 }
 
 /** `graft_bpe_encode(string, array<struct<a,b>>) -> array<string>` /

@@ -1,12 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{call_function, lit, typedlit}
+import org.apache.spark.sql.functions.typedlit
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** IVF cell-assignment kernel: the centroid table is a bounded model
@@ -32,18 +33,14 @@ import org.apache.spark.sql.types.{DataType, LongType}
   */
 object IvfOps {
 
-  def register(spark: SparkSession): Unit = FnOnce(spark, "graft_ivf_cell") { reg =>
-    reg.createOrReplaceTempFunction("graft_ivf_cell",
-      exprs => IvfCell(exprs(0), exprs(1), exprs(2), exprs(3)), "built-in")
-  }
-
   /** Argmax-cosine cell id for an `array<float>` embedding. `cents` is
     * the flat centroid matrix (`i*dim + d`, ascending-cid row order),
-    * `cids` the matching cid per row. Call [[register]] first. */
+    * `cids` the matching cid per row. */
   def cell(emb: Column, cents: Array[Float], cids: Array[Long],
       dim: Int): Column =
-    call_function("graft_ivf_cell", emb,
-      typedlit(cents.toSeq), typedlit(cids.toSeq), lit(dim))
+    Bridge.column(IvfCell(Bridge.expression(emb),
+      Bridge.expression(typedlit(cents.toSeq)),
+      Bridge.expression(typedlit(cids.toSeq)), Literal(dim)))
 }
 
 /** Kernel shared by interpreted eval and generated code. */

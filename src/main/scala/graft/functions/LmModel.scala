@@ -3,13 +3,14 @@ package graft.functions
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 import java.util.{HashMap => JHashMap}
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{call_function, typedlit}
+import org.apache.spark.sql.functions.typedlit
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -115,23 +116,16 @@ object LmModel {
   /** Shared zero row for empty/sub-bigram docs (never mutated). */
   val zero: InternalRow = new GenericInternalRow(Array[Any](0L, 0L))
 
-  def register(spark: SparkSession): Unit = FnOnce(spark, "graft_lm_nll") { reg =>
-    reg.createOrReplaceTempFunction("graft_lm_nll",
-      exprs => LmNll(exprs(0), exprs(1), exprs(2), exprs(3), exprs(4)),
-      "built-in")
-  }
-
   /** `graft_lm_nll(tokens, uniKeys, uniVals, biKeys, biVals)` with the
     * model tables as sorted parallel-array literals (single `Literal`
-    * nodes — cheap to plan, unlike an `isin`-style expression list).
-    * Call [[register]] on the session first. */
+    * nodes — cheap to plan, unlike an `isin`-style expression list). */
   def lmNll(tokens: Column, uniMap: Map[String, Long],
       biMap: Map[String, Long]): Column = {
     val u = uniMap.toSeq.sortBy(_._1)
     val b = biMap.toSeq.sortBy(_._1)
-    call_function("graft_lm_nll", tokens,
-      typedlit(u.map(_._1)), typedlit(u.map(_._2)),
-      typedlit(b.map(_._1)), typedlit(b.map(_._2)))
+    Bridge.column(LmNll(Bridge.expression(tokens),
+      Bridge.expression(typedlit(u.map(_._1))), Bridge.expression(typedlit(u.map(_._2))),
+      Bridge.expression(typedlit(b.map(_._1))), Bridge.expression(typedlit(b.map(_._2)))))
   }
 }
 

@@ -1,12 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{call_function, lit, typedlit}
+import org.apache.spark.sql.functions.typedlit
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 
 /** Product-quantization kernels for the ANN scale path (SURVEY.md
@@ -28,30 +29,20 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
   */
 object PqOps {
 
-  def register(spark: SparkSession): Unit = FnOnce(spark, "graft_pq_encode") { reg =>
-    reg.createOrReplaceTempFunction("graft_pq_encode",
-      exprs => PqEncode(exprs(0), exprs(1), exprs(2), exprs(3)), "built-in")
-    reg.createOrReplaceTempFunction("graft_pq_adc",
-      exprs => PqAdc(exprs(0), exprs(1), exprs(2), exprs(3), exprs(4)),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_pq_adc_cols",
-      exprs => PqAdcCols(exprs(0), exprs(1), exprs(2), exprs(3), exprs(4)),
-      "built-in")
-  }
-
   /** Encode an `array<float>` embedding to its packed PQ code. The flat
     * codebook (`(mi*K + ki)*sub + d` layout) ships as one literal. */
   def encode(emb: Column, codebook: Array[Float], m: Int, k: Int): Column =
-    call_function("graft_pq_encode", emb,
-      typedlit(codebook.toSeq), lit(m), lit(k))
+    Bridge.column(PqEncode(Bridge.expression(emb),
+      Bridge.expression(typedlit(codebook.toSeq)), Literal(m), Literal(k)))
 
   /** ADC approximate-cosine score of a packed code against per-sub-space
     * dot / squared-norm lookup tables (flat `mi*K + ki` layout, built
     * driver-side from the probe vector and the codebook). */
   def adc(code: Column, dotTable: Array[Double], nrmTable: Array[Double],
       m: Int, k: Int): Column =
-    call_function("graft_pq_adc", code,
-      typedlit(dotTable.toSeq), typedlit(nrmTable.toSeq), lit(m), lit(k))
+    Bridge.column(PqAdc(Bridge.expression(code),
+      Bridge.expression(typedlit(dotTable.toSeq)),
+      Bridge.expression(typedlit(nrmTable.toSeq)), Literal(m), Literal(k)))
 
   /** ADC score with the lookup tables taken from COLUMNS (the batched
     * kNN path joins a per-query table frame to the candidates; each row
@@ -59,7 +50,8 @@ object PqOps {
     * materialization). */
   def adcCols(code: Column, dotTable: Column, nrmTable: Column,
       m: Int, k: Int): Column =
-    call_function("graft_pq_adc_cols", code, dotTable, nrmTable, lit(m), lit(k))
+    Bridge.column(PqAdcCols(Bridge.expression(code), Bridge.expression(dotTable),
+      Bridge.expression(nrmTable), Literal(m), Literal(k)))
 }
 
 /** Kernels shared by interpreted eval and generated code. */

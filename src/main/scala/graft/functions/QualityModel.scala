@@ -1,12 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{call_function, typedlit}
+import org.apache.spark.sql.functions.typedlit
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 
 /** Compiled linear quality-classifier model (the CCNet / fastText
@@ -76,15 +77,11 @@ object QualityModel {
     ((i * 2654435761L + sum) % d).toInt
   }
 
-  def register(spark: SparkSession): Unit = FnOnce(spark, "graft_quality_score") { reg =>
-    reg.createOrReplaceTempFunction("graft_quality_score",
-      exprs => QualityScore(exprs(0), exprs(1)), "built-in")
-  }
-
   /** `graft_quality_score(tokens, wMicro)` with the weight vector as a
-    * single array literal. Call [[register]] on the session first. */
+    * single array literal. */
   def qualityScore(tokens: Column, wMicro: Array[Long]): Column =
-    call_function("graft_quality_score", tokens, typedlit(wMicro.toSeq))
+    Bridge.column(QualityScore(Bridge.expression(tokens),
+      Bridge.expression(typedlit(wMicro.toSeq))))
 }
 
 /** `graft_quality_score(array<string>, array<bigint>) ->

@@ -2,10 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, Literal, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit, shiftright, struct}
+import org.apache.spark.sql.functions.{lit, shiftright, struct}
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 
 /** Native Catalyst sketch expressions for the near-dup operators
@@ -45,81 +46,55 @@ object Sketch {
     Array.fill(NumPerm)(rng.nextInt(Prime.toInt).toLong)
   }
 
-  /** Register the sketch expressions in the session's function registry
-    * (idempotent). The public `Column` builders below resolve through the
-    * registry via `call_function`, the supported route from Column-land
-    * to a custom Catalyst `Expression` on Spark 4 (the classic
-    * `Column(expr)` constructor is `private[sql]`). */
-  def register(spark: SparkSession): Unit = FnOnce(spark, "graft_simhash") { reg =>
-    reg.createOrReplaceTempFunction(
-      "graft_simhash", exprs => SimHashTokens(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_minhash_shingles", exprs => MinHashShingleFeatures(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_winnow", exprs => WinnowFingerprints(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_id_pairs", exprs => IdPairs(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_hamming_pairs",
-      exprs => HammingPairs(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_repetition", exprs => RepetitionStats(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_word_gram_hashes",
-      exprs => WordGramHashes(exprs.head, exprs(1)), "built-in")
-  }
+  /** Installs graft's whole SQL surface on the session (see
+    * [[graft.GraftExtensions.install]]). The Column builders below build
+    * their expressions directly and need no registration. */
+  def register(spark: SparkSession): Unit = graft.GraftExtensions.install(spark)
 
   /** 64-bit SimHash from `array<string>` tokens: per-bit ±1 votes over
-    * per-occurrence token hashes, sign → bit.
-    * Call [[register]] on the session first. */
+    * per-occurrence token hashes, sign → bit. */
   def simhashTokens(tokens: Column): Column =
-    call_function("graft_simhash", tokens)
+    Bridge.column(SimHashTokens(Bridge.expression(tokens)))
 
   /** MinHash shingle features from `array<string>` tokens:
     * `struct<sh_set: array<bigint>, sig: array<bigint>>` — the distinct
-    * word-3-gram hash set and its 64-long MinHash signature.
-    * Call [[register]] on the session first. */
+    * word-3-gram hash set and its 64-long MinHash signature. */
   def minhashShingles(tokens: Column): Column =
-    call_function("graft_minhash_shingles", tokens)
+    Bridge.column(MinHashShingleFeatures(Bridge.expression(tokens)))
 
   /** Winnowing fingerprints (rolling hash, Schleimer et al. 2003) of a
-    * normalized string: distinct sorted `array<bigint>`.
-    * Call [[register]] on the session first. */
+    * normalized string: distinct sorted `array<bigint>`. */
   def winnow(text: Column): Column =
-    call_function("graft_winnow", text)
+    Bridge.column(WinnowFingerprints(Bridge.expression(text)))
 
   /** Single-pass per-document token-repetition stats (the Gopher-rule
     * quality signals: top-word fraction, duplicate-word and
     * duplicate-2-gram fractions) from `array<string>` tokens —
     * `struct<total_tokens, distinct_tokens, top_count, total_bigrams,
-    * distinct_bigrams>` (all int). Call [[register]] on the session
-    * first. */
+    * distinct_bigrams>` (all int). */
   def repetitionStats(tokens: Column): Column =
-    call_function("graft_repetition", tokens)
+    Bridge.column(RepetitionStats(Bridge.expression(tokens)))
 
   /** Distinct sorted XXH64 chain hashes of every word-n-gram in an
     * `array<string>` token array (whole-doc fallback below n tokens) —
     * `array<bigint>`. The 8-byte decontamination key WITHOUT ever
-    * materializing the gram strings. Call [[register]] on the session
-    * first. */
+    * materializing the gram strings. */
   def wordGramHashes(tokens: Column, n: Int): Column =
-    call_function("graft_word_gram_hashes", tokens, lit(n))
+    Bridge.column(WordGramHashes(Bridge.expression(tokens), Literal(n)))
 
   /** All ordered id pairs (a < b) from an id array —
     * `array<struct<doc1: bigint, doc2: bigint>>`. Turns a bounded
     * posting list into its C(n,2) co-occurrence pairs in one narrow
-    * expression (the fast alternative to a posting-list self-join).
-    * Call [[register]] on the session first. */
+    * expression (the fast alternative to a posting-list self-join). */
   def idPairs(ids: Column): Column =
-    call_function("graft_id_pairs", ids)
+    Bridge.column(IdPairs(Bridge.expression(ids)))
 
   /** Hamming-filtered canonical pairs from a bucket's
     * `array<struct<doc_id, simhash>>` entries —
     * `array<struct<doc1, doc2, hamming>>`. The bucket-local pair kernel
-    * of the SimHash near-dup join (see [[HammingPairs]]).
-    * Call [[register]] on the session first. */
+    * of the SimHash near-dup join (see [[HammingPairs]]). */
   def hammingPairs(entries: Column, maxHamming: Int): Column =
-    call_function("graft_hamming_pairs", entries, lit(maxHamming))
+    Bridge.column(HammingPairs(Bridge.expression(entries), Literal(maxHamming)))
 
   /** LSH banding: `(band_idx, band_val)` structs covering ALL 64 bits of
     * a sketch in `numBands` contiguous ranges (widths differ by ≤1 when

@@ -1,12 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{call_function, lit, typedlit}
+import org.apache.spark.sql.functions.typedlit
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType}
 
 /** Scalar-quantization (SQ8) kernels — the third member of the stored
@@ -29,29 +30,20 @@ import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType}
   */
 object SqOps {
 
-  def register(spark: SparkSession): Unit = FnOnce(spark, "graft_sq_encode") { reg =>
-    reg.createOrReplaceTempFunction("graft_sq_encode",
-      exprs => SqEncode(exprs(0), exprs(1), exprs(2)), "built-in")
-    reg.createOrReplaceTempFunction("graft_sq_score",
-      exprs => SqScore(exprs(0), exprs(1), exprs(2), exprs(3), exprs(4),
-        exprs(5)), "built-in")
-    reg.createOrReplaceTempFunction("graft_sq_score_cols",
-      exprs => SqScoreCols(exprs(0), exprs(1), exprs(2), exprs(3), exprs(4),
-        exprs(5)), "built-in")
-  }
-
   /** Encode an `array<float>` embedding to one byte per dimension. */
   def encode(emb: Column, mins: Array[Float], steps: Array[Float]): Column =
-    call_function("graft_sq_encode", emb,
-      typedlit(mins.toSeq), typedlit(steps.toSeq))
+    Bridge.column(SqEncode(Bridge.expression(emb),
+      Bridge.expression(typedlit(mins.toSeq)),
+      Bridge.expression(typedlit(steps.toSeq))))
 
   /** Approximate cosine of a code row against driver-built probe tables
     * (see [[SqKernels.score]] for the algebra). */
   def score(code: Column, alpha: Array[Double], linNrm: Array[Double],
       quadNrm: Array[Double], beta: Double, gamma0: Double): Column =
-    call_function("graft_sq_score", code,
-      typedlit(alpha.toSeq), typedlit(linNrm.toSeq),
-      typedlit(quadNrm.toSeq), lit(beta), lit(gamma0))
+    Bridge.column(SqScore(Bridge.expression(code),
+      Bridge.expression(typedlit(alpha.toSeq)),
+      Bridge.expression(typedlit(linNrm.toSeq)),
+      Bridge.expression(typedlit(quadNrm.toSeq)), Literal(beta), Literal(gamma0)))
 
   /** [[score]] with the PER-QUERY half (alpha, beta) taken from COLUMNS
     * — the batched-kNN path broadcasts a per-query table frame and each
@@ -60,8 +52,9 @@ object SqOps {
     * reference array shared by the whole batch. */
   def scoreCols(code: Column, alpha: Column, beta: Column,
       linNrm: Array[Double], quadNrm: Array[Double], gamma0: Double): Column =
-    call_function("graft_sq_score_cols", code, alpha, beta,
-      typedlit(linNrm.toSeq), typedlit(quadNrm.toSeq), lit(gamma0))
+    Bridge.column(SqScoreCols(Bridge.expression(code), Bridge.expression(alpha),
+      Bridge.expression(beta), Bridge.expression(typedlit(linNrm.toSeq)),
+      Bridge.expression(typedlit(quadNrm.toSeq)), Literal(gamma0)))
 
   /** Query-independent half of the score tables — from the MODEL alone:
     * |v̂|² = Σ min_d² + Σ (2·min_d·step_d)·c_d + Σ step_d²·c_d²

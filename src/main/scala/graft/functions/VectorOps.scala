@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 
 /** Native Catalyst vector expressions for the similarity-search operators
@@ -27,41 +27,32 @@ import org.apache.spark.sql.types._
   */
 object VectorOps {
 
-  def register(spark: SparkSession): Unit = FnOnce(spark, "graft_cosine") { reg =>
-    reg.createOrReplaceTempFunction(
-      "graft_cosine", exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_srp64", exprs => Srp64(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_l2sq", exprs => L2Sq(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_cosine_pairs", exprs => CosinePairs(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_cosine_pairs_cross",
-      exprs => CosinePairsCross(exprs(0), exprs(1)), "built-in")
-  }
+  /** Installs graft's whole SQL surface on the session (see
+    * [[graft.GraftExtensions.install]]). The Column builders below build
+    * their expressions directly and need no registration. */
+  def register(spark: SparkSession): Unit = graft.GraftExtensions.install(spark)
 
   /** Exact cosine similarity of two `array<float>` vectors, accumulated
-    * in double (deterministic left-to-right). Call [[register]] first. */
-  def cosine(x: Column, y: Column): Column = call_function("graft_cosine", x, y)
+    * in double (deterministic left-to-right). */
+  def cosine(x: Column, y: Column): Column =
+    Bridge.column(CosineSimilarity(Bridge.expression(x), Bridge.expression(y)))
 
-  /** 64-bit SRP sketch of an `array<float>` vector. Call [[register]] first. */
-  def srp64(x: Column): Column = call_function("graft_srp64", x)
+  /** 64-bit SRP sketch of an `array<float>` vector. */
+  def srp64(x: Column): Column = Bridge.column(Srp64(Bridge.expression(x)))
 
   /** Squared L2 distance of two `array<float>` vectors (PQ training
-    * metric). Call [[register]] first. */
-  def l2sq(x: Column, y: Column): Column = call_function("graft_l2sq", x, y)
+    * metric). */
+  def l2sq(x: Column, y: Column): Column =
+    Bridge.column(L2Sq(Bridge.expression(x), Bridge.expression(y)))
 
-  /** Cluster-local semantic-duplicate pairs (SemDeDup kernel). Call
-    * [[register]] first. */
+  /** Cluster-local semantic-duplicate pairs (SemDeDup kernel). */
   def cosinePairs(entries: Column, tau: Column): Column =
-    call_function("graft_cosine_pairs", entries, tau)
+    Bridge.column(CosinePairs(Bridge.expression(entries), Bridge.expression(tau)))
 
   /** Side-aware pair kernel for the blocked decomposition of oversized
-    * cells (entries carry (vec_id, embedding, side)). Call [[register]]
-    * first. */
+    * cells (entries carry (vec_id, embedding, side)). */
   def cosinePairsCross(entries: Column, tau: Column): Column =
-    call_function("graft_cosine_pairs_cross", entries, tau)
+    Bridge.column(CosinePairsCross(Bridge.expression(entries), Bridge.expression(tau)))
 }
 
 /** Kernels shared by interpreted eval and generated code. */

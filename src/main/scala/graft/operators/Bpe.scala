@@ -62,8 +62,7 @@ object Bpe {
     * ([[encodeUnitsFold]]) is the reference formulation (one
     * interpreted `aggregate` HOF per merge per word, measured as the
     * dominant crawl-pipeline stage cost at sf0.1); BpeSpec pins
-    * kernel ≡ fold on the corpus and on adversarial words. The caller
-    * must have registered [[graft.functions.BpeOps]] on the session. */
+    * kernel ≡ fold on the corpus and on adversarial words. */
   def encodeUnits(word: Column, merges: Seq[(String, String)]): Column =
     graft.functions.BpeOps.encode(word, merges)
 
@@ -171,7 +170,6 @@ object Bpe {
     * merge table — one narrow pass, map-side-combined groupBy over
     * |langs| keys. */
   private def fertilityStats(docs: DataFrame, tag: String): DataFrame = {
-    graft.functions.BpeOps.register(docs.sparkSession)
     docs
       .select(col("lang"), Curation.gramToks(col("text")).as("t"))
       .select(col("lang"), size(col("t")).cast(LongType).as("nw"),
@@ -208,7 +206,6 @@ object Bpe {
     // hashes the '|'-joined unit sequence of the WHOLE doc, so a single
     // unit boundary differing anywhere flips the row.
     "q_bpe_encode" -> ((s, dir) => {
-      graft.functions.BpeOps.register(s)
       documents(s, dir)
         .select(col("doc_id"), Curation.gramToks(col("text")).as("t"))
         .select(col("doc_id"), size(col("t")).cast(LongType).as("n_words"),

@@ -538,7 +538,6 @@ object Crawl {
   def crawlPipelineDocs(s: SparkSession, dir: String): DataFrame = {
     val spark = s
     import spark.implicits._
-    graft.functions.QualityModel.register(s)
     val recs = ensureWarcFiles(s, dir)
       .select("warc").as[Array[Byte]]
       .flatMap(bytes => graft.sources.WarcFile.decodeWarcGz(bytes).map(r =>
@@ -576,7 +575,6 @@ object Crawl {
       .agg(array_join(transform(
         sort_array(collect_list(struct(col("pos"), col("blk")))),
         pb => pb.getField("blk")), " ").as("dedup_text"))
-    graft.functions.BpeOps.register(s)
     rebuilt.select(col("doc_id"),
       size(Bpe.encodeAllUnits(Curation.gramToks(col("dedup_text")),
         Bpe.PinnedMerges))

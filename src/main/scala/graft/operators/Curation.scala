@@ -441,7 +441,6 @@ object Curation {
     * the shared [[TextAnalysis.bm25Toks]]. */
   def qualityClassify(docs: DataFrame, wMicro: Array[Long],
       biasMicro: Long): DataFrame = {
-    graft.functions.QualityModel.register(docs.sparkSession)
     docs
       .select(col("doc_id"), col("lang"),
         graft.functions.QualityModel.qualityScore(
@@ -1027,7 +1026,6 @@ object Curation {
   def ensureScoreArtifact(s: SparkSession, dir: String): DataFrame = graft.BuildTimer.time {
     val path = scratch(s, dir, "doc_scores")
     buildGate(s, path) {
-      graft.functions.QualityModel.register(s)
       documents(s, dir)
         .select(col("doc_id"), md5(col("text")).as("digest"),
           graft.functions.QualityModel.qualityScore(
@@ -1304,7 +1302,6 @@ object Curation {
     // (id-sum membership binding), so the hash flips if ANY stage
     // admits, drops, splits, or tokenizes one doc differently.
     "q_curation_pipeline_e2e" -> ((s, dir) => {
-      graft.functions.Sketch.register(s)
       val docs = documents(s, dir)
       val (wmap, wOov, bias) = nbFrozenModel(docs, col("lang") === "en")
       // stateless projection — scoring twice (mean pass + filter pass)
@@ -1476,7 +1473,6 @@ object Curation {
     // also certifies the hashed join ≡ exact join on this corpus (any
     // xxhash64 collision would surface a spurious doc and turn it red).
     "q_decontaminate" -> ((s, dir) => {
-      graft.functions.Sketch.register(s)
       // gram hashes come from the codegen kernel (no gram-string
       // materialization, no interpreted slice/join HOFs — measured 3.5×
       // on this query at sf0.1, 3.7 s → 1.05 s warm); wordGrams stays the
@@ -1507,12 +1503,10 @@ object Curation {
     // recomputes n_exact_flagged independently from gram STRINGS, so a
     // probe bug that dropped a contaminated doc turns the gate red.
     "q_decontaminate_bloom" -> ((s, dir) => {
-      graft.functions.Sketch.register(s)
       val toks = gramToks(col("text"))
       val grams = documents(s, dir)
         .select(col("doc_id"), splitColumn(col("doc_id")).as("split"),
           explode(graft.functions.Sketch.wordGramHashes(toks, 8)).as("g"))
-      graft.functions.BloomOps.register(s)
       // the gram stream feeds three consumers (bloom build, bloom probe,
       // and the semi join's train side) — persist it so tokenization
       // and gram hashing run once (same multi-consumer shape as

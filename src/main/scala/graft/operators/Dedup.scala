@@ -48,7 +48,6 @@ object Dedup {
     * producer and the field extraction live in separate projections so
     * CollapseProject cannot duplicate the sketch computation. */
   def minhashFeatures(docs: DataFrame): DataFrame = {
-    Sketch.register(docs.sparkSession)
     docs
       .select(col("doc_id"), Sketch.minhashShingles(tokens(col("text"))).as("f"))
       .select(col("doc_id"), col("f.sh_set").as("sh_set"), col("f.sig").as("sig"))
@@ -97,7 +96,6 @@ object Dedup {
     * volume is quadratic for ANY candidate enumeration, and a loud stop
     * beats an executor OOM (the MaxPairsPerBucket convention). */
   def minhashCandidatesFromFeatures(features: DataFrame): DataFrame = {
-    Sketch.register(features.sparkSession)
     bands(features.select("doc_id", "sig"))
       .groupBy("band_idx", "band_hash")
       .agg(collect_list(col("doc_id")).as("ids"))
@@ -180,7 +178,6 @@ object Dedup {
   /** 64-bit SimHash per doc: per-bit ±1 votes over token-occurrence
     * hashes, sign → bit. Narrow single-pass expression — no shuffle. */
   def simhash(docs: DataFrame): DataFrame = {
-    Sketch.register(docs.sparkSession)
     docs.select(col("doc_id"),
       Sketch.simhashTokens(tokens(col("text"))).as("simhash"))
   }
@@ -240,7 +237,6 @@ object Dedup {
     * stage. Any shared substring of ≥ 11 normalized bytes (K+W−1)
     * produces a shared fingerprint. */
   def winnowFeatures(docs: DataFrame): DataFrame = {
-    Sketch.register(docs.sparkSession)
     docs.select(col("doc_id"), Sketch.winnow(normText(col("text"))).as("fps"))
   }
 
@@ -322,7 +318,6 @@ object Dedup {
     * re-scan, nothing quadratic on an unbounded bucket. */
   def jaccardPairsExact(docs: DataFrame, tauP: Int, tauQ: Int): DataFrame = {
     require(0 < tauP && tauP < tauQ, s"tau must be in (0,1): $tauP/$tauQ")
-    Sketch.register(docs.sparkSession)
     // sketch ONCE: the feature frame feeds the df count, both prefix
     // sides, and both verification joins — without the checkpoint the
     // text scan + gram kernel re-runs per consumer (~4× at sf1; same
@@ -700,7 +695,6 @@ object Dedup {
     // The raw 64-bit sketch dump stays a test artifact (SketchSpec pins
     // golden values); these booleans make the gate hash-checkable.
     "q_simhash" -> ((s, dir) => {
-      Sketch.register(s)
       val sh = (t: Column) => Sketch.simhashTokens(tokens(t))
       documents(s, dir).select(
         col("doc_id"),
@@ -763,7 +757,6 @@ object Dedup {
     // The raw 64-bit fingerprint dump stays a test artifact (SketchSpec
     // pins golden values and the substring property directly).
     "q_winnow_fingerprint" -> ((s, dir) => {
-      Sketch.register(s)
       documents(s, dir)
         .select(col("doc_id"), normText(col("text")).as("norm"),
           col("text"))

@@ -112,7 +112,6 @@ object Ingest {
     * twin (graft.streaming.SketchStream), so the two paths cannot
     * drift. */
   def sketchProjection(docs: DataFrame): DataFrame = {
-    Sketch.register(docs.sparkSession)
     docs
       .select(col("doc_id"),
         Sketch.minhashShingles(Dedup.tokens(col("text"))).as("f"),
@@ -949,7 +948,6 @@ object Ingest {
     // previously stored cell geometry via SaveMode.Ignore.
     val cPath = scratch(s, dir, s"ivf_centroids_c$cells")
     val aPath = scratch(s, dir, s"ivf_assign_c$cells")
-    VectorOps.register(s)
     // TRAINED centroids (3 Lloyd passes), not raw seed vectors: seed
     // "centroids" are arbitrary corpus rows, so at the derived √N
     // geometry they scatter near-neighbors across cells; trained cells
@@ -1287,7 +1285,6 @@ object Ingest {
       kCent: Int = 256): (Array[Float], Int) = graft.BuildTimer.time {
     val cbPath = scratch(s, dir, s"pq_codebook_m${m}_k$kCent")
     cbCache.getOrElseUpdate((s.sparkContext.applicationId, cbPath), {
-      graft.functions.PqOps.register(s)
       // TrieMap.getOrElseUpdate may evaluate this op on TWO racing
       // threads (the map stays consistent but the op's side effects
       // run twice): the cold train+write must go through buildGate like
@@ -1356,7 +1353,6 @@ object Ingest {
     * Returns (mins, steps, code frame). */
   def ensureSqModel(s: SparkSession, dir: String): (Array[Float], Array[Float]) = graft.BuildTimer.time {
     val modelPath = scratch(s, dir, "sq8_model")
-    graft.functions.SqOps.register(s)
     sqCache.getOrElseUpdate((s.sparkContext.applicationId, modelPath), {
     // racing-op hazard: see ensurePqCodebook — the cold write goes
     // through buildGate; every evaluator then reads the committed model
@@ -1415,7 +1411,6 @@ object Ingest {
   def sqTopKStored(s: SparkSession, dir: String, k: Int,
       expand: Int = 8): DataFrame = {
     val (mins, steps, codes) = ensureSqIndex(s, dir)
-    graft.functions.VectorOps.register(s) // the exact-cosine rescore
     val emb = embeddings(s, dir)
     val qr = Similarity.queryRow(emb).head()
     val qv = qr.getSeq[Float](0).toArray
@@ -1483,7 +1478,6 @@ object Ingest {
     val (mins, steps, centroids, codes) = ensureIvfSqIndex(s, dir)
     val cells = Similarity.ivfNumCells(embeddingCount(s, dir))
     val dPath = scratch(s, dir, s"ivfsq_delta_c$cells")
-    graft.functions.SqOps.register(s)
     buildGate(s, dPath) {
       Similarity.ivfAssignKernel(appendBatch(embeddings(s, dir)), centroids)
         .select(col("vec_id"), col("cell"),
@@ -1558,7 +1552,6 @@ object Ingest {
     val (newCents, _, retrained) = retrainOnDrift(live, centroids, skewThreshold)
     if (!retrained) (mins, steps, centroids, codes.unionByName(delta), false)
     else {
-      graft.functions.SqOps.register(s)
       Similarity.ivfAssignKernel(live, newCents)
         .select(col("vec_id"), col("cell"),
           graft.functions.SqOps.encode(col("embedding"), mins, steps).as("code"))
@@ -1594,7 +1587,6 @@ object Ingest {
       scoreCol: org.apache.spark.sql.Column, rescoreCorpus: DataFrame,
       queriesDf: DataFrame, k: Int, expand: Int, nProbe: Int,
       dead: Option[DataFrame] = None): DataFrame = {
-    VectorOps.register(s)
     val n = embeddingCount(s, dir)
     val probe =
       if (nProbe > 0) nProbe
@@ -1635,7 +1627,6 @@ object Ingest {
       steps: Array[Float], rescoreCorpus: DataFrame, queriesDf0: DataFrame,
       k: Int, expand: Int, nProbe: Int,
       dead: Option[DataFrame] = None): DataFrame = {
-    graft.functions.SqOps.register(s)
     import s.implicits._
     val queriesDf = Similarity.localizedQueryBatch(queriesDf0)
     val (lin, quad, gamma0) = graft.functions.SqOps.modelTables(mins, steps)
@@ -1669,7 +1660,6 @@ object Ingest {
     val (cb, dim) = ensurePqCodebook(s, dir, m, kCent)
     val (centroids, _) = ensureIvfIndex(s, dir, cells)
     val path = scratch(s, dir, s"ivfpq_codes_m${m}_k${kCent}_c$cells")
-    graft.functions.PqOps.register(s)
     buildGate(s, path) {
       // canaries ride the cell-partitioned code table too, so the IVF-PQ
       // gate certifies DPP + ADC + rescore under real pruning
@@ -1696,7 +1686,6 @@ object Ingest {
     val (cb, dim, centroids, codes) = ensureIvfPqIndex(s, dir, m, kCent)
     val cells = Similarity.ivfNumCells(embeddingCount(s, dir))
     val dPath = scratch(s, dir, s"ivfpq_delta_m${m}_k${kCent}_c$cells")
-    graft.functions.PqOps.register(s)
     buildGate(s, dPath) {
       Similarity.ivfAssignKernel(appendBatch(embeddings(s, dir)), centroids)
         .select(col("vec_id"), col("cell"),
@@ -1818,7 +1807,6 @@ object Ingest {
     val (newCents, _, retrained) = retrainOnDrift(live, centroids, skewThreshold)
     if (!retrained) (cb, dim, centroids, codes.unionByName(delta), false)
     else {
-      graft.functions.PqOps.register(s)
       Similarity.ivfAssignKernel(live, newCents)
         .select(col("vec_id"), col("cell"),
           graft.functions.PqOps.encode(col("embedding"), cb, m, kCent).as("code"))
@@ -2004,7 +1992,6 @@ object Ingest {
   private[graft] def knnJoinSides(s: SparkSession, dir: String,
       sides: Seq[DataFrame], centroids: DataFrame, queriesDf0: DataFrame,
       k: Int, nProbe: Int, dead: Option[DataFrame] = None): DataFrame = {
-    VectorOps.register(s)
     // bounded batch → literal relation (see Similarity.localizedQueryBatch):
     // the batch subplan otherwise re-evaluates inside the probe-plan,
     // match and rescore broadcasts
@@ -2555,7 +2542,6 @@ object Ingest {
       dim: Int, rescoreCorpus: DataFrame, queriesDf0: DataFrame, k: Int,
       expand: Int, nProbe: Int, m: Int, kCent: Int,
       dead: Option[DataFrame] = None): DataFrame = {
-    graft.functions.PqOps.register(s)
     import s.implicits._
     val queriesDf = Similarity.localizedQueryBatch(queriesDf0)
     // per-query ADC tables: a driver-built bounded model artifact, like

@@ -33,7 +33,6 @@ object Similarity {
   /** (vec_id, embedding, sketch): narrow projection, sketch computed
     * inside the scan stage. */
   def sketched(emb: DataFrame): DataFrame = {
-    VectorOps.register(emb.sparkSession)
     emb.select(col("vec_id"), col("embedding"),
       VectorOps.srp64(col("embedding")).as("sketch"))
   }
@@ -120,7 +119,6 @@ object Similarity {
   /** Exact brute-force cosine top-k against the probe vector (excluding
     * the probe itself). */
   def cosineTopK(emb: DataFrame, k: Int): DataFrame = {
-    VectorOps.register(emb.sparkSession)
     emb.crossJoin(broadcast(queryRow(emb)))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("vec_id"), VectorOps.cosine(col("embedding"), col("q_emb")).as("score"))
@@ -198,14 +196,12 @@ object Similarity {
     * are broadcast; the only wide op is the per-vector argmax cell
     * assignment (one groupBy on vec_id). */
   def ivfTopK(emb: DataFrame, k: Int, nCells: Int = 16, nProbe: Int = 4): DataFrame = {
-    VectorOps.register(emb.sparkSession)
     ivfTopKFrom(emb, ivfCentroids(emb, nCells), k, nProbe)
   }
 
   /** IVF probe against a GIVEN centroid table — shared by the
     * deterministic-centroid, k-means-trained, and stored-index paths. */
   def ivfTopKFrom(emb: DataFrame, centroids: DataFrame, k: Int, nProbe: Int): DataFrame = {
-    VectorOps.register(emb.sparkSession)
     val q = queryRow(emb)
     val probeCells = centroids.crossJoin(broadcast(q))
       .select(col("cid").as("cell"), VectorOps.cosine(col("cvec"), col("q_emb")).as("qsim"))
@@ -242,7 +238,6 @@ object Similarity {
     * to ~1e-15) but the reason centroids are STORED, not recomputed, in
     * any reproducibility-critical pipeline. */
   def kmeansCentroids(emb: DataFrame, nCells: Int = 16, iters: Int = 3): DataFrame = graft.BuildTimer.time {
-    VectorOps.register(emb.sparkSession)
     var centroids = ivfCentroids(emb, nCells)
     var it = 0
     while (it < iters) {
@@ -347,7 +342,6 @@ object Similarity {
     * build is the partitionBy(cell) write — and the one the streaming
     * delta ingest (IvfStream) shares. */
   def ivfAssignKernel(emb: DataFrame, centroids: DataFrame): DataFrame = {
-    graft.functions.IvfOps.register(emb.sparkSession)
     val (flat, cids, dim) = centroidArtifact(centroids)
     emb.select(col("vec_id"),
       graft.functions.IvfOps.cell(col("embedding"), flat, cids, dim).as("cell"),
@@ -373,7 +367,6 @@ object Similarity {
     * q_tfidf_terms) and vec_id makes the order total, so the phase-1
     * prune keeps a superset of the global top-k by construction. */
   def knnJoin(emb: DataFrame, queriesDf0: DataFrame, k: Int): DataFrame = {
-    VectorOps.register(emb.sparkSession)
     // bounded batch → literal relation (localizedQueryBatch doc);
     // over-bound batches pass through unchanged
     val queriesDf = localizedQueryBatch(queriesDf0)
@@ -424,7 +417,6 @@ object Similarity {
     * index serves ([[Ingest.knnJoinIvfStored]]). */
   def knnClassify(emb: DataFrame, k: Int, maxQueries: Int = 400): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    VectorOps.register(emb.sparkSession)
     // materialize the bounded slice ONCE (≤ maxQueries rows): it feeds
     // both the broadcast scoring side and the true-label join, and
     // without the checkpoint each consumer re-runs the corpus-wide
@@ -464,7 +456,6 @@ object Similarity {
     * before ranking (the round-before-rank rule). */
   def hardNegatives(emb: DataFrame, k: Int, maxQueries: Int = 200): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    VectorOps.register(emb.sparkSession)
     val anchors = emb.filter(pmod(col("vec_id"), lit(7)) === 0)
       .orderBy("vec_id").limit(maxQueries) // TakeOrderedAndProject
     val scored = emb
@@ -721,7 +712,6 @@ object Similarity {
       maxSlices: Int = 1024): DataFrame = {
     val spark = assigned.sparkSession
     import spark.implicits._
-    VectorOps.register(spark)
     // the hot list is bounded (≤ N/maxCellRows entries), so collect it
     // ONCE and re-broadcast as a literal relation — leaving it lazy
     // would recompute the occupancy aggregate (and the assignment
@@ -806,7 +796,6 @@ object Similarity {
     * break on vec_id, so the DuckDB oracle replays the whole greedy
     * unrolled. */
   def mmrRerank(emb: DataFrame, n: Int = MmrPoolN, k: Int = MmrK): DataFrame = {
-    VectorOps.register(emb.sparkSession)
     mmrRerankPool(
       emb.crossJoin(broadcast(queryRow(emb)))
         .filter(col("vec_id") =!= col("q_id"))
@@ -994,7 +983,6 @@ object Similarity {
   def pqTrain(emb: DataFrame, m: Int = 8, k: Int = 256,
       iters: Int = 1, sampleCap: Int = 1024): (Array[Float], Int, Int) =
     graft.BuildTimer.time {
-    VectorOps.register(emb.sparkSession)
     val dim = emb.select(size(col("embedding"))).head().getInt(0)
     val sub = dim / m
     require(m * sub == dim, s"pq: dim=$dim not divisible by m=$m")
@@ -1087,7 +1075,6 @@ object Similarity {
     * at scale it runs once at ingest and the codes are stored. */
   def pqTopK(emb: DataFrame, k: Int, expand: Int = 20,
       m: Int = 8, kCent: Int = 256, iters: Int = 1): DataFrame = {
-    graft.functions.PqOps.register(emb.sparkSession)
     val (cb, dim, _) = pqTrain(emb, m, kCent, iters)
     val (qid, dot, nrm) = adcTables(emb, cb, dim, m, kCent)
     val coded = emb.select(col("vec_id"),
@@ -1200,7 +1187,6 @@ object Similarity {
     // element-by-element and the hash must match on the whole corpus.
     "q_cosine_micro_parity" -> ((s, dir) => {
       val emb = embeddings(s, dir)
-      VectorOps.register(s)
       emb.crossJoin(broadcast(queryRow(emb)))
         .select(col("vec_id"),
           cosMicro(col("embedding"), col("q_emb")).as("rel6"))

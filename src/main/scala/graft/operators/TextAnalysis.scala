@@ -204,7 +204,6 @@ object TextAnalysis {
       uniMap: Map[String, Long], biMap: Map[String, Long]): DataFrame = {
     require(graft.functions.LmModel.Denom == LmVocab + 1L,
       "kernel Laplace denominator must track LmVocab")
-    graft.functions.LmModel.register(docs.sparkSession)
     val r = graft.functions.LmModel.lmNll(lmToks(col("text")), uniMap, biMap)
     docs.select(col("doc_id"), r.as("r"))
       .select(col("doc_id"),
@@ -286,7 +285,6 @@ object TextAnalysis {
   def dsirScore(docs: DataFrame,
       rawUni: Map[String, Long], rawBi: Map[String, Long],
       tgtUni: Map[String, Long], tgtBi: Map[String, Long]): DataFrame = {
-    graft.functions.LmModel.register(docs.sparkSession)
     val raw = graft.functions.LmModel.lmNll(lmToks(col("text")), rawUni, rawBi)
     val tgt = graft.functions.LmModel.lmNll(lmToks(col("text")), tgtUni, tgtBi)
     docs
@@ -599,7 +597,6 @@ object TextAnalysis {
       import org.apache.spark.sql.expressions.Window
       val docs = documents(s, dir)
       val (uni, bi) = lmTables(docs)
-      graft.functions.LmModel.register(s)
       val r = graft.functions.LmModel.lmNll(lmToks(col("text")), uni, bi)
       val scored = docs.select(col("doc_id"), col("lang"), r.as("r"))
         .select(col("doc_id"), col("lang"),
@@ -659,7 +656,6 @@ object TextAnalysis {
     // unnest+GROUP BY formulation — which the DuckDB oracle runs — would
     // shuffle the entire token stream at 100 TB.
     "q_repetition" -> ((s, dir) => {
-      graft.functions.Sketch.register(s)
       documents(s, dir)
         .select(col("doc_id"),
           graft.functions.Sketch.repetitionStats(

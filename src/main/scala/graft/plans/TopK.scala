@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expression, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
@@ -12,9 +12,10 @@ import org.apache.spark.sql.graft.Bridge
 
 /** Whole-operator extension (the (c) rung of the custom-operator
   * ladder): bounded per-key top-k as a custom LogicalPlan + planner
-  * Strategy + physical operator, registered through
-  * `SparkSessionExtensions` (GraftExtensions) or per-session via
-  * [[TopK.register]].
+  * Strategy + physical operator, installed through
+  * `SparkSessionExtensions` (GraftExtensions) or per-session by
+  * `GraftExtensions.install`; [[TopK.topKPerKey]] adds the strategy
+  * itself, because the node it returns cannot be planned without it.
   *
   * WHY a custom operator: the declarative form —
   * `row_number() OVER (PARTITION BY key ORDER BY …) <= k` — plans as
@@ -50,18 +51,13 @@ object TopK {
   val PartialMaxKeysConf: String = "graft.topk.partialMaxKeys"
   val PartialMaxKeysDefault: Int = 65536
 
-  /** Per-session registration for sessions built without
-    * `spark.sql.extensions=graft.GraftExtensions`. */
-  def register(s: SparkSession): Unit =
-    Bridge.addStrategy(s, TopKPerKeyStrategy)
-
   /** `df` reduced to the top `k` rows per `keys` group under `order`
     * (strongest first — pass `col.desc`/`col.asc` exactly as to a
     * window). Plans as the two-phase bounded-heap operator above. */
   def topKPerKey(df: DataFrame, keys: Seq[Column], order: Seq[Column],
       k: Int): DataFrame = {
     require(k > 0, "topKPerKey: k must be positive")
-    register(df.sparkSession)
+    Bridge.addStrategy(df.sparkSession, TopKPerKeyStrategy)
     val sortOrders = order.map(c => Bridge.catalystExpression(c) match {
       case s: SortOrder => s
       case e => SortOrder(e, Ascending)

@@ -1,10 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Window, WindowGroupLimit}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.graft.Bridge
 
 /** Optimizer rule that turns the DECLARATIVE per-key top-k idiom —
   *
@@ -42,18 +40,13 @@ import org.apache.spark.sql.graft.Bridge
   * Output row SET equals the window form whenever the ordering is
   * total (the repo's tiebreaker rule); like every per-key reduction in
   * the repo, intra-group order is unspecified and callers sort.
-  * Registered per-session via [[TopKRewrite.register]] (post-hoc
+  * Installed per-session by `GraftExtensions.install` (post-hoc
   * `experimental.extraOptimizations`) or cluster-wide through
   * `GraftExtensions`. If `InferWindowGroupLimit` already ran, its
   * `WindowGroupLimit` child is recognized and stripped (it passes
   * through a superset of the answer; the heap recomputes exactly).
   */
 object TopKRewrite extends Rule[LogicalPlan] {
-
-  def register(s: SparkSession): Unit = {
-    TopK.register(s) // the strategy that plans the node this rule emits
-    Bridge.addOptimization(s, this)
-  }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case p @ Project(projectList, Filter(cond, w: Window)) =>

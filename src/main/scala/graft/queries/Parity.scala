@@ -249,7 +249,6 @@ object Parity {
     // that the rewritten plan's rows still hash-match the window
     // semantics DuckDB computes.
     "q_topk_rewrite" -> ((s, dir) => {
-      graft.plans.TopKRewrite.register(s)
       val w = Window.partitionBy("o_custkey")
         .orderBy(desc("o_totalprice"), asc("o_orderkey"))
       orders(s, dir)

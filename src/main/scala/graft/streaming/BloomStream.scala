@@ -29,8 +29,6 @@ object BloomStream {
 
   def cleanStream(s: SparkSession, dir: String,
       bloom: Array[Byte]): DataFrame = {
-    Sketch.register(s)
-    BloomOps.register(s)
     val schema = s.read.parquet(s"$dir/documents.parquet").schema
     // glob trick: see EventStream.readEvents (single-file testdata table)
     s.readStream.schema(schema).parquet(s"$dir/[d]ocuments.parquet")

@@ -47,7 +47,6 @@ object IngestGateStream {
   def gateBatch(batch: DataFrame, df: Map[String, Long], nDocs: Long,
       dlTotal: Long, storedFeatures: DataFrame, tau: Double,
       cents: Array[Float], cids: Array[Long], dim: Int): DataFrame = {
-    graft.functions.IvfOps.register(batch.sparkSession)
     // three consumers (stored probe, intra-batch candidates, verify):
     // one sketch pass, not three (the multi-consumer rule)
     val feats = Dedup.minhashFeatures(batch).localCheckpoint()

@@ -42,7 +42,6 @@ object IvfStream {
   def assignLandingStream(s: SparkSession, landingGlob: String,
       schema: org.apache.spark.sql.types.StructType, cents: Array[Float],
       cids: Array[Long], dim: Int): DataFrame = {
-    IvfOps.register(s)
     s.readStream.schema(schema).parquet(landingGlob)
       .select(col("vec_id"),
         IvfOps.cell(col("embedding"), cents, cids, dim).as("cell"),

@@ -24,7 +24,6 @@ object PqStream {
     * wiggle fork the codes). */
   def codeStream(s: SparkSession, dir: String, codebook: Array[Float],
       m: Int = 8, kCent: Int = 256): DataFrame = {
-    PqOps.register(s)
     val schema = s.read.parquet(s"$dir/embeddings.parquet").schema
     // glob trick: see EventStream.readEvents (single-file testdata table)
     s.readStream.schema(schema).parquet(s"$dir/[e]mbeddings.parquet")

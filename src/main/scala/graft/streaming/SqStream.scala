@@ -20,7 +20,6 @@ object SqStream {
 
   def codeStream(s: SparkSession, dir: String, mins: Array[Float],
       steps: Array[Float]): DataFrame = {
-    SqOps.register(s)
     val schema = s.read.parquet(s"$dir/embeddings.parquet").schema
     // glob trick: see EventStream.readEvents (single-file testdata table)
     s.readStream.schema(schema).parquet(s"$dir/[e]mbeddings.parquet")

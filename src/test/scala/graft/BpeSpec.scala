@@ -11,14 +11,12 @@ class BpeSpec extends SparkSpecBase {
   import testImplicits._
 
   private def units(word: String, merges: Seq[(String, String)]): Seq[String] = {
-    graft.functions.BpeOps.register(spark)
     Seq(word).toDF("w")
       .select(Bpe.encodeUnits(col("w"), merges).as("u"))
       .as[Seq[String]].collect().head
   }
 
   test("compiled kernel ≡ reference fold on adversarial words and the corpus") {
-    graft.functions.BpeOps.register(spark)
     // adversarial: overlap chains, re-merge, unicode (incl. a
     // supplementary codepoint), empties, single chars
     val words = Seq("aaaa", "aaa", "aab", "abab", "b", "", "a",
@@ -46,7 +44,6 @@ class BpeSpec extends SparkSpecBase {
   }
 
   test("kernel ≡ fold on NULLs: null word / null array / null element (ADVICE r15)") {
-    graft.functions.BpeOps.register(spark)
     val merges = Seq(("a", "a"), ("a", "b"))
     // null word: fold yields NULL (chars(null) is null), kernel must too
     val w = Seq[Option[String]](Some("aab"), None).toDF("w")
@@ -162,7 +159,6 @@ class BpeSpec extends SparkSpecBase {
   }
 
   test("encode plan: narrow projection only — no exchange, no UDF") {
-    graft.functions.BpeOps.register(spark)
     val p = Seq((1L, "sort order window")).toDF("doc_id", "text")
       .select(flatten(transform(
         split(col("text"), " "),

@@ -223,7 +223,6 @@ class CurationSpec extends SparkSpecBase {
   }
 
   test("wordGramHashes kernel ≡ distinct string grams (count + collisions)") {
-    graft.functions.Sketch.register(spark)
     // per doc: kernel hash count == distinct string-gram count, and
     // identical token windows (across docs) produce identical hashes —
     // the two properties that make the kernel a drop-in decontamination

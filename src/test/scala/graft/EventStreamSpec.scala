@@ -632,7 +632,6 @@ class EventStreamSpec extends SparkSpecBase {
     q.awaitTermination()
     val streamed = spark.table("pq_stream_test")
       .orderBy("vec_id").collect().map(_.toSeq).toSeq
-    graft.functions.PqOps.register(spark)
     val batch = emb.select(col("vec_id"),
         graft.functions.PqOps.encode(col("embedding"), cb, 8, 256).as("code"))
       .orderBy("vec_id").collect().map(_.toSeq).toSeq
@@ -747,7 +746,6 @@ class EventStreamSpec extends SparkSpecBase {
 
   test("streaming Bloom decontamination (BloomStream) == batch filter") {
     import graft.functions.{BloomOps, Sketch}
-    Sketch.register(spark); BloomOps.register(spark)
     val docs = spark.read.parquet(TestSpark.Sf0001 + "/documents.parquet")
     // freeze a filter over the benchmark (valid/test) grams
     val toks = split(lower(regexp_replace(trim(col("text")), "\\s+", " ")), " ")

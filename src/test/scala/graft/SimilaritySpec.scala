@@ -13,7 +13,6 @@ class SimilaritySpec extends SparkSpecBase {
   import testImplicits._
 
   test("graft_cosine matches a manual double-precision computation") {
-    VectorOps.register(spark)
     val a = Array(1.0f, 2.0f, 3.0f)
     val b = Array(-1.0f, 0.5f, 2.0f)
     val got = Seq((a, b)).toDF("x", "y")
@@ -26,7 +25,6 @@ class SimilaritySpec extends SparkSpecBase {
   }
 
   test("graft_cosine: orthogonal → 0, parallel → 1, zero vector → 0") {
-    VectorOps.register(spark)
     val rows = Seq(
       (Array(1f, 0f), Array(0f, 1f)),
       (Array(2f, 2f), Array(1f, 1f)),
@@ -120,7 +118,6 @@ class SimilaritySpec extends SparkSpecBase {
   }
 
   test("kmeansCentroids converges onto planted cluster directions") {
-    VectorOps.register(spark)
     // two tight clusters around orthogonal axes; seeds (lowest ids 0,1)
     // both start INSIDE cluster A, so only Lloyd iteration can move one
     // centroid over to cluster B
@@ -141,7 +138,6 @@ class SimilaritySpec extends SparkSpecBase {
   }
 
   test("kmeansCentroids: empty cells inherit their previous centroid") {
-    VectorOps.register(spark)
     // all vectors identical ⇒ every vector assigns to one cell; the other
     // centroid must survive (not vanish / NaN)
     val emb = (0L until 8L).map(i => (i, Array(1.0f, 0f))).toDF("vec_id", "embedding")
@@ -160,7 +156,6 @@ class SimilaritySpec extends SparkSpecBase {
   }
 
   test("SRP hamming correlates with cosine (planted near-duplicate)") {
-    VectorOps.register(spark)
     val base = Array.tabulate(64)(i => math.sin(i * 1.7).toFloat)
     val near = base.clone(); near(0) = near(0) + 0.01f
     val far = Array.tabulate(64)(i => math.cos(i * 2.3).toFloat)
@@ -321,7 +316,6 @@ class SimilaritySpec extends SparkSpecBase {
   }
 
   test("PQ encode: argmin codes, lowest-index tie-break, packed layout") {
-    graft.functions.PqOps.register(spark)
     // m=2 sub-spaces of 1 dim, k=2 centroids each; codebook layout
     // (mi*k + ki)*sub + d. Sub 0: {0.0, 10.0}; sub 1: {5.0, 5.0} (a
     // deliberate tie: must pick index 0).
@@ -344,7 +338,6 @@ class SimilaritySpec extends SparkSpecBase {
   test("PQ codes are identical for identical vectors and partitioning-independent") {
     val emb = Tables.embeddings(spark, TestSpark.Sf0001)
     val (cb, _, _) = Similarity.pqTrain(emb, 8, 16, iters = 1)
-    graft.functions.PqOps.register(spark)
     def codes(df: org.apache.spark.sql.DataFrame) =
       df.select(col("vec_id"),
         graft.functions.PqOps.encode(col("embedding"), cb, 8, 16).as("code"))
@@ -881,7 +874,6 @@ class SimilaritySpec extends SparkSpecBase {
     // the byte ranking becomes pure vec_id tiebreak, and expand=1
     // starves the rescore. Exact neighbors deliberately carry HIGH ids
     // so the tiebreak provably misses them.
-    graft.functions.SqOps.register(spark)
     def v(deg: Double): Array[Float] = Array(
       math.cos(math.toRadians(deg)).toFloat,
       math.sin(math.toRadians(deg)).toFloat)

@@ -104,26 +104,25 @@ class SketchSpec extends SparkSpecBase {
       s"approx $approx vs exact $exact")
   }
 
-  test("GraftExtensions injects the full custom-function surface into a session") {
+  test("GraftExtensions ≡ install on a fresh session, and install is idempotent") {
+    import org.apache.spark.sql.graft.SessionSurface
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new GraftExtensions().apply(ext)
-    // SQL-visible through a session built with the extension conf; here
-    // assert the descriptor list itself (building a second SparkContext
-    // in-suite is not possible).
-    val names = GraftExtensions.functions.map(_._1.funcName).toSet
-    assert(names == Set("graft_simhash", "graft_minhash_shingles", "graft_winnow",
-      "graft_cosine", "graft_srp64", "graft_l2sq", "graft_cp1252_decode",
-      "graft_cp1252_encode", "graft_id_pairs", "graft_repetition",
-      "graft_word_gram_hashes", "graft_lm_nll", "graft_pq_encode",
-      "graft_pq_adc", "graft_bloom_agg", "graft_might_contain",
-      "graft_hamming_pairs", "graft_cosine_pairs", "graft_cosine_pairs_cross",
-      "graft_pq_adc_cols", "graft_canonical_url"))
-    // and the builders produce working expressions
-    val e = GraftExtensions.functions.head._3(
-      Seq(org.apache.spark.sql.catalyst.expressions.Literal.create(
-        Array("a", "b"), org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.StringType))))
-    assert(e.eval(null).isInstanceOf[Long])
+    val s2 = spark.newSession() // own registry and experimental methods
+    assert(SessionSurface.of(s2) == SessionSurface(Set.empty, Nil, Nil),
+      "control: a fresh session carries no graft surface")
+    GraftExtensions.install(s2)
+    val installed = SessionSurface.of(s2)
+    assert(installed == SessionSurface.injected(ext, s2))
+    assert(installed.functions == GraftExtensions.functions.map(_._1.funcName).toSet &&
+      installed.functions.size == 28)
+    assert(installed.strategies == Seq(graft.plans.TopKPerKeyStrategy) &&
+      installed.rules == Seq(graft.plans.TopKRewrite))
+    // a repeat install registers nothing and appends nothing
+    val count = SessionSurface.functionCount(s2)
+    GraftExtensions.install(s2)
+    assert(SessionSurface.of(s2) == installed &&
+      SessionSurface.functionCount(s2) == count)
   }
 
   test("hammingPairs kernel == brute-force enumeration (property)") {
@@ -242,7 +241,6 @@ class SketchSpec extends SparkSpecBase {
 
   test("repetition stats ≡ brute-force Scala counting on random docs (property)") {
     import org.scalacheck.Gen
-    graft.functions.Sketch.register(spark)
     val wordGen = Gen.oneOf("a", "b", "c", "dd", "e f".replace(" ", ""), "x")
     val docGen = Gen.chooseNum(0, 40).flatMap(n => Gen.listOfN(n, wordGen))
     val docsIn = samples(docGen, 60).zipWithIndex
@@ -269,7 +267,6 @@ class SketchSpec extends SparkSpecBase {
 
   test("wordGramHashes ≡ distinct string grams on random docs (property)") {
     import org.scalacheck.Gen
-    graft.functions.Sketch.register(spark)
     val wordGen = Gen.oneOf("w1", "w2", "w3", "w4")
     val docGen = Gen.chooseNum(0, 25).flatMap(n => Gen.listOfN(n, wordGen))
     val docsIn = samples(docGen, 60).zipWithIndex
@@ -294,7 +291,6 @@ class SketchSpec extends SparkSpecBase {
   }
 
   test("repetition stats: hand-computed counts, empty doc, single token") {
-    graft.functions.Sketch.register(spark)
     // "a b a c a b": 6 tokens, 3 distinct, top=3 (a);
     // bigrams: [a b, b a, a c, c a, a b] → 5 total, 4 distinct
     val r = docs(1L -> "a b a c a b", 2L -> "", 3L -> "solo")

@@ -112,7 +112,6 @@ class TopKPlanSpec extends SparkSpecBase {
   }
 
   test("TopKRewrite: plain row_number()<=k with rank dropped plans as the heap operator") {
-    graft.plans.TopKRewrite.register(spark)
     val df = (0L until 5000L).map(i => (s"k${i % 37}", i, (i % 11).toInt))
       .toDF("key", "id", "v").repartition(4).localCheckpoint()
     val rewritten = declarativeForm(df, 3)
@@ -139,7 +138,6 @@ class TopKPlanSpec extends SparkSpecBase {
   }
 
   test("TopKRewrite: extra post-rank conjuncts survive above the heap; bound still applies") {
-    graft.plans.TopKRewrite.register(spark)
     val df = (0L until 4000L).map(i => (s"k${i % 23}", i, (i % 9).toInt))
       .toDF("key", "id", "v").localCheckpoint()
     val w = Window.partitionBy("key").orderBy(desc("v"), asc("id"))
@@ -159,7 +157,6 @@ class TopKPlanSpec extends SparkSpecBase {
   }
 
   test("TopKRewrite: key-only conjunct ends up BELOW the heap, not above it") {
-    graft.plans.TopKRewrite.register(spark)
     val df = (0L until 3000L).map(i => (s"k${i % 19}", i, (i % 13).toInt))
       .toDF("key", "id", "v").localCheckpoint()
     val w = Window.partitionBy("key").orderBy(desc("v"), asc("id"))
@@ -185,7 +182,6 @@ class TopKPlanSpec extends SparkSpecBase {
   }
 
   test("TopKRewrite: rn < Int.MinValue is statically empty, never top-Int.MaxValue (ADVICE r11)") {
-    graft.plans.TopKRewrite.register(spark)
     val df = Seq(("a", 1L, 10), ("a", 2L, 20), ("b", 3L, 5))
       .toDF("key", "id", "v").localCheckpoint()
     val w = Window.partitionBy("key").orderBy(desc("v"), asc("id"))
@@ -204,7 +200,7 @@ class TopKPlanSpec extends SparkSpecBase {
   // a pass-1/isolation JVM served the full window sort while pass 2
   // served the heap. These pins make that class of drift red by name. --
 
-  test("ANY operator registration installs the plan surface in a virgin session (FnOnce choke point)") {
+  test("ANY SparkEntry.queries entry installs the plan surface in a virgin session") {
     val s2 = spark.newSession() // fresh ExperimentalMethods: no rule yet
     def idiom = {
       val w = Window.partitionBy("key").orderBy(desc("v"), asc("id"))
@@ -217,19 +213,19 @@ class TopKPlanSpec extends SparkSpecBase {
     val before = idiom.queryExecution.executedPlan.toString
     assert(before.contains("Window") && !before.contains("TopKPerKey"),
       s"control: a virgin session must NOT carry the rewrite yet:\n$before")
-    // the lazy register path every operator construction goes through —
-    // must bring the PLAN surface, not just the function surface
-    graft.functions.VectorOps.register(s2)
+    // the choke point every driver, Bench, Verify and PlanDump query
+    // goes through — one entry must bring the whole PLAN surface
+    SparkEntry.queries("q_saldo_per_konto")(s2, TestSpark.Sf0001)
     val after = idiom.queryExecution.executedPlan.toString
     assert("TopKPerKey".r.findAllIn(after).size >= 2 && !after.contains("Window"),
-      s"one operator register() must make the session plan-complete:\n$after")
+      s"one SparkEntry.queries entry must make the session plan-complete:\n$after")
   }
 
   test("TopKRewrite is batch-position-robust: the WindowGroupLimit-wrapped optimized shape rewrites too") {
     // A cluster deployment installs the rule via
     // `--conf spark.sql.extensions=graft.GraftExtensions`, which lands
     // it in the OPERATOR-OPTIMIZATION batch (pre-InferWindowGroupLimit
-    // shapes); the lazy register path lands it post-hoc, AFTER Spark's
+    // shapes); `GraftExtensions.install` lands it post-hoc, AFTER Spark's
     // own batches — where InferWindowGroupLimit has already wrapped the
     // window child in a Partial WindowGroupLimit. (An in-JVM test
     // cannot build an extensions session: `spark.sql.extensions` is a
@@ -255,7 +251,6 @@ class TopKPlanSpec extends SparkSpecBase {
   }
 
   test("TopKRewrite: rank(), kept-rank, and rank-consuming plans are left untouched") {
-    graft.plans.TopKRewrite.register(spark)
     val df = (0L until 1000L).map(i => (s"k${i % 7}", i, (i % 5).toInt))
       .toDF("key", "id", "v").localCheckpoint()
     val w = Window.partitionBy("key").orderBy(desc("v"), asc("id"))
