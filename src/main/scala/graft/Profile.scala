@@ -239,6 +239,7 @@ object Profile {
       // nine axis sub-serves carries q_takedown_e2e's seconds?)
       case "takedown_phases" =>
         import org.apache.spark.sql.functions._
+        import graft.operators.Ingest
         val dead = graft.operators.Ingest.ensureForgetSet(spark, sfDir)._1
           .select("doc_id").distinct().localCheckpoint()
         val deadVec = dead.select(col("doc_id").as("vec_id"))
@@ -258,18 +259,18 @@ object Profile {
           spark, sfDir, deadDoc, Seq("table", "scan", "join"), 10))
         run("cms")(graft.operators.CorpusStats.cmsEstimateForgottenWith(
           spark, sfDir, deadDoc))
-        run("dense")(graft.operators.Ingest.knnJoinIvfForgottenWith(
-          spark, sfDir, deadVec, qs, 10))
+        run("dense")(Ingest.knnJoinIvfServed(spark, sfDir,
+          Ingest.IvfLayout.Flat, Ingest.IvfGen.Masked(deadVec), qs, 10))
         run("media")(graft.operators.Multimodal.imageDedupForgottenWith(
           spark, sfDir, deadDoc))
         run("model")(graft.operators.Curation.nbModelRetractedWith(
           spark, sfDir, deadDoc))
         run("phrase")(graft.operators.Ingest.phraseMatchForgottenWith(
           spark, sfDir, deadDoc, graft.operators.Ingest.PhraseBatch))
-        run("qpq")(graft.operators.Ingest.knnJoinIvfPqForgottenWith(
-          spark, sfDir, deadVec, qs, 10))
-        run("qsq")(graft.operators.Ingest.knnJoinIvfSqForgottenWith(
-          spark, sfDir, deadVec, qs, 10))
+        run("qpq")(Ingest.knnJoinIvfServed(spark, sfDir,
+          Ingest.IvfLayout.pq(spark, sfDir), Ingest.IvfGen.Masked(deadVec), qs, 10))
+        run("qsq")(Ingest.knnJoinIvfServed(spark, sfDir,
+          Ingest.IvfLayout.sq8(spark, sfDir), Ingest.IvfGen.Masked(deadVec), qs, 10))
         run("sketch")(graft.operators.Ingest.nearDupForgottenWith(
           spark, sfDir, deadDoc))
         run("e2e-composed")(graft.operators.Ingest.takedownE2e(spark, sfDir))

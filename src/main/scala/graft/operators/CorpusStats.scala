@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.queries.Tables.documents
+import graft.operators.Artifacts.{buildGate, readCommitted, scratch}
 
 /** Corpus-frequency analytics (SURVEY.md §2.11): a mergeable Count-Min
   * sketch for heavy-hitter queries, and document-level PMI co-occurrence
@@ -96,21 +97,6 @@ object CorpusStats {
   val CmsProbeTerms: Seq[String] =
     Seq("agg", "column", "join", "merge", "query", "scan", "window",
       "zzz_absent_probe")
-
-  private def scratch(s: SparkSession, dir: String, name: String): String =
-    Artifacts.scratch(s, dir, name) // one protocol, one implementation
-
-  /** Commit-marker gate (the [[graft.operators.Ingest]] rule): an
-    * artifact is live only once `_SUCCESS` exists; gated writes are
-    * OVERWRITE so a torn directory is repaired, never served. */
-  private def committed(s: SparkSession, path: String): Boolean =
-    Artifacts.committed(s, path)
-
-  private def buildGate(s: SparkSession, path: String)(write: => Unit): Unit =
-    Artifacts.buildGate(s, path)(write)
-
-  private def readCommitted(s: SparkSession, path: String)
-      : org.apache.spark.sql.DataFrame = Artifacts.readCommitted(s, path)
 
   /** Stored corpus-stats artifacts: the BASE sketch over `documents` and
     * the DELTA sketch over the append batch (the same `% 101` exact-copy

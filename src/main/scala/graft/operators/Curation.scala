@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.queries.Tables.documents
+import graft.operators.Artifacts.{buildGate, readCommitted, scratch}
 
 /** Dataset-curation operators (SURVEY.md §2.11): the reproducibility
   * layer of a training-data pipeline — deterministic splits, PII
@@ -1004,18 +1005,6 @@ object Curation {
         .select((col("doc_id") + lit(Ingest.DocAppendOffset)).as("doc_id"),
           col("lang"), col("text")))
   }
-
-  private def scratch(s: SparkSession, dir: String, name: String): String =
-    Artifacts.scratch(s, dir, name) // one protocol, one implementation
-
-  private def committed(s: SparkSession, path: String): Boolean =
-    Artifacts.committed(s, path)
-
-  private def buildGate(s: SparkSession, path: String)(write: => Unit): Unit =
-    Artifacts.buildGate(s, path)(write)
-
-  private def readCommitted(s: SparkSession, path: String)
-      : org.apache.spark.sql.DataFrame = Artifacts.readCommitted(s, path)
 
   /** Stored inference artifact over snapshot v1: (doc_id, digest,
     * n_features, sum_micro) in ONE narrow kernel pass — the INTEGER

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.queries.Tables.documents
+import graft.operators.Artifacts.scratch
 
 /** Landing-format matrix (SURVEY.md §2.11): the interchange formats a
   * crawl/ingest pipeline actually receives and emits besides parquet —
@@ -23,9 +24,6 @@ import graft.queries.Tables.documents
   * fingerprint is a commutative BIGINT sum so the check itself is one
   * map-side-combined aggregate per format. */
 object Formats {
-
-  private def scratch(s: SparkSession, dir: String, name: String): String =
-    Artifacts.scratch(s, dir, name) // one protocol, one implementation
 
   /** Order-independent per-row fingerprint: exact integer fold of the
     * first 8 md5 hex digits of `lang || '#' || source || '#' || text`

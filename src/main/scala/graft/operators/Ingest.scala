@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.{Sketch, VectorOps}
+import graft.operators.Artifacts.{buildGate, committed, readCommitted, scratch}
 import graft.queries.Tables.{documents, embeddings}
 
 /** The STORED-SKETCH ingest path (SURVEY.md §9.2): at 100 TB, sketches
@@ -42,27 +43,6 @@ import graft.queries.Tables.{documents, embeddings}
   * keeps the forced-recall(1.0) gate.
   */
 object Ingest {
-
-  private def scratch(s: SparkSession, dir: String, name: String): String =
-    Artifacts.scratch(s, dir, name) // one protocol, one implementation
-
-  /** A stored artifact is LIVE only once its `_SUCCESS` commit marker
-    * exists — a bare directory can be a torn write from a crashed run,
-    * and a SaveMode.Ignore gated on directory existence would pin that
-    * damage forever (ADVICE r7). Every stored-index gate checks the
-    * marker and the gated writes use OVERWRITE, so a torn artifact is
-    * repaired by recomputation, never served empty or partial.
-    * Multi-directory generations write the PAYLOAD first and the
-    * centroid/marker directory LAST, so the gate implies a complete
-    * generation. */
-  private def committed(s: SparkSession, path: String): Boolean =
-    Artifacts.committed(s, path)
-
-  private def buildGate(s: SparkSession, path: String)(write: => Unit): Unit =
-    Artifacts.buildGate(s, path)(write)
-
-  private def readCommitted(s: SparkSession, path: String)
-      : org.apache.spark.sql.DataFrame = Artifacts.readCommitted(s, path)
 
   /** Corpus size for geometry derivation, memoized per (app, sf): the
     * count resolves the stored index's IDENTITY (nCells is part of its
@@ -414,8 +394,8 @@ object Ingest {
       .agg(sum("n_docs").as("n_docs"), sum("dl_total").as("dl_total"))
 
   /** Warm BM25 top-k over base ∪ delta postings — the sparse analog of
-    * [[ivfTopKAppended]]: each side gets its OWN static bucket IN-list
-    * prune + broadcast term join, and the union runs over
+    * [[ivfTopKServed]] over [[IvfGen.Appended]]: each side gets its OWN
+    * static bucket IN-list prune + broadcast term join, and the union runs over
     * already-pruned scans, so neither side ever reads a non-query
     * bucket directory. df falls out of the unioned tf frame (one row
     * per matching (doc, term) across BOTH generations), so the idf
@@ -440,7 +420,7 @@ object Ingest {
     * with merged stats. Old generation untouched (snapshot isolation);
     * serving flips to gen2 once its stats marker exists. At production
     * scale this is the scheduled job that keeps per-query file counts
-    * bounded as deltas accumulate — the [[compactIvfIndex]] posture on
+    * bounded as deltas accumulate — the [[ivfCompacted]] posture on
     * the sparse axis. */
   def compactTermIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) = graft.BuildTimer.time {
     val (postings, stats, dPostings, dStats) = ensureTermIndexDelta(s, dir)
@@ -943,35 +923,32 @@ object Ingest {
     val cells =
       if (nCells > 0) nCells
       else Similarity.ivfNumCells(embeddingCount(s, dir))
-    // nCells is part of the index identity (same rule as the PQ paths):
-    // an unkeyed path would let a non-default nCells silently reuse the
-    // previously stored cell geometry via SaveMode.Ignore.
-    val cPath = scratch(s, dir, s"ivf_centroids_c$cells")
-    val aPath = scratch(s, dir, s"ivf_assign_c$cells")
     // TRAINED centroids (3 Lloyd passes), not raw seed vectors: seed
     // "centroids" are arbitrary corpus rows, so at the derived √N
     // geometry they scatter near-neighbors across cells; trained cells
     // keep them co-located — training is a one-time ingest cost,
     // exactly where production IVF pays it. Training is EAGER (each
-    // Lloyd pass localCheckpoints), so unlike the lazy writes below a
-    // SaveMode.Ignore cannot skip it — check the stored path FIRST
-    // (the ensurePqCodebook pattern) or every warm probe would retrain.
-    buildGate(s, cPath) {
+    // Lloyd pass localCheckpoints), so it runs only inside the gate.
+    // Assignment itself is the narrow graft_ivf_cell kernel — the
+    // cell-partitioned write is the ONLY exchange in the index build.
+    centroidGated(s, ivfPath(s, dir, IvfLayout.Flat, "centroids", nCells = cells),
+        ivfPath(s, dir, IvfLayout.Flat, "assign", nCells = cells)) {
       val emb = indexedCorpus(s, dir)
       val centroids = Similarity.kmeansCentroids(emb, cells)
-      // repartition on the partition column first: each write task then
-      // owns whole cells, so the layout is nCells files instead of
-      // nCells × shuffle.partitions fragments (the small-files problem
-      // that kills object-store listings at scale). Assignment itself
-      // is the narrow graft_ivf_cell kernel — the repartition is the
-      // ONLY exchange in the index build. Payload first, marker last.
-      Similarity.ivfAssignKernel(emb, centroids)
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(aPath)
-      centroids.write.mode("overwrite").parquet(cPath)
+      (centroids, Similarity.ivfAssignKernel(emb, centroids))
     }
-    (readCommitted(s, cPath), readCommitted(s, aPath))
   }
+
+  /** Probe width: `nProbe` when forced, else the occupancy-sized
+    * default for k ([[Similarity.ivfNumProbe]] at the derived √N
+    * geometry). */
+  private def probeWidth(s: SparkSession, dir: String, k: Int,
+      nProbe: Int): Int =
+    if (nProbe > 0) nProbe
+    else {
+      val n = embeddingCount(s, dir)
+      Similarity.ivfNumProbe(n, Similarity.ivfNumCells(n), k)
+    }
 
   /** Align the probe plan's `cell` key with the stored partition
     * column's read-back type, so the join key is the BARE partition
@@ -1005,10 +982,7 @@ object Ingest {
   def ivfTopKStored(s: SparkSession, dir: String, k: Int,
       nProbe: Int = 0): DataFrame = {
     val (centroids, assign) = ensureIvfIndex(s, dir)
-    val n = embeddingCount(s, dir)
-    val probe =
-      if (nProbe > 0) nProbe
-      else Similarity.ivfNumProbe(n, Similarity.ivfNumCells(n), k)
+    val probe = probeWidth(s, dir, k, nProbe)
     val q = Similarity.queryRow(embeddings(s, dir))
     val probePlan = singleQueryProbePlan(centroids, q, probe)
     assign
@@ -1179,88 +1153,341 @@ object Ingest {
           .select(col("embedding").as("q_emb"), col("vec_id").as("q_id")))
         .toArray)
 
-  /** Materialize the delta once per (app, sf): assign against the STORED
-    * centroids (loaded, never retrained) and write partitioned by cell.
-    * Returns (centroids, base assignments, delta assignments). */
-  def ensureIvfDelta(s: SparkSession, dir: String)
+  /** One stored IVF index LAYOUT (FAISS's `IVF…,Flat` / `IVF…,SQ8` /
+    * `IVF…,PQ`): the cell-partitioned inverted lists every family
+    * shares, with a swappable per-vector payload. A layout holds ONLY
+    * what differs between the families — its path stem, how
+    * (vec_id, cell, embedding) rows become stored columns, and its
+    * batched serve over cell-partitioned sides — so the lifecycle
+    * ([[ivfDelta]] → [[ivfCompacted]] → [[ivfPurged]] /
+    * [[ivfRetrained]]) is written once over it. The SQ8 and PQ layouts
+    * carry their FROZEN models: both are cell-independent (fit to the
+    * corpus's per-dimension range / sub-vector distributions, not to
+    * the coarse geometry), so every generation — a retrained one
+    * included — encodes with the same model, and a vector's code never
+    * changes, only the cell it lives in. */
+  sealed abstract class IvfLayout(val stem: String, val table: String) {
+    /** Layout parameters that are part of the index identity (path). */
+    def params: String = ""
+    /** (centroids, cell-partitioned base payload). */
+    def base(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+      ivfCodeBase(s, dir, this, 0)
+    /** (vec_id, cell, embedding) rows → the stored columns. */
+    def encode(assigned: DataFrame): DataFrame
+    /** Batched kNN through a served generation. */
+    def knnJoin(s: SparkSession, dir: String, g: IvfServed,
+        queriesDf: DataFrame, k: Int, nProbe: Int): DataFrame
+  }
+
+  object IvfLayout {
+    /** Full-precision lists: the payload is the embedding itself. */
+    case object Flat extends IvfLayout("ivf", "assign") {
+      override def base(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+        ensureIvfIndex(s, dir)
+      def encode(assigned: DataFrame): DataFrame = assigned
+      def knnJoin(s: SparkSession, dir: String, g: IvfServed,
+          queriesDf: DataFrame, k: Int, nProbe: Int): DataFrame =
+        knnJoinSides(s, dir, g.sides, g.centroids, queriesDf, k, nProbe, g.dead)
+    }
+
+    /** Byte-per-dimension codes under the frozen (min, step) model. */
+    final case class Sq8(mins: Array[Float], steps: Array[Float],
+        expand: Int = 8) extends IvfLayout("ivfsq", "codes") {
+      def encode(assigned: DataFrame): DataFrame =
+        assigned.select(col("vec_id"), col("cell"),
+          graft.functions.SqOps.encode(col("embedding"), mins, steps).as("code"))
+      def knnJoin(s: SparkSession, dir: String, g: IvfServed,
+          queriesDf: DataFrame, k: Int, nProbe: Int): DataFrame =
+        knnJoinSqSides(s, dir, g.sides, g.centroids, mins, steps,
+          servedCorpus(s, dir, g.appended), queriesDf, k, expand, nProbe, g.dead)
+    }
+
+    /** m-byte product-quantizer codes under the frozen codebook. */
+    final case class Pq(cb: Array[Float], dim: Int, m: Int, kCent: Int,
+        expand: Int = 60) extends IvfLayout("ivfpq", "codes") {
+      override def params: String = s"_m${m}_k$kCent"
+      def encode(assigned: DataFrame): DataFrame =
+        assigned.select(col("vec_id"), col("cell"),
+          graft.functions.PqOps.encode(col("embedding"), cb, m, kCent).as("code"))
+      def knnJoin(s: SparkSession, dir: String, g: IvfServed,
+          queriesDf: DataFrame, k: Int, nProbe: Int): DataFrame =
+        knnJoinPqSides(s, dir, g.sides, g.centroids, cb, dim,
+          servedCorpus(s, dir, g.appended), queriesDf, k, expand, nProbe, m,
+          kCent, g.dead)
+    }
+
+    /** The IVF-SQ8 layout over the stored (train-once) SQ model. */
+    def sq8(s: SparkSession, dir: String, expand: Int = 8): Sq8 = {
+      val (mins, steps) = ensureSqModel(s, dir)
+      Sq8(mins, steps, expand)
+    }
+
+    /** The IVF-PQ layout over the stored (train-once) codebook. */
+    def pq(s: SparkSession, dir: String, m: Int = 8, kCent: Int = 256,
+        expand: Int = 60): Pq = {
+      val (cb, dim) = ensurePqCodebook(s, dir, m, kCent)
+      Pq(cb, dim, m, kCent, expand)
+    }
+  }
+
+  /** A served generation of an IVF layout ([[ivfServed]]). */
+  sealed trait IvfGen
+  object IvfGen {
+    /** The built index. */
+    case object Base extends IvfGen
+    /** Base ∪ the append delta: two sides, each DPP-pruned. */
+    case object Appended extends IvfGen
+    /** gen2: base ∪ delta merged into one table ([[ivfCompacted]]). */
+    case object Compacted extends IvfGen
+    /** gen3 once the served skew passes the threshold ([[ivfRetrained]]). */
+    final case class Retrained(skewThreshold: Double = 4.0) extends IvfGen
+    /** Base minus the stored tombstones, rewritten ([[ivfPurged]]). */
+    case object Purged extends IvfGen
+    /** Base with `dead` (vec_id rows) masked at serve time: one
+      * broadcast anti-join AFTER each side's DPP cell join (so it cannot
+      * interpose between scan and probe) and, on the code layouts,
+      * BEFORE the ranking (a dead code can neither score nor crowd a
+      * survivor off the expand·k shortlist, and the exact rescore only
+      * sees the shortlist). No statistics to correct: kNN ranking has no
+      * corpus-stat dependency. */
+    final case class Masked(dead: DataFrame) extends IvfGen
+  }
+
+  /** What a generation serves: its centroids, its cell-partitioned
+    * sides, whether it holds the append batch (the rescore corpus), and
+    * any serve-time tombstone mask. */
+  final case class IvfServed(centroids: DataFrame, sides: Seq[DataFrame],
+      appended: Boolean, dead: Option[DataFrame] = None)
+
+  private val PurgedGen = "_purged"
+
+  /** Every stored IVF-family path, from (layout, table, generation):
+    * `<stem>_<table><gen><params>_c<cells>` — e.g. ivf_assign_c45,
+    * ivfsq_delta_c45, ivfpq_codes_gen2_m8_k256_c45,
+    * ivf_centroids_gen3_c45. nCells is part of the identity (an unkeyed
+    * path would let a non-default geometry silently reuse another's
+    * stored cells); purged generations keep their historical cell-less
+    * names. */
+  private def ivfPath(s: SparkSession, dir: String, l: IvfLayout,
+      table: String, gen: String = "", nCells: Int = 0): String = {
+    val cells =
+      if (nCells > 0) nCells else Similarity.ivfNumCells(embeddingCount(s, dir))
+    val cellTag = if (gen == PurgedGen) "" else s"_c$cells"
+    scratch(s, dir, s"${l.stem}_$table$gen${l.params}$cellTag")
+  }
+
+  /** THE cell-partitioned write. Repartitioning on the partition column
+    * first makes each write task own whole cells, so the layout is
+    * nCells files instead of nCells × shuffle.partitions fragments (the
+    * small-files problem that kills object-store listings at scale). */
+  private def writeCells(rows: DataFrame, path: String): Unit =
+    rows.repartition(col("cell"))
+      .write.mode("overwrite").partitionBy("cell").parquet(path)
+
+  /** A one-table generation: gated cell-partitioned write (`rows` is
+    * built only on the cold path), then the committed reader. */
+  private def cellTable(s: SparkSession, path: String)(
+      rows: => DataFrame): DataFrame = {
+    buildGate(s, path)(writeCells(rows, path))
+    readCommitted(s, path)
+  }
+
+  /** A centroid-keyed generation (the base index, a retrained gen3):
+    * payload first, centroid table LAST, both under the centroid path's
+    * build gate — its marker implies a complete generation, and
+    * concurrent cold callers serialize on the lock instead of
+    * overwriting one directory. `build` runs only on the cold path.
+    * Returns (centroids, payload). */
+  private def centroidGated(s: SparkSession, cPath: String, path: String)(
+      build: => (DataFrame, DataFrame)): (DataFrame, DataFrame) = {
+    buildGate(s, cPath) {
+      val (centroids, rows) = build
+      writeCells(rows, path)
+      centroids.write.mode("overwrite").parquet(cPath)
+    }
+    (readCommitted(s, cPath), readCommitted(s, path))
+  }
+
+  /** A code layout's base: the indexed corpus (canaries ride the code
+    * table too, so the canary gates certify DPP + code ranking +
+    * rescore under real pruning) assigned against the flat index's
+    * trained centroids and encoded — both narrow kernels, so the
+    * cell-partitioned write is the build's only exchange. */
+  private def ivfCodeBase(s: SparkSession, dir: String, l: IvfLayout,
+      nCells: Int): (DataFrame, DataFrame) = {
+    val (centroids, _) = ensureIvfIndex(s, dir, nCells)
+    (centroids, cellTable(s, ivfPath(s, dir, l, l.table, nCells = nCells))(
+      l.encode(Similarity.ivfAssignKernel(indexedCorpus(s, dir), centroids))))
+  }
+
+  /** DELTA: the append batch assigned against the FROZEN stored
+    * centroids (never retrained — that would desynchronize the running
+    * index), encoded with the frozen model, and written as its own
+    * cell-partitioned table NEXT TO the base. Assignment and encode are
+    * narrow kernels, so delta ingest is a map over the landing batch
+    * plus the partitioned write. Returns (centroids, base, delta). */
+  def ivfDelta(s: SparkSession, dir: String, l: IvfLayout)
       : (DataFrame, DataFrame, DataFrame) = graft.BuildTimer.time {
-    val (centroids, assign) = ensureIvfIndex(s, dir)
-    val cells = Similarity.ivfNumCells(embeddingCount(s, dir))
-    val dPath = scratch(s, dir, s"ivf_delta_c$cells")
-    buildGate(s, dPath) {
-      Similarity.ivfAssignKernel(appendBatch(embeddings(s, dir)), centroids)
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(dPath)
-    }
-    (centroids, assign, readCommitted(s, dPath))
+    val (centroids, base) = l.base(s, dir)
+    (centroids, base, cellTable(s, ivfPath(s, dir, l, "delta"))(
+      l.encode(Similarity.ivfAssignKernel(
+        appendBatch(embeddings(s, dir)), centroids))))
   }
 
-  /** Warm-path IVF top-k over base ∪ delta: ONE probe plan, but each
-    * scan joins it SEPARATELY so both sides get their own
-    * dynamic-partition-pruning filter (a union UNDER the join would
-    * block DPP insertion), and the union runs over already-pruned
-    * scans — neither side ever reads an unprobed cell directory. */
-  def ivfTopKAppended(s: SparkSession, dir: String, k: Int,
-      nProbe: Int = 0): DataFrame = {
-    val (centroids, assign, delta) = ensureIvfDelta(s, dir)
-    val n = embeddingCount(s, dir)
-    val probe =
-      if (nProbe > 0) nProbe
-      else Similarity.ivfNumProbe(n, Similarity.ivfNumCells(n), k)
-    val q = appendQueryRow(embeddings(s, dir))
-    val probePlan = singleQueryProbePlan(centroids, q, probe)
-    def pruned(a: DataFrame): DataFrame =
-      a.join(broadcast(probeCells(probePlan, a)), "cell")
-        .select("vec_id", "embedding")
-    pruned(assign).unionByName(pruned(delta))
-      .crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("vec_id"),
-        VectorOps.cosine(col("embedding"), col("q_emb")).as("score"))
-      .orderBy(desc("score"), asc("vec_id"))
-      .limit(k)
-  }
-
-  /** COMPACTION — the scheduled half of the LSM posture: merge base ∪
-    * delta into the next index GENERATION under a new path, cell-
-    * partitioned like the base. The old generation's files are never
-    * touched (in-flight readers keep their snapshot); serving switches
-    * to the new generation once it exists. One wide job per compaction,
-    * amortized across every probe until the next one — at production
-    * scale this is the nightly job that keeps per-probe file counts
-    * bounded as deltas accumulate. */
-  def compactIvfIndex(s: SparkSession, dir: String)
+  /** COMPACTION — the scheduled half of the LSM posture: base ∪ delta
+    * merged into generation 2 under a new cell-partitioned path. Model
+    * and centroids are frozen, so payloads merge VERBATIM — a pure
+    * layout job (no re-encode, no re-assign; the code layouts read and
+    * write only their 8–dim B/row codes), which is why the nightly
+    * compaction of a 10⁹-vector index amortizes. Old generation files
+    * are never touched: in-flight readers keep their snapshot, serving
+    * switches once gen2 commits. Returns (centroids, gen2). */
+  def ivfCompacted(s: SparkSession, dir: String, l: IvfLayout)
       : (DataFrame, DataFrame) = graft.BuildTimer.time {
-    val (centroids, assign, delta) = ensureIvfDelta(s, dir)
-    val cells = Similarity.ivfNumCells(embeddingCount(s, dir))
-    val gPath = scratch(s, dir, s"ivf_assign_gen2_c$cells")
-    buildGate(s, gPath) {
-      assign.unionByName(delta)
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(gPath)
-    }
-    (centroids, readCommitted(s, gPath))
+    val (centroids, base, delta) = ivfDelta(s, dir, l)
+    (centroids, cellTable(s, ivfPath(s, dir, l, l.table, "_gen2"))(
+      base.unionByName(delta)))
   }
 
-  /** Warm-path IVF top-k from the COMPACTED generation — the
-    * single-scan serving shape of [[ivfTopKStored]], over gen2. */
-  def ivfTopKCompacted(s: SparkSession, dir: String, k: Int,
+  /** PURGE — the physical half of deletion ([[purgeTermIndex]]'s
+    * posture): the base minus the stored tombstones
+    * ([[ensureVecForgetSet]]) rewritten as a new cell-partitioned
+    * generation. Centroids and model untouched (deletion never
+    * retrains), no statistics to correct, so the purged generation
+    * serves through the identical DPP probe machinery with NO mask left
+    * in the plan — after this the retracted vectors' bytes are gone from
+    * the serving artifact. Returns (centroids, purged). */
+  def ivfPurged(s: SparkSession, dir: String, l: IvfLayout)
+      : (DataFrame, DataFrame) = graft.BuildTimer.time {
+    val (centroids, base) = l.base(s, dir)
+    (centroids, cellTable(s, ivfPath(s, dir, l, l.table, PurgedGen))(
+      base.join(broadcast(ensureVecForgetSet(s, dir)), Seq("vec_id"),
+        "left_anti")))
+  }
+
+  /** RETRAIN — [[retrainOnDrift]] over the served base ∪ delta: past
+    * the skew threshold, gen3 is the live corpus re-assigned against the
+    * NEW centroids and re-encoded with the frozen model (re-deriving the
+    * codes inside the assignment scan is cheaper than shuffling the code
+    * table into the new layout through a join), written next to the old
+    * generations through [[centroidGated]]. Below the threshold the
+    * served generation returns untouched. Generations are MONOTONE: a
+    * committed gen3 centroid marker IS the retrain decision, so warm
+    * calls pay two parquet reads, not a k-means pass. Returns
+    * (centroids, payload, retrained?). */
+  def ivfRetrained(s: SparkSession, dir: String, l: IvfLayout,
+      skewThreshold: Double = 4.0)
+      : (DataFrame, DataFrame, Boolean) = graft.BuildTimer.time {
+    val (centroids, base, delta) = ivfDelta(s, dir, l)
+    val cPath = ivfPath(s, dir, l, "centroids", "_gen3")
+    val gPath = ivfPath(s, dir, l, l.table, "_gen3")
+    if (committed(s, cPath))
+      (readCommitted(s, cPath), readCommitted(s, gPath), true)
+    else {
+      val live = indexedCorpus(s, dir)
+        .unionByName(appendBatch(embeddings(s, dir)))
+      val (newCents, _, retrained) =
+        retrainOnDrift(live, centroids, skewThreshold)
+      if (!retrained) (centroids, base.unionByName(delta), false)
+      else {
+        val (c, g) = centroidGated(s, cPath, gPath)(
+          (newCents, l.encode(Similarity.ivfAssignKernel(live, newCents))))
+        (c, g, true)
+      }
+    }
+  }
+
+  /** THE served-generation accessor: what each generation of a layout
+    * serves. */
+  def ivfServed(s: SparkSession, dir: String, l: IvfLayout,
+      gen: IvfGen): IvfServed = gen match {
+    case IvfGen.Base =>
+      val (c, base) = l.base(s, dir)
+      IvfServed(c, Seq(base), appended = false)
+    case IvfGen.Appended =>
+      val (c, base, delta) = ivfDelta(s, dir, l)
+      IvfServed(c, Seq(base, delta), appended = true)
+    case IvfGen.Compacted =>
+      val (c, gen2) = ivfCompacted(s, dir, l)
+      IvfServed(c, Seq(gen2), appended = true)
+    case IvfGen.Retrained(skewThreshold) =>
+      val (c, gen3, _) = ivfRetrained(s, dir, l, skewThreshold)
+      IvfServed(c, Seq(gen3), appended = true)
+    case IvfGen.Purged =>
+      val (c, purged) = ivfPurged(s, dir, l)
+      IvfServed(c, Seq(purged), appended = false)
+    case IvfGen.Masked(dead) =>
+      val (c, base) = l.base(s, dir)
+      IvfServed(c, Seq(base), appended = false, Some(dead))
+  }
+
+  /** Exact-rescore corpus of a served generation: the indexed corpus,
+    * plus the append batch once the generation holds it. */
+  private def servedCorpus(s: SparkSession, dir: String,
+      appended: Boolean): DataFrame =
+    if (appended) indexedCorpus(s, dir).unionByName(appendBatch(embeddings(s, dir)))
+    else indexedCorpus(s, dir)
+
+  /** Batched kNN through one served generation of a layout — the
+    * production retrieval shape end to end: the (q_id, cell) probe plan
+    * is a tiny frame (|Q|×nCells cosines, top-nProbe per query) joined
+    * BROADCAST against each cell-partitioned side SEPARATELY, so every
+    * scan carries its own dynamic-partition-pruning filter (a union
+    * under the join would block DPP insertion) and reads only the union
+    * of probed cells; then the layout's ranking and the shared
+    * two-phase per-query top-k. No assignment shuffle, no full-corpus
+    * scan, no driver-collected cell literal (a wide batch at nCells ≈
+    * 10⁴⁺ would bloat the plan; VERDICT r3 "What's wrong #1") — and
+    * the probe machinery does not care which generation it reads. */
+  def knnJoinIvfServed(s: SparkSession, dir: String, l: IvfLayout,
+      gen: IvfGen, queriesDf: DataFrame, k: Int,
+      nProbe: Int = 0): DataFrame =
+    l.knnJoin(s, dir, ivfServed(s, dir, l, gen), queriesDf, k, nProbe)
+
+  /** Each side of a served generation joined SEPARATELY to the
+    * single-query probe plan for `q` — every scan carries its own DPP
+    * filter (a union under the join would block DPP insertion) — and
+    * projected to `cols`; the union runs over the already-pruned scans,
+    * so no side ever reads an unprobed cell directory. */
+  private def probedSides(s: SparkSession, dir: String, g: IvfServed,
+      q: DataFrame, k: Int, nProbe: Int, cols: String*): DataFrame = {
+    require(g.dead.isEmpty, "single-query serves take no tombstone mask")
+    val probePlan =
+      singleQueryProbePlan(g.centroids, q, probeWidth(s, dir, k, nProbe))
+    g.sides
+      .map(a => a.join(broadcast(probeCells(probePlan, a)), "cell")
+        .select(cols.map(col): _*))
+      .reduce(_.unionByName(_))
+  }
+
+  /** Single-query top-k for the append probe row ([[appendQueryRow]])
+    * over a served FLAT generation. */
+  def ivfTopKServed(s: SparkSession, dir: String, gen: IvfGen, k: Int,
       nProbe: Int = 0): DataFrame = {
-    val (centroids, gen2) = compactIvfIndex(s, dir)
-    val n = embeddingCount(s, dir)
-    val probe =
-      if (nProbe > 0) nProbe
-      else Similarity.ivfNumProbe(n, Similarity.ivfNumCells(n), k)
+    val g = ivfServed(s, dir, IvfLayout.Flat, gen)
     val q = appendQueryRow(embeddings(s, dir))
-    val probePlan = singleQueryProbePlan(centroids, q, probe)
-    gen2
-      .join(broadcast(probeCells(probePlan, gen2)), "cell")
+    probedSides(s, dir, g, q, k, nProbe, "vec_id", "embedding")
       .crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("vec_id"),
         VectorOps.cosine(col("embedding"), col("q_emb")).as("score"))
       .orderBy(desc("score"), asc("vec_id"))
       .limit(k)
+  }
+
+  /** [[ivfTopKServed]] over a served IVF-PQ generation: ADC tables for
+    * the append query, DPP-pruned code scans (16 B/row), bounded exact
+    * rescore against the generation's served corpus. */
+  def ivfPqTopKServed(s: SparkSession, dir: String, gen: IvfGen, k: Int,
+      nProbe: Int = 0, expand: Int = 60, m: Int = 8,
+      kCent: Int = 256): DataFrame = {
+    val l = IvfLayout.pq(s, dir, m, kCent, expand)
+    val g = ivfServed(s, dir, l, gen)
+    val q = appendQueryRow(embeddings(s, dir))
+    val (qid, dot, nrm) = Similarity.adcTablesFor(q, l.cb, l.dim, m, kCent)
+    val cand = probedSides(s, dir, g, q, k, nProbe, "vec_id", "code")
+    Similarity.pqRescoreFor(servedCorpus(s, dir, g.appended),
+      Similarity.pqRank(cand, qid, dot, nrm, m, kCent, expand * k), k, q)
   }
 
   /** PQ code table (vec_id, code) + persisted codebook, written once
@@ -1436,23 +1663,9 @@ object Ingest {
     * write. Returns (mins, steps, centroids, cell-partitioned codes). */
   def ensureIvfSqIndex(s: SparkSession, dir: String,
       nCells: Int = 0): (Array[Float], Array[Float], DataFrame, DataFrame) = graft.BuildTimer.time {
-    val cells =
-      if (nCells > 0) nCells
-      else Similarity.ivfNumCells(embeddingCount(s, dir))
-    val (mins, steps) = ensureSqModel(s, dir)
-    val (centroids, _) = ensureIvfIndex(s, dir, cells)
-    val path = scratch(s, dir, s"ivfsq_codes_c$cells")
-    buildGate(s, path) {
-      // canaries ride the cell-partitioned code table too, so the gate
-      // certifies DPP + byte-code ranking + rescore under real pruning
-      val emb = indexedCorpus(s, dir)
-      Similarity.ivfAssignKernel(emb, centroids)
-        .select(col("vec_id"), col("cell"),
-          graft.functions.SqOps.encode(col("embedding"), mins, steps).as("code"))
-        .repartition(col("cell")) // whole cells per write task (small files)
-        .write.mode("overwrite").partitionBy("cell").parquet(path)
-    }
-    (mins, steps, centroids, readCommitted(s, path))
+    val l = IvfLayout.sq8(s, dir)
+    val (centroids, codes) = ivfCodeBase(s, dir, l, nCells)
+    (l.mins, l.steps, centroids, codes)
   }
 
   /** Batched kNN through the stored IVF-SQ8 index: the same plan-based
@@ -1464,116 +1677,9 @@ object Ingest {
     * (`graft_sq_score_cols`). Shortlist + bounded exact rescore as
     * everywhere else. */
   def knnJoinIvfSqStored(s: SparkSession, dir: String, queriesDf: DataFrame,
-      k: Int, expand: Int = 8, nProbe: Int = 0): DataFrame = {
-    val (mins, steps, centroids, codes) = ensureIvfSqIndex(s, dir)
-    knnJoinSqSides(s, dir, Seq(codes), centroids, mins, steps,
-      indexedCorpus(s, dir), queriesDf, k, expand, nProbe)
-  }
-
-  /** IVF-SQ8 delta append — frozen model, frozen centroids, the landing
-    * batch lands as its own cell-partitioned byte-code table next to
-    * the base (same LSM posture as [[ensureIvfPqDelta]]). */
-  def ensureIvfSqDelta(s: SparkSession, dir: String)
-      : (Array[Float], Array[Float], DataFrame, DataFrame, DataFrame) = graft.BuildTimer.time {
-    val (mins, steps, centroids, codes) = ensureIvfSqIndex(s, dir)
-    val cells = Similarity.ivfNumCells(embeddingCount(s, dir))
-    val dPath = scratch(s, dir, s"ivfsq_delta_c$cells")
-    buildGate(s, dPath) {
-      Similarity.ivfAssignKernel(appendBatch(embeddings(s, dir)), centroids)
-        .select(col("vec_id"), col("cell"),
-          graft.functions.SqOps.encode(col("embedding"), mins, steps).as("code"))
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(dPath)
-    }
-    (mins, steps, centroids, codes, readCommitted(s, dPath))
-  }
-
-  /** Batched IVF-SQ8 kNN over base ∪ delta (each side DPP-pruned by the
-    * shared probe plan before the union; rescore corpus includes the
-    * appended batch). */
-  def knnJoinIvfSqAppended(s: SparkSession, dir: String, queriesDf: DataFrame,
-      k: Int, expand: Int = 8, nProbe: Int = 0): DataFrame = {
-    val (mins, steps, centroids, codes, delta) = ensureIvfSqDelta(s, dir)
-    knnJoinSqSides(s, dir, Seq(codes, delta), centroids, mins, steps,
-      indexedCorpus(s, dir).unionByName(appendBatch(embeddings(s, dir))),
-      queriesDf, k, expand, nProbe)
-  }
-
-  /** IVF-SQ8 COMPACTION — generation merge, same LSM rule as
-    * [[compactIvfPqIndex]]: model and centroids frozen, so base ∪ delta
-    * byte codes rewrite VERBATIM into gen2 under a new cell-partitioned
-    * path — a pure layout job (dim bytes/row read and written, no
-    * re-encode, no embedding I/O). Old generation files untouched. */
-  def compactIvfSqIndex(s: SparkSession, dir: String)
-      : (Array[Float], Array[Float], DataFrame, DataFrame) = graft.BuildTimer.time {
-    val (mins, steps, centroids, codes, delta) = ensureIvfSqDelta(s, dir)
-    val cells = Similarity.ivfNumCells(embeddingCount(s, dir))
-    val gPath = scratch(s, dir, s"ivfsq_codes_gen2_c$cells")
-    buildGate(s, gPath) {
-      codes.unionByName(delta)
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(gPath)
-    }
-    (mins, steps, centroids, readCommitted(s, gPath))
-  }
-
-  /** Batched IVF-SQ8 kNN through the compacted generation (single
-    * DPP-pruned scan; rescore corpus includes the appended batch — the
-    * compacted index SERVES the same corpus the appended one did). */
-  def knnJoinIvfSqCompacted(s: SparkSession, dir: String, queriesDf: DataFrame,
-      k: Int, expand: Int = 8, nProbe: Int = 0): DataFrame = {
-    val (mins, steps, centroids, gen2) = compactIvfSqIndex(s, dir)
-    knnJoinSqSides(s, dir, Seq(gen2), centroids, mins, steps,
-      indexedCorpus(s, dir).unionByName(appendBatch(embeddings(s, dir))),
-      queriesDf, k, expand, nProbe)
-  }
-
-  /** IVF-SQ8 RETRAIN-ON-DRIFT — generation-3 parity for the third code
-    * family (the IVF and IVF-PQ retrain twins exist since r9/r10): when
-    * [[retrainOnDrift]] trips on the served base ∪ delta, gen3 is the
-    * live corpus re-assigned against the NEW centroids and re-encoded
-    * with the FROZEN SQ model. The (min, step) model is cell-independent
-    * exactly like the PQ codebook — cell geometry changes where a code
-    * LIVES, never what it IS — so per-vec_id codes must carry over
-    * verbatim (the gate pins n_code_diverging = 0). Monotone
-    * generations: the centroid marker commits LAST, after the code
-    * payload, and a committed gen3 is served without re-deciding. */
-  def ensureRetrainedIvfSq(s: SparkSession, dir: String,
-      skewThreshold: Double = 4.0)
-      : (Array[Float], Array[Float], DataFrame, DataFrame, Boolean) = graft.BuildTimer.time {
-    val (mins, steps, centroids, codes, delta) = ensureIvfSqDelta(s, dir)
-    val cells = Similarity.ivfNumCells(embeddingCount(s, dir))
-    val cPath = scratch(s, dir, s"ivfsq_centroids_gen3_c$cells")
-    val gPath = scratch(s, dir, s"ivfsq_codes_gen3_c$cells")
-    if (committed(s, cPath))
-      return (mins, steps, readCommitted(s, cPath), readCommitted(s, gPath), true)
-    val live = indexedCorpus(s, dir)
-      .unionByName(appendBatch(embeddings(s, dir)))
-    val (newCents, _, retrained) = retrainOnDrift(live, centroids, skewThreshold)
-    if (!retrained) (mins, steps, centroids, codes.unionByName(delta), false)
-    else {
-      Similarity.ivfAssignKernel(live, newCents)
-        .select(col("vec_id"), col("cell"),
-          graft.functions.SqOps.encode(col("embedding"), mins, steps).as("code"))
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(gPath)
-      newCents.write.mode("overwrite").parquet(cPath)
-      (mins, steps, readCommitted(s, cPath), readCommitted(s, gPath), true)
-    }
-  }
-
-  /** Batched IVF-SQ8 kNN through the RETRAINED generation (probe plan
-    * against the gen3 centroids, single DPP-pruned gen3 code scan;
-    * rescore corpus is the same live base ∪ delta set gen3 indexes). */
-  def knnJoinIvfSqRetrained(s: SparkSession, dir: String,
-      queriesDf: DataFrame, k: Int, skewThreshold: Double = 4.0,
-      expand: Int = 8, nProbe: Int = 0): DataFrame = {
-    val (mins, steps, centroids, gen3, _) =
-      ensureRetrainedIvfSq(s, dir, skewThreshold)
-    knnJoinSqSides(s, dir, Seq(gen3), centroids, mins, steps,
-      indexedCorpus(s, dir).unionByName(appendBatch(embeddings(s, dir))),
-      queriesDf, k, expand, nProbe)
-  }
+      k: Int, expand: Int = 8, nProbe: Int = 0): DataFrame =
+    knnJoinIvfServed(s, dir, IvfLayout.sq8(s, dir, expand), IvfGen.Base,
+      queriesDf, k, nProbe)
 
   /** Shared generation-spanning batched-kNN serving scaffold for the
     * CODE-table index families (PQ and SQ8 differ only in their
@@ -1587,10 +1693,7 @@ object Ingest {
       scoreCol: org.apache.spark.sql.Column, rescoreCorpus: DataFrame,
       queriesDf: DataFrame, k: Int, expand: Int, nProbe: Int,
       dead: Option[DataFrame] = None): DataFrame = {
-    val n = embeddingCount(s, dir)
-    val probe =
-      if (nProbe > 0) nProbe
-      else Similarity.ivfNumProbe(n, Similarity.ivfNumCells(n), k)
+    val probe = probeWidth(s, dir, k, nProbe)
     val probePlan = batchProbePlan(centroids, queriesDf, probe)
     val ranked = sides.map { side =>
       val pruned = side
@@ -1654,186 +1757,19 @@ object Ingest {
   def ensureIvfPqIndex(s: SparkSession, dir: String, m: Int = 8,
       kCent: Int = 256,
       nCells: Int = 0): (Array[Float], Int, DataFrame, DataFrame) = graft.BuildTimer.time {
-    val cells =
-      if (nCells > 0) nCells
-      else Similarity.ivfNumCells(embeddingCount(s, dir))
-    val (cb, dim) = ensurePqCodebook(s, dir, m, kCent)
-    val (centroids, _) = ensureIvfIndex(s, dir, cells)
-    val path = scratch(s, dir, s"ivfpq_codes_m${m}_k${kCent}_c$cells")
-    buildGate(s, path) {
-      // canaries ride the cell-partitioned code table too, so the IVF-PQ
-      // gate certifies DPP + ADC + rescore under real pruning
-      val emb = indexedCorpus(s, dir)
-      Similarity.ivfAssignKernel(emb, centroids)
-        .select(col("vec_id"), col("cell"),
-          graft.functions.PqOps.encode(col("embedding"), cb, m, kCent).as("code"))
-        .repartition(col("cell")) // whole cells per write task (small files)
-        .write.mode("overwrite").partitionBy("cell").parquet(path)
-    }
-    (cb, dim, centroids, readCommitted(s, path))
-  }
-
-  /** IVF-PQ delta append — the combined index's maintenance path: the
-    * append batch is encoded with the FROZEN stored codebook and
-    * assigned with the FROZEN stored centroids (retraining either would
-    * desynchronize the running index), landing as its own
-    * cell-partitioned code table next to the base. Assignment AND
-    * encoding are both narrow kernels, so delta ingest is a map over
-    * the landing batch plus the partitionBy(cell) write. */
-  def ensureIvfPqDelta(s: SparkSession, dir: String, m: Int = 8,
-      kCent: Int = 256)
-      : (Array[Float], Int, DataFrame, DataFrame, DataFrame) = graft.BuildTimer.time {
-    val (cb, dim, centroids, codes) = ensureIvfPqIndex(s, dir, m, kCent)
-    val cells = Similarity.ivfNumCells(embeddingCount(s, dir))
-    val dPath = scratch(s, dir, s"ivfpq_delta_m${m}_k${kCent}_c$cells")
-    buildGate(s, dPath) {
-      Similarity.ivfAssignKernel(appendBatch(embeddings(s, dir)), centroids)
-        .select(col("vec_id"), col("cell"),
-          graft.functions.PqOps.encode(col("embedding"), cb, m, kCent).as("code"))
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(dPath)
-    }
-    (cb, dim, centroids, codes, readCommitted(s, dPath))
-  }
-
-  /** Warm-path IVF-PQ top-k over base ∪ delta codes: the [[ivfPqTopKStored]]
-    * composition (DPP cell pruning + 16 B/row ADC + bounded rescore),
-    * with each code scan pruned by its OWN dynamic filter before the
-    * union (same rule as [[ivfTopKAppended]]). */
-  def ivfPqTopKAppended(s: SparkSession, dir: String, k: Int,
-      expand: Int = 60, nProbe: Int = 0, m: Int = 8,
-      kCent: Int = 256): DataFrame = {
-    val (cb, dim, centroids, codes, delta) = ensureIvfPqDelta(s, dir, m, kCent)
-    val n = embeddingCount(s, dir)
-    val probe =
-      if (nProbe > 0) nProbe
-      else Similarity.ivfNumProbe(n, Similarity.ivfNumCells(n), k)
-    val emb = embeddings(s, dir)
-    val q = appendQueryRow(emb)
-    val (qid, dot, nrm) = Similarity.adcTablesFor(q, cb, dim, m, kCent)
-    val probePlan = singleQueryProbePlan(centroids, q, probe)
-    def cand(c: DataFrame): DataFrame = c
-      .join(broadcast(probeCells(probePlan, c)), "cell")
-      .select(col("vec_id"), col("code"))
-    Similarity.pqRescoreFor(
-      indexedCorpus(s, dir).unionByName(appendBatch(emb)),
-      Similarity.pqRank(cand(codes).unionByName(cand(delta)),
-        qid, dot, nrm, m, kCent, expand * k),
-      k, q)
-  }
-
-  /** IVF-PQ COMPACTION — the combined index's generation merge,
-    * completing the lifecycle symmetry with [[compactIvfIndex]]: base ∪
-    * delta code tables rewrite into gen2 under a new cell-partitioned
-    * path. The codebook AND centroids are frozen, so the codes are
-    * reused VERBATIM — compaction is a pure LAYOUT job (no re-encode,
-    * no re-assign, no embedding I/O: the job reads 16 B/row of codes
-    * and writes them back merged), which is why the nightly compaction
-    * of a 10⁹-vector index is cheap enough to amortize. Old generation
-    * files are never touched; serving switches when gen2 exists. */
-  def compactIvfPqIndex(s: SparkSession, dir: String, m: Int = 8,
-      kCent: Int = 256): (Array[Float], Int, DataFrame, DataFrame) = graft.BuildTimer.time {
-    val (cb, dim, centroids, codes, delta) = ensureIvfPqDelta(s, dir, m, kCent)
-    val cells = Similarity.ivfNumCells(embeddingCount(s, dir))
-    val gPath = scratch(s, dir, s"ivfpq_codes_gen2_m${m}_k${kCent}_c$cells")
-    buildGate(s, gPath) {
-      codes.unionByName(delta)
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(gPath)
-    }
-    (cb, dim, centroids, readCommitted(s, gPath))
-  }
-
-  /** Shared single-query IVF-PQ serving body over ANY (centroids,
-    * cell-partitioned codes) generation: ADC tables for the append
-    * query, DPP-pruned code scan, bounded exact rescore against the
-    * full served corpus. */
-  private def ivfPqServe(s: SparkSession, dir: String, centroids: DataFrame,
-      codes: DataFrame, cb: Array[Float], dim: Int, k: Int, expand: Int,
-      nProbe: Int, m: Int, kCent: Int): DataFrame = {
-    val n = embeddingCount(s, dir)
-    val probe =
-      if (nProbe > 0) nProbe
-      else Similarity.ivfNumProbe(n, Similarity.ivfNumCells(n), k)
-    val emb = embeddings(s, dir)
-    val q = appendQueryRow(emb)
-    val (qid, dot, nrm) = Similarity.adcTablesFor(q, cb, dim, m, kCent)
-    val probePlan = singleQueryProbePlan(centroids, q, probe)
-    val cand = codes
-      .join(broadcast(probeCells(probePlan, codes)), "cell")
-      .select(col("vec_id"), col("code"))
-    Similarity.pqRescoreFor(
-      indexedCorpus(s, dir).unionByName(appendBatch(emb)),
-      Similarity.pqRank(cand, qid, dot, nrm, m, kCent, expand * k), k, q)
-  }
-
-  /** Warm-path IVF-PQ top-k from the COMPACTED generation — the
-    * single-scan serving shape of [[ivfPqTopKStored]] over gen2 (one
-    * DPP-pruned code scan instead of the base ∪ delta union). */
-  def ivfPqTopKCompacted(s: SparkSession, dir: String, k: Int,
-      expand: Int = 60, nProbe: Int = 0, m: Int = 8,
-      kCent: Int = 256): DataFrame = {
-    val (cb, dim, centroids, gen2) = compactIvfPqIndex(s, dir, m, kCent)
-    ivfPqServe(s, dir, centroids, gen2, cb, dim, k, expand, nProbe, m, kCent)
-  }
-
-  /** IVF-PQ RETRAIN — the combined index's half of the drift response,
-    * completing the lifecycle matrix (build → append → compact →
-    * retrain for BOTH layouts): when [[retrainOnDrift]] trips on the
-    * served corpus, generation 3 re-partitions the SAME codes under the
-    * retrained centroids. The PQ codebook is CELL-INDEPENDENT (trained
-    * on sub-vector distributions, not on the coarse geometry), so the
-    * codes stay valid across any re-clustering — they are re-derived
-    * bit-identically inside the assignment scan (deterministic frozen-
-    * codebook encode; cheaper than shuffling the 16 B/row code table
-    * into the new cell layout through a join). Below the threshold the
-    * served generation returns untouched. */
-  def ensureRetrainedIvfPq(s: SparkSession, dir: String,
-      skewThreshold: Double = 4.0, m: Int = 8, kCent: Int = 256)
-      : (Array[Float], Int, DataFrame, DataFrame, Boolean) = graft.BuildTimer.time {
-    val (cb, dim, centroids, codes, delta) = ensureIvfPqDelta(s, dir, m, kCent)
-    val cells = Similarity.ivfNumCells(embeddingCount(s, dir))
-    val cPath = scratch(s, dir, s"ivfpq_centroids_gen3_m${m}_k${kCent}_c$cells")
-    val gPath = scratch(s, dir, s"ivfpq_codes_gen3_m${m}_k${kCent}_c$cells")
-    // generations are MONOTONE (the LSM posture): once gen3 exists, a
-    // retrain already happened — serve it without re-deciding, so the
-    // warm path pays two parquet reads, not a k-means pass per probe.
-    // The gate is the CENTROID marker, written last: its _SUCCESS
-    // implies the code payload below committed first.
-    if (committed(s, cPath))
-      return (cb, dim, readCommitted(s, cPath), readCommitted(s, gPath), true)
-    val live = indexedCorpus(s, dir)
-      .unionByName(appendBatch(embeddings(s, dir)))
-    val (newCents, _, retrained) = retrainOnDrift(live, centroids, skewThreshold)
-    if (!retrained) (cb, dim, centroids, codes.unionByName(delta), false)
-    else {
-      Similarity.ivfAssignKernel(live, newCents)
-        .select(col("vec_id"), col("cell"),
-          graft.functions.PqOps.encode(col("embedding"), cb, m, kCent).as("code"))
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(gPath)
-      newCents.write.mode("overwrite").parquet(cPath)
-      (cb, dim, readCommitted(s, cPath), readCommitted(s, gPath), true)
-    }
-  }
-
-  /** Warm-path IVF-PQ top-k from the RETRAINED generation. */
-  def ivfPqTopKRetrained(s: SparkSession, dir: String, k: Int,
-      skewThreshold: Double = 4.0, expand: Int = 60, nProbe: Int = 0,
-      m: Int = 8, kCent: Int = 256): DataFrame = {
-    val (cb, dim, centroids, codes, _) =
-      ensureRetrainedIvfPq(s, dir, skewThreshold, m, kCent)
-    ivfPqServe(s, dir, centroids, codes, cb, dim, k, expand, nProbe, m, kCent)
+    val l = IvfLayout.pq(s, dir, m, kCent)
+    val (centroids, codes) = ivfCodeBase(s, dir, l, nCells)
+    (l.cb, l.dim, centroids, codes)
   }
 
   /** Retrain/compact signal: per-cell occupancy of the served index
     * (base ∪ delta) summarized to a bounded report — cell count, row
     * count, the hottest cell, and the max/mean skew ratio. Rising skew
     * as deltas accumulate against drifting data is the trigger for the
-    * next [[compactIvfIndex]]-then-retrain cycle; the report reads only
+    * next [[ivfCompacted]]-then-retrain cycle; the report reads only
     * the `cell` partition column (no payload I/O). */
   def ivfOccupancy(s: SparkSession, dir: String): DataFrame = {
-    val (_, assign, delta) = ensureIvfDelta(s, dir)
+    val (_, assign, delta) = ivfDelta(s, dir, IvfLayout.Flat)
     assign.select("cell").unionByName(delta.select("cell"))
       .groupBy("cell").agg(count(lit(1)).as("n"))
       .agg(count(lit(1)).as("n_cells"),
@@ -1857,7 +1793,7 @@ object Ingest {
     *
     * Returns (centroids, assignment, retrained?). The caller keeps
     * serving the OLD generation until the returned assignment is
-    * materialized (the [[ensureRetrainedIvf]] wrapper does exactly
+    * materialized (the [[ivfRetrained]] wrapper does exactly
     * that switch for the stored index) — retraining never blocks or
     * mutates in-flight probes, the same snapshot posture as append and
     * compact. */
@@ -1892,34 +1828,6 @@ object Ingest {
     }
   }
 
-  /** Stored-index wrapper for [[retrainOnDrift]] over the served
-    * base ∪ delta: if the skew trips, gen3 (retrained centroids + new
-    * cell-partitioned assignment) is written NEXT TO the old
-    * generations and returned; otherwise the old generation keeps
-    * serving. Old files are never touched either way. */
-  def ensureRetrainedIvf(s: SparkSession, dir: String,
-      skewThreshold: Double = 4.0): (DataFrame, DataFrame, Boolean) = graft.BuildTimer.time {
-    val (centroids, assign, delta) = ensureIvfDelta(s, dir)
-    val cells = Similarity.ivfNumCells(embeddingCount(s, dir))
-    val cPath = scratch(s, dir, s"ivf_centroids_gen3_c$cells")
-    val aPath = scratch(s, dir, s"ivf_assign_gen3_c$cells")
-    // monotone generations: a COMMITTED gen3 centroid marker IS the
-    // retrain decision (payload written first, marker last)
-    if (committed(s, cPath))
-      return (readCommitted(s, cPath), readCommitted(s, aPath), true)
-    val live = assign.select("vec_id", "embedding")
-      .unionByName(delta.select("vec_id", "embedding"))
-    val (newCents, newAssign, retrained) =
-      retrainOnDrift(live, centroids, skewThreshold)
-    if (!retrained) (centroids, assign.unionByName(delta), false)
-    else {
-      newAssign.repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(aPath)
-      newCents.write.mode("overwrite").parquet(cPath)
-      (readCommitted(s, cPath), readCommitted(s, aPath), true)
-    }
-  }
-
   /** Warm-path IVF-PQ top-k: probe-cell selection over the tiny
     * centroid table → DPP-pruned scan of the probed cells' CODE
     * directories → ADC ranking (16 B/row) → bounded exact rescore.
@@ -1930,10 +1838,7 @@ object Ingest {
       expand: Int = 60, nProbe: Int = 0, m: Int = 8,
       kCent: Int = 256): DataFrame = {
     val (cb, dim, centroids, codes) = ensureIvfPqIndex(s, dir, m, kCent)
-    val n = embeddingCount(s, dir)
-    val probe =
-      if (nProbe > 0) nProbe
-      else Similarity.ivfNumProbe(n, Similarity.ivfNumCells(n), k)
+    val probe = probeWidth(s, dir, k, nProbe)
     // the query row comes from the PLAIN corpus (canary ids are offset
     // above every real id, so min(vec_id) is identical — and the plain
     // scan skips the canary-union TakeOrdered subplan in every job that
@@ -1951,21 +1856,11 @@ object Ingest {
       Similarity.pqRank(cand, qid, dot, nrm, m, kCent, expand * k), k)
   }
 
-  /** Batched kNN through the STORED IVF index — the production retrieval
-    * shape end to end: the (q_id, cell) probe plan is a tiny frame
-    * (|Q|×nCells cosines, top-nProbe per query) that joins BROADCAST
-    * against the cell-partitioned assignments, so dynamic partition
-    * pruning reads only the union of probed cells (cells no query probes
-    * are never scanned) AND the same broadcast matches each candidate to
-    * exactly its probing queries; the shared two-phase top-k ranks per
-    * query. No assignment shuffle, no full-corpus scan, no |Q|-reducer
-    * skew — and no driver-collected cell literal (a wide batch at
-    * nCells ≈ 10⁴⁺ would bloat the plan; VERDICT r3 "What's wrong #1"). */
+  /** Batched kNN through the STORED base IVF index: [[knnJoinIvfServed]]
+    * over [[IvfGen.Base]] of the flat layout. */
   def knnJoinIvfStored(s: SparkSession, dir: String, queriesDf: DataFrame,
-      k: Int, nProbe: Int = 0): DataFrame = {
-    val (centroids, assign) = ensureIvfIndex(s, dir)
-    knnJoinSides(s, dir, Seq(assign), centroids, queriesDf, k, nProbe)
-  }
+      k: Int, nProbe: Int = 0): DataFrame =
+    knnJoinIvfServed(s, dir, IvfLayout.Flat, IvfGen.Base, queriesDf, k, nProbe)
 
   /** Batched (q_id → probed cells) plan — the |Q|-query generalization
     * of [[singleQueryProbePlan]] (per-query top-nProbe over the tiny
@@ -1984,7 +1879,7 @@ object Ingest {
   /** Batched kNN over ANY set of cell-partitioned index sides (base
     * alone, base ∪ delta, a compacted generation): ONE probe plan, but
     * each side joins it SEPARATELY so every scan gets its own
-    * dynamic-partition-pruning filter (the [[ivfTopKAppended]] rule —
+    * dynamic-partition-pruning filter (the [[ivfTopKServed]] rule —
     * a union under the join would block DPP insertion), then the shared
     * two-phase per-query top-k. This is the serving shape the index
     * lifecycle needs everywhere: the probe machinery must not care
@@ -1996,10 +1891,7 @@ object Ingest {
     // the batch subplan otherwise re-evaluates inside the probe-plan,
     // match and rescore broadcasts
     val queriesDf = Similarity.localizedQueryBatch(queriesDf0)
-    val n = embeddingCount(s, dir)
-    val probe =
-      if (nProbe > 0) nProbe
-      else Similarity.ivfNumProbe(n, Similarity.ivfNumCells(n), k)
+    val probe = probeWidth(s, dir, k, nProbe)
     val probePlan = batchProbePlan(centroids, queriesDf, probe)
     val scored = sides.map { side =>
       val pruned = side
@@ -2035,81 +1927,6 @@ object Ingest {
         .write.mode("overwrite").parquet(path)
     }
     readCommitted(s, path)
-  }
-
-  /** Batched kNN over the stored IVF index with the retraction masked —
-    * deletion on the DENSE axis (BM25 and the sketch index have their
-    * tombstone gates; this closes the third family). The mask is one
-    * broadcast anti-join applied after the DPP cell join; no statistics
-    * need correcting (kNN ranking has no corpus-stat dependency — the
-    * structural simplification deletion enjoys here vs BM25). The
-    * IVF-PQ/SQ variants mask identically through the shared
-    * [[knnJoinSides]] scaffold's `dead` hook. */
-  def knnJoinIvfForgotten(s: SparkSession, dir: String, queriesDf: DataFrame,
-      k: Int, nProbe: Int = 0): DataFrame = {
-    val (centroids, assign) = ensureIvfIndex(s, dir)
-    knnJoinSides(s, dir, Seq(assign), centroids, queriesDf, k, nProbe,
-      dead = Some(ensureVecForgetSet(s, dir)))
-  }
-
-  /** Batched IVF-PQ kNN with the retraction masked — the same stored
-    * tombstone set applied through [[knnJoinCodeSides]]'s `dead` hook:
-    * one broadcast anti-join on the 16 B/row code scan, after the DPP
-    * cell join and before the ADC ranking, so a retracted code can
-    * neither surface nor crowd a survivor out of the expand·k
-    * shortlist (and the exact rescore only ever sees the shortlist).
-    * Completes the deletion matrix on the quantized families — a
-    * takedown must hold through EVERY serving representation of the
-    * corpus, not just the full-precision one. */
-  def knnJoinIvfPqForgotten(s: SparkSession, dir: String,
-      queriesDf: DataFrame, k: Int, expand: Int = 60, nProbe: Int = 0,
-      m: Int = 8, kCent: Int = 256): DataFrame = {
-    val (cb, dim, centroids, codes) = ensureIvfPqIndex(s, dir, m, kCent)
-    knnJoinPqSides(s, dir, Seq(codes), centroids, cb, dim,
-      indexedCorpus(s, dir), queriesDf, k, expand, nProbe, m, kCent,
-      dead = Some(ensureVecForgetSet(s, dir)))
-  }
-
-  /** Batched IVF-SQ8 kNN with the retraction masked — same tombstone
-    * set, same post-DPP/pre-ranking mask position, through the byte-code
-    * scan. */
-  def knnJoinIvfSqForgotten(s: SparkSession, dir: String,
-      queriesDf: DataFrame, k: Int, expand: Int = 8,
-      nProbe: Int = 0): DataFrame = {
-    val (mins, steps, centroids, codes) = ensureIvfSqIndex(s, dir)
-    knnJoinSqSides(s, dir, Seq(codes), centroids, mins, steps,
-      indexedCorpus(s, dir), queriesDf, k, expand, nProbe,
-      dead = Some(ensureVecForgetSet(s, dir)))
-  }
-
-  /** [[knnJoinIvfForgotten]] with a CALLER-SUPPLIED tombstone frame
-    * (vec_id rows) — the streamed-takedown / composed-takedown entry on
-    * the dense axis. */
-  def knnJoinIvfForgottenWith(s: SparkSession, dir: String, dead: DataFrame,
-      queriesDf: DataFrame, k: Int, nProbe: Int = 0): DataFrame = {
-    val (centroids, assign) = ensureIvfIndex(s, dir)
-    knnJoinSides(s, dir, Seq(assign), centroids, queriesDf, k, nProbe,
-      dead = Some(dead.select("vec_id")))
-  }
-
-  /** [[knnJoinIvfPqForgotten]] with a caller-supplied tombstone frame. */
-  def knnJoinIvfPqForgottenWith(s: SparkSession, dir: String,
-      dead: DataFrame, queriesDf: DataFrame, k: Int, expand: Int = 60,
-      nProbe: Int = 0, m: Int = 8, kCent: Int = 256): DataFrame = {
-    val (cb, dim, centroids, codes) = ensureIvfPqIndex(s, dir, m, kCent)
-    knnJoinPqSides(s, dir, Seq(codes), centroids, cb, dim,
-      indexedCorpus(s, dir), queriesDf, k, expand, nProbe, m, kCent,
-      dead = Some(dead.select("vec_id")))
-  }
-
-  /** [[knnJoinIvfSqForgotten]] with a caller-supplied tombstone frame. */
-  def knnJoinIvfSqForgottenWith(s: SparkSession, dir: String,
-      dead: DataFrame, queriesDf: DataFrame, k: Int, expand: Int = 8,
-      nProbe: Int = 0): DataFrame = {
-    val (mins, steps, centroids, codes) = ensureIvfSqIndex(s, dir)
-    knnJoinSqSides(s, dir, Seq(codes), centroids, mins, steps,
-      indexedCorpus(s, dir), queriesDf, k, expand, nProbe,
-      dead = Some(dead.select("vec_id")))
   }
 
   /** [[phraseMatchForgotten]] with a caller-supplied tombstone frame. */
@@ -2212,8 +2029,8 @@ object Ingest {
       () => fp("cms",
         CorpusStats.cmsEstimateForgottenWith(s, dir, dead),
         lit(0L), col("tf_est")),
-      () => denseFp("dense",
-        knnJoinIvfForgottenWith(s, dir, deadVec, qs, 10)),
+      () => denseFp("dense", knnJoinIvfServed(s, dir, IvfLayout.Flat,
+        IvfGen.Masked(deadVec), qs, 10)),
       () => fp("media",
         Multimodal.imageDedupForgottenWith(s, dir, dead),
         col("keep_id"), col("id_sum")),
@@ -2223,10 +2040,10 @@ object Ingest {
       () => fp("phrase",
         phraseMatchForgottenWith(s, dir, dead, PhraseBatch),
         col("phrase_id") * lit(1000000L) + col("doc_id"), col("n_hits")),
-      () => denseFp("quantized_pq",
-        knnJoinIvfPqForgottenWith(s, dir, deadVec, qs, 10)),
-      () => denseFp("quantized_sq",
-        knnJoinIvfSqForgottenWith(s, dir, deadVec, qs, 10)),
+      () => denseFp("quantized_pq", knnJoinIvfServed(s, dir,
+        IvfLayout.pq(s, dir), IvfGen.Masked(deadVec), qs, 10)),
+      () => denseFp("quantized_sq", knnJoinIvfServed(s, dir,
+        IvfLayout.sq8(s, dir), IvfGen.Masked(deadVec), qs, 10)),
       () => fp("sketch",
         nearDupForgottenWith(s, dir, dead),
         col("doc1") + col("doc2"),
@@ -2239,92 +2056,6 @@ object Ingest {
         axes.map(a => () => a().localCheckpoint()), parallelism = axes.size)
       .reduce(_.unionByName(_))
       .orderBy("axis")
-  }
-
-  /** PURGE of the dense IVF index — the physical half of deletion on
-    * the embedding axis ([[purgeTermIndex]]'s posture): the
-    * cell-partitioned assignment table minus the tombstoned rows,
-    * rewritten under a new generation path. No statistics to correct
-    * (kNN ranking is stat-free) and the layout survives verbatim —
-    * still partitioned by cell, so the purged generation serves through
-    * the identical DPP probe machinery with NO mask left in the plan.
-    * Old generation untouched until the new marker commits (snapshot
-    * isolation); at production scale this folds into the scheduled
-    * compaction that rewrites the assignments anyway. */
-  def purgeIvfIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) = graft.BuildTimer.time {
-    val (centroids, assign) = ensureIvfIndex(s, dir)
-    val path = scratch(s, dir, "ivf_assign_purged")
-    buildGate(s, path) {
-      assign
-        .join(broadcast(ensureVecForgetSet(s, dir)), Seq("vec_id"), "left_anti")
-        .repartition(col("cell")) // whole cells per write task
-        .write.mode("overwrite").partitionBy("cell").parquet(path)
-    }
-    (centroids, readCommitted(s, path))
-  }
-
-  /** Batched kNN from the PURGED dense generation — single pruned scan,
-    * no anti-join in the serve path; shares q_knn_ivf_forget's oracle
-    * VERBATIM, so masked ≡ purged ≡ the pinned canary outcome is held
-    * by one hash (the q_bm25_purge convention, on the dense axis). */
-  def knnJoinIvfPurged(s: SparkSession, dir: String, queriesDf: DataFrame,
-      k: Int, nProbe: Int = 0): DataFrame = {
-    val (centroids, gen) = purgeIvfIndex(s, dir)
-    knnJoinSides(s, dir, Seq(gen), centroids, queriesDf, k, nProbe)
-  }
-
-  /** PURGE of the IVF-PQ code table — same generation rewrite on the
-    * 16 B/row representation: codes minus tombstones under a new
-    * cell-partitioned path (model and centroids untouched — deletion
-    * never retrains). Completes the physical half on every quantized
-    * layout: after this, the retracted vectors' code bytes are
-    * genuinely gone from the serving artifact. */
-  def purgeIvfPqIndex(s: SparkSession, dir: String, m: Int = 8,
-      kCent: Int = 256): (Array[Float], Int, DataFrame, DataFrame) = graft.BuildTimer.time {
-    val (cb, dim, centroids, codes) = ensureIvfPqIndex(s, dir, m, kCent)
-    val path = scratch(s, dir, s"ivfpq_codes_purged_m${m}_k$kCent")
-    buildGate(s, path) {
-      codes
-        .join(broadcast(ensureVecForgetSet(s, dir)), Seq("vec_id"), "left_anti")
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(path)
-    }
-    (cb, dim, centroids, readCommitted(s, path))
-  }
-
-  /** Batched IVF-PQ kNN from the purged code generation — no mask in
-    * the plan; shares the masked gate's oracle verbatim. */
-  def knnJoinIvfPqPurged(s: SparkSession, dir: String,
-      queriesDf: DataFrame, k: Int, expand: Int = 60, nProbe: Int = 0,
-      m: Int = 8, kCent: Int = 256): DataFrame = {
-    val (cb, dim, centroids, gen) = purgeIvfPqIndex(s, dir, m, kCent)
-    knnJoinPqSides(s, dir, Seq(gen), centroids, cb, dim,
-      indexedCorpus(s, dir), queriesDf, k, expand, nProbe, m, kCent)
-  }
-
-  /** PURGE of the IVF-SQ8 code table — the byte-code twin of
-    * [[purgeIvfPqIndex]]. */
-  def purgeIvfSqIndex(s: SparkSession, dir: String)
-      : (Array[Float], Array[Float], DataFrame, DataFrame) = graft.BuildTimer.time {
-    val (mins, steps, centroids, codes) = ensureIvfSqIndex(s, dir)
-    val path = scratch(s, dir, "ivfsq_codes_purged")
-    buildGate(s, path) {
-      codes
-        .join(broadcast(ensureVecForgetSet(s, dir)), Seq("vec_id"), "left_anti")
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(path)
-    }
-    (mins, steps, centroids, readCommitted(s, path))
-  }
-
-  /** Batched IVF-SQ8 kNN from the purged code generation — no mask in
-    * the plan; shares the masked gate's oracle verbatim. */
-  def knnJoinIvfSqPurged(s: SparkSession, dir: String,
-      queriesDf: DataFrame, k: Int, expand: Int = 8,
-      nProbe: Int = 0): DataFrame = {
-    val (mins, steps, centroids, gen) = purgeIvfSqIndex(s, dir)
-    knnJoinSqSides(s, dir, Seq(gen), centroids, mins, steps,
-      indexedCorpus(s, dir), queriesDf, k, expand, nProbe)
   }
 
   /** Mean measured recall@k of the stored IVF index vs the in-engine
@@ -2462,14 +2193,6 @@ object Ingest {
       (col("resc") - col("adc") >= lit(0.15)).as("rescore_recovers"))
   }
 
-  /** Batched kNN over the APPENDED index (base ∪ delta) — the |Q|>1
-    * generalization of [[ivfTopKAppended]]'s serving path. */
-  def knnJoinIvfAppended(s: SparkSession, dir: String, queriesDf: DataFrame,
-      k: Int, nProbe: Int = 0): DataFrame = {
-    val (centroids, assign, delta) = ensureIvfDelta(s, dir)
-    knnJoinSides(s, dir, Seq(assign, delta), centroids, queriesDf, k, nProbe)
-  }
-
   /** Batched kNN over the base index plus a CALLER-SUPPLIED delta —
     * e.g. one landed by the streaming ingest twin
     * ([[graft.streaming.IvfStream.assignLandingStream]] →
@@ -2482,14 +2205,6 @@ object Ingest {
       queriesDf: DataFrame, k: Int, nProbe: Int = 0): DataFrame = {
     val (centroids, assign) = ensureIvfIndex(s, dir)
     knnJoinSides(s, dir, Seq(assign, delta), centroids, queriesDf, k, nProbe)
-  }
-
-  /** Batched kNN over the COMPACTED generation — same probe machinery,
-    * one merged scan. */
-  def knnJoinIvfCompacted(s: SparkSession, dir: String, queriesDf: DataFrame,
-      k: Int, nProbe: Int = 0): DataFrame = {
-    val (centroids, gen2) = compactIvfIndex(s, dir)
-    knnJoinSides(s, dir, Seq(gen2), centroids, queriesDf, k, nProbe)
   }
 
   /** Batched kNN through the STORED IVF-PQ index — the full
@@ -2509,33 +2224,9 @@ object Ingest {
     * query batch itself. */
   def knnJoinIvfPqStored(s: SparkSession, dir: String, queriesDf: DataFrame,
       k: Int, expand: Int = 60, nProbe: Int = 0, m: Int = 8,
-      kCent: Int = 256): DataFrame = {
-    val (cb, dim, centroids, codes) = ensureIvfPqIndex(s, dir, m, kCent)
-    knnJoinPqSides(s, dir, Seq(codes), centroids, cb, dim,
-      indexedCorpus(s, dir), queriesDf, k, expand, nProbe, m, kCent)
-  }
-
-  /** Batched IVF-PQ kNN over the APPENDED index (base ∪ delta code
-    * tables, each DPP-pruned before the union). */
-  def knnJoinIvfPqAppended(s: SparkSession, dir: String, queriesDf: DataFrame,
-      k: Int, expand: Int = 60, nProbe: Int = 0, m: Int = 8,
-      kCent: Int = 256): DataFrame = {
-    val (cb, dim, centroids, codes, delta) = ensureIvfPqDelta(s, dir, m, kCent)
-    knnJoinPqSides(s, dir, Seq(codes, delta), centroids, cb, dim,
-      indexedCorpus(s, dir).unionByName(appendBatch(embeddings(s, dir))),
-      queriesDf, k, expand, nProbe, m, kCent)
-  }
-
-  /** Batched IVF-PQ kNN over the COMPACTED generation (one merged
-    * code scan). */
-  def knnJoinIvfPqCompacted(s: SparkSession, dir: String, queriesDf: DataFrame,
-      k: Int, expand: Int = 60, nProbe: Int = 0, m: Int = 8,
-      kCent: Int = 256): DataFrame = {
-    val (cb, dim, centroids, gen2) = compactIvfPqIndex(s, dir, m, kCent)
-    knnJoinPqSides(s, dir, Seq(gen2), centroids, cb, dim,
-      indexedCorpus(s, dir).unionByName(appendBatch(embeddings(s, dir))),
-      queriesDf, k, expand, nProbe, m, kCent)
-  }
+      kCent: Int = 256): DataFrame =
+    knnJoinIvfServed(s, dir, IvfLayout.pq(s, dir, m, kCent, expand),
+      IvfGen.Base, queriesDf, k, nProbe)
 
   private def knnJoinPqSides(s: SparkSession, dir: String,
       sides: Seq[DataFrame], centroids: DataFrame, cb: Array[Float],
@@ -2650,6 +2341,97 @@ object Ingest {
     * deletion surface without composing it reds that spec by name). */
   val takedownAxes: Seq[String] =
     Seq("bm25", "dense", "phrase", "quantized_pq", "quantized_sq", "sketch")
+
+  /** The 8 base-canary sources as a (q_id, q_emb) batch: each query's
+    * exact-copy twin rides the base at +[[TwinOffset]]. */
+  private def canaryQueries(s: SparkSession, dir: String): DataFrame =
+    embeddings(s, dir).orderBy("vec_id").limit(NumCanaries)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+
+  /** The 8 append sources as a batch: each query's exact copy lives ONLY
+    * in the delta, at +[[AppendOffset]]. */
+  private def appendQueries(s: SparkSession, dir: String): DataFrame =
+    embeddings(s, dir).orderBy("vec_id").offset(NumCanaries).limit(NumCanaries)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+
+  /** The forget/purge gates' outcome over a [[canaryQueries]] serve with
+    * the first half's twins tombstoned: a retracted twin was its query's
+    * guaranteed top-1, so n_retracted_served == 0 pins the mask (or the
+    * purge) across probe/DPP/shortlist/top-k, and the surviving half's
+    * recall 1.0 pins that deletion removed nothing else. */
+  private def forgetOutcome(s: SparkSession, dir: String,
+      served: DataFrame): DataFrame = {
+    val dead = ensureVecForgetSet(s, dir)
+      .select(col("vec_id").as("dead_id"))
+    served
+      .join(broadcast(dead), col("vec_id") === col("dead_id"), "left_outer")
+      .agg(
+        (count(when(col("vec_id") === col("q_id") + lit(TwinOffset),
+          lit(1))).cast(DoubleType) / (NumCanaries / 2).toDouble)
+          .as("recall_surviving"),
+        count(col("dead_id")).as("n_retracted_served"))
+  }
+
+  /** recall_at_10 of the delta-only append canaries: a batched serve
+    * (q_id per row, over [[appendQueries]]) must hold each query's
+    * +AppendOffset copy; a single-query serve must hold the
+    * [[appendQueryRow]]'s. Pinned 1.0, it proves the frozen-centroid
+    * assignment, the delta's cell layout and the generation's pruned
+    * scans — without rebuilding or touching the base index files. */
+  private def appendRecall(s: SparkSession, dir: String,
+      served: DataFrame): DataFrame =
+    if (served.columns.contains("q_id"))
+      served.filter(col("vec_id") === col("q_id") + lit(AppendOffset))
+        .agg((count(lit(1)).cast(DoubleType) / NumCanaries.toDouble)
+          .as("recall_at_10"))
+    else
+      served.join(broadcast(appendQueryRow(embeddings(s, dir))),
+          col("vec_id") === col("q_id") + lit(AppendOffset))
+        .agg(count(lit(1)).cast(DoubleType).as("recall_at_10"))
+
+  /** The compact gates: the appended and the compacted serve, each
+    * constructed AND materialized on a pool thread (guide §2.6 — both
+    * are bounded, k rows per query, so the differential reads two tiny
+    * checkpoints instead of re-executing each serve in both exceptAll
+    * directions), compared row-for-row (n_diverging pinned 0: payloads
+    * merge verbatim, so any re-encode or layout bug diverges), plus the
+    * append canary recall through the compacted generation. */
+  private def compactDifferential(s: SparkSession, dir: String,
+      serve: IvfGen => DataFrame): DataFrame = {
+    val Seq(appended, compacted) = graft.Par.run(s.sparkContext, Seq(
+      () => serve(IvfGen.Appended).localCheckpoint(),
+      () => serve(IvfGen.Compacted).localCheckpoint()))
+    val diverging = appended.exceptAll(compacted)
+      .unionByName(compacted.exceptAll(appended))
+    appendRecall(s, dir, compacted)
+      .crossJoin(diverging.agg(count(lit(1)).cast(LongType)
+        .as("n_diverging")))
+  }
+
+  /** The retrain gates: skewThreshold = 0 forces the drift response
+    * deterministically (occupancy skew is ≥ 1 by construction), so a
+    * COLD run exercises the full retrain — k-means on the live sample,
+    * gen3 under the NEW centroids, codes re-derived with the FROZEN
+    * model — and warm runs serve the monotone gen3. Pinned every run:
+    * per-vec_id gen3 codes ≡ the served base ∪ delta codes
+    * (n_code_diverging 0) and the append canaries surface through the
+    * retrained geometry. The serve and the corpus-sized differential are
+    * independent and overlap (guide §2.6), checkpointing only the two
+    * 1-row aggregates — the code tables never enter the block manager. */
+  private def retrainCheck(s: SparkSession, dir: String, l: IvfLayout,
+      serve: IvfGen => DataFrame): DataFrame = {
+    val forced = IvfGen.Retrained(skewThreshold = 0.0)
+    val (_, gen3, _) = ivfRetrained(s, dir, l, forced.skewThreshold)
+    val (_, base, delta) = ivfDelta(s, dir, l)
+    val served = base.drop("cell").unionByName(delta.drop("cell"))
+    val g3 = gen3.drop("cell")
+    val diverging = g3.exceptAll(served).unionByName(served.exceptAll(g3))
+    val Seq(recall, nDiv) = graft.Par.run(s.sparkContext, Seq(
+      () => appendRecall(s, dir, serve(forced)).localCheckpoint(),
+      () => diverging.agg(count(lit(1)).cast(LongType)
+        .as("n_code_diverging")).localCheckpoint()))
+    recall.crossJoin(nDiv)
+  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // the ingest step itself: materialize both stored layouts, report
@@ -2881,15 +2663,11 @@ object Ingest {
     // — nCells ≈ √N, probe to a max(50·k, N/10) candidate scan), so
     // unlike the fixed-16-cell era this gate runs with most of the
     // corpus genuinely UNSCANNED.
-    "q_knn_ivf_stored" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val qs = emb.orderBy("vec_id").limit(NumCanaries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      knnJoinIvfStored(s, dir, qs, 10)
+    "q_knn_ivf_stored" -> ((s, dir) =>
+      knnJoinIvfStored(s, dir, canaryQueries(s, dir), 10)
         .filter(col("vec_id") === col("q_id") + lit(TwinOffset))
         .agg((count(lit(1)).cast(DoubleType) / NumCanaries.toDouble)
-          .as("recall_at_10"))
-    }),
+          .as("recall_at_10"))),
 
     // MEASURED recall at the serving paths' ACTUAL operating point (the
     // occupancy-sized ivfNumProbe default — 27% of cells at sf0.1,
@@ -2929,20 +2707,10 @@ object Ingest {
     // pins the mask across probe/DPP/top-k; the surviving half must
     // still hit 1.0 (deletion only removes competitors), pinning the
     // mask doesn't over-delete.
-    "q_knn_ivf_forget" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val qs = emb.orderBy("vec_id").limit(NumCanaries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val dead = ensureVecForgetSet(s, dir)
-        .select(col("vec_id").as("dead_id"))
-      knnJoinIvfForgotten(s, dir, qs, 10)
-        .join(broadcast(dead), col("vec_id") === col("dead_id"), "left_outer")
-        .agg(
-          (count(when(col("vec_id") === col("q_id") + lit(TwinOffset),
-            lit(1))).cast(DoubleType) / (NumCanaries / 2).toDouble)
-            .as("recall_surviving"),
-          count(col("dead_id")).as("n_retracted_served"))
-    }),
+    "q_knn_ivf_forget" -> ((s, dir) => forgetOutcome(s, dir,
+      knnJoinIvfServed(s, dir, IvfLayout.Flat,
+        IvfGen.Masked(ensureVecForgetSet(s, dir)),
+        canaryQueries(s, dir), 10))),
 
     // the same retraction held through the QUANTIZED families: a
     // takedown must mask every serving representation, and the code
@@ -2953,105 +2721,46 @@ object Ingest {
     // across probe/DPP/shortlist/rescore; the surviving half's 1.0 pins
     // that the mask neither over-deletes nor lets a dead code crowd the
     // shortlist.
-    "q_knn_ivfpq_forget" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val qs = emb.orderBy("vec_id").limit(NumCanaries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val dead = ensureVecForgetSet(s, dir)
-        .select(col("vec_id").as("dead_id"))
-      knnJoinIvfPqForgotten(s, dir, qs, 10)
-        .join(broadcast(dead), col("vec_id") === col("dead_id"), "left_outer")
-        .agg(
-          (count(when(col("vec_id") === col("q_id") + lit(TwinOffset),
-            lit(1))).cast(DoubleType) / (NumCanaries / 2).toDouble)
-            .as("recall_surviving"),
-          count(col("dead_id")).as("n_retracted_served"))
-    }),
+    "q_knn_ivfpq_forget" -> ((s, dir) => forgetOutcome(s, dir,
+      knnJoinIvfServed(s, dir, IvfLayout.pq(s, dir),
+        IvfGen.Masked(ensureVecForgetSet(s, dir)),
+        canaryQueries(s, dir), 10))),
 
-    "q_knn_ivfsq_forget" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val qs = emb.orderBy("vec_id").limit(NumCanaries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val dead = ensureVecForgetSet(s, dir)
-        .select(col("vec_id").as("dead_id"))
-      knnJoinIvfSqForgotten(s, dir, qs, 10)
-        .join(broadcast(dead), col("vec_id") === col("dead_id"), "left_outer")
-        .agg(
-          (count(when(col("vec_id") === col("q_id") + lit(TwinOffset),
-            lit(1))).cast(DoubleType) / (NumCanaries / 2).toDouble)
-            .as("recall_surviving"),
-          count(col("dead_id")).as("n_retracted_served"))
-    }),
+    "q_knn_ivfsq_forget" -> ((s, dir) => forgetOutcome(s, dir,
+      knnJoinIvfServed(s, dir, IvfLayout.sq8(s, dir),
+        IvfGen.Masked(ensureVecForgetSet(s, dir)),
+        canaryQueries(s, dir), 10))),
 
     // the physical half on the dense axis: the purged generation serves
     // the identical canary batch through the identical probe machinery
     // with no mask anywhere in the plan (PlanSpec pins that), and shares
     // q_knn_ivf_forget's oracle verbatim — masked ≡ purged pinned by
     // one hash.
-    "q_ivf_purge" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val qs = emb.orderBy("vec_id").limit(NumCanaries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val dead = ensureVecForgetSet(s, dir)
-        .select(col("vec_id").as("dead_id"))
-      knnJoinIvfPurged(s, dir, qs, 10)
-        .join(broadcast(dead), col("vec_id") === col("dead_id"), "left_outer")
-        .agg(
-          (count(when(col("vec_id") === col("q_id") + lit(TwinOffset),
-            lit(1))).cast(DoubleType) / (NumCanaries / 2).toDouble)
-            .as("recall_surviving"),
-          count(col("dead_id")).as("n_retracted_served"))
-    }),
+    "q_ivf_purge" -> ((s, dir) => forgetOutcome(s, dir,
+      knnJoinIvfServed(s, dir, IvfLayout.Flat, IvfGen.Purged,
+        canaryQueries(s, dir), 10))),
 
     // physical purge on the quantized layouts: after the code-table
     // generation rewrite, the retracted vectors' code bytes are gone
     // from the serving artifact — each gate shares its masked twin's
     // oracle verbatim, completing the 3-axis × 2-half deletion matrix
     // (BM25, sketches, dense/PQ/SQ — mask and purge everywhere).
-    "q_ivfpq_purge" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val qs = emb.orderBy("vec_id").limit(NumCanaries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val dead = ensureVecForgetSet(s, dir)
-        .select(col("vec_id").as("dead_id"))
-      knnJoinIvfPqPurged(s, dir, qs, 10)
-        .join(broadcast(dead), col("vec_id") === col("dead_id"), "left_outer")
-        .agg(
-          (count(when(col("vec_id") === col("q_id") + lit(TwinOffset),
-            lit(1))).cast(DoubleType) / (NumCanaries / 2).toDouble)
-            .as("recall_surviving"),
-          count(col("dead_id")).as("n_retracted_served"))
-    }),
+    "q_ivfpq_purge" -> ((s, dir) => forgetOutcome(s, dir,
+      knnJoinIvfServed(s, dir, IvfLayout.pq(s, dir), IvfGen.Purged,
+        canaryQueries(s, dir), 10))),
 
-    "q_ivfsq_purge" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val qs = emb.orderBy("vec_id").limit(NumCanaries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val dead = ensureVecForgetSet(s, dir)
-        .select(col("vec_id").as("dead_id"))
-      knnJoinIvfSqPurged(s, dir, qs, 10)
-        .join(broadcast(dead), col("vec_id") === col("dead_id"), "left_outer")
-        .agg(
-          (count(when(col("vec_id") === col("q_id") + lit(TwinOffset),
-            lit(1))).cast(DoubleType) / (NumCanaries / 2).toDouble)
-            .as("recall_surviving"),
-          count(col("dead_id")).as("n_retracted_served"))
-    }),
+    "q_ivfsq_purge" -> ((s, dir) => forgetOutcome(s, dir,
+      knnJoinIvfServed(s, dir, IvfLayout.sq8(s, dir), IvfGen.Purged,
+        canaryQueries(s, dir), 10))),
 
     // batched kNN over the APPENDED index: 8 queries = the append-batch
     // SOURCES, whose exact copies live ONLY in the delta — each query's
     // top-10 must contain its +AppendOffset canary, so one 1.0 proves
     // the batched probe plan, per-side DPP on base AND delta, and the
     // per-query top-k, all through the generation-aware serving path.
-    "q_knn_ivf_append" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val qs = emb.orderBy("vec_id").offset(NumCanaries).limit(NumCanaries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      knnJoinIvfAppended(s, dir, qs, 10)
-        .filter(col("vec_id") === col("q_id") + lit(AppendOffset))
-        .agg((count(lit(1)).cast(DoubleType) / NumCanaries.toDouble)
-          .as("recall_at_10"))
-    }),
+    "q_knn_ivf_append" -> ((s, dir) => appendRecall(s, dir,
+      knnJoinIvfServed(s, dir, IvfLayout.Flat, IvfGen.Appended,
+        appendQueries(s, dir), 10))),
 
     // batched kNN through the STORED IVF-PQ index: 8 queries share one
     // DPP-pruned 16 B/row code scan; each query ADC-ranks against its
@@ -3065,49 +2774,26 @@ object Ingest {
     // (alpha, beta) tables broadcast, shared model half in the codegen
     // reference array, shortlist + exact rescore. Each query must
     // retrieve its planted exact-copy twin at rank 1; pinned 1.0.
-    "q_knn_ivfsq_stored" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val qs = emb.orderBy("vec_id").limit(NumCanaries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      knnJoinIvfSqStored(s, dir, qs, 10)
+    "q_knn_ivfsq_stored" -> ((s, dir) =>
+      knnJoinIvfSqStored(s, dir, canaryQueries(s, dir), 10)
         .filter(col("vec_id") === col("q_id") + lit(TwinOffset))
         .agg((count(lit(1)).cast(DoubleType) / NumCanaries.toDouble)
-          .as("recall_at_10"))
-    }),
+          .as("recall_at_10"))),
 
     // the IVF-SQ8 delta path: the 8 append-source queries find their
     // delta-only canaries through base ∪ delta with per-side DPP —
     // frozen model + centroids encode/assign the landing batch.
-    "q_knn_ivfsq_append" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val qs = emb.orderBy("vec_id").offset(NumCanaries).limit(NumCanaries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      knnJoinIvfSqAppended(s, dir, qs, 10)
-        .filter(col("vec_id") === col("q_id") + lit(AppendOffset))
-        .agg((count(lit(1)).cast(DoubleType) / NumCanaries.toDouble)
-          .as("recall_at_10"))
-    }),
+    "q_knn_ivfsq_append" -> ((s, dir) => appendRecall(s, dir,
+      knnJoinIvfServed(s, dir, IvfLayout.sq8(s, dir), IvfGen.Appended,
+        appendQueries(s, dir), 10))),
 
     // IVF-SQ8 compaction: the same 8-query batch through the merged
     // gen2 must equal appended serving ROW-FOR-ROW (codes merge
     // verbatim — any re-encode or layout bug diverges; n_diverging
     // pinned 0) and still surface every delta-only canary (1.0).
     "q_knn_ivfsq_compact" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val qs = emb.orderBy("vec_id").offset(NumCanaries).limit(NumCanaries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      // concurrent bounded dual-serve — the q_knn_ivf_compact treatment
-      val Seq(appended, compacted) = graft.Par.run(s.sparkContext, Seq(
-        () => knnJoinIvfSqAppended(s, dir, qs, 10).localCheckpoint(),
-        () => knnJoinIvfSqCompacted(s, dir, qs, 10).localCheckpoint()))
-      val diverging = appended.exceptAll(compacted)
-        .unionByName(compacted.exceptAll(appended))
-      compacted
-        .filter(col("vec_id") === col("q_id") + lit(AppendOffset))
-        .agg((count(lit(1)).cast(DoubleType) / NumCanaries.toDouble)
-          .as("recall_at_10"))
-        .crossJoin(diverging.agg(count(lit(1)).cast(LongType)
-          .as("n_diverging")))
+      val (l, qs) = (IvfLayout.sq8(s, dir), appendQueries(s, dir))
+      compactDifferential(s, dir, g => knnJoinIvfServed(s, dir, l, g, qs, 10))
     }),
 
     // IVF-SQ8 RETRAIN: skewThreshold = 0 forces the drift response
@@ -3119,77 +2805,31 @@ object Ingest {
     // deterministic; n_code_diverging 0), and the 8 delta-only append
     // canaries surface through the retrained geometry (1.0).
     "q_ivfsq_retrain" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val (_, _, _, gen3, _) = ensureRetrainedIvfSq(s, dir, skewThreshold = 0.0)
-      val (_, _, _, codes, delta) = ensureIvfSqDelta(s, dir)
-      val served = codes.select("vec_id", "code")
-        .unionByName(delta.select("vec_id", "code"))
-      val g3 = gen3.select("vec_id", "code")
-      val diverging = g3.exceptAll(served).unionByName(served.exceptAll(g3))
-      val qs = emb.orderBy("vec_id").offset(NumCanaries).limit(NumCanaries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      // the canary serve and the corpus-sized code differential are
-      // independent: overlap them (guide §2.6), checkpointing only the
-      // two 1-row aggregates (the code tables themselves stay
-      // unmaterialized — corpus-sized frames never enter the block
-      // manager)
-      val Seq(recall, nDiv) = graft.Par.run(s.sparkContext, Seq(
-        () => knnJoinIvfSqRetrained(s, dir, qs, 10, skewThreshold = 0.0)
-          .filter(col("vec_id") === col("q_id") + lit(AppendOffset))
-          .agg((count(lit(1)).cast(DoubleType) / NumCanaries.toDouble)
-            .as("recall_at_10")).localCheckpoint(),
-        () => diverging.agg(count(lit(1)).cast(LongType)
-          .as("n_code_diverging")).localCheckpoint()))
-      recall.crossJoin(nDiv)
+      val (l, qs) = (IvfLayout.sq8(s, dir), appendQueries(s, dir))
+      retrainCheck(s, dir, l, g => knnJoinIvfServed(s, dir, l, g, qs, 10))
     }),
 
-    "q_knn_ivfpq_stored" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val qs = emb.orderBy("vec_id").limit(NumCanaries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      knnJoinIvfPqStored(s, dir, qs, 10)
+    "q_knn_ivfpq_stored" -> ((s, dir) =>
+      knnJoinIvfPqStored(s, dir, canaryQueries(s, dir), 10)
         .filter(col("vec_id") === col("q_id") + lit(TwinOffset))
         .agg((count(lit(1)).cast(DoubleType) / NumCanaries.toDouble)
-          .as("recall_at_10"))
-    }),
+          .as("recall_at_10"))),
 
     // batched IVF-PQ kNN over base ∪ delta: the 8 append-source queries
     // find their delta-only canaries through the composed path — batch
     // probe plan, per-side DPP on both code scans, per-query ADC
     // tables, shortlist + rescore over the appended corpus.
-    "q_knn_ivfpq_append" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val qs = emb.orderBy("vec_id").offset(NumCanaries).limit(NumCanaries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      knnJoinIvfPqAppended(s, dir, qs, 10)
-        .filter(col("vec_id") === col("q_id") + lit(AppendOffset))
-        .agg((count(lit(1)).cast(DoubleType) / NumCanaries.toDouble)
-          .as("recall_at_10"))
-    }),
+    "q_knn_ivfpq_append" -> ((s, dir) => appendRecall(s, dir,
+      knnJoinIvfServed(s, dir, IvfLayout.pq(s, dir), IvfGen.Appended,
+        appendQueries(s, dir), 10))),
 
     // the same 8-query batch through the COMPACTED generation, plus the
     // cross-path differential: compacted serving must equal appended
     // serving row-for-row for every query (n_diverging pinned 0).
     "q_knn_ivf_compact" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val qs = emb.orderBy("vec_id").offset(NumCanaries).limit(NumCanaries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      // the two serves are independent and their outputs are BOUNDED
-      // (k rows per query): construct+materialize each on a pool thread
-      // (guide §2.6), so the differential below reads two tiny
-      // checkpoints instead of re-executing each serve subtree in both
-      // exceptAll directions (optimization r16)
-      val Seq(appended, compacted) = graft.Par.run(s.sparkContext, Seq(
-        () => knnJoinIvfAppended(s, dir, qs, 10).localCheckpoint(),
-        () => knnJoinIvfCompacted(s, dir, qs, 10).localCheckpoint()))
-      val diverging = appended.exceptAll(compacted)
-        .unionByName(compacted.exceptAll(appended))
-      compacted
-        .filter(col("vec_id") === col("q_id") + lit(AppendOffset))
-        .agg((count(lit(1)).cast(DoubleType) / NumCanaries.toDouble)
-          .as("recall_at_10"))
-        .crossJoin(diverging.agg(count(lit(1)).cast(LongType)
-          .as("n_diverging")))
+      val qs = appendQueries(s, dir)
+      compactDifferential(s, dir,
+        g => knnJoinIvfServed(s, dir, IvfLayout.Flat, g, qs, 10))
     }),
 
     // warm-path IVF-PQ: both prunings composed (DPP cell pruning + ADC
@@ -3236,46 +2876,23 @@ object Ingest {
     // frozen-centroid assignment, the delta's cell layout, and the
     // unioned pruned-scan path — without rebuilding or touching the
     // base index files.
-    "q_ivf_append" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      ivfTopKAppended(s, dir, 10)
-        .join(broadcast(appendQueryRow(emb)),
-          col("vec_id") === col("q_id") + lit(AppendOffset))
-        .agg(count(lit(1)).cast(DoubleType).as("recall_at_10"))
-    }),
+    "q_ivf_append" -> ((s, dir) =>
+      appendRecall(s, dir, ivfTopKServed(s, dir, IvfGen.Appended, 10))),
 
     // IVF-PQ APPEND: the combined index's delta path — frozen codebook
     // AND frozen centroids encode/assign the landing batch, both scans
     // DPP-pruned before the union, ADC + bounded rescore unchanged. The
     // appended canary's code exists only in the delta; the pinned 1.0
     // proves the whole composed warm path over base ∪ delta.
-    "q_ivfpq_append" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      ivfPqTopKAppended(s, dir, 10)
-        .join(broadcast(appendQueryRow(emb)),
-          col("vec_id") === col("q_id") + lit(AppendOffset))
-        .agg(count(lit(1)).cast(DoubleType).as("recall_at_10"))
-    }),
+    "q_ivfpq_append" -> ((s, dir) =>
+      appendRecall(s, dir, ivfPqTopKServed(s, dir, IvfGen.Appended, 10))),
 
     // COMPACTION: the merged generation must serve EXACTLY what the
     // base∪delta path serves — a cross-path differential gate (the two
     // top-10 sets are compared row-for-row, n_diverging pinned to 0)
     // plus the append canary's pinned 1.0 through the compacted scan.
-    "q_ivf_compact" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      // concurrent bounded dual-serve — the q_knn_ivf_compact treatment
-      val Seq(appended, compacted) = graft.Par.run(s.sparkContext, Seq(
-        () => ivfTopKAppended(s, dir, 10).localCheckpoint(),
-        () => ivfTopKCompacted(s, dir, 10).localCheckpoint()))
-      val diverging = appended.exceptAll(compacted)
-        .unionByName(compacted.exceptAll(appended))
-      compacted
-        .join(broadcast(appendQueryRow(emb)),
-          col("vec_id") === col("q_id") + lit(AppendOffset))
-        .agg(count(lit(1)).cast(DoubleType).as("recall_at_10"))
-        .crossJoin(diverging.agg(count(lit(1)).cast(LongType)
-          .as("n_diverging")))
-    }),
+    "q_ivf_compact" -> ((s, dir) =>
+      compactDifferential(s, dir, g => ivfTopKServed(s, dir, g, 10))),
 
     // IVF-PQ COMPACTION: same differential posture as q_ivf_compact for
     // the combined index — gen2 (codes merged verbatim, frozen codebook
@@ -3283,21 +2900,8 @@ object Ingest {
     // (n_diverging pinned to 0), and the append canary's code — now
     // living only inside gen2 — must surface through the single
     // DPP-pruned compacted scan (pinned 1.0).
-    "q_ivfpq_compact" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      // concurrent bounded dual-serve — the q_knn_ivf_compact treatment
-      val Seq(appended, compacted) = graft.Par.run(s.sparkContext, Seq(
-        () => ivfPqTopKAppended(s, dir, 10).localCheckpoint(),
-        () => ivfPqTopKCompacted(s, dir, 10).localCheckpoint()))
-      val diverging = appended.exceptAll(compacted)
-        .unionByName(compacted.exceptAll(appended))
-      compacted
-        .join(broadcast(appendQueryRow(emb)),
-          col("vec_id") === col("q_id") + lit(AppendOffset))
-        .agg(count(lit(1)).cast(DoubleType).as("recall_at_10"))
-        .crossJoin(diverging.agg(count(lit(1)).cast(LongType)
-          .as("n_diverging")))
-    }),
+    "q_ivfpq_compact" -> ((s, dir) =>
+      compactDifferential(s, dir, g => ivfPqTopKServed(s, dir, g, 10))),
 
     // IVF-PQ RETRAIN: skewThreshold = 0 forces the drift response
     // deterministically (occupancy skew is ≥ 1 by construction), so the
@@ -3308,26 +2912,8 @@ object Ingest {
     // bit-identical per vec_id to the served base ∪ delta (codebook
     // frozen ⇒ re-encode is deterministic; n_code_diverging 0) and the
     // append canary surfaces through the retrained geometry (1.0).
-    "q_ivfpq_retrain" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val (_, _, _, gen3, _) = ensureRetrainedIvfPq(s, dir, skewThreshold = 0.0)
-      val (_, _, _, codes, delta) = ensureIvfPqDelta(s, dir)
-      val served = codes.select("vec_id", "code")
-        .unionByName(delta.select("vec_id", "code"))
-      val g3 = gen3.select("vec_id", "code")
-      val diverging = g3.exceptAll(served).unionByName(served.exceptAll(g3))
-      // overlap serve and code differential — the q_ivfsq_retrain
-      // treatment (1-row aggregate checkpoints only)
-      val Seq(recall, nDiv) = graft.Par.run(s.sparkContext, Seq(
-        () => ivfPqTopKRetrained(s, dir, 10, skewThreshold = 0.0)
-          .join(broadcast(appendQueryRow(emb)),
-            col("vec_id") === col("q_id") + lit(AppendOffset))
-          .agg(count(lit(1)).cast(DoubleType).as("recall_at_10"))
-          .localCheckpoint(),
-        () => diverging.agg(count(lit(1)).cast(LongType)
-          .as("n_code_diverging")).localCheckpoint()))
-      recall.crossJoin(nDiv)
-    }),
+    "q_ivfpq_retrain" -> ((s, dir) => retrainCheck(s, dir,
+      IvfLayout.pq(s, dir), g => ivfPqTopKServed(s, dir, g, 10))),
 
     // SemDeDup from the STORED index: survivors of the keep-first
     // policy over the indexed corpus (embeddings ∪ the 8 exact-copy

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.functions.MediaFormats
 import graft.queries.Tables.documents
+import graft.operators.Artifacts.{buildGate, readCommitted, scratch}
 
 /** Multimodal-column plumbing (SURVEY.md §2.11): image/audio payloads as
   * `binary` columns with typed metadata, feature extraction as a narrow
@@ -609,18 +610,6 @@ object Multimodal {
   private[graft] def audioRows(index: DataFrame): DataFrame =
     index.filter(col("modality") === "audio")
       .select(col("media_id"), col("phash").as("ahash"), col("ok"))
-
-  private def scratch(s: SparkSession, dir: String, name: String): String =
-    Artifacts.scratch(s, dir, name) // one protocol, one implementation
-
-  private def committed(s: SparkSession, path: String): Boolean =
-    Artifacts.committed(s, path)
-
-  private def buildGate(s: SparkSession, path: String)(write: => Unit): Unit =
-    Artifacts.buildGate(s, path)(write)
-
-  private def readCommitted(s: SparkSession, path: String)
-      : org.apache.spark.sql.DataFrame = Artifacts.readCommitted(s, path)
 
   /** This module's share of the driver-visible gate surface —
     * bump WITH any gate added here (RegistrySpec sums the

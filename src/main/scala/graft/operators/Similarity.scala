@@ -72,12 +72,6 @@ object Similarity {
       q.select(col("q_id"), col("q_emb")).head(1).headOption
         .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)))
 
-  /** The (q_emb, q_id) probe as a literal one-row relation — schema
-    * identical to the derived form. */
-  private[graft] def localizedProbe(spark: SparkSession,
-      probe: (Long, Array[Float])): DataFrame =
-    localizedBatchFrame(spark, Array(probe))
-
   private[graft] def localizedBatch(spark: SparkSession,
       rows: Array[(Long, Array[Float])]): DataFrame = localizedBatchFrame(spark, rows)
 

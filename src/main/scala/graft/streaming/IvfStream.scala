@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions.col
 import graft.functions.IvfOps
 
 /** Structured Streaming twin of the IVF delta ingest
-  * (operators/Ingest.ensureIvfDelta): vectors arrive as files and the
+  * (operators/Ingest.ivfDelta): vectors arrive as files and the
   * same narrow graft_ivf_cell kernel assigns each one to its cell
   * against the FROZEN stored centroids — CONTINUOUS index maintenance
   * for the ANN serving path, the streaming form of the base+delta

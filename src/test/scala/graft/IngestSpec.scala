@@ -159,7 +159,8 @@ class IngestSpec extends SparkSpecBase {
       .join(broadcast(dead), "vec_id").count()
     assert(unmasked >= 8,
       s"each dense probe must surface its retracted vector unmasked: $unmasked")
-    val masked = Ingest.knnJoinIvfForgottenWith(spark, dir, dead, qs, 10)
+    val masked = Ingest.knnJoinIvfServed(spark, dir, Ingest.IvfLayout.Flat,
+      Ingest.IvfGen.Masked(dead), qs, 10)
       .localCheckpoint()
     assert(masked.join(broadcast(dead), "vec_id").count() == 0,
       "a retracted vector surfaced through the masked serve")

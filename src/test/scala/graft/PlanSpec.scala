@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.operators.Ingest
 import graft.queries.Tables
 
 /** Physical-plan quality gates — the ".explain and iterate" discipline
@@ -312,9 +313,10 @@ class PlanSpec extends SparkSpecBase {
     val emb = Tables.embeddings(spark, TestSpark.Sf0001)
     val qs = emb.orderBy("vec_id").limit(2)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    graft.operators.Ingest.ensureVecForgetSet(spark, TestSpark.Sf0001)
-    val p = plan(graft.operators.Ingest.knnJoinIvfForgotten(
-      spark, TestSpark.Sf0001, qs, 5))
+    val forgotten = Ingest.IvfGen.Masked(
+      Ingest.ensureVecForgetSet(spark, TestSpark.Sf0001))
+    val p = plan(Ingest.knnJoinIvfServed(spark, TestSpark.Sf0001,
+      Ingest.IvfLayout.Flat, forgotten, qs, 5))
     assert(p.contains("dynamicpruning"),
       s"the mask must sit ABOVE the DPP cell join, not between scan and probe:\n$p")
     assert(p.contains("LeftAnti") && p.contains("vec_forget_ids"),
@@ -325,10 +327,11 @@ class PlanSpec extends SparkSpecBase {
     val emb = Tables.embeddings(spark, TestSpark.Sf0001)
     val qs = emb.orderBy("vec_id").limit(2)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    graft.operators.Ingest.ensureVecForgetSet(spark, TestSpark.Sf0001)
-    for (df <- Seq(
-        graft.operators.Ingest.knnJoinIvfPqForgotten(spark, TestSpark.Sf0001, qs, 5),
-        graft.operators.Ingest.knnJoinIvfSqForgotten(spark, TestSpark.Sf0001, qs, 5))) {
+    val forgotten = Ingest.IvfGen.Masked(
+      Ingest.ensureVecForgetSet(spark, TestSpark.Sf0001))
+    for (l <- Seq(Ingest.IvfLayout.pq(spark, TestSpark.Sf0001),
+        Ingest.IvfLayout.sq8(spark, TestSpark.Sf0001))) {
+      val df = Ingest.knnJoinIvfServed(spark, TestSpark.Sf0001, l, forgotten, qs, 5)
       val p = plan(df)
       assert(p.contains("dynamicpruning"),
         s"the mask must sit ABOVE the DPP cell join on the code scan:\n$p")
@@ -341,16 +344,15 @@ class PlanSpec extends SparkSpecBase {
     val emb = Tables.embeddings(spark, TestSpark.Sf0001)
     val qs = emb.orderBy("vec_id").limit(2)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    graft.operators.Ingest.purgeIvfIndex(spark, TestSpark.Sf0001)
-    graft.operators.Ingest.purgeIvfPqIndex(spark, TestSpark.Sf0001)
-    graft.operators.Ingest.purgeIvfSqIndex(spark, TestSpark.Sf0001)
-    val plans = Seq(
-      "ivf_assign_purged" -> plan(graft.operators.Ingest.knnJoinIvfPurged(
-        spark, TestSpark.Sf0001, qs, 5)),
-      "ivfpq_codes_purged" -> plan(graft.operators.Ingest.knnJoinIvfPqPurged(
-        spark, TestSpark.Sf0001, qs, 5)),
-      "ivfsq_codes_purged" -> plan(graft.operators.Ingest.knnJoinIvfSqPurged(
-        spark, TestSpark.Sf0001, qs, 5)))
+    val layouts = Seq(
+      "ivf_assign_purged" -> Ingest.IvfLayout.Flat,
+      "ivfpq_codes_purged" -> Ingest.IvfLayout.pq(spark, TestSpark.Sf0001),
+      "ivfsq_codes_purged" -> Ingest.IvfLayout.sq8(spark, TestSpark.Sf0001))
+    for ((_, l) <- layouts) Ingest.ivfPurged(spark, TestSpark.Sf0001, l)
+    val plans = layouts.map { case (gen, l) =>
+      gen -> plan(Ingest.knnJoinIvfServed(spark, TestSpark.Sf0001, l,
+        Ingest.IvfGen.Purged, qs, 5))
+    }
     for ((gen, p) <- plans) {
       assert(p.contains(gen), s"must read the purged generation $gen:\n$p")
       assert(p.contains("dynamicpruning"),
@@ -407,7 +409,7 @@ class PlanSpec extends SparkSpecBase {
   }
 
   test("appended IVF probe prunes base AND delta scans via their own DPP") {
-    val df = graft.operators.Ingest.ivfTopKAppended(spark, TestSpark.Sf0001, 10)
+    val df = Ingest.ivfTopKServed(spark, TestSpark.Sf0001, Ingest.IvfGen.Appended, 10)
     val p = plan(df)
     // the union must sit ABOVE two independently-pruned scans: one
     // dynamic-pruning partition filter per side (a union under the
@@ -477,8 +479,8 @@ class PlanSpec extends SparkSpecBase {
     val emb = Tables.embeddings(spark, TestSpark.Sf0001)
     val qs = emb.orderBy("vec_id").limit(3)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val p = plan(graft.operators.Ingest.knnJoinIvfAppended(
-      spark, TestSpark.Sf0001, qs, 5, nProbe = 4))
+    val p = plan(Ingest.knnJoinIvfServed(spark, TestSpark.Sf0001,
+      Ingest.IvfLayout.Flat, Ingest.IvfGen.Appended, qs, 5, nProbe = 4))
     assert("dynamicpruning".r.findAllIn(p).size >= 2,
       s"base AND delta scans must each carry a DPP filter:\n$p")
     assert(!p.contains("cell IN ("),

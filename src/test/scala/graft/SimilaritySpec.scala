@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorOps
-import graft.operators.Similarity
+import graft.operators.{Ingest, Similarity}
 import graft.queries.Tables
 
 /** Similarity-search operator tests: exact cosine vs manual computation,
@@ -409,8 +409,8 @@ class SimilaritySpec extends SparkSpecBase {
   test("IVF occupancy report accounts for every base+delta row") {
     val s = spark
     val dir = TestSpark.Sf0001
-    val (_, assign, delta) = graft.operators.Ingest.ensureIvfDelta(s, dir)
-    val r = graft.operators.Ingest.ivfOccupancy(s, dir).head()
+    val (_, assign, delta) = Ingest.ivfDelta(s, dir, Ingest.IvfLayout.Flat)
+    val r = Ingest.ivfOccupancy(s, dir).head()
     assert(r.getAs[Long]("n_vectors") == assign.count() + delta.count())
     assert(r.getAs[Long]("n_cells") >= 1)
     // max ≥ mean by definition; equality only under perfect balance
@@ -420,97 +420,180 @@ class SimilaritySpec extends SparkSpecBase {
   }
 
   test("IVF append: delta is additive, base untouched, canary served") {
-    import org.apache.spark.sql.functions._
     val s = spark
     val dir = TestSpark.Sf0001
-    val (_, baseBefore) = graft.operators.Ingest.ensureIvfIndex(s, dir)
+    val (_, baseBefore) = Ingest.ensureIvfIndex(s, dir)
     val nBaseBefore = baseBefore.count()
-    val (_, baseAfter, delta) = graft.operators.Ingest.ensureIvfDelta(s, dir)
+    val (_, baseAfter, delta) = Ingest.ivfDelta(s, dir, Ingest.IvfLayout.Flat)
     // the delta lands NEXT TO the base: exactly the append batch, and
     // the base assignment table is byte-for-byte the same row set
-    assert(delta.count() == graft.operators.Ingest.NumCanaries.toLong)
+    assert(delta.count() == Ingest.NumCanaries.toLong)
     assert(baseAfter.count() == nBaseBefore)
     assert(delta.select("vec_id").collect().map(_.getLong(0)).forall(
-      _ >= graft.operators.Ingest.AppendOffset))
+      _ >= Ingest.AppendOffset))
     // the served top-10 for the first append source contains its delta
     // canary at cosine 1.0 (the q_ivf_append gate shape)
-    val emb = graft.queries.Tables.embeddings(s, dir)
-    val q = graft.operators.Ingest.appendQueryRow(emb)
-    val top = graft.operators.Ingest.ivfTopKAppended(s, dir, 10)
+    val emb = Tables.embeddings(s, dir)
+    val q = Ingest.appendQueryRow(emb)
+    val top = Ingest.ivfTopKServed(s, dir, Ingest.IvfGen.Appended, 10)
     val hit = top.join(q,
-        col("vec_id") === col("q_id") + lit(graft.operators.Ingest.AppendOffset))
+        col("vec_id") === col("q_id") + lit(Ingest.AppendOffset))
       .collect()
     assert(hit.length == 1, s"append canary missing from top-10")
     assert(math.abs(hit.head.getAs[Double]("score") - 1.0) < 1e-6)
   }
 
-  test("IVF-PQ compaction: gen2 == base∪delta row-for-row, canary served through gen2") {
-    import org.apache.spark.sql.functions._
-    val s = spark
-    val dir = TestSpark.Sf0001
-    val (_, _, _, codes, delta) = graft.operators.Ingest.ensureIvfPqDelta(s, dir)
-    val (_, _, _, gen2) = graft.operators.Ingest.compactIvfPqIndex(s, dir)
-    // the merge is a pure layout job: gen2 holds EXACTLY the base∪delta
-    // (vec_id, cell, code) rows — codes verbatim, nothing re-encoded
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.select("vec_id", "cell", "code").orderBy("vec_id").collect()
-        .map(_.toSeq).toSeq
-    assert(canon(gen2) == canon(codes.unionByName(delta)))
-    // serving differential: the compacted scan returns the appended
-    // path's top-10 bit-for-bit, including the delta-only canary at 1.0
-    val appended = graft.operators.Ingest.ivfPqTopKAppended(s, dir, 10)
-      .collect().map(_.toSeq).toSeq
-    val compacted = graft.operators.Ingest.ivfPqTopKCompacted(s, dir, 10)
-      .collect().map(_.toSeq).toSeq
-    assert(compacted == appended && compacted.nonEmpty)
-    val emb = graft.queries.Tables.embeddings(s, dir)
-    val q = graft.operators.Ingest.appendQueryRow(emb)
-    val hit = graft.operators.Ingest.ivfPqTopKCompacted(s, dir, 10).join(q,
-        col("vec_id") === col("q_id") + lit(graft.operators.Ingest.AppendOffset))
+  // ONE lifecycle, three layouts: delta / compact / purge / retrain are
+  // each written once over an IvfLayout, so every lifecycle property is
+  // pinned per layout here. `single` is the layout's single-query serve
+  // for the append probe row, where one exists.
+  private case class IvfCase(label: String,
+      layout: (org.apache.spark.sql.SparkSession, String) => Ingest.IvfLayout,
+      single: Option[Ingest.IvfGen => org.apache.spark.sql.DataFrame])
+
+  private def ivfCases: Seq[IvfCase] = Seq(
+    IvfCase("IVF", (_, _) => Ingest.IvfLayout.Flat,
+      Some(g => Ingest.ivfTopKServed(spark, TestSpark.Sf0001, g, 10))),
+    IvfCase("IVF-SQ8", (s, d) => Ingest.IvfLayout.sq8(s, d), None),
+    IvfCase("IVF-PQ", (s, d) => Ingest.IvfLayout.pq(s, d),
+      Some(g => Ingest.ivfPqTopKServed(spark, TestSpark.Sf0001, g, 10))))
+
+  /** Stored rows in a comparable form, ordered by `keys` (binary SQ8
+    * codes compared by content). */
+  private def rowsOf(df: org.apache.spark.sql.DataFrame, keys: String*) =
+    df.orderBy(keys.map(col): _*).collect().map(_.toSeq.map {
+      case b: Array[Byte] => b.toSeq
+      case v => v
+    }).toSeq
+
+  /** The 8 append sources (the batched append gates' probe batch). */
+  private def appendSources(s: org.apache.spark.sql.SparkSession, dir: String) =
+    Tables.embeddings(s, dir).orderBy("vec_id")
+      .offset(Ingest.NumCanaries).limit(Ingest.NumCanaries)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+
+  /** Every append source's delta-only copy is in its top-10 (the
+    * batched append gates' recall 1.0). */
+  private def assertAppendCanaries(served: org.apache.spark.sql.DataFrame,
+      what: String): Unit = {
+    val hits = served
+      .filter(col("vec_id") === col("q_id") + lit(Ingest.AppendOffset))
+      .select("q_id").collect().map(_.getLong(0))
+    assert(hits.distinct.length == Ingest.NumCanaries,
+      s"append canaries missing from the $what top-10: ${hits.toSeq}")
+  }
+
+  /** The single-query serve's append canary, at cosine 1.0. */
+  private def assertSingleCanary(served: org.apache.spark.sql.DataFrame,
+      what: String): Unit = {
+    val q = Ingest.appendQueryRow(Tables.embeddings(spark, TestSpark.Sf0001))
+    val hit = served.join(q,
+        col("vec_id") === col("q_id") + lit(Ingest.AppendOffset))
       .collect()
-    assert(hit.length == 1, "append canary missing from compacted top-10")
+    assert(hit.length == 1, s"append canary missing from $what top-10")
     assert(math.abs(hit.head.getAs[Double]("score") - 1.0) < 1e-6)
   }
 
+  for (c <- ivfCases) {
+    test(s"${c.label} compaction: gen2 == base∪delta row-for-row, canary served through gen2") {
+      val s = spark
+      val dir = TestSpark.Sf0001
+      val l = c.layout(s, dir)
+      val (_, base, delta) = Ingest.ivfDelta(s, dir, l)
+      val (_, gen2) = Ingest.ivfCompacted(s, dir, l)
+      // the merge is a pure layout job: gen2 holds EXACTLY the
+      // base∪delta rows — payloads verbatim, nothing re-encoded
+      assert(rowsOf(gen2, "vec_id") == rowsOf(base.unionByName(delta), "vec_id"))
+      // serving differential: the compacted scan returns the appended
+      // path's top-10 bit-for-bit, including every delta-only canary
+      val qs = appendSources(s, dir)
+      def serve(g: Ingest.IvfGen) = Ingest.knnJoinIvfServed(s, dir, l, g, qs, 10)
+      val appended = rowsOf(serve(Ingest.IvfGen.Appended), "q_id", "rnk")
+      val compacted = rowsOf(serve(Ingest.IvfGen.Compacted), "q_id", "rnk")
+      assert(compacted == appended && compacted.nonEmpty)
+      assertAppendCanaries(serve(Ingest.IvfGen.Compacted), "compacted")
+      for (one <- c.single) {
+        val a1 = one(Ingest.IvfGen.Appended).collect().map(_.toSeq).toSeq
+        val c1 = one(Ingest.IvfGen.Compacted).collect().map(_.toSeq).toSeq
+        assert(c1 == a1 && c1.nonEmpty)
+        assertSingleCanary(one(Ingest.IvfGen.Compacted), "compacted")
+      }
+    }
+
+    test(s"${c.label} retrain: gen3 carries bit-identical codes under new centroids, canary served") {
+      val s = spark
+      val dir = TestSpark.Sf0001
+      val l = c.layout(s, dir)
+      val (cents3, gen3, retrained) =
+        Ingest.ivfRetrained(s, dir, l, skewThreshold = 0.0)
+      assert(retrained, "threshold 0 must force the drift response")
+      // the retrained generation re-partitions the SAME payload set: per
+      // vec_id the frozen-model encode is deterministic, so payloads are
+      // bit-identical to the served base∪delta even though cells moved
+      val (cents2, base, delta) = Ingest.ivfDelta(s, dir, l)
+      assert(rowsOf(gen3.drop("cell"), "vec_id") ==
+        rowsOf(base.unionByName(delta).drop("cell"), "vec_id"))
+      // the retrained centroids are a genuinely new geometry
+      assert(cents3.count() > 0 &&
+        cents3.collect().map(_.toSeq).toSet != cents2.collect().map(_.toSeq).toSet)
+      // append canaries at 1.0 through the retrained serve path
+      assertAppendCanaries(Ingest.knnJoinIvfServed(s, dir, l,
+        Ingest.IvfGen.Retrained(skewThreshold = 0.0), appendSources(s, dir), 10),
+        "retrained")
+      for (one <- c.single)
+        assertSingleCanary(one(Ingest.IvfGen.Retrained(skewThreshold = 0.0)),
+          "retrained")
+    }
+
+    test(s"${c.label} purge: purged generation == base minus the tombstones, none served") {
+      val s = spark
+      val dir = TestSpark.Sf0001
+      val l = c.layout(s, dir)
+      val (_, base) = l.base(s, dir)
+      val (_, purged) = Ingest.ivfPurged(s, dir, l)
+      val dead = Ingest.ensureVecForgetSet(s, dir)
+      // the tombstones are really in the base (the check discriminates)
+      assert(base.join(dead, "vec_id").count() == dead.count() && dead.count() > 0)
+      assert(rowsOf(purged, "vec_id") ==
+        rowsOf(base.join(dead, Seq("vec_id"), "left_anti"), "vec_id"))
+      assert(purged.join(dead, "vec_id").isEmpty,
+        "a tombstoned vec_id survived the purge")
+    }
+  }
+
   test("batched IVF-PQ kNN: compacted generation == appended path, row for row") {
-    import org.apache.spark.sql.functions._
     val s = spark
     val dir = TestSpark.Sf0001
-    val emb = graft.queries.Tables.embeddings(s, dir)
+    val emb = Tables.embeddings(s, dir)
     val qs = emb.orderBy("vec_id").limit(4)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("q_id", "rnk").collect().map(_.toSeq).toSeq
-    val appended = canon(graft.operators.Ingest.knnJoinIvfPqAppended(s, dir, qs, 5))
-    val compacted = canon(graft.operators.Ingest.knnJoinIvfPqCompacted(s, dir, qs, 5))
+    val l = Ingest.IvfLayout.pq(s, dir)
+    val appended = canon(Ingest.knnJoinIvfServed(s, dir, l, Ingest.IvfGen.Appended, qs, 5))
+    val compacted = canon(Ingest.knnJoinIvfServed(s, dir, l, Ingest.IvfGen.Compacted, qs, 5))
     assert(appended == compacted && appended.nonEmpty)
   }
 
-  test("IVF-PQ retrain: gen3 carries bit-identical codes under new centroids, canary served") {
-    import org.apache.spark.sql.functions._
-    val s = spark
+  test("concurrent cold retrains serialize on the centroid gate: one gen3, live rows once each") {
+    // a fresh scratch root, so both branches reach every artifact cold
+    val root = java.nio.file.Files.createTempDirectory("graft_retrain_race")
+    val s = spark.newSession()
+    s.conf.set("graft.scratch", root.toString)
     val dir = TestSpark.Sf0001
-    val (_, _, cents3, gen3, retrained) =
-      graft.operators.Ingest.ensureRetrainedIvfPq(s, dir, skewThreshold = 0.0)
-    assert(retrained, "threshold 0 must force the drift response")
-    // the retrained generation re-partitions the SAME code set: per
-    // vec_id the frozen-codebook encode is deterministic, so codes are
-    // bit-identical to the served base∪delta even though cells moved
-    val (_, _, cents2, codes, delta) = graft.operators.Ingest.ensureIvfPqDelta(s, dir)
-    def codeSet(df: org.apache.spark.sql.DataFrame) =
-      df.select("vec_id", "code").orderBy("vec_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(codeSet(gen3) == codeSet(codes.unionByName(delta)))
-    // the retrained centroids are a genuinely new geometry
-    assert(cents3.count() > 0 &&
-      cents3.collect().map(_.toSeq).toSet != cents2.collect().map(_.toSeq).toSet)
-    // append canary at 1.0 through the retrained serve path
-    val q = graft.operators.Ingest.appendQueryRow(
-      graft.queries.Tables.embeddings(s, dir))
-    val hit = graft.operators.Ingest.ivfPqTopKRetrained(s, dir, 10, skewThreshold = 0.0)
-      .join(q, col("vec_id") === col("q_id") + lit(graft.operators.Ingest.AppendOffset))
-      .collect()
-    assert(hit.length == 1 && math.abs(hit.head.getAs[Double]("score") - 1.0) < 1e-6)
+    try {
+      val l = Ingest.IvfLayout.sq8(s, dir)
+      val Seq(a, b) = graft.Par.run(s.sparkContext, Seq.fill(2)(() => {
+        val (_, gen3, retrained) = Ingest.ivfRetrained(s, dir, l, skewThreshold = 0.0)
+        assert(retrained, "threshold 0 must force the drift response")
+        rowsOf(gen3, "vec_id")
+      }))
+      assert(a == b, "the two cold callers returned different gen3 generations")
+      val live = Tables.embeddings(s, dir).count() + 2L * Ingest.NumCanaries
+      assert(a.length == live, s"gen3 holds ${a.length} rows, live corpus $live")
+      val ids = a.map(_.head)
+      assert(ids.distinct.length == ids.length, "a vec_id appears twice in gen3")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
   }
 
   test("retrain-on-drift: skew trips the trigger, canary 1.0 on the new generation") {

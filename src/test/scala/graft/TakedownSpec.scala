@@ -27,14 +27,13 @@ class TakedownSpec extends SparkSpecBase {
   /** Entry point → composed axis. A NEW retraction method added to any
     * declared module MUST be mapped here (and its axis declared +
     * composed), or the reflection test below names it. Methods serving
-    * the same stored surface share an axis (the dense twins; the
-    * media modalities; the trained-artifact family on 'model'). */
+    * the same stored surface share an axis (the media modalities; the
+    * trained-artifact family on 'model'). The dense and quantized axes
+    * have no per-family entry point: they serve through
+    * `Ingest.knnJoinIvfServed` with an `IvfGen.Masked` generation. */
   private val MethodAxis: Map[String, String] = Map(
     "bm25TopKForgottenWith" -> "bm25",
     "cmsEstimateForgottenWith" -> "cms",
-    "knnJoinIvfForgottenWith" -> "dense",
-    "knnJoinIvfPqForgottenWith" -> "quantized_pq",
-    "knnJoinIvfSqForgottenWith" -> "quantized_sq",
     "phraseMatchForgottenWith" -> "phrase",
     "nearDupForgottenWith" -> "sketch",
     "imageDedupForgottenWith" -> "media",
