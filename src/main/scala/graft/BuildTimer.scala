@@ -10,8 +10,8 @@ package graft
   * train-on-serve model fit (`pqTrain`, `kmeansCentroids`) wraps its
   * body in [[time]]; [[Bench]] drains the accumulator around each query
   * and reports `build` and serve (= wall − build) separately. The
-  * depth guard keeps nested builders (ensureSketchedDelta →
-  * ensureSketchedDocs, ensureIvfPqIndex → ensurePqCodebook) from
+  * depth guard keeps nested builders (a text index's compacted
+  * generation → ensureTermIndex, ensureIvfPqIndex → ensurePqCodebook) from
   * double-counting: only the OUTERMOST frame on a thread accrues.
   *
   * Concurrency (optimization r16): composed queries construct their

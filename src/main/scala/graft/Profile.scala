@@ -244,6 +244,7 @@ object Profile {
           .select("doc_id").distinct().localCheckpoint()
         val deadVec = dead.select(col("doc_id").as("vec_id"))
         val deadDoc = dead
+        val masked = Ingest.DocGen.Masked(Ingest.Tombstones.Supplied(deadDoc))
         val qs = graft.queries.Tables.embeddings(spark, sfDir)
           .join(broadcast(deadVec), "vec_id")
           .orderBy("vec_id").limit(8)
@@ -255,8 +256,8 @@ object Profile {
           val built = time(s"axis:$label construct")(df)
           time(s"axis:$label count")(built.count())
         }
-        run("bm25")(graft.operators.Ingest.bm25TopKForgottenWith(
-          spark, sfDir, deadDoc, Seq("table", "scan", "join"), 10))
+        run("bm25")(Ingest.bm25Served(
+          spark, sfDir, masked, Seq("table", "scan", "join"), 10))
         run("cms")(graft.operators.CorpusStats.cmsEstimateForgottenWith(
           spark, sfDir, deadDoc))
         run("dense")(Ingest.knnJoinIvfServed(spark, sfDir,
@@ -265,14 +266,13 @@ object Profile {
           spark, sfDir, deadDoc))
         run("model")(graft.operators.Curation.nbModelRetractedWith(
           spark, sfDir, deadDoc))
-        run("phrase")(graft.operators.Ingest.phraseMatchForgottenWith(
-          spark, sfDir, deadDoc, graft.operators.Ingest.PhraseBatch))
+        run("phrase")(Ingest.phraseMatchServed(
+          spark, sfDir, masked, Ingest.PhraseBatch))
         run("qpq")(Ingest.knnJoinIvfServed(spark, sfDir,
           Ingest.IvfLayout.pq(spark, sfDir), Ingest.IvfGen.Masked(deadVec), qs, 10))
         run("qsq")(Ingest.knnJoinIvfServed(spark, sfDir,
           Ingest.IvfLayout.sq8(spark, sfDir), Ingest.IvfGen.Masked(deadVec), qs, 10))
-        run("sketch")(graft.operators.Ingest.nearDupForgottenWith(
-          spark, sfDir, deadDoc))
+        run("sketch")(Ingest.nearDupServed(spark, sfDir, masked))
         run("e2e-composed")(graft.operators.Ingest.takedownE2e(spark, sfDir))
       // round/edge breakdown of the dup-cluster contraction
       case "cc_phases" =>

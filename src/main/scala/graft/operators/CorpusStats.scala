@@ -208,7 +208,7 @@ object CorpusStats {
 
   /** [[cmsEstimateForgotten]] with a CALLER-SUPPLIED tombstone frame
     * (e.g. [[graft.streaming.ForgetStream]]'s append-only id directory
-    * — the bm25TopKForgottenWith precedent on the stats axis): the
+    * — the Ingest.Tombstones.Supplied precedent on the stats axis): the
     * retraction sketch is derived from the ids at serve time, one
     * semi-bounded tokenize over only the retracted documents. */
   def cmsEstimateForgottenWith(s: SparkSession, dir: String, dead: DataFrame,
@@ -249,7 +249,7 @@ object CorpusStats {
     * token lands in exactly one bucket per depth row, so a single
     * row's cell sum IS the total token mass — retracted mass over live
     * mass is two ≤ W-row reads, no corpus scan, no tokenize (the
-    * bm25DeadFraction shape, cheaper still). */
+    * bm25PolicyServed dead-fraction shape, cheaper still). */
   def cmsDeadFraction(s: SparkSession, dir: String): Double = {
     val (base, _) = ensureCmsArtifacts(s, dir)
     val retract = ensureCmsRetract(s, dir)
@@ -264,11 +264,11 @@ object CorpusStats {
   }
 
   // bounded stats-artifact readout, once per (app, committed artifact)
-  // — the bm25DeadFraction memo shape (optimization r16)
+  // — the bm25PolicyServed dead-fraction memo shape (optimization r16)
   private val massMemo = new PlanMemo[Long]
 
   /** Tombstone-fraction PURGE TRIGGER on the stats axis — the
-    * [[graft.operators.Ingest.bm25TopKPolicyServed]] policy verbatim:
+    * [[graft.operators.Ingest.bm25PolicyServed]] policy verbatim:
     * below θ keep serving the subtracted stored cells (snapshot
     * untouched), at/above θ pay the gen2 rewrite (which here costs only
     * a ≤ 2·D·W-row job — linearity makes the stats axis the cheapest

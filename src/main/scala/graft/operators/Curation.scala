@@ -828,8 +828,9 @@ object Curation {
   /** Model-drift fraction from STORED stats + the bounded CDC alone:
     * touched token mass (|leaving| + |entering|, the diff's signed
     * counts in absolute value) over the stored v1 token mass — the
-    * classifier axis's analog of bm25DeadFraction/cmsDeadFraction, the
-    * quantity a refresh θ-policy triggers on. No corpus scan. */
+    * classifier axis's analog of the bm25PolicyServed and
+    * cmsDeadFraction dead fractions, the quantity a refresh θ-policy
+    * triggers on. No corpus scan. */
   def nbDriftFraction(s: SparkSession, dir: String): Double = {
     val live = ensureNbCounts(s, dir)
       .agg(coalesce(sum(col("c_t") + col("c_b")), lit(0L)))

@@ -84,9 +84,6 @@ object Ingest {
     emb.unionByName(canaryTwins(emb))
   }
 
-  /** Enriched documents table, written once per (app, sf) — see module
-    * doc. Returns a reader over the STORED parquet (scan sees only the
-    * sketch columns; no text, no sketch expressions in the plan). */
   /** The one narrow sketch pass (doc_id, sig, sh_set, simhash) — shared
     * verbatim by the batch ingest below and the Structured Streaming
     * twin (graft.streaming.SketchStream), so the two paths cannot
@@ -100,44 +97,12 @@ object Ingest {
         col("f.sh_set").as("sh_set"), col("simhash"))
   }
 
-  def ensureSketchedDocs(s: SparkSession, dir: String): DataFrame = graft.BuildTimer.time {
-    val path = scratch(s, dir, "docs_sketched")
-    buildGate(s, path) {
-      sketchProjection(documents(s, dir))
-        .write.mode("overwrite").parquet(path)
-    }
-    readCommitted(s, path)
-  }
-
-  /** DELTA half of the sketch index's LSM posture — the third stored
-    * index family to get the append lifecycle (dense IVF and sparse
-    * BM25 already have it): sketch ONLY the append batch, store it next
-    * to the frozen base, serve dedup over base ∪ delta. The base sketch
-    * files are never touched, so in-flight readers keep their
-    * snapshot. */
-  def ensureSketchedDelta(s: SparkSession, dir: String): (DataFrame, DataFrame) = graft.BuildTimer.time {
-    val stored = ensureSketchedDocs(s, dir)
-    val path = scratch(s, dir, "docs_sketched_delta")
-    buildGate(s, path) {
-      sketchProjection(docAppendBatch(s, dir))
-        .write.mode("overwrite").parquet(path)
-    }
-    (stored, readCommitted(s, path))
-  }
-
-  /** Sketch-index COMPACTION: merge base ∪ delta into the next
-    * generation under a new path (snapshot isolation, the
-    * [[compactTermIndex]] posture on the sketch axis) — a pure layout
-    * rewrite, no re-sketching, bounding per-query file counts as deltas
-    * accumulate. */
-  def compactSketchIndex(s: SparkSession, dir: String): DataFrame = graft.BuildTimer.time {
-    val (base, delta) = ensureSketchedDelta(s, dir)
-    val path = scratch(s, dir, "docs_sketched_gen2")
-    buildGate(s, path) {
-      base.unionByName(delta).write.mode("overwrite").parquet(path)
-    }
-    readCommitted(s, path)
-  }
+  /** Enriched documents table, written once per (app, sf) — see module
+    * doc. Returns a reader over the STORED parquet (scan sees only the
+    * sketch columns; no text, no sketch expressions in the plan). */
+  def ensureSketchedDocs(s: SparkSession, dir: String): DataFrame =
+    docTable(s, scratch(s, dir, "docs_sketched"), bucketed = false)(
+      sketchProjection(documents(s, dir)))
 
   // --- stored inverted index (sparse / BM25 retrieval) -----------------
 
@@ -196,31 +161,8 @@ object Ingest {
     * — its `_SUCCESS` is the generation marker (the multi-directory
     * rule above), so a torn build recomputes rather than serving a
     * partial index. */
-  def ensureTermIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) = graft.BuildTimer.time {
-    val pPath = scratch(s, dir, "term_postings")
-    val sPath = scratch(s, dir, "term_stats")
-    buildGate(s, sPath) {
-      // two consumers (postings write + stats write): localCheckpoint so
-      // the corpus is read and tokenized ONCE per index build, not once
-      // per write job (the jaccardPairsExact multi-consumer rule)
-      val toks = documents(s, dir)
-        .select(col("doc_id"), TextAnalysis.bm25Toks(col("text")).as("t"))
-        .localCheckpoint()
-      // repartition on the partition column first (the ensureIvfIndex
-      // file-count rule): each write task owns whole buckets, so the
-      // layout is ≤ NumTermBuckets files, not buckets × shuffle tasks
-      toks
-        .select(col("doc_id"), size(col("t")).as("dl"), explode(col("t")).as("term"))
-        .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"), max("dl").as("dl"))
-        .withColumn("bucket", termBucket(col("term")))
-        .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(pPath)
-      toks.select(size(col("t")).as("dl"))
-        .agg(count(lit(1)).as("n_docs"), sum("dl").as("dl_total"))
-        .write.mode("overwrite").parquet(sPath)
-    }
-    (readCommitted(s, pPath), readCommitted(s, sPath))
-  }
+  def ensureTermIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+    termGen(s, dir, "")(termBuild(documents(s, dir)))
 
   /** Align a probe plan's `bucket` key with the partition column's
     * read-back type (the probeCells rule below: a cast on the scan side
@@ -229,28 +171,27 @@ object Ingest {
     probePlan.withColumn("bucket",
       col("bucket").cast(postings.schema("bucket").dataType))
 
-  /** Warm-path BM25 top-k from the STORED index: the query's bucket
-    * ids are known before execution ([[termBucketIds]]), so a literal
+  /** THE bucket-pruned postings side: the query's bucket ids are known
+    * before execution ([[termBucketIds]]), so a literal
     * `bucket IN (...)` STATIC partition filter prunes every non-query
     * bucket directory at plan time, and the broadcast (bucket, term)
-    * join then keeps only the query's terms inside those buckets.
-    * (The IVF probe needs dynamic pruning because its cells emerge at
-    * runtime from a centroid ranking; a term query's buckets do not —
-    * and Spark's DPP rule declines a bare literal probe frame anyway,
-    * VERDICT r9 #1.) Ranking is the shared [[TextAnalysis.bm25Rank]]
+    * join with the `probe` frame then keeps only the query's terms
+    * inside those buckets. (The IVF probe needs dynamic pruning because
+    * its cells emerge at runtime from a centroid ranking; a term query's
+    * buckets do not — and Spark's DPP rule declines a bare literal probe
+    * frame anyway, VERDICT r9 #1.) */
+  private def prunedPostings(postings: DataFrame, probe: DataFrame,
+      bucketIds: Seq[Int]): DataFrame =
+    postings
+      .filter(col("bucket").isin(bucketIds: _*))
+      .join(broadcast(probeBuckets(probe, postings)), Seq("bucket", "term"))
+
+  /** Warm-path BM25 top-k from the STORED index ([[bm25Served]] over the
+    * base generation). Ranking is the shared [[TextAnalysis.bm25Rank]]
     * body, so fresh and stored scores cannot drift. */
   def bm25TopKStored(s: SparkSession, dir: String, queryTerms: Seq[String],
-      k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val (postings, stats) = ensureTermIndex(s, dir)
-    import s.implicits._
-    val q = queryTerms.toDF("term").select(col("term"),
-      termBucket(col("term")).as("bucket"))
-    val tf = postings
-      .filter(col("bucket").isin(termBucketIds(s, queryTerms): _*))
-      .join(broadcast(probeBuckets(q, postings)), Seq("bucket", "term"))
-      .select("doc_id", "term", "tf", "dl")
-    TextAnalysis.bm25Rank(tf, stats, k, k1, b)
-  }
+      k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    bm25Served(s, dir, DocGen.Base, queryTerms, k, k1, b)
 
   /** BATCHED BM25 serving — the sparse analog of the batched kNN joins:
     * a whole (q_id, term) query frame served in ONE pass over the
@@ -311,9 +252,7 @@ object Ingest {
           termBucket(col("term")).as("bucket")),
           pairs.map(_._2).distinct)
       }
-    val tf = postings
-      .filter(col("bucket").isin(termBucketIds(s, batchTerms): _*))
-      .join(broadcast(probeBuckets(q, postings)), Seq("bucket", "term"))
+    val tf = prunedPostings(postings, q, termBucketIds(s, batchTerms))
       .select("q_id", "doc_id", "term", "tf", "dl")
     (tf, stats)
   }
@@ -339,7 +278,7 @@ object Ingest {
       .withColumnRenamed("vec_id", "doc_id")
   }
 
-  // --- sparse-index LSM lifecycle (append / compact) -------------------
+  // --- text-index lifecycle (append / compact / mask / purge) ----------
 
   /** Re-identification offset of the sparse append batch — the
     * [[AppendOffset]] pattern on the documents axis: appended docs are
@@ -355,109 +294,10 @@ object Ingest {
       .filter(col("doc_id") % 101 === 0)
       .select((col("doc_id") + lit(DocAppendOffset)).as("doc_id"), col("text"))
 
-  /** DELTA half of the inverted index's LSM posture: tokenize ONLY the
-    * append batch (never the base corpus), write its postings as their
-    * own bucket-partitioned table NEXT TO the base (same [[termBucket]]
-    * derivation, so one static IN-list prunes base and delta alike),
-    * plus a 1-row delta stats frame. The base index files are never
-    * touched — concurrent readers keep their snapshot. Same commit
-    * protocol as [[ensureTermIndex]]: postings first, stats directory
-    * last as the generation marker. */
-  def ensureTermIndexDelta(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = graft.BuildTimer.time {
-    val (postings, stats) = ensureTermIndex(s, dir)
-    val pPath = scratch(s, dir, "term_postings_delta")
-    val sPath = scratch(s, dir, "term_stats_delta")
-    buildGate(s, sPath) {
-      // two consumers (postings + stats): tokenize the batch once
-      val toks = docAppendBatch(s, dir)
-        .select(col("doc_id"), TextAnalysis.bm25Toks(col("text")).as("t"))
-        .localCheckpoint()
-      toks
-        .select(col("doc_id"), size(col("t")).as("dl"), explode(col("t")).as("term"))
-        .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"), max("dl").as("dl"))
-        .withColumn("bucket", termBucket(col("term")))
-        .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(pPath)
-      toks.select(size(col("t")).as("dl"))
-        .agg(count(lit(1)).as("n_docs"), sum("dl").as("dl_total"))
-        .write.mode("overwrite").parquet(sPath)
-    }
-    (postings, stats, readCommitted(s, pPath), readCommitted(s, sPath))
-  }
-
-  /** Combined (N, Σdl) of base ∪ delta — two 1-row frames summed, so
-    * the ranker's idf and length normalization see the GROWN corpus
-    * (a stale N would deflate every appended score asymmetrically). */
-  private def mergedTermStats(base: DataFrame, delta: DataFrame): DataFrame =
-    base.unionByName(delta)
-      .agg(sum("n_docs").as("n_docs"), sum("dl_total").as("dl_total"))
-
-  /** Warm BM25 top-k over base ∪ delta postings — the sparse analog of
-    * [[ivfTopKServed]] over [[IvfGen.Appended]]: each side gets its OWN
-    * static bucket IN-list prune + broadcast term join, and the union runs over
-    * already-pruned scans, so neither side ever reads a non-query
-    * bucket directory. df falls out of the unioned tf frame (one row
-    * per matching (doc, term) across BOTH generations), so the idf
-    * automatically reflects appended documents. */
-  def bm25TopKAppended(s: SparkSession, dir: String, queryTerms: Seq[String],
-      k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val (postings, stats, dPostings, dStats) = ensureTermIndexDelta(s, dir)
-    import s.implicits._
-    val q = queryTerms.toDF("term").select(col("term"),
-      termBucket(col("term")).as("bucket"))
-    val ids = termBucketIds(s, queryTerms)
-    def pruned(p: DataFrame): DataFrame = p
-      .filter(col("bucket").isin(ids: _*))
-      .join(broadcast(probeBuckets(q, p)), Seq("bucket", "term"))
-      .select("doc_id", "term", "tf", "dl")
-    TextAnalysis.bm25Rank(pruned(postings).unionByName(pruned(dPostings)),
-      mergedTermStats(stats, dStats), k, k1, b)
-  }
-
-  /** COMPACTION — merge base ∪ delta postings into the next index
-    * GENERATION under a new path (bucket-partitioned like the base)
-    * with merged stats. Old generation untouched (snapshot isolation);
-    * serving flips to gen2 once its stats marker exists. At production
-    * scale this is the scheduled job that keeps per-query file counts
-    * bounded as deltas accumulate — the [[ivfCompacted]] posture on
-    * the sparse axis. */
-  def compactTermIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) = graft.BuildTimer.time {
-    val (postings, stats, dPostings, dStats) = ensureTermIndexDelta(s, dir)
-    val pPath = scratch(s, dir, "term_postings_gen2")
-    val sPath = scratch(s, dir, "term_stats_gen2")
-    buildGate(s, sPath) {
-      postings.unionByName(dPostings)
-        .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(pPath)
-      mergedTermStats(stats, dStats)
-        .write.mode("overwrite").parquet(sPath)
-    }
-    (readCommitted(s, pPath), readCommitted(s, sPath))
-  }
-
-  /** Warm BM25 top-k from the COMPACTED generation — the single-scan
-    * serving shape of [[bm25TopKStored]], over gen2. q_bm25_compact
-    * shares q_bm25_append's oracle verbatim, so appended-serving ≡
-    * compacted-serving ≡ the DuckDB replay is pinned by one hash. */
-  def bm25TopKCompacted(s: SparkSession, dir: String, queryTerms: Seq[String],
-      k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val (gen2, stats2) = compactTermIndex(s, dir)
-    import s.implicits._
-    val q = queryTerms.toDF("term").select(col("term"),
-      termBucket(col("term")).as("bucket"))
-    val tf = gen2
-      .filter(col("bucket").isin(termBucketIds(s, queryTerms): _*))
-      .join(broadcast(probeBuckets(q, gen2)), Seq("bucket", "term"))
-      .select("doc_id", "term", "tf", "dl")
-    TextAnalysis.bm25Rank(tf, stats2, k, k1, b)
-  }
-
-  // --- deletion lifecycle: tombstones as a NEGATIVE delta + purge ------
-
   /** Deterministic retraction set (~1/13 of the base corpus) — the
     * documents a takedown/right-to-be-forgotten request removes. The
-    * predicate is the gates' fixture; production passes an id frame. */
+    * predicate is the gates' fixture; production passes an id frame
+    * ([[Tombstones.Supplied]]). */
   val ForgetMod: Long = Retention.ForgetMod
   val ForgetRem: Long = Retention.ForgetRem
 
@@ -468,144 +308,264 @@ object Ingest {
     * statistics (n_docs, dl_total of the retracted docs alone). The
     * build tokenizes ONLY the retracted documents — bounded by the
     * retraction size, never a corpus re-scan — which is what makes
-    * deletion the mirror image of [[ensureTermIndexDelta]]'s append: an
-    * append is a positive delta (new postings + added stats), a
-    * deletion is a negative one (an id anti-set + subtracted stats).
-    * Without the stats half, serving after a large takedown would rank
-    * with a stale N and Σdl — idf and length normalization both skew,
-    * silently, for every surviving document. Commit protocol as always:
-    * ids payload first, the stats directory last as the marker. */
+    * deletion the mirror image of append: an append is a positive delta
+    * (new postings + added stats), a deletion is a negative one (an id
+    * anti-set + subtracted stats). Without the stats half, serving
+    * after a large takedown would rank with a stale N and Σdl — idf and
+    * length normalization both skew, silently, for every surviving
+    * document. Commit protocol as always: ids payload first, the stats
+    * directory last as the marker. */
   def ensureForgetSet(s: SparkSession, dir: String): (DataFrame, DataFrame) = graft.BuildTimer.time {
     val iPath = scratch(s, dir, "forget_ids")
     val sPath = scratch(s, dir, "forget_stats")
     buildGate(s, sPath) {
-      // two consumers (ids + stats): tokenize the retraction once
-      val toks = forgetBatch(s, dir)
-        .select(col("doc_id"), TextAnalysis.bm25Toks(col("text")).as("t"))
-        .localCheckpoint()
+      val toks = tokenized(forgetBatch(s, dir))
       toks.select("doc_id").write.mode("overwrite").parquet(iPath)
-      toks.select(size(col("t")).as("dl"))
-        .agg(count(lit(1)).as("n_docs"), sum("dl").as("dl_total"))
-        .write.mode("overwrite").parquet(sPath)
+      docStats(toks).write.mode("overwrite").parquet(sPath)
     }
     (readCommitted(s, iPath), readCommitted(s, sPath))
   }
 
-  /** Corpus stats with the retraction SUBTRACTED — the negated
+  /** A tombstone set on the documents axis: what the masked and purged
+    * generations ([[DocGen]]) of every text family subtract. */
+  sealed trait Tombstones {
+    /** The retracted doc_ids, one row per document. */
+    def ids(s: SparkSession, dir: String): DataFrame
+    /** The retraction's NEGATIVE (n_docs, dl_total). */
+    def negStats(s: SparkSession, dir: String): DataFrame
+    /** How many documents are retracted (the purge policy's numerator). */
+    def nDocs(s: SparkSession, dir: String): Long
+    /** Path suffix of the generations purged of this set. */
+    def purgedGen(s: SparkSession, dir: String): String
+    /** A masked frame with several consumers, checkpointed. */
+    def checkpoint(masked: DataFrame): DataFrame
+  }
+
+  object Tombstones {
+    /** The stored [[ensureForgetSet]] artifact: its negative stats were
+      * computed at tombstone-build time, and a mask over it checkpoints
+      * eagerly. */
+    case object Stored extends Tombstones {
+      def ids(s: SparkSession, dir: String): DataFrame = ensureForgetSet(s, dir)._1
+      def negStats(s: SparkSession, dir: String): DataFrame =
+        ensureForgetSet(s, dir)._2
+      def nDocs(s: SparkSession, dir: String): Long =
+        headLongOnce(negStats(s, dir).select("n_docs"))
+      def purgedGen(s: SparkSession, dir: String): String = "_purged"
+      def checkpoint(masked: DataFrame): DataFrame = masked.localCheckpoint()
+    }
+
+    /** A CALLER-SUPPLIED id frame — e.g. one accumulated by the streamed
+      * takedown front door ([[graft.streaming.ForgetStream]]'s
+      * append-only id directory). The negative stats are derived from
+      * the ids at serve time (one join bounded by the retraction size):
+      * the numbers the stored artifact precomputes, so the two cannot
+      * drift on anything but freshness. A mask over it checkpoints
+      * LAZILY: it materializes inside the first consuming job (for the
+      * composed takedown, inside the concurrent Par phase instead of a
+      * barrier job at construction). */
+    final case class Supplied(dead: DataFrame) extends Tombstones {
+      // distinct once per set: the streamed front door delivers
+      // duplicates (a doc retracted twice) — free for an anti-join, NOT
+      // for the derived negative stats (a double subtract) or the purge
+      // key (a forked generation path); lazy, several consumers
+      private lazy val distinctIds =
+        dead.select("doc_id").distinct().localCheckpoint(eager = false)
+      def ids(s: SparkSession, dir: String): DataFrame = distinctIds
+      def negStats(s: SparkSession, dir: String): DataFrame =
+        docStats(documents(s, dir).join(broadcast(distinctIds), "doc_id")
+          .select(TextAnalysis.bm25Toks(col("text")).as("t")))
+      def nDocs(s: SparkSession, dir: String): Long = distinctIds.count()
+      /** `_purged_<hex of the set's 64-bit xxhash64 sum>`: idempotent
+        * per set, so re-serving the same takedown state reuses the
+        * rewrite. Summed as DECIMAL and wrapped to 64 bits on the
+        * driver: a LONG sum overflows under ANSI arithmetic once the set
+        * holds a few dozen ids. */
+      def purgedGen(s: SparkSession, dir: String): String = {
+        val key = distinctIds
+          .agg(sum(xxhash64(col("doc_id")).cast(DecimalType(38, 0)))).head()
+        "_purged_" + java.lang.Long.toHexString(
+          if (key.isNullAt(0)) 0L else key.getDecimal(0).toBigInteger.longValue)
+      }
+      def checkpoint(masked: DataFrame): DataFrame =
+        masked.localCheckpoint(eager = false)
+    }
+  }
+
+  /** A served generation of a document-keyed text index. The BM25
+    * postings ([[termServed]]), the sketch table ([[sketchServed]]) and
+    * the positional postings ([[phraseServed]]) share this one
+    * lifecycle. Every rewritten generation lands under its own path
+    * next to the frozen base and is never touched again (snapshot
+    * isolation: in-flight readers keep theirs, and a reader pinned to an
+    * older generation reproduces its results forever — q_bm25_asof). */
+  sealed trait DocGen
+  object DocGen {
+    /** The built index. */
+    case object Base extends DocGen
+    /** Base ∪ the append delta: ONLY the append batch is tokenized or
+      * sketched, stored next to the base; the base files are never
+      * touched. */
+    case object Appended extends DocGen
+    /** gen2: Appended rewritten as one table — a pure layout job (no
+      * re-tokenize, no re-sketch) that bounds per-query file counts as
+      * deltas accumulate; the [[ivfCompacted]] posture. */
+    case object Compacted extends DocGen
+    /** Base with `t` MASKED at serve time: the index is untouched and
+      * the takedown is effective the instant the tombstones commit. */
+    final case class Masked(t: Tombstones) extends DocGen
+    /** Masked rewritten as the next generation — the physical half of
+      * deletion, after which the retracted bytes are gone from the
+      * serving artifact (the step a compliance deletion requires and
+      * masking alone cannot provide), with no mask left in the plan. At
+      * production scale this folds into the scheduled compaction. */
+    final case class Purged(t: Tombstones) extends DocGen
+  }
+
+  /** `df` minus the tombstoned documents: one broadcast anti-join. */
+  private def minus(df: DataFrame, ids: DataFrame): DataFrame =
+    df.join(broadcast(ids), Seq("doc_id"), "left_anti")
+
+  /** THE bucket-partitioned write (term postings and positions alike).
+    * Repartitioning on the partition column first makes each write
+    * task own whole buckets, so the layout is ≤ NumTermBuckets files,
+    * not buckets × shuffle tasks (the [[writeCells]] rule). */
+  private def writeBuckets(rows: DataFrame, path: String): Unit =
+    rows.repartition(col("bucket"))
+      .write.mode("overwrite").partitionBy("bucket").parquet(path)
+
+  /** A one-table generation (sketches, positions): gated write, then
+    * the committed reader. `rows` is built only on the cold path. */
+  private def docTable(s: SparkSession, path: String, bucketed: Boolean)(
+      rows: => DataFrame): DataFrame = graft.BuildTimer.time {
+    buildGate(s, path) {
+      if (bucketed) writeBuckets(rows, path)
+      else rows.write.mode("overwrite").parquet(path)
+    }
+    readCommitted(s, path)
+  }
+
+  /** One generation of the inverted index, `term_postings<gen>` +
+    * `term_stats<gen>`: postings payload first, the stats directory
+    * LAST as the generation marker (a torn build recomputes rather than
+    * serving a partial index). `build` runs only on the cold path.
+    * Returns (postings, stats). */
+  private def termGen(s: SparkSession, dir: String, gen: String)(
+      build: => (DataFrame, DataFrame)): (DataFrame, DataFrame) =
+    graft.BuildTimer.time {
+      val pPath = scratch(s, dir, s"term_postings$gen")
+      val sPath = scratch(s, dir, s"term_stats$gen")
+      buildGate(s, sPath) {
+        val (postings, stats) = build
+        writeBuckets(postings, pPath)
+        stats.write.mode("overwrite").parquet(sPath)
+      }
+      (readCommitted(s, pPath), readCommitted(s, sPath))
+    }
+
+  /** (doc_id, t) under the shared BM25 tokenizer, checkpointed: every
+    * build that reads it has two consumers (payload + stats), so the
+    * documents are read and tokenized ONCE per build (the
+    * jaccardPairsExact multi-consumer rule). */
+  private def tokenized(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), TextAnalysis.bm25Toks(col("text")).as("t"))
+      .localCheckpoint()
+
+  /** THE 1-row BM25 corpus statistics (n_docs, dl_total) of a tokenized
+    * frame — base, delta, tombstones and a supplied retraction all
+    * aggregate through this body (an empty frame sums to 0, not NULL). */
+  private def docStats(toks: DataFrame): DataFrame =
+    toks.select(size(col("t")).as("dl"))
+      .agg(count(lit(1)).as("n_docs"),
+        coalesce(sum("dl"), lit(0L)).as("dl_total"))
+
+  /** Postings (doc_id, term, tf, dl, bucket) + stats of a document
+    * frame, tokenized once. tf and dl are the exact values the fresh
+    * path's explode+filter derives, so stored ≡ fresh is hash-exact. */
+  private def termBuild(docs: DataFrame): (DataFrame, DataFrame) = {
+    val toks = tokenized(docs)
+    (toks
+      .select(col("doc_id"), size(col("t")).as("dl"), explode(col("t")).as("term"))
+      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"), max("dl").as("dl"))
+      .withColumn("bucket", termBucket(col("term"))),
+      docStats(toks))
+  }
+
+  /** Combined (N, Σdl) of two stats frames — so the ranker's idf and
+    * length normalization see the GROWN corpus (a stale N would deflate
+    * every appended score asymmetrically). */
+  private def mergedTermStats(base: DataFrame, delta: DataFrame): DataFrame =
+    base.unionByName(delta)
+      .agg(sum("n_docs").as("n_docs"), sum("dl_total").as("dl_total"))
+
+  /** Corpus stats with a retraction SUBTRACTED — the negated
     * [[mergedTermStats]], so append and forget share one merge body. */
   private def subtractedStats(stats: DataFrame, neg: DataFrame): DataFrame =
     mergedTermStats(stats,
       neg.select((-col("n_docs")).as("n_docs"),
         (-col("dl_total")).as("dl_total")))
 
-  /** Warm BM25 with the retraction MASKED AT SERVE TIME: the stored
-    * index is untouched (readers keep their snapshot; the takedown is
-    * effective the instant the tombstone marker commits), the pruned tf
-    * frame anti-joins the broadcast tombstone ids, and the ranker gets
-    * the subtracted stats. df needs no correction path of its own — it
-    * falls out of the anti-joined tf frame ([[TextAnalysis.bm25Rank]]'s
-    * df-from-tf rule), so a term whose only occurrences were retracted
-    * simply vanishes. Oracle = fresh BM25 over `documents` minus the
-    * retraction predicate: the hash pins the anti-join AND both stat
-    * corrections (a stale N shifts every idf → every score). */
-  def bm25TopKForgotten(s: SparkSession, dir: String, queryTerms: Seq[String],
-      k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val (postings, stats) = ensureTermIndex(s, dir)
-    val (dead, negStats) = ensureForgetSet(s, dir)
-    import s.implicits._
-    val q = queryTerms.toDF("term").select(col("term"),
-      termBucket(col("term")).as("bucket"))
-    val tf = postings
-      .filter(col("bucket").isin(termBucketIds(s, queryTerms): _*))
-      .join(broadcast(probeBuckets(q, postings)), Seq("bucket", "term"))
-      .join(broadcast(dead), Seq("doc_id"), "left_anti")
-      .select("doc_id", "term", "tf", "dl")
-    TextAnalysis.bm25Rank(tf, subtractedStats(stats, negStats), k, k1, b)
+  /** What a generation of the inverted index serves: its bucket-
+    * partitioned postings sides, an optional serve-time tombstone mask,
+    * and the (n_docs, dl_total) its ranking must use. */
+  final case class TermServed(sides: Seq[DataFrame], dead: Option[DataFrame],
+      stats: DataFrame)
+
+  /** THE served-generation accessor of the inverted index. The two
+    * rewritten generations materialize another one: gen2 is Appended's
+    * sides as one table, a purged generation is Masked's sides with the
+    * mask applied — each with that generation's stats, so rewritten ≡
+    * served by construction. */
+  def termServed(s: SparkSession, dir: String, gen: DocGen): TermServed = {
+    def rewrite(suffix: String, from: DocGen): TermServed = {
+      val (postings, stats) = termGen(s, dir, suffix) {
+        val g = termServed(s, dir, from)
+        (g.sides.map(p => g.dead.fold(p)(minus(p, _))).reduce(_.unionByName(_)),
+          g.stats)
+      }
+      TermServed(Seq(postings), None, stats)
+    }
+    gen match {
+      case DocGen.Base =>
+        val (postings, stats) = ensureTermIndex(s, dir)
+        TermServed(Seq(postings), None, stats)
+      case DocGen.Appended =>
+        val base = termServed(s, dir, DocGen.Base)
+        val (delta, dStats) =
+          termGen(s, dir, "_delta")(termBuild(docAppendBatch(s, dir)))
+        TermServed(base.sides :+ delta, None, mergedTermStats(base.stats, dStats))
+      case DocGen.Compacted => rewrite("_gen2", DocGen.Appended)
+      case DocGen.Masked(t) =>
+        val base = termServed(s, dir, DocGen.Base)
+        TermServed(base.sides, Some(t.ids(s, dir)),
+          subtractedStats(base.stats, t.negStats(s, dir)))
+      case DocGen.Purged(t) => rewrite(t.purgedGen(s, dir), DocGen.Masked(t))
+    }
   }
 
-  /** [[bm25TopKForgotten]] with a CALLER-SUPPLIED tombstone frame —
-    * e.g. one accumulated by the streamed takedown front door
-    * ([[graft.streaming.ForgetStream]]'s append-only id directory), the
-    * knnJoinIvfWithDelta precedent on the deletion verb. The negative
-    * stats are derived from the ids at serve time (one join bounded by
-    * the retraction size); the artifact path above precomputes them at
-    * tombstone-build time instead — same numbers, so the two entries
-    * cannot drift on anything but freshness. */
-  def bm25TopKForgottenWith(s: SparkSession, dir: String, dead: DataFrame,
+  /** Warm BM25 top-k through one served generation. Each postings side
+    * gets its OWN static bucket prune ([[prunedPostings]]) and any
+    * tombstone mask AFTER it (the anti-join must not interpose between
+    * the scan and its bucket IN-list); the union runs over
+    * already-pruned scans, so no side ever reads a non-query bucket
+    * directory. df needs no correction path of its own: it falls out of
+    * the tf frame ([[TextAnalysis.bm25Rank]]'s df-from-tf rule), so
+    * appended documents raise it and a term whose only occurrences were
+    * retracted simply vanishes. Masked ≡ purged and appended ≡
+    * compacted are each pinned by one shared oracle. */
+  def bm25Served(s: SparkSession, dir: String, gen: DocGen,
       queryTerms: Seq[String], k: Int, k1: Double = 1.2,
       b: Double = 0.75): DataFrame = {
-    val (postings, stats) = ensureTermIndex(s, dir)
-    // distinct: the streamed front door delivers duplicates (a doc
-    // retracted twice) — free for the anti-join, NOT for the derived
-    // negative stats, which would double-subtract (caught by the
-    // streamed-takedown e2e spec)
-    val deadIds = dead.select("doc_id").distinct()
-      .localCheckpoint(eager = false) // 2 consumers; lazy, no barrier job
-    val negStats = documents(s, dir).join(broadcast(deadIds), "doc_id")
-      .select(size(TextAnalysis.bm25Toks(col("text"))).as("dl"))
-      .agg(count(lit(1)).as("n_docs"),
-        coalesce(sum("dl"), lit(0L)).as("dl_total"))
+    val g = termServed(s, dir, gen)
     import s.implicits._
     val q = queryTerms.toDF("term").select(col("term"),
       termBucket(col("term")).as("bucket"))
-    val tf = postings
-      .filter(col("bucket").isin(termBucketIds(s, queryTerms): _*))
-      .join(broadcast(probeBuckets(q, postings)), Seq("bucket", "term"))
-      .join(broadcast(deadIds), Seq("doc_id"), "left_anti")
-      .select("doc_id", "term", "tf", "dl")
-    TextAnalysis.bm25Rank(tf, subtractedStats(stats, negStats), k, k1, b)
-  }
-
-  /** PURGE — the physical half of deletion: rewrite the postings minus
-    * the tombstoned docs as the next index GENERATION (same bucket
-    * partitioning, corrected stats), after which the retracted bytes
-    * are genuinely gone from the serving artifact — the step a
-    * compliance deletion requires and serve-time masking alone cannot
-    * provide. Old generation untouched until the new marker commits
-    * (snapshot isolation, the [[compactTermIndex]] posture); at
-    * production scale this folds into the scheduled compaction that
-    * already rewrites the postings anyway. */
-  def purgeTermIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) = graft.BuildTimer.time {
-    val (postings, stats) = ensureTermIndex(s, dir)
-    val (dead, negStats) = ensureForgetSet(s, dir)
-    val pPath = scratch(s, dir, "term_postings_purged")
-    val sPath = scratch(s, dir, "term_stats_purged")
-    buildGate(s, sPath) {
-      postings.join(broadcast(dead), Seq("doc_id"), "left_anti")
-        .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(pPath)
-      subtractedStats(stats, negStats)
-        .write.mode("overwrite").parquet(sPath)
-    }
-    (readCommitted(s, pPath), readCommitted(s, sPath))
-  }
-
-  /** Warm BM25 from the PURGED generation — single pruned scan, no
-    * anti-join left in the serve path. Shares q_bm25_forget's oracle
-    * VERBATIM, so masked-serving ≡ purged-serving ≡ the DuckDB replay
-    * is pinned by one hash (the append/compact pairing, on deletion). */
-  def bm25TopKPurged(s: SparkSession, dir: String, queryTerms: Seq[String],
-      k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val (purged, statsP) = purgeTermIndex(s, dir)
-    import s.implicits._
-    val q = queryTerms.toDF("term").select(col("term"),
-      termBucket(col("term")).as("bucket"))
-    val tf = purged
-      .filter(col("bucket").isin(termBucketIds(s, queryTerms): _*))
-      .join(broadcast(probeBuckets(q, purged)), Seq("bucket", "term"))
-      .select("doc_id", "term", "tf", "dl")
-    TextAnalysis.bm25Rank(tf, statsP, k, k1, b)
-  }
-
-  /** Dead fraction of the stored BM25 index — tombstoned vs live doc
-    * counts, both read from STORED stats artifacts (the index's own
-    * (n_docs) row and the tombstone build's forget_stats marker), never
-    * from a corpus scan: two 1-row reads, the same bounded-model-
-    * artifact shape as a centroid table. */
-  def bm25DeadFraction(s: SparkSession, dir: String): Double = {
-    val live = headLongOnce(ensureTermIndex(s, dir)._2.select("n_docs"))
-    val dead = headLongOnce(ensureForgetSet(s, dir)._2.select("n_docs"))
-    dead.toDouble / live.toDouble
+    val ids = termBucketIds(s, queryTerms)
+    val tf = g.sides.map { p =>
+      val side = prunedPostings(p, q, ids)
+      g.dead.fold(side)(minus(side, _)).select("doc_id", "term", "tf", "dl")
+    }.reduce(_.unionByName(_))
+    TextAnalysis.bm25Rank(tf, g.stats, k, k1, b)
   }
 
   // 1-row stats-artifact heads (dead fractions, policy thetas) repeat
@@ -619,132 +579,63 @@ object Ingest {
   /** Tombstone-fraction PURGE TRIGGER — the deletion analog of
     * retrainOnDrift: masking is O(1) per serve but the anti-join and
     * the dead bytes it hides accrue forever, so once the dead fraction
-    * crosses θ the policy pays the one-time generation rewrite
-    * ([[purgeTermIndex]]) and serving drops the mask; below θ it keeps
-    * serving masked off the untouched snapshot. Returns the served
-    * frame plus the decision, so a gate can pin WHICH arm ran (two
-    * arms that happen to agree must not hide a policy that never
-    * fires). At production scale θ is the knob that folds compliance
-    * deletion into the scheduled compaction cadence. */
-  def bm25TopKPolicyServed(s: SparkSession, dir: String,
-      queryTerms: Seq[String], k: Int, theta: Double,
-      k1: Double = 1.2, b: Double = 0.75): (DataFrame, Boolean) = {
-    val purge = bm25DeadFraction(s, dir) >= theta
-    val df =
-      if (purge) bm25TopKPurged(s, dir, queryTerms, k, k1, b)
-      else bm25TopKForgotten(s, dir, queryTerms, k, k1, b)
-    (df, purge)
-  }
-
-  /** [[bm25TopKPolicyServed]] with a CALLER-SUPPLIED tombstone frame —
-    * the policy evaluated against a streamed takedown directory
-    * ([[graft.streaming.ForgetStream]]'s append-only id files): the
-    * dead count is the accumulated id set (distinct — retraction
-    * requests may repeat across triggers), the live count still comes
-    * from the stored index stats. Purge rewrites against the supplied
-    * set via [[purgeTermIndexWith]]'s one-off path; mask serves through
-    * [[bm25TopKForgottenWith]]. */
-  def bm25TopKPolicyServedWith(s: SparkSession, dir: String,
-      dead: DataFrame, queryTerms: Seq[String], k: Int,
-      theta: Double): (DataFrame, Boolean) = {
-    val deadIds = dead.select("doc_id").distinct().localCheckpoint()
+    * (tombstoned over live documents: the set's count and the stored
+    * index's own n_docs row, never a corpus scan) crosses θ the policy
+    * pays the one-time generation rewrite and serving drops the mask;
+    * below θ it keeps serving masked off the untouched snapshot.
+    * Returns the served frame plus the decision, so a gate can pin WHICH
+    * arm ran (two arms that happen to agree must not hide a policy that
+    * never fires). At production scale θ is the knob that folds
+    * compliance deletion into the scheduled compaction cadence. */
+  def bm25PolicyServed(s: SparkSession, dir: String, t: Tombstones,
+      queryTerms: Seq[String], k: Int, theta: Double, k1: Double = 1.2,
+      b: Double = 0.75): (DataFrame, Boolean) = {
     val live = headLongOnce(ensureTermIndex(s, dir)._2.select("n_docs"))
-    val purge = deadIds.count().toDouble / live.toDouble >= theta
-    val df =
-      if (purge) bm25TopKPurgedWith(s, dir, deadIds, queryTerms, k)
-      else bm25TopKForgottenWith(s, dir, deadIds, queryTerms, k)
-    (df, purge)
+    val purge = t.nDocs(s, dir).toDouble / live.toDouble >= theta
+    val gen = if (purge) DocGen.Purged(t) else DocGen.Masked(t)
+    (bm25Served(s, dir, gen, queryTerms, k, k1, b), purge)
   }
 
-  /** One-off purge against a caller-supplied tombstone frame: the
-    * postings minus the supplied ids rewritten under a generation path
-    * keyed by the tombstone set's content hash (idempotent per set —
-    * re-serving the same takedown state reuses the rewrite), stats
-    * subtracted from serve-time-derived negatives exactly as
-    * [[bm25TopKForgottenWith]] derives them. */
-  def bm25TopKPurgedWith(s: SparkSession, dir: String, dead: DataFrame,
-      queryTerms: Seq[String], k: Int, k1: Double = 1.2,
-      b: Double = 0.75): DataFrame = {
-    val (postings, stats) = ensureTermIndex(s, dir)
-    // distinct before the content-hash tag AND the derived stats: a
-    // duplicated retraction must neither fork the generation path nor
-    // double-subtract (the bm25TopKForgottenWith rule)
-    val deadIds = dead.select("doc_id").distinct()
-      .localCheckpoint(eager = false) // 3 consumers; first use materializes
-    val setKey = deadIds.agg(sum(xxhash64(col("doc_id")))).head()
-    val tag = java.lang.Long.toHexString(
-      if (setKey.isNullAt(0)) 0L else setKey.getLong(0))
-    val pPath = scratch(s, dir, s"term_postings_purged_$tag")
-    val sPath = scratch(s, dir, s"term_stats_purged_$tag")
-    buildGate(s, sPath) { graft.BuildTimer.time {
-      postings.join(broadcast(deadIds), Seq("doc_id"), "left_anti")
-        .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(pPath)
-      val negStats = documents(s, dir).join(broadcast(deadIds), "doc_id")
-        .select(size(TextAnalysis.bm25Toks(col("text"))).as("dl"))
-        .agg(count(lit(1)).as("n_docs"),
-          coalesce(sum("dl"), lit(0L)).as("dl_total"))
-      subtractedStats(stats, negStats)
-        .write.mode("overwrite").parquet(sPath)
-    } }
-    val purged = readCommitted(s, pPath)
-    import s.implicits._
-    val q = queryTerms.toDF("term").select(col("term"),
-      termBucket(col("term")).as("bucket"))
-    val tf = purged
-      .filter(col("bucket").isin(termBucketIds(s, queryTerms): _*))
-      .join(broadcast(probeBuckets(q, purged)), Seq("bucket", "term"))
-      .select("doc_id", "term", "tf", "dl")
-    TextAnalysis.bm25Rank(tf, readCommitted(s, sPath), k, k1, b)
+  /** THE served-generation accessor of the sketch table: the features
+    * frame a generation serves dedup from. Sketches are per-document,
+    * so deletion has no statistics to correct. */
+  def sketchServed(s: SparkSession, dir: String, gen: DocGen): DataFrame = {
+    def table(suffix: String)(rows: => DataFrame): DataFrame =
+      docTable(s, scratch(s, dir, s"docs_sketched$suffix"), bucketed = false)(rows)
+    gen match {
+      case DocGen.Base => ensureSketchedDocs(s, dir)
+      case DocGen.Appended =>
+        ensureSketchedDocs(s, dir).unionByName(
+          table("_delta")(sketchProjection(docAppendBatch(s, dir))))
+      case DocGen.Compacted =>
+        table("_gen2")(sketchServed(s, dir, DocGen.Appended))
+      // checkpointed: the masked frame feeds the candidate pass AND both
+      // verify join-backs — unmaterialized, the anti-join loses the
+      // stored table's stats and the verify joins can flip off broadcast
+      // (measured 5x on the zipf rehearsal vs the purged generation,
+      // whose input is a plain scan). Bounded: the sketch table minus
+      // the retraction.
+      case DocGen.Masked(t) =>
+        t.checkpoint(minus(ensureSketchedDocs(s, dir), t.ids(s, dir)))
+      case DocGen.Purged(t) =>
+        table(t.purgedGen(s, dir))(minus(ensureSketchedDocs(s, dir), t.ids(s, dir)))
+    }
   }
 
-  /** Near-dup pairs over the stored sketch index with the retraction
-    * masked — the dedup axis of the same tombstone artifact: one
-    * broadcast anti-join on the 8-byte-key sketch table, then the
-    * identical band → bucket-pair → exact-verify chain. A pair whose
-    * either side was retracted must vanish; pairs between survivors
-    * must be untouched — the oracle (brute force over the filtered
-    * corpus) pins both directions. */
-  def nearDupForgotten(s: SparkSession, dir: String): DataFrame =
-    // localCheckpoint: the masked frame feeds the candidate pass AND
-    // both verify join-backs — unmaterialized, the anti-join loses the
-    // stored table's stats and the verify joins can flip off broadcast
-    // (measured 5x on the zipf rehearsal vs the purged twin, whose
-    // input is a plain scan). Bounded: the sketch table minus the
-    // retraction.
-    nearDupOverFeatures(
-      ensureSketchedDocs(s, dir)
-        .join(broadcast(ensureForgetSet(s, dir)._1), Seq("doc_id"), "left_anti")
-        .localCheckpoint())
-
-  private def nearDupOverFeatures(features: DataFrame): DataFrame =
+  /** Near-dup pairs over a served sketch generation: the band → bucket
+    * pair → exact-verify chain on stored fixed-width columns (no
+    * tokenize, no sketch expressions, no text I/O). Appended copies pair
+    * with their sources at J = 1.0; a pair with a retracted side
+    * vanishes while survivor pairs stay untouched — the brute-force
+    * oracles pin both directions. */
+  def nearDupServed(s: SparkSession, dir: String, gen: DocGen): DataFrame = {
+    val features = sketchServed(s, dir, gen)
     Dedup.verifiedOverlapFromFeatures(features,
         Dedup.minhashCandidatesFromFeatures(features))
       .filter(col("n_common") * 2 >= col("n_union"))
       .select("doc1", "doc2", "jaccard")
       .orderBy("doc1", "doc2")
-
-  /** PURGE of the sketch index — the physical half on the dedup axis:
-    * the sketch table minus the tombstoned rows rewritten as its next
-    * generation ([[purgeTermIndex]]'s posture; no stats to correct —
-    * sketches are per-document). IVF's physical purge is the same
-    * one-liner folded into its scheduled compaction (the `dead` hook on
-    * the side frame), so it is not duplicated as a separate artifact. */
-  def purgeSketchIndex(s: SparkSession, dir: String): DataFrame = graft.BuildTimer.time {
-    val path = scratch(s, dir, "docs_sketched_purged")
-    buildGate(s, path) {
-      ensureSketchedDocs(s, dir)
-        .join(broadcast(ensureForgetSet(s, dir)._1), Seq("doc_id"), "left_anti")
-        .write.mode("overwrite").parquet(path)
-    }
-    readCommitted(s, path)
   }
-
-  /** Near-dup pairs from the PURGED sketch generation — single scan, no
-    * mask left in the plan; shares q_near_dup_forget's oracle VERBATIM
-    * (masked ≡ purged on the dedup axis, pinned by one hash). */
-  def nearDupPurged(s: SparkSession, dir: String): DataFrame =
-    nearDupOverFeatures(purgeSketchIndex(s, dir))
 
   // --- stored positional index (exact phrase search) -------------------
 
@@ -758,19 +649,26 @@ object Ingest {
     * 0-based token offset from the shared [[TextAnalysis.bm25Toks]]
     * tokenizer — the same split the index build, the fresh scorer and
     * the oracle replay, so positions cannot drift from terms. */
-  def ensurePhraseIndex(s: SparkSession, dir: String): DataFrame = graft.BuildTimer.time {
-    val path = scratch(s, dir, "term_positions")
-    buildGate(s, path) {
+  def ensurePhraseIndex(s: SparkSession, dir: String): DataFrame =
+    docTable(s, scratch(s, dir, "term_positions"), bucketed = true)(
       documents(s, dir)
         .select(col("doc_id"),
           posexplode(TextAnalysis.bm25Toks(col("text"))).as(Seq("pos", "term")))
-        .withColumn("bucket", termBucket(col("term")))
-        // partition-column-first repartition (the ensureTermIndex
-        // file-count rule): ≤ NumTermBuckets files, not buckets × tasks
-        .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(path)
-    }
-    readCommitted(s, path)
+        .withColumn("bucket", termBucket(col("term"))))
+
+  /** THE served-generation accessor of the positional index: (positions,
+    * optional serve-time tombstone mask). Positions are per-document, so
+    * deletion has no statistics to correct. The positional index has no
+    * append batch, so Appended and Compacted are rejected. */
+  def phraseServed(s: SparkSession, dir: String,
+      gen: DocGen): (DataFrame, Option[DataFrame]) = gen match {
+    case DocGen.Base => (ensurePhraseIndex(s, dir), None)
+    case DocGen.Masked(t) => (ensurePhraseIndex(s, dir), Some(t.ids(s, dir)))
+    case DocGen.Purged(t) =>
+      (docTable(s, scratch(s, dir, s"term_positions${t.purgedGen(s, dir)}"),
+        bucketed = true)(minus(ensurePhraseIndex(s, dir), t.ids(s, dir))), None)
+    case other => throw new IllegalArgumentException(
+      s"the positional index has no $other generation")
   }
 
   /** BATCHED exact phrase search from the stored positional index: every
@@ -787,23 +685,21 @@ object Ingest {
     * Scale: the spec and per-phrase lengths are the bounded broadcast
     * query batch; the postings scan is pruned to the phrases' bucket
     * directories by the static literal IN-list ([[termBucketIds]], the
-    * bm25TopKStored rationale); the one shuffle groups by
+    * bm25Served rationale); the one shuffle groups by
     * (phrase_id, doc_id, start) — keys at least as fine as doc_id, so a
     * hot document spreads and a hot TERM ('the') spreads across all the
     * documents containing it. No corpus scan, no tokenize. */
   def phraseMatchBatch(s: SparkSession, dir: String,
       phrases: Seq[(Long, Seq[String])]): DataFrame =
-    phraseMatchOver(s, ensurePhraseIndex(s, dir), phrases)
+    phraseMatchServed(s, dir, DocGen.Base, phrases)
 
-  /** The phrase-adjacency body over ANY positional postings frame
-    * (stored, masked, purged generation) — one copy, so the deletion
-    * variants cannot drift from the primary serve path. The optional
-    * tombstone mask applies AFTER the bucket prune (the
-    * bm25TopKForgotten position: the anti-join must not interpose
-    * between the scan and its static bucket IN-list). */
-  private def phraseMatchOver(s: SparkSession, postings: DataFrame,
-      phrases: Seq[(Long, Seq[String])],
-      dead: Option[DataFrame] = None): DataFrame = {
+  /** [[phraseMatchBatch]] through any served generation. A tombstone
+    * mask applies AFTER the bucket prune (the anti-join must not
+    * interpose between the scan and its static bucket IN-list); a
+    * retracted doc's occurrences vanish and no other row changes. */
+  def phraseMatchServed(s: SparkSession, dir: String, gen: DocGen,
+      phrases: Seq[(Long, Seq[String])]): DataFrame = {
+    val (postings, dead) = phraseServed(s, dir, gen)
     import s.implicits._
     val spec = phrases.flatMap { case (pid, toks) =>
       toks.zipWithIndex.map { case (t, i) => (pid, t, i) } }
@@ -816,9 +712,7 @@ object Ingest {
     val pruned = postings
       .filter(col("bucket").isin(
         termBucketIds(s, spec.map(_._2).distinct): _*))
-    val masked = dead.fold(pruned)(d =>
-      pruned.join(broadcast(d), Seq("doc_id"), "left_anti"))
-    val starts = masked
+    val starts = dead.fold(pruned)(minus(pruned, _))
       .join(broadcast(probeBuckets(specDf, postings)), Seq("bucket", "term"))
       .groupBy(col("phrase_id"), col("doc_id"),
         (col("pos") - col("off")).as("start"))
@@ -829,37 +723,6 @@ object Ingest {
       .groupBy("phrase_id", "doc_id")
       .agg(count(lit(1)).as("n_hits"))
   }
-
-  /** Batched phrase search with the retraction MASKED — deletion on the
-    * POSITIONAL axis: one broadcast anti-join on the bucket-pruned
-    * postings. Positions are per-document, so unlike BM25 there are no
-    * corpus stats to correct — a retracted doc's occurrences simply
-    * vanish and no other row changes. */
-  def phraseMatchForgotten(s: SparkSession, dir: String,
-      phrases: Seq[(Long, Seq[String])]): DataFrame =
-    phraseMatchOver(s, ensurePhraseIndex(s, dir), phrases,
-      dead = Some(ensureForgetSet(s, dir)._1))
-
-  /** PURGE of the positional index — postings minus the tombstoned docs
-    * rewritten under the next generation path, same 64-way bucket
-    * layout ([[purgeTermIndex]]'s posture; nothing else to correct). */
-  def purgePhraseIndex(s: SparkSession, dir: String): DataFrame = graft.BuildTimer.time {
-    val path = scratch(s, dir, "term_positions_purged")
-    buildGate(s, path) {
-      ensurePhraseIndex(s, dir)
-        .join(broadcast(ensureForgetSet(s, dir)._1), Seq("doc_id"), "left_anti")
-        .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(path)
-    }
-    readCommitted(s, path)
-  }
-
-  /** Batched phrase search from the PURGED positional generation — one
-    * pruned scan, no mask in the plan; shares q_phrase_forget's oracle
-    * VERBATIM. */
-  def phraseMatchPurged(s: SparkSession, dir: String,
-      phrases: Seq[(Long, Seq[String])]): DataFrame =
-    phraseMatchOver(s, purgePhraseIndex(s, dir), phrases)
 
   // --- stored paragraph-block index (span-level admission) -------------
 
@@ -1349,7 +1212,7 @@ object Ingest {
       base.unionByName(delta)))
   }
 
-  /** PURGE — the physical half of deletion ([[purgeTermIndex]]'s
+  /** PURGE — the physical half of deletion ([[DocGen.Purged]]'s
     * posture): the base minus the stored tombstones
     * ([[ensureVecForgetSet]]) rewritten as a new cell-partitioned
     * generation. Centroids and model untouched (deletion never
@@ -1929,23 +1792,6 @@ object Ingest {
     readCommitted(s, path)
   }
 
-  /** [[phraseMatchForgotten]] with a caller-supplied tombstone frame. */
-  def phraseMatchForgottenWith(s: SparkSession, dir: String,
-      dead: DataFrame, phrases: Seq[(Long, Seq[String])]): DataFrame =
-    phraseMatchOver(s, ensurePhraseIndex(s, dir), phrases,
-      dead = Some(dead.select("doc_id")))
-
-  /** [[nearDupForgotten]] with a caller-supplied tombstone frame. */
-  def nearDupForgottenWith(s: SparkSession, dir: String,
-      dead: DataFrame): DataFrame =
-    nearDupOverFeatures(
-      ensureSketchedDocs(s, dir)
-        .join(broadcast(dead.select("doc_id")), Seq("doc_id"), "left_anti")
-        // lazy: materializes inside the first consuming job (for the
-        // composed takedown, inside the concurrent Par phase instead of
-        // serializing a barrier job at construction)
-        .localCheckpoint(eager = false))
-
   /** Fixed q_id offset of the composed-takedown dense queries — must
     * collide with no stored vec_id (corpus, canary twins, append batch),
     * so the serve path's self-exclusion filter never masks anything. */
@@ -2022,9 +1868,12 @@ object Ingest {
     // the final union is nine checkpointed one-row frames, which also
     // keeps the optimizer off the former 2155-operator concatenated
     // plan.
+    // one tombstone value for the three text axes: its distinct id
+    // frame is built once and shared
+    val masked = DocGen.Masked(Tombstones.Supplied(dead))
     val axes: Seq[() => DataFrame] = Seq(
       () => fp("bm25",
-        bm25TopKForgottenWith(s, dir, dead, Seq("table", "scan", "join"), 10),
+        bm25Served(s, dir, masked, Seq("table", "scan", "join"), 10),
         col("doc_id"), round(col("score") * 1e6).cast(LongType)),
       () => fp("cms",
         CorpusStats.cmsEstimateForgottenWith(s, dir, dead),
@@ -2038,14 +1887,14 @@ object Ingest {
         Curation.nbModelRetractedWith(s, dir, dead),
         col("bucket").cast(LongType), col("w_micro")),
       () => fp("phrase",
-        phraseMatchForgottenWith(s, dir, dead, PhraseBatch),
+        phraseMatchServed(s, dir, masked, PhraseBatch),
         col("phrase_id") * lit(1000000L) + col("doc_id"), col("n_hits")),
       () => denseFp("quantized_pq", knnJoinIvfServed(s, dir,
         IvfLayout.pq(s, dir), IvfGen.Masked(deadVec), qs, 10)),
       () => denseFp("quantized_sq", knnJoinIvfServed(s, dir,
         IvfLayout.sq8(s, dir), IvfGen.Masked(deadVec), qs, 10)),
       () => fp("sketch",
-        nearDupForgottenWith(s, dir, dead),
+        nearDupServed(s, dir, masked),
         col("doc1") + col("doc2"),
         round(col("jaccard") * 1e6).cast(LongType)))
     // parallelism = |axes|: the default 8-thread pool queued the ninth
@@ -2450,14 +2299,8 @@ object Ingest {
     // brute-force DuckDB oracle) to q_near_dup_minhash, but the plan
     // reads stored sig/sh_set columns — no tokenization, no sketch
     // expressions (PlanSpec asserts), no text I/O.
-    "q_near_dup_minhash_stored" -> ((s, dir) => {
-      val stored = ensureSketchedDocs(s, dir)
-      Dedup.verifiedOverlapFromFeatures(stored,
-          Dedup.minhashCandidatesFromFeatures(stored))
-        .filter(col("n_common") * 2 >= col("n_union"))
-        .select("doc1", "doc2", "jaccard")
-        .orderBy("doc1", "doc2")
-    }),
+    "q_near_dup_minhash_stored" -> ((s, dir) =>
+      nearDupServed(s, dir, DocGen.Base)),
 
     // sketch-index LSM: near-dup pairs over base ∪ delta served from
     // the TWO stored sketch tables (base never re-sketched, batch
@@ -2465,28 +2308,15 @@ object Ingest {
     // source at jaccard 1.0 — the oracle is the brute-force all-pairs
     // twin over the augmented corpus, so recall through the grown index
     // is pinned BY the hash.
-    "q_near_dup_append" -> ((s, dir) => {
-      val (base, delta) = ensureSketchedDelta(s, dir)
-      val all = base.unionByName(delta)
-      Dedup.verifiedOverlapFromFeatures(all,
-          Dedup.minhashCandidatesFromFeatures(all))
-        .filter(col("n_common") * 2 >= col("n_union"))
-        .select("doc1", "doc2", "jaccard")
-        .orderBy("doc1", "doc2")
-    }),
+    "q_near_dup_append" -> ((s, dir) =>
+      nearDupServed(s, dir, DocGen.Appended)),
 
     // compacted generation serves the same grown corpus from ONE sketch
     // table; shares q_near_dup_append's oracle VERBATIM, so appended ≡
     // compacted ≡ brute force is pinned by the hash (the q_bm25_compact
     // rule).
-    "q_near_dup_compact" -> ((s, dir) => {
-      val gen2 = compactSketchIndex(s, dir)
-      Dedup.verifiedOverlapFromFeatures(gen2,
-          Dedup.minhashCandidatesFromFeatures(gen2))
-        .filter(col("n_common") * 2 >= col("n_union"))
-        .select("doc1", "doc2", "jaccard")
-        .orderBy("doc1", "doc2")
-    }),
+    "q_near_dup_compact" -> ((s, dir) =>
+      nearDupServed(s, dir, DocGen.Compacted)),
 
     // BM25 from the STORED inverted index: identical query, identical
     // oracle (the shared Bm25CtesSql string) as q_bm25_topk — the gate
@@ -2505,7 +2335,7 @@ object Ingest {
     // a reader pinned to gen1 reproduces its results forever (the
     // reproducibility contract a training run depends on).
     "q_bm25_asof" -> ((s, dir) => {
-      compactTermIndex(s, dir) // gen2 committed before the gen1 read
+      termServed(s, dir, DocGen.Compacted) // gen2 committed before the gen1 read
       bm25TopKStored(s, dir, Seq("table", "scan", "join"), 10)
     }),
 
@@ -2514,13 +2344,13 @@ object Ingest {
     // exact copy scores identically to its source. The oracle replays
     // fresh BM25 over the AUGMENTED corpus (same shared CTE block).
     "q_bm25_append" -> ((s, dir) =>
-      bm25TopKAppended(s, dir, Seq("table", "scan", "join"), 10)),
+      bm25Served(s, dir, DocGen.Appended, Seq("table", "scan", "join"), 10)),
 
     // compacted generation serves the same augmented corpus from ONE
     // bucket-pruned scan; shares q_bm25_append's oracle VERBATIM, so
     // appended ≡ compacted ≡ DuckDB is pinned by the hash.
     "q_bm25_compact" -> ((s, dir) =>
-      bm25TopKCompacted(s, dir, Seq("table", "scan", "join"), 10)),
+      bm25Served(s, dir, DocGen.Compacted, Seq("table", "scan", "join"), 10)),
 
     // deletion, logical half: warm BM25 with the tombstoned docs masked
     // at serve time — anti-join on the pruned tf frame + SUBTRACTED
@@ -2528,14 +2358,16 @@ object Ingest {
     // retraction predicate, so the hash pins the mask AND both stat
     // corrections (a stale N shifts every surviving idf).
     "q_bm25_forget" -> ((s, dir) =>
-      bm25TopKForgotten(s, dir, Seq("table", "scan", "join"), 10)),
+      bm25Served(s, dir, DocGen.Masked(Tombstones.Stored),
+        Seq("table", "scan", "join"), 10)),
 
     // deletion, physical half: the purged generation serves the same
     // reduced corpus from one pruned scan with no anti-join left;
     // shares q_bm25_forget's oracle VERBATIM (masked ≡ purged ≡ DuckDB
     // pinned by one hash — the append/compact pairing, on deletion).
     "q_bm25_purge" -> ((s, dir) =>
-      bm25TopKPurged(s, dir, Seq("table", "scan", "join"), 10)),
+      bm25Served(s, dir, DocGen.Purged(Tombstones.Stored),
+        Seq("table", "scan", "join"), 10)),
 
     // the tombstone-fraction PURGE TRIGGER, both arms in one gate: the
     // fixture's dead fraction is 1/13 ≈ 7.7%, so θ=0.5 must keep the
@@ -2547,8 +2379,10 @@ object Ingest {
     // serving paths agree on rows.
     "q_forget_policy" -> ((s, dir) => {
       val terms = Seq("table", "scan", "join")
-      val (lo, loPurged) = bm25TopKPolicyServed(s, dir, terms, 10, theta = 0.5)
-      val (hi, hiPurged) = bm25TopKPolicyServed(s, dir, terms, 10, theta = 0.02)
+      def policy(theta: Double) =
+        bm25PolicyServed(s, dir, Tombstones.Stored, terms, 10, theta)
+      val (lo, loPurged) = policy(0.5)
+      val (hi, hiPurged) = policy(0.02)
       lo.withColumn("arm", lit("mask"))
         .withColumn("purged_serving", lit(loPurged))
         .unionByName(hi.withColumn("arm", lit("purge"))
@@ -2561,7 +2395,8 @@ object Ingest {
     // index with retracted docs masked — pairs touching a retracted doc
     // vanish, survivor pairs untouched (brute-force oracle over the
     // filtered corpus pins both directions).
-    "q_near_dup_forget" -> ((s, dir) => nearDupForgotten(s, dir)),
+    "q_near_dup_forget" -> ((s, dir) =>
+      nearDupServed(s, dir, DocGen.Masked(Tombstones.Stored))),
 
     // ONE takedown request propagated through EVERY serving axis at
     // once (bm25, phrase, dense, quantized ×2, sketch, stats) — the
@@ -2572,7 +2407,8 @@ object Ingest {
     // physical purge on the dedup axis: the rewritten sketch generation
     // serves the same reduced pair set from one scan with no mask left;
     // shares q_near_dup_forget's oracle VERBATIM.
-    "q_near_dup_purge" -> ((s, dir) => nearDupPurged(s, dir)),
+    "q_near_dup_purge" -> ((s, dir) =>
+      nearDupServed(s, dir, DocGen.Purged(Tombstones.Stored))),
 
     // span-level ADMISSION against the stored block index: 50 probes,
     // each = the first 10 tokens of a stored doc (its stored block 0 —
@@ -2618,10 +2454,10 @@ object Ingest {
     // correct) and the purged generation sharing the same
     // reduced-corpus oracle verbatim.
     "q_phrase_forget" -> ((s, dir) =>
-      phraseMatchForgotten(s, dir, PhraseBatch)
+      phraseMatchServed(s, dir, DocGen.Masked(Tombstones.Stored), PhraseBatch)
         .orderBy("phrase_id", "doc_id")),
     "q_phrase_purge" -> ((s, dir) =>
-      phraseMatchPurged(s, dir, PhraseBatch)
+      phraseMatchServed(s, dir, DocGen.Purged(Tombstones.Stored), PhraseBatch)
         .orderBy("phrase_id", "doc_id")),
 
     // BATCHED retrieval evaluation (ADVICE r9 #5): mean nDCG@10 over 8

@@ -388,7 +388,7 @@ object Multimodal {
 
   /** LSM DELTA on the multimodal axis — the arriving batch hashed with
     * the same ingest kernel and landed as its own generation next to
-    * the base (the ensureTermIndexDelta posture): each `% 101`-th image
+    * the base (the text index's DocGen.Appended posture): each `% 101`-th image
     * re-arrives as a cross-container re-encode (PNG source → BMP copy
     * and vice versa — every byte differs, the decoded pixels do not),
     * which is exactly the arriving-duplicate shape a 100 TB media

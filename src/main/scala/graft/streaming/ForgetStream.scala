@@ -14,10 +14,11 @@ import org.apache.spark.sql.types.StructType
   * store, no distinct, just one idempotent `batch=<id>` overwrite per
   * trigger (foreachBatch is at-least-once; the CrawlStream sink rule).
   * Every serve AFTER a trigger masks the grown set:
-  * `Ingest.bm25TopKForgottenWith` (and the `dead` hook of the kNN
-  * scaffold) take the accumulated directory as their tombstone frame,
-  * deriving the negative stats from the ids at serve time — bounded by
-  * the retraction size, never a corpus re-scan. */
+  * `Ingest.bm25Served` over `DocGen.Masked(Tombstones.Supplied(…))`
+  * (and the `IvfGen.Masked` generation of the kNN serves) take the
+  * accumulated directory as their tombstone frame, deriving the
+  * negative stats from the ids at serve time — bounded by the
+  * retraction size, never a corpus re-scan. */
 object ForgetStream {
 
   /** `compactAtBatches` (VERDICT r14 #8, the last manual step in the

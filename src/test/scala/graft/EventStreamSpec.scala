@@ -398,15 +398,17 @@ class EventStreamSpec extends SparkSpecBase {
     val dead = spark.read.parquet(s"$dir/tomb").select("doc_id")
     assert(dead.collect().map(_.getLong(0)).toSet == Set(top(0), top(1)),
       "both retraction batches must have accumulated in the tombstone dir")
-    val served = graft.operators.Ingest.bm25TopKForgottenWith(
-        spark, TestSpark.Sf0001, dead, terms, 10)
+    import graft.operators.Ingest.{DocGen, Tombstones}
+    val served = graft.operators.Ingest.bm25Served(spark, TestSpark.Sf0001,
+        DocGen.Masked(Tombstones.Supplied(dead)), terms, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(served.nonEmpty &&
       !served.exists(r => r._1 == top(0) || r._1 == top(1)),
       "a streamed-retracted doc surfaced from the masked serve")
     // streamed-accumulated tombstones ≡ the same ids passed as a batch
-    val batchMask = graft.operators.Ingest.bm25TopKForgottenWith(
-        spark, TestSpark.Sf0001, Seq(top(0), top(1)).toDF("doc_id"), terms, 10)
+    val batchMask = graft.operators.Ingest.bm25Served(spark, TestSpark.Sf0001,
+        DocGen.Masked(Tombstones.Supplied(Seq(top(0), top(1)).toDF("doc_id"))),
+        terms, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(served == batchMask,
       "streamed tombstone accumulation must serve exactly like a batch mask")
@@ -417,10 +419,10 @@ class EventStreamSpec extends SparkSpecBase {
     // generation rewrite above θ, (c) serve identical rows either way
     val frac = dead.distinct().count().toDouble /
       graft.queries.Tables.documents(spark, TestSpark.Sf0001).count()
-    val (maskDf, maskPurged) = graft.operators.Ingest.bm25TopKPolicyServedWith(
-      spark, TestSpark.Sf0001, dead, terms, 10, theta = frac * 10)
-    val (purgeDf, purgePurged) = graft.operators.Ingest.bm25TopKPolicyServedWith(
-      spark, TestSpark.Sf0001, dead, terms, 10, theta = frac / 2)
+    val (maskDf, maskPurged) = graft.operators.Ingest.bm25PolicyServed(spark,
+      TestSpark.Sf0001, Tombstones.Supplied(dead), terms, 10, theta = frac * 10)
+    val (purgeDf, purgePurged) = graft.operators.Ingest.bm25PolicyServed(spark,
+      TestSpark.Sf0001, Tombstones.Supplied(dead), terms, 10, theta = frac / 2)
     assert(!maskPurged, "dead fraction below θ must keep serving masked")
     assert(purgePurged, "dead fraction above θ must trip the purge")
     def rows(df: org.apache.spark.sql.DataFrame) =

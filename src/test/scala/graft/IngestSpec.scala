@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions.col
 
 import graft.operators.Ingest
+import graft.operators.Ingest.{DocGen, Tombstones}
 
 /** LSM lifecycle of the stored inverted index (append → serve base∪delta
   * → compact → serve gen2), pinned by the exact-copy canary argument:
@@ -20,7 +21,7 @@ class IngestSpec extends SparkSpecBase {
   private val AllK = 100000
 
   test("appended exact copies score EXACTLY their source's score") {
-    val all = Ingest.bm25TopKAppended(spark, TestSpark.Sf0001, Terms, AllK)
+    val all = Ingest.bm25Served(spark, TestSpark.Sf0001, DocGen.Appended, Terms, AllK)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val copies = all.keys.filter(_ >= Ingest.DocAppendOffset).toSeq
     assert(copies.nonEmpty,
@@ -35,9 +36,9 @@ class IngestSpec extends SparkSpecBase {
   }
 
   test("compacted generation serves base∪delta results row-for-row") {
-    val a = Ingest.bm25TopKAppended(spark, TestSpark.Sf0001, Terms, AllK)
+    val a = Ingest.bm25Served(spark, TestSpark.Sf0001, DocGen.Appended, Terms, AllK)
       .collect().map(_.toSeq).toSeq
-    val c = Ingest.bm25TopKCompacted(spark, TestSpark.Sf0001, Terms, AllK)
+    val c = Ingest.bm25Served(spark, TestSpark.Sf0001, DocGen.Compacted, Terms, AllK)
       .collect().map(_.toSeq).toSeq
     assert(a.nonEmpty && a == c,
       "gen2 must be a pure layout rewrite: same rows, same total order")
@@ -70,23 +71,27 @@ class IngestSpec extends SparkSpecBase {
   }
 
   test("delta stats carry exactly the append batch; merged stats grow") {
-    val (_, stats, _, dStats) = Ingest.ensureTermIndexDelta(spark, TestSpark.Sf0001)
-    val base = stats.collect()(0)
-    val delta = dStats.collect()(0)
+    val Seq(base, merged) = Seq(DocGen.Base, DocGen.Appended).map(g =>
+      Ingest.termServed(spark, TestSpark.Sf0001, g).stats.collect()(0))
+    // the delta's own (n_docs, Σdl): merged minus base
+    val (dN, dDl) =
+      (merged.getLong(0) - base.getLong(0), merged.getLong(1) - base.getLong(1))
     // sf0.001: doc_ids 0..499, so the % 101 batch is {0,101,202,303,404}
-    assert(delta.getLong(0) == 5L, s"append batch size: $delta")
-    assert(delta.getLong(1) > 0L, "delta Σdl must be positive")
+    assert(dN == 5L, s"append batch size: $dN")
+    assert(dDl > 0L, "delta Σdl must be positive")
     assert(base.getLong(0) == 500L, s"base corpus size: $base")
   }
 
   test("forget: no tombstoned doc ranks; masked ≡ purged over the FULL list") {
     val dead = (0L until 500L).filter(_ % Ingest.ForgetMod == Ingest.ForgetRem).toSet
     assert(dead.nonEmpty)
-    val masked = Ingest.bm25TopKForgotten(spark, TestSpark.Sf0001, Terms, AllK)
+    val masked = Ingest.bm25Served(spark, TestSpark.Sf0001,
+        DocGen.Masked(Tombstones.Stored), Terms, AllK)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
     assert(masked.nonEmpty && masked.forall(p => !dead.contains(p._1)),
       "a retracted doc surfaced from the masked serve path")
-    val purged = Ingest.bm25TopKPurged(spark, TestSpark.Sf0001, Terms, AllK)
+    val purged = Ingest.bm25Served(spark, TestSpark.Sf0001,
+        DocGen.Purged(Tombstones.Stored), Terms, AllK)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
     assert(masked == purged,
       "purge must be a pure physical rewrite of the masked view: " +
@@ -100,7 +105,9 @@ class IngestSpec extends SparkSpecBase {
   }
 
   test("forget: purged generation holds zero tombstoned rows, corrected stats") {
-    val (purged, statsP) = Ingest.purgeTermIndex(spark, TestSpark.Sf0001)
+    val gen = Ingest.termServed(spark, TestSpark.Sf0001,
+      DocGen.Purged(Tombstones.Stored))
+    val (purged, statsP) = (gen.sides.head, gen.stats)
     assert(purged.filter(col("doc_id") % Ingest.ForgetMod === Ingest.ForgetRem)
       .count() == 0, "tombstoned postings survived the purge rewrite")
     val (_, negStats) = Ingest.ensureForgetSet(spark, TestSpark.Sf0001)
@@ -116,12 +123,15 @@ class IngestSpec extends SparkSpecBase {
   }
 
   test("forget: sketch purge holds zero tombstoned rows; masked ≡ purged pairs") {
-    val purged = Ingest.purgeSketchIndex(spark, TestSpark.Sf0001)
+    val purged = Ingest.sketchServed(spark, TestSpark.Sf0001,
+      DocGen.Purged(Tombstones.Stored))
     assert(purged.filter(col("doc_id") % Ingest.ForgetMod === Ingest.ForgetRem)
       .count() == 0, "tombstoned sketches survived the purge rewrite")
-    val masked = Ingest.nearDupForgotten(spark, TestSpark.Sf0001)
+    val masked = Ingest.nearDupServed(spark, TestSpark.Sf0001,
+        DocGen.Masked(Tombstones.Stored))
       .collect().map(_.toSeq).toSeq
-    val fromPurged = Ingest.nearDupPurged(spark, TestSpark.Sf0001)
+    val fromPurged = Ingest.nearDupServed(spark, TestSpark.Sf0001,
+        DocGen.Purged(Tombstones.Stored))
       .collect().map(_.toSeq).toSeq
     assert(masked.nonEmpty && masked == fromPurged,
       "sketch purge must be a pure physical rewrite of the masked view")

@@ -1,18 +1,37 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 import graft.operators.Ingest
+import graft.operators.Ingest.{DocGen, Tombstones}
 import graft.queries.Tables
 
 /** Physical-plan quality gates — the ".explain and iterate" discipline
   * encoded as assertions, so a regression that silently de-optimizes a
   * plan (lost pushdown, lost broadcast, global sort for a top-k) fails
   * the build, not the 100 TB run. */
-class PlanSpec extends SparkSpecBase {
+class PlanSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
 
-  private def plan(df: org.apache.spark.sql.DataFrame): String =
+  private def plan(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
+
+  /** Leaf directory name of every file scan in `df`'s executed plan,
+    * subqueries and broadcast sides included. Stored-artifact names are
+    * matched here, not in the explain string: that string cuts a scan's
+    * location off after `spark.sql.maxMetadataStringLength` characters,
+    * so under a deeper checkout path the name falls past the cut — and a
+    * negated check then passes vacuously. */
+  private def scannedDirs(df: DataFrame): Seq[String] =
+    collectWithSubqueries(df.queryExecution.executedPlan) {
+      case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.getName)
+    }.flatten
+
+  /** Does `df` scan an artifact whose directory starts with `prefix`? */
+  private def reads(df: DataFrame, prefix: String): Boolean =
+    scannedDirs(df).exists(_.startsWith(prefix))
 
   test("projection reaches the parquet scan (ReadSchema pruned)") {
     val p = plan(SparkEntry.queries("q_scan_project")(spark, TestSpark.Sf0001))
@@ -90,42 +109,39 @@ class PlanSpec extends SparkSpecBase {
 
   test("stored-sketch heavy hitters serve from the CMS artifacts alone") {
     graft.operators.CorpusStats.ensureCmsArtifacts(spark, TestSpark.Sf0001)
-    val p = plan(graft.operators.CorpusStats.cmsEstimateStored(
-      spark, TestSpark.Sf0001))
+    val df = graft.operators.CorpusStats.cmsEstimateStored(
+      spark, TestSpark.Sf0001)
+    val p = plan(df)
     // warm path = the two stored D×W sketches cell-merged: no corpus
     // scan, no tokenizer, and the merge side rides a broadcast join
     assert(!p.contains("documents.parquet"),
       s"warm path must not scan the corpus:\n$p")
     assert(!p.contains("text#") && !p.contains("regexp_replace"),
       s"warm path must not re-tokenize:\n$p")
-    assert(p.contains("cms_base__") && p.contains("cms_delta__"),
+    assert(reads(df, "cms_base__") && reads(df, "cms_delta__"),
       s"serving must read BOTH stored sketch generations:\n$p")
     assert(p.contains("BroadcastHashJoin"),
       s"the D×W merge must broadcast into the probe cells:\n$p")
   }
 
   test("sketch-index append serves base ∪ delta without re-sketching or text") {
-    graft.operators.Ingest.ensureSketchedDelta(spark, TestSpark.Sf0001)
-    val (base, delta) = graft.operators.Ingest.ensureSketchedDelta(spark, TestSpark.Sf0001)
-    val all = base.unionByName(delta)
-    val p = plan(graft.operators.Dedup.verifiedOverlapFromFeatures(all,
-      graft.operators.Dedup.minhashCandidatesFromFeatures(all)))
+    val df = Ingest.nearDupServed(spark, TestSpark.Sf0001, DocGen.Appended)
+    val p = plan(df)
     assert(!p.toLowerCase.contains("minhashshingle"),
       s"warm grown-index path must not re-sketch:\n$p")
     assert(!p.contains("text#") && !p.contains("documents.parquet"),
       s"warm path must stay on the stored sketches:\n$p")
-    assert(p.contains("docs_sketched__") && p.contains("docs_sketched_delta__"),
+    assert(reads(df, "docs_sketched__") && reads(df, "docs_sketched_delta__"),
       s"serving must read BOTH sketch generations:\n$p")
   }
 
   test("compacted sketch index serves from gen2 alone, still no re-sketch") {
-    val gen2 = graft.operators.Ingest.compactSketchIndex(spark, TestSpark.Sf0001)
-    val p = plan(graft.operators.Dedup.verifiedOverlapFromFeatures(gen2,
-      graft.operators.Dedup.minhashCandidatesFromFeatures(gen2)))
+    val df = Ingest.nearDupServed(spark, TestSpark.Sf0001, DocGen.Compacted)
+    val p = plan(df)
     assert(!p.toLowerCase.contains("minhashshingle") && !p.contains("text#"),
       s"compacted path must not re-sketch or read text:\n$p")
-    assert(p.contains("docs_sketched_gen2__"), s"must read gen2:\n$p")
-    assert(!p.contains("docs_sketched__") && !p.contains("docs_sketched_delta__"),
+    assert(reads(df, "docs_sketched_gen2__"), s"must read gen2:\n$p")
+    assert(!reads(df, "docs_sketched__") && !reads(df, "docs_sketched_delta__"),
       s"compaction must collapse serving onto gen2 only:\n$p")
   }
 
@@ -147,24 +163,24 @@ class PlanSpec extends SparkSpecBase {
   }
 
   test("forgotten BM25: pruned postings + broadcast anti-join, no corpus scan") {
-    graft.operators.Ingest.ensureForgetSet(spark, TestSpark.Sf0001)
-    val p = plan(graft.operators.Ingest.bm25TopKForgotten(
-      spark, TestSpark.Sf0001, Seq("table", "scan", "join"), 10))
+    val df = Ingest.bm25Served(spark, TestSpark.Sf0001,
+      DocGen.Masked(Tombstones.Stored), Seq("table", "scan", "join"), 10)
+    val p = plan(df)
     assert(!p.contains("documents.parquet") && !p.contains("text#"),
       s"serve-time mask must not rescan the corpus:\n$p")
     assert(bucketInListPruned(p),
       s"tombstones must not defeat the static bucket prune:\n$p")
-    assert(p.contains("LeftAnti") && p.contains("forget_ids"),
+    assert(p.contains("LeftAnti") && reads(df, "forget_ids"),
       s"the mask is a broadcast anti-join on the tombstone artifact:\n$p")
   }
 
   test("purged BM25 serves from the purged generation alone — no anti-join left") {
-    graft.operators.Ingest.purgeTermIndex(spark, TestSpark.Sf0001)
-    val p = plan(graft.operators.Ingest.bm25TopKPurged(
-      spark, TestSpark.Sf0001, Seq("table", "scan", "join"), 10))
-    assert(p.contains("term_postings_purged"),
+    val df = Ingest.bm25Served(spark, TestSpark.Sf0001,
+      DocGen.Purged(Tombstones.Stored), Seq("table", "scan", "join"), 10)
+    val p = plan(df)
+    assert(reads(df, "term_postings_purged"),
       s"must read the purged generation:\n$p")
-    assert(!p.contains("LeftAnti") && !p.contains("forget_ids"),
+    assert(!p.contains("LeftAnti") && !reads(df, "forget_ids"),
       s"physical purge must leave no serve-time mask:\n$p")
     assert(bucketInListPruned(p),
       s"purged generation keeps the static bucket prune:\n$p")
@@ -177,44 +193,41 @@ class PlanSpec extends SparkSpecBase {
       (l.contains("bucket#") || l.contains("bucket:")) &&
       (l.contains(" IN (") || l.contains(" INSET ")))
 
-  /** Every postings FileScan line in the plan, asserted bucket-pruned;
-    * returns the lines so callers can pin WHICH index directories the
-    * plan touches (the node count is an implementation detail — bm25Rank
-    * derives df from the tf frame, so each postings source plans twice,
-    * the second time column-pruned to `term` only). */
-  private def prunedPostingsScans(p: String): Seq[String] = {
+  /** Every bucket-partitioned scan in the plan carries the static bucket
+    * IN-list (bm25Rank derives df from the tf frame, so each postings
+    * source plans twice, the second time column-pruned to `term`). */
+  private def assertPostingsPruned(p: String): Unit = {
     val pf = p.linesIterator.filter(l => l.contains("PartitionFilters:") &&
       (l.contains("bucket#") || l.contains("bucket:"))).toSeq
     assert(pf.nonEmpty, s"expected bucket-partitioned postings scans:\n$p")
     assert(pf.forall(l => l.contains(" IN (") || l.contains(" INSET ")),
       s"EVERY postings scan must carry the static bucket IN-list:\n$p")
-    pf
   }
 
   test("appended BM25 prunes base AND delta buckets; touches no other generation") {
-    graft.operators.Ingest.ensureTermIndexDelta(spark, TestSpark.Sf0001)
-    val p = plan(graft.operators.Ingest.bm25TopKAppended(
-      spark, TestSpark.Sf0001, Seq("table", "scan", "join"), 10))
+    val df = Ingest.bm25Served(spark, TestSpark.Sf0001, DocGen.Appended,
+      Seq("table", "scan", "join"), 10)
+    val p = plan(df)
     assert(!p.contains("documents.parquet") && !p.contains("text#"),
       s"warm append path must stay on the postings:\n$p")
-    val pf = prunedPostingsScans(p)
+    assertPostingsPruned(p)
     // scratch paths: base = term_postings__<sf>, delta = term_postings_delta__
-    assert(pf.exists(_.contains("term_postings__")) &&
-      pf.exists(_.contains("term_postings_delta__")),
+    assert(reads(df, "term_postings__") && reads(df, "term_postings_delta__"),
       s"serving must read BOTH generations:\n$p")
-    assert(!p.contains("term_postings_gen2__"),
+    assert(!reads(df, "term_postings_gen2__"),
       s"append serving must not depend on compaction:\n$p")
     assert(p.contains("TakeOrderedAndProject"), s"top-k must not global-sort:\n$p")
   }
 
   test("compacted BM25 serves from the gen2 directories alone, pruned") {
-    graft.operators.Ingest.compactTermIndex(spark, TestSpark.Sf0001)
-    val p = plan(graft.operators.Ingest.bm25TopKCompacted(
-      spark, TestSpark.Sf0001, Seq("table", "scan", "join"), 10))
+    val df = Ingest.bm25Served(spark, TestSpark.Sf0001, DocGen.Compacted,
+      Seq("table", "scan", "join"), 10)
+    val p = plan(df)
     assert(!p.contains("documents.parquet") && !p.contains("text#"),
       s"warm compacted path must stay on the postings:\n$p")
-    val pf = prunedPostingsScans(p)
-    assert(pf.forall(_.contains("term_postings_gen2__")),
+    assertPostingsPruned(p)
+    val postings = scannedDirs(df).filter(_.startsWith("term_postings"))
+    assert(postings.nonEmpty && postings.forall(_.startsWith("term_postings_gen2__")),
       s"compaction must collapse serving onto gen2 only:\n$p")
   }
 
@@ -283,29 +296,33 @@ class PlanSpec extends SparkSpecBase {
   }
 
   test("purged near-dup serves from the purged sketch generation, no mask left") {
-    val purged = graft.operators.Ingest.purgeSketchIndex(spark, TestSpark.Sf0001)
-    val p = plan(graft.operators.Ingest.nearDupPurged(spark, TestSpark.Sf0001))
-    assert(p.contains("docs_sketched_purged"),
+    val df = Ingest.nearDupServed(spark, TestSpark.Sf0001,
+      DocGen.Purged(Tombstones.Stored))
+    val p = plan(df)
+    assert(reads(df, "docs_sketched_purged"),
       s"must read the purged generation:\n$p")
-    assert(!p.contains("LeftAnti") && !p.contains("forget_ids"),
+    assert(!p.contains("LeftAnti") && !reads(df, "forget_ids"),
       s"physical purge must leave no serve-time mask:\n$p")
     assert(!p.toLowerCase.contains("minhashshingle") && !p.contains("text#"),
       s"purged path must not re-sketch or read text:\n$p")
   }
 
   test("stats-axis deletion: forgotten serve subtracts stored cells; purged serve reads gen2 alone") {
-    val fp = plan(graft.operators.CorpusStats.cmsEstimateForgotten(spark, TestSpark.Sf0001))
-    assert(fp.contains("cms_base") && fp.contains("cms_retract"),
+    val fdf = graft.operators.CorpusStats.cmsEstimateForgotten(spark, TestSpark.Sf0001)
+    val fp = plan(fdf)
+    assert(reads(fdf, "cms_base") && reads(fdf, "cms_retract"),
       s"forgotten serve must read base + retraction sketches (and nothing wider):\n$fp")
     assert(!fp.contains("text#"),
       s"stats deletion must never re-tokenize the corpus at serve time:\n$fp")
     graft.operators.CorpusStats.ensureCmsPurged(spark, TestSpark.Sf0001)
-    val pp = plan(graft.operators.CorpusStats.cmsEstimatePurged(spark, TestSpark.Sf0001))
-    assert(pp.contains("cms_gen2") && !pp.contains("cms_base") && !pp.contains("cms_retract"),
+    val pdf = graft.operators.CorpusStats.cmsEstimatePurged(spark, TestSpark.Sf0001)
+    val pp = plan(pdf)
+    assert(reads(pdf, "cms_gen2") && !reads(pdf, "cms_base") && !reads(pdf, "cms_retract"),
       s"purged serve must read the rewritten generation only:\n$pp")
     graft.operators.CorpusStats.ensureHistPurged(spark, TestSpark.Sf0001)
-    val qp = plan(graft.operators.CorpusStats.histQuantilesPurged(spark, TestSpark.Sf0001))
-    assert(qp.contains("hist_gen2") && !qp.contains("hist_base") && !qp.contains("hist_retract"),
+    val qdf = graft.operators.CorpusStats.histQuantilesPurged(spark, TestSpark.Sf0001)
+    val qp = plan(qdf)
+    assert(reads(qdf, "hist_gen2") && !reads(qdf, "hist_base") && !reads(qdf, "hist_retract"),
       s"purged quantile serve must read the rewritten generation only:\n$qp")
   }
 
@@ -315,11 +332,12 @@ class PlanSpec extends SparkSpecBase {
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     val forgotten = Ingest.IvfGen.Masked(
       Ingest.ensureVecForgetSet(spark, TestSpark.Sf0001))
-    val p = plan(Ingest.knnJoinIvfServed(spark, TestSpark.Sf0001,
-      Ingest.IvfLayout.Flat, forgotten, qs, 5))
+    val df = Ingest.knnJoinIvfServed(spark, TestSpark.Sf0001,
+      Ingest.IvfLayout.Flat, forgotten, qs, 5)
+    val p = plan(df)
     assert(p.contains("dynamicpruning"),
       s"the mask must sit ABOVE the DPP cell join, not between scan and probe:\n$p")
-    assert(p.contains("LeftAnti") && p.contains("vec_forget_ids"),
+    assert(p.contains("LeftAnti") && reads(df, "vec_forget_ids"),
       s"the mask is a broadcast anti-join on the stored tombstones:\n$p")
   }
 
@@ -335,7 +353,7 @@ class PlanSpec extends SparkSpecBase {
       val p = plan(df)
       assert(p.contains("dynamicpruning"),
         s"the mask must sit ABOVE the DPP cell join on the code scan:\n$p")
-      assert(p.contains("LeftAnti") && p.contains("vec_forget_ids"),
+      assert(p.contains("LeftAnti") && reads(df, "vec_forget_ids"),
         s"the mask is a broadcast anti-join on the stored tombstones:\n$p")
     }
   }
@@ -349,35 +367,38 @@ class PlanSpec extends SparkSpecBase {
       "ivfpq_codes_purged" -> Ingest.IvfLayout.pq(spark, TestSpark.Sf0001),
       "ivfsq_codes_purged" -> Ingest.IvfLayout.sq8(spark, TestSpark.Sf0001))
     for ((_, l) <- layouts) Ingest.ivfPurged(spark, TestSpark.Sf0001, l)
-    val plans = layouts.map { case (gen, l) =>
-      gen -> plan(Ingest.knnJoinIvfServed(spark, TestSpark.Sf0001, l,
-        Ingest.IvfGen.Purged, qs, 5))
+    val served = layouts.map { case (gen, l) =>
+      gen -> Ingest.knnJoinIvfServed(spark, TestSpark.Sf0001, l,
+        Ingest.IvfGen.Purged, qs, 5)
     }
-    for ((gen, p) <- plans) {
-      assert(p.contains(gen), s"must read the purged generation $gen:\n$p")
+    for ((gen, df) <- served) {
+      val p = plan(df)
+      assert(reads(df, gen), s"must read the purged generation $gen:\n$p")
       assert(p.contains("dynamicpruning"),
         s"the purged generation is still cell-partitioned — DPP must hold:\n$p")
-      assert(!p.contains("LeftAnti") && !p.contains("forget_ids"),
+      assert(!p.contains("LeftAnti") &&
+        !scannedDirs(df).exists(_.contains("forget_ids")),
         s"physical purge must leave no serve-time mask:\n$p")
     }
   }
 
   test("phrase forget keeps the bucket prune + mask; phrase purge leaves no mask") {
-    val phrases = graft.operators.Ingest.PhraseBatch
-    val pF = plan(graft.operators.Ingest.phraseMatchForgotten(
-      spark, TestSpark.Sf0001, phrases))
+    val phrases = Ingest.PhraseBatch
+    val forgotten = Ingest.phraseMatchServed(spark, TestSpark.Sf0001,
+      DocGen.Masked(Tombstones.Stored), phrases)
+    val pF = plan(forgotten)
     assert(bucketInListPruned(pF),
       s"the mask must not defeat the static bucket IN-list prune:\n$pF")
-    assert(pF.contains("LeftAnti") && pF.contains("forget_ids"),
+    assert(pF.contains("LeftAnti") && reads(forgotten, "forget_ids"),
       s"masked phrase serve anti-joins the stored tombstones:\n$pF")
     assert(!pF.contains("text#"), s"no corpus scan on the warm path:\n$pF")
-    graft.operators.Ingest.purgePhraseIndex(spark, TestSpark.Sf0001)
-    val pP = plan(graft.operators.Ingest.phraseMatchPurged(
-      spark, TestSpark.Sf0001, phrases))
-    assert(pP.contains("term_positions_purged"),
+    val purged = Ingest.phraseMatchServed(spark, TestSpark.Sf0001,
+      DocGen.Purged(Tombstones.Stored), phrases)
+    val pP = plan(purged)
+    assert(reads(purged, "term_positions_purged"),
       s"must read the purged generation:\n$pP")
     assert(bucketInListPruned(pP), s"bucket prune must hold:\n$pP")
-    assert(!pP.contains("LeftAnti") && !pP.contains("forget_ids"),
+    assert(!pP.contains("LeftAnti") && !reads(purged, "forget_ids"),
       s"physical purge must leave no serve-time mask:\n$pP")
   }
 
@@ -736,18 +757,21 @@ class PlanSpec extends SparkSpecBase {
 
   test("stored multimodal hash index: serving decodes nothing; purge leaves no mask") {
     graft.operators.Multimodal.ensureMediaHashIndex(spark, TestSpark.Sf0001)
-    val p = plan(SparkEntry.queries("q_image_dedup_stored")(spark, TestSpark.Sf0001))
-    assert(p.contains("media_phash_v1"),
+    val df = SparkEntry.queries("q_image_dedup_stored")(spark, TestSpark.Sf0001)
+    val p = plan(df)
+    assert(reads(df, "media_phash_v1"),
       s"stored dedup must read the hash index generation:\n$p".take(4000))
     assert(!p.contains("MapPartitions") && !p.contains("media_"
       + "payload") && !p.contains("payload#"),
       s"no decode, no payload bytes at serve time:\n$p".take(4000))
-    val fp = plan(SparkEntry.queries("q_multimodal_forget")(spark, TestSpark.Sf0001))
-    assert(fp.contains("LeftAnti") && fp.contains("media_forget"),
+    val fdf = SparkEntry.queries("q_multimodal_forget")(spark, TestSpark.Sf0001)
+    val fp = plan(fdf)
+    assert(fp.contains("LeftAnti") && reads(fdf, "media_forget"),
       s"the takedown mask is a broadcast anti-join on the stored set:\n$fp".take(4000))
     graft.operators.Multimodal.purgeMediaHashIndex(spark, TestSpark.Sf0001)
-    val pp = plan(SparkEntry.queries("q_multimodal_purge")(spark, TestSpark.Sf0001))
-    assert(pp.contains("media_phash_gen2") && !pp.contains("media_phash_v1"),
+    val pdf = SparkEntry.queries("q_multimodal_purge")(spark, TestSpark.Sf0001)
+    val pp = plan(pdf)
+    assert(reads(pdf, "media_phash_gen2") && !reads(pdf, "media_phash_v1"),
       s"purged serve must read the rewritten generation only:\n$pp".take(4000))
     assert(!pp.contains("LeftAnti"),
       s"physical purge must leave no serve-time mask:\n$pp".take(4000))
@@ -761,17 +785,18 @@ class PlanSpec extends SparkSpecBase {
     // a localCheckpoint, so the pin reads the pre-checkpoint input.)
     graft.operators.Multimodal.ensureMediaHashIndex(spark, TestSpark.Sf0001)
     graft.operators.Multimodal.ensureMediaHashDelta(spark, TestSpark.Sf0001)
-    val pv = plan(graft.operators.Multimodal.videoRows(
+    val vdf = graft.operators.Multimodal.videoRows(
       graft.operators.Multimodal.ensureMediaHashIndex(spark, TestSpark.Sf0001)
         .unionByName(graft.operators.Multimodal.ensureMediaHashDelta(
-          spark, TestSpark.Sf0001))))
-    assert(pv.contains("media_phash_v1") && pv.contains("media_phash_delta"),
+          spark, TestSpark.Sf0001)))
+    val pv = plan(vdf)
+    assert(reads(vdf, "media_phash_v1") && reads(vdf, "media_phash_delta"),
       s"video append serve must read base AND delta generations:\n$pv".take(4000))
     assert(!pv.contains("MapPartitions") && !pv.contains("payload#"),
       s"no decode, no payload bytes on the video append serve:\n$pv".take(4000))
-    val pa = plan(SparkEntry.queries("q_audio_dedup_append")(
-      spark, TestSpark.Sf0001))
-    assert(pa.contains("media_phash_v1") && pa.contains("media_phash_delta"),
+    val adf = SparkEntry.queries("q_audio_dedup_append")(spark, TestSpark.Sf0001)
+    val pa = plan(adf)
+    assert(reads(adf, "media_phash_v1") && reads(adf, "media_phash_delta"),
       s"audio append serve must read base AND delta generations:\n$pa".take(4000))
     assert(!pa.contains("MapPartitions") && !pa.contains("payload#"),
       s"no decode, no payload bytes on the audio append serve:\n$pa".take(4000))
@@ -788,16 +813,17 @@ class PlanSpec extends SparkSpecBase {
     assert("FileScan parquet".r.findAllIn(p).size == 1,
       s"one corpus scan only — the model rides as a collected literal:\n$p".take(4000))
     // and the freeze itself reads the stored artifact, not the corpus
-    val fp = plan(graft.operators.Curation.ensureNbModel(
-      spark, TestSpark.Sf0001)._1)
-    assert(fp.contains("nb_model_v1") && !fp.contains("documents.parquet"),
+    val model = graft.operators.Curation.ensureNbModel(spark, TestSpark.Sf0001)._1
+    val fp = plan(model)
+    assert(reads(model, "nb_model_v1") && !fp.contains("documents.parquet"),
       s"the frozen model must come from the marker-committed artifact:\n$fp".take(4000))
   }
 
   test("index-backed MMR: the candidate pool scans the stored assignment, not raw embeddings") {
-    val p = plan(graft.operators.Ingest.mmrStoredPool(
-      spark, TestSpark.Sf0001, graft.operators.Similarity.MmrPoolN))
-    assert(p.contains("ivf_assign"),
+    val df = graft.operators.Ingest.mmrStoredPool(
+      spark, TestSpark.Sf0001, graft.operators.Similarity.MmrPoolN)
+    val p = plan(df)
+    assert(reads(df, "ivf_assign"),
       s"diversified serving must read the stored cell-partitioned index:\n$p".take(4000))
     assert(p.contains("TakeOrderedAndProject"),
       s"pool selection must be a bounded top-n, not a global sort:\n$p".take(4000))

@@ -28,14 +28,14 @@ class TakedownSpec extends SparkSpecBase {
     * declared module MUST be mapped here (and its axis declared +
     * composed), or the reflection test below names it. Methods serving
     * the same stored surface share an axis (the media modalities; the
-    * trained-artifact family on 'model'). The dense and quantized axes
-    * have no per-family entry point: they serve through
+    * trained-artifact family on 'model'). The bm25, phrase and sketch
+    * axes have no per-family entry point: they serve through their
+    * family accessor (`Ingest.bm25Served`, `phraseMatchServed`,
+    * `nearDupServed`) with a `DocGen.Masked(Tombstones.Supplied(…))`
+    * generation, as the dense and quantized axes serve through
     * `Ingest.knnJoinIvfServed` with an `IvfGen.Masked` generation. */
   private val MethodAxis: Map[String, String] = Map(
-    "bm25TopKForgottenWith" -> "bm25",
     "cmsEstimateForgottenWith" -> "cms",
-    "phraseMatchForgottenWith" -> "phrase",
-    "nearDupForgottenWith" -> "sketch",
     "imageDedupForgottenWith" -> "media",
     "videoDedupForgottenWith" -> "media",
     "audioDedupForgottenWith" -> "media",
