@@ -240,11 +240,9 @@ object Profile {
       case "takedown_phases" =>
         import org.apache.spark.sql.functions._
         import graft.operators.Ingest
-        val dead = graft.operators.Ingest.ensureForgetSet(spark, sfDir)._1
-          .select("doc_id").distinct().localCheckpoint()
-        val deadVec = dead.select(col("doc_id").as("vec_id"))
-        val deadDoc = dead
-        val masked = Ingest.DocGen.Masked(Ingest.Tombstones.Supplied(deadDoc))
+        val t = Ingest.Tombstones.Supplied(Ingest.ensureForgetSet(spark, sfDir)._1)
+        val masked = Ingest.DocGen.Masked(t)
+        val deadVec = t.ids(spark, sfDir).select(col("doc_id").as("vec_id"))
         val qs = graft.queries.Tables.embeddings(spark, sfDir)
           .join(broadcast(deadVec), "vec_id")
           .orderBy("vec_id").limit(8)
@@ -258,14 +256,13 @@ object Profile {
         }
         run("bm25")(Ingest.bm25Served(
           spark, sfDir, masked, Seq("table", "scan", "join"), 10))
-        run("cms")(graft.operators.CorpusStats.cmsEstimateForgottenWith(
-          spark, sfDir, deadDoc))
+        run("cms")(graft.operators.CorpusStats.cmsServed(spark, sfDir, masked))
         run("dense")(Ingest.knnJoinIvfServed(spark, sfDir,
           Ingest.IvfLayout.Flat, Ingest.IvfGen.Masked(deadVec), qs, 10))
-        run("media")(graft.operators.Multimodal.imageDedupForgottenWith(
-          spark, sfDir, deadDoc))
+        run("media")(graft.operators.Multimodal.imageDedup(
+          graft.operators.Multimodal.mediaServed(spark, sfDir, masked)))
         run("model")(graft.operators.Curation.nbModelRetractedWith(
-          spark, sfDir, deadDoc))
+          spark, sfDir, t.ids(spark, sfDir)))
         run("phrase")(Ingest.phraseMatchServed(
           spark, sfDir, masked, Ingest.PhraseBatch))
         run("qpq")(Ingest.knnJoinIvfServed(spark, sfDir,

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** THE stored-artifact path + commit protocol — one implementation for
   * every `ensure*`/`purge*`/`compact*` family (Ingest, Curation,
@@ -51,7 +52,7 @@ private[operators] object Artifacts {
 
   // (appId, path, _SUCCESS mtime) -> reader
   private val readers = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Long), org.apache.spark.sql.DataFrame]
+    .empty[(String, String, Long), DataFrame]
 
   /** Parquet reader over a stored artifact, memoized per (application,
     * path, commit-marker mtime). Constructing a reader costs a file
@@ -64,7 +65,7 @@ private[operators] object Artifacts {
     * protocol's guarantee; the marker mtime in the key re-reads any
     * path that is genuinely recommitted. An uncommitted path is never
     * memoized — its contents are still in flight. */
-  def readCommitted(s: SparkSession, path: String): org.apache.spark.sql.DataFrame = {
+  def readCommitted(s: SparkSession, path: String): DataFrame = {
     val marker = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
     val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
     val mtime =
@@ -73,5 +74,25 @@ private[operators] object Artifacts {
     if (mtime < 0) s.read.parquet(path)
     else readers.getOrElseUpdate(
       (s.sparkContext.applicationId, path, mtime), s.read.parquet(path))
+  }
+
+  /** THE partitioned write (term buckets, IVF cells, media modalities).
+    * Repartitioning on the partition column first makes each write task
+    * own whole partitions, so the layout is one file per partition
+    * value instead of values × shuffle.partitions fragments (the
+    * small-files problem that kills object-store listings at scale). */
+  def writePartitioned(rows: DataFrame, by: String, path: String): Unit =
+    rows.repartition(col(by)).write.mode("overwrite").partitionBy(by).parquet(path)
+
+  /** One stored table — a generation of a one-table family: gated write
+    * (partitioned by `partitionBy` when set), then the committed reader.
+    * `rows` is built only on the cold path. */
+  def storedTable(s: SparkSession, path: String, partitionBy: Option[String] = None)(
+      rows: => DataFrame): DataFrame = graft.BuildTimer.time {
+    buildGate(s, path) {
+      partitionBy.fold(rows.write.mode("overwrite").parquet(path))(
+        writePartitioned(rows, _, path))
+    }
+    readCommitted(s, path)
   }
 }

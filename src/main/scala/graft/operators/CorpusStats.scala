@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.queries.Tables.documents
-import graft.operators.Artifacts.{buildGate, readCommitted, scratch}
+import graft.operators.Artifacts.{scratch, storedTable}
+import graft.operators.Ingest.{DocGen, Tombstones}
 
 /** Corpus-frequency analytics (SURVEY.md §2.11): a mergeable Count-Min
   * sketch for heavy-hitter queries, and document-level PMI co-occurrence
@@ -98,56 +99,121 @@ object CorpusStats {
     Seq("agg", "column", "join", "merge", "query", "scan", "window",
       "zzz_absent_probe")
 
-  /** Stored corpus-stats artifacts: the BASE sketch over `documents` and
-    * the DELTA sketch over the append batch (the same `% 101` exact-copy
-    * batch as [[graft.operators.Ingest.DocAppendOffset]] — doc ids are
-    * irrelevant to a token sketch, so the batch is just the re-tokenized
-    * copies). Each build is one map-side-combined count + a D×W fold;
-    * each artifact is ≤ [[CmsDepth]]·[[CmsWidth]] rows no matter the
-    * corpus size. The base is NEVER rebuilt on append — at 100 TB that
-    * is the whole point: per-shard/per-crawl sketches are built once by
-    * the ingest that produced the shard, and every later reader pays
-    * only the cell-wise merge. */
-  def ensureCmsArtifacts(s: SparkSession, dir: String): (DataFrame, DataFrame) = graft.BuildTimer.time {
-    val bPath = scratch(s, dir, "cms_base")
-    val dPath = scratch(s, dir, "cms_delta")
-    def counts(docs: DataFrame): DataFrame = docs
-      .select(explode(toks(col("text"))).as("term"))
-      .groupBy("term").agg(count(lit(1)).as("c"))
-    buildGate(s, bPath) {
-      cmsBuild(counts(documents(s, dir)))
-        .write.mode("overwrite").parquet(bPath)
-    }
-    buildGate(s, dPath) {
-      cmsBuild(counts(documents(s, dir).filter(col("doc_id") % 101 === 0)))
-        .write.mode("overwrite").parquet(dPath)
-    }
-    (readCommitted(s, bPath), readCommitted(s, dPath))
+  /** THE base/delta pair of a stored sketch: `<stem>_base` over
+    * `documents` and `<stem>_delta` over the append batch
+    * ([[Ingest.appendedDocs]] — the copied rows as they are, since a
+    * corpus sketch needs no new identity). Each build is one
+    * map-side-combined aggregation and each artifact is bounded no
+    * matter the corpus size (≤ D·W CMS cells, ≤ shards·buckets
+    * histogram cells, ≤ |langs| HLL rows). The base is NEVER rebuilt
+    * on append — at 100 TB that is the whole point: per-shard /
+    * per-crawl sketches are built once by the ingest that produced the
+    * shard, and every later reader pays only the merge. */
+  def ensureSketchPair(s: SparkSession, dir: String, stem: String,
+      build: DataFrame => DataFrame): (DataFrame, DataFrame) =
+    (storedTable(s, scratch(s, dir, s"${stem}_base"))(build(documents(s, dir))),
+      storedTable(s, scratch(s, dir, s"${stem}_delta"))(build(Ingest.appendedDocs(s, dir))))
+
+  /** (term, c) counts of a document frame under the corpus tokenizer. */
+  private def termCounts(docs: DataFrame): DataFrame = docs
+    .select(explode(toks(col("text"))).as("term"))
+    .groupBy("term").agg(count(lit(1)).as("c"))
+
+  /** A LINEAR cell sketch: rows are (keys…, mass) cells and the sketch
+    * of A ∪ B is the cell-wise SUM of the two, so cells(A) − cells(R) =
+    * cells(A \ R) for any R ⊆ A, per cell, in exact integers. An append
+    * is a positive side, a retraction a NEGATED one, and every served
+    * generation is a list of signed sides ([[sketchCells]]). HLL is not
+    * one: its registers merge by MAX, which is not invertible — the
+    * deletion verb on the cardinality axis is a rebuild, not a
+    * subtraction, so it keeps only the pair. */
+  sealed abstract class CellSketch(val stem: String, val keys: Seq[String],
+      val mass: String) {
+    /** The sketch of a `documents`-shaped frame. */
+    def build(docs: DataFrame): DataFrame
   }
 
-  /** Warm heavy-hitter estimates over the GROWN corpus, served from the
-    * stored sketches alone: cell-wise merge (sum is associative, so
-    * merged-from-parts IS the fresh sketch over base ∪ batch — the
-    * oracle pins that equality by replaying the fresh build over the
-    * augmented corpus), then a min-over-depth point estimate per probe.
-    * Absent cells count 0 (LEFT join + coalesce): a probe term the
-    * corpus never saw estimates as its true collision mass, not as a
-    * dropped row. Everything after the stored scans is ≤ 2·D·W rows —
-    * broadcast-scale at any corpus size. */
-  def cmsEstimateStored(s: SparkSession, dir: String,
+  object CellSketch {
+    /** Count-Min cells (r, b) → cnt. */
+    case object Cms extends CellSketch("cms", Seq("r", "b"), "cnt") {
+      def build(docs: DataFrame): DataFrame = cmsBuild(termCounts(docs))
+    }
+    /** Per-shard length histogram cells (shard, bucket) → n; the shard
+      * axis survives every rewrite, so a purged artifact stays
+      * mergeable. */
+    case object Hist extends CellSketch("hist", Seq("shard", "bucket"), "n") {
+      def build(docs: DataFrame): DataFrame = histBuild(docs)
+    }
+  }
+
+  /** THE served-generation accessor of the cell sketches: the signed
+    * cell sides a generation sums to. Every post-scan frame is ≤ 2×
+    * the sketch's cell bound.
+    *
+    *  - Base: the base sketch. Appended: base and delta (sum is
+    *    associative, so merged-from-parts IS the fresh sketch over
+    *    base ∪ batch — the merge gates' oracles replay the fresh build
+    *    over the augmented corpus).
+    *  - Masked(t): base and the NEGATED retraction sketch of `t` — the
+    *    stored base is untouched (readers keep their snapshot; the
+    *    takedown is effective the instant the retraction commits). The
+    *    retraction tokenizes ONLY the retracted documents, never the
+    *    corpus: stored as `<stem>_retract` for [[Tombstones.Stored]],
+    *    built from [[Tombstones.docs]] at serve time for a supplied
+    *    set. The forget gates' oracles replay a fresh sketch over the
+    *    reduced corpus, so their hashes ARE the linearity proof.
+    *  - Purged(t): one side, `<stem>${t.purgedGen}` — Masked's merged
+    *    non-zero cells written as a new generation from STORED CELLS
+    *    alone (zero corpus I/O: the cheapest purge in the engine, which
+    *    is what linearity buys). The purge gates share the forget
+    *    oracles verbatim, so masked ≡ purged is pinned by one hash.
+    *  - Compacted: rejected — a sketch pair is already one bounded
+    *    table per generation. */
+  def sketchCells(s: SparkSession, dir: String, sk: CellSketch,
+      gen: DocGen): Seq[DataFrame] = {
+    lazy val (base, delta) = ensureSketchPair(s, dir, sk.stem, sk.build)
+    gen match {
+      case DocGen.Base => Seq(base)
+      case DocGen.Appended => Seq(base, delta)
+      case DocGen.Masked(t) =>
+        Seq(base, retraction(s, dir, sk, t)
+          .select(sk.keys.map(col) :+ (-col(sk.mass)).as(sk.mass): _*))
+      case DocGen.Purged(t) =>
+        Seq(storedTable(s, scratch(s, dir, s"${sk.stem}${t.purgedGen(s, dir)}"))(
+          merged(sk, sketchCells(s, dir, sk, DocGen.Masked(t)))))
+      case DocGen.Compacted => throw new IllegalArgumentException(
+        s"the ${sk.stem} sketch has no $gen generation")
+    }
+  }
+
+  /** The sketch of `t`'s retracted documents. */
+  private def retraction(s: SparkSession, dir: String, sk: CellSketch,
+      t: Tombstones): DataFrame = t match {
+    case Tombstones.Stored =>
+      storedTable(s, scratch(s, dir, s"${sk.stem}_retract"))(sk.build(t.docs(s, dir)))
+    case _ => sk.build(t.docs(s, dir))
+  }
+
+  /** Signed sides summed cell-wise — one bounded groupBy. Cells whose
+    * whole mass was retracted drop out (a fresh build over the reduced
+    * corpus has no such row either, and the serves read absent as 0). */
+  private def merged(sk: CellSketch, sides: Seq[DataFrame]): DataFrame =
+    sides.reduce(_.unionByName(_))
+      .groupBy(sk.keys.map(col): _*).agg(sum(sk.mass).as(sk.mass))
+      .filter(col(sk.mass) =!= 0)
+
+  /** Warm heavy-hitter estimates through one served CMS generation:
+    * the sides cell-merged (when there is more than one), then a
+    * min-over-depth point estimate per probe. Absent cells count 0
+    * (LEFT join + coalesce): a probe term the corpus never saw
+    * estimates as its true collision mass, not as a dropped row.
+    * Everything after the stored scans is ≤ 2·D·W rows — broadcast-
+    * scale at any corpus size. */
+  def cmsServed(s: SparkSession, dir: String, gen: DocGen,
       probeTerms: Seq[String] = CmsProbeTerms): DataFrame = {
-    val (base, delta) = ensureCmsArtifacts(s, dir)
-    val merged = base.unionByName(delta)
-      .groupBy("r", "b").agg(sum("cnt").as("cnt"))
-    cmsProbeServe(s, merged, probeTerms)
-  }
-
-  /** Shared probe tail of every stored-sketch serve (merged, forgotten,
-    * purged): explode each probe into its D cells, LEFT-join the cell
-    * frame (absent cell = 0 mass, the zero-cell edge), min over depth. */
-  private def cmsProbeServe(s: SparkSession, cells: DataFrame,
-      probeTerms: Seq[String]): DataFrame = {
     import s.implicits._
+    val sides = sketchCells(s, dir, CellSketch.Cms, gen)
+    val cells = if (sides.size == 1) sides.head else merged(CellSketch.Cms, sides)
     probeTerms.toDF("term")
       .select(col("term"),
         explode(sequence(lit(0), lit(CmsDepth - 1))).as("r"))
@@ -159,127 +225,35 @@ object CorpusStats {
       .orderBy("term")
   }
 
-  // --- deletion on the stats axis (sketch linearity) --------------------
-
-  /** Stored RETRACTION sketch — the deletion verb's negative delta on
-    * the stats axis, the [[graft.operators.Ingest.ensureForgetSet]]
-    * mirror: built by tokenizing ONLY the retracted documents (bounded
-    * by the retraction size, never a corpus re-scan). CMS cells are
-    * SUMS — a linear sketch — so subtracting the retraction sketch
-    * cell-wise from the base yields EXACTLY the sketch of the reduced
-    * corpus: cells(A) − cells(R) = cells(A \ R) for any R ⊆ A, per
-    * cell, in exact integers. The forget gate's oracle replays a FRESH
-    * sketch over the reduced corpus, so the hash IS the linearity
-    * proof (the q_quantile_merge convention, inverted sign). HLL gets
-    * no such twin BY DESIGN: its registers merge by MAX, which is not
-    * invertible — the deletion verb on the cardinality axis is a
-    * rebuild, not a subtraction. */
-  def ensureCmsRetract(s: SparkSession, dir: String): DataFrame = graft.BuildTimer.time {
-    val rPath = scratch(s, dir, "cms_retract")
-    buildGate(s, rPath) {
-      cmsBuild(documents(s, dir)
-        .filter(col("doc_id") % Ingest.ForgetMod === Ingest.ForgetRem)
-        .select(explode(toks(col("text"))).as("term"))
-        .groupBy("term").agg(count(lit(1)).as("c")))
-        .write.mode("overwrite").parquet(rPath)
-    }
-    readCommitted(s, rPath)
-  }
-
-  /** Cell-wise subtraction — union with negated counts, one bounded
-    * groupBy over ≤ 2·D·W rows. Cells whose whole mass was retracted
-    * drop out (a fresh build over the reduced corpus has no such row
-    * either, and the serve tail's LEFT join reads absent as 0). */
-  private def cmsSubtracted(base: DataFrame, retract: DataFrame): DataFrame =
-    base.unionByName(retract.select(col("r"), col("b"), (-col("cnt")).as("cnt")))
-      .groupBy("r", "b").agg(sum("cnt").as("cnt"))
-      .filter(col("cnt") =!= 0)
-
-  /** Heavy-hitter estimates with the retraction SUBTRACTED at serve
-    * time — the stored base sketch is untouched (readers keep their
-    * snapshot; the takedown is effective the instant the retraction
-    * marker commits). Everything after the two stored scans is
-    * ≤ 2·D·W rows. */
-  def cmsEstimateForgotten(s: SparkSession, dir: String,
-      probeTerms: Seq[String] = CmsProbeTerms): DataFrame = {
-    val (base, _) = ensureCmsArtifacts(s, dir)
-    cmsProbeServe(s, cmsSubtracted(base, ensureCmsRetract(s, dir)), probeTerms)
-  }
-
-  /** [[cmsEstimateForgotten]] with a CALLER-SUPPLIED tombstone frame
-    * (e.g. [[graft.streaming.ForgetStream]]'s append-only id directory
-    * — the Ingest.Tombstones.Supplied precedent on the stats axis): the
-    * retraction sketch is derived from the ids at serve time, one
-    * semi-bounded tokenize over only the retracted documents. */
-  def cmsEstimateForgottenWith(s: SparkSession, dir: String, dead: DataFrame,
-      probeTerms: Seq[String] = CmsProbeTerms): DataFrame = {
-    val (base, _) = ensureCmsArtifacts(s, dir)
-    val retract = cmsBuild(documents(s, dir)
-      .join(broadcast(dead.select("doc_id").distinct()), "doc_id")
-      .select(explode(toks(col("text"))).as("term"))
-      .groupBy("term").agg(count(lit(1)).as("c")))
-    cmsProbeServe(s, cmsSubtracted(base, retract), probeTerms)
-  }
-
-  /** Physical purge on the stats axis: the subtracted sketch REWRITTEN
-    * as a new generation — computed from STORED CELLS alone (≤ 2·D·W
-    * input rows, zero corpus I/O: the cheapest purge in the engine,
-    * which is exactly what sketch linearity buys), committed under the
-    * usual marker protocol, old generation untouched. Serving reads
-    * the purged artifact with no subtraction in the plan; q_cms_purge
-    * shares q_cms_forget's oracle verbatim, so subtracted ≡ purged is
-    * pinned by one hash (the q_bm25_purge convention). */
-  def ensureCmsPurged(s: SparkSession, dir: String): DataFrame = graft.BuildTimer.time {
-    val pPath = scratch(s, dir, "cms_gen2")
-    buildGate(s, pPath) {
-      val (base, _) = ensureCmsArtifacts(s, dir)
-      cmsSubtracted(base, ensureCmsRetract(s, dir))
-        .write.mode("overwrite").parquet(pPath)
-    }
-    readCommitted(s, pPath)
-  }
-
-  /** Warm estimates from the PURGED generation — one stored scan, no
-    * negative cells anywhere in the plan. */
-  def cmsEstimatePurged(s: SparkSession, dir: String,
-      probeTerms: Seq[String] = CmsProbeTerms): DataFrame =
-    cmsProbeServe(s, ensureCmsPurged(s, dir), probeTerms)
-
-  /** Dead fraction on the stats axis, from STORED CELLS alone: every
-    * token lands in exactly one bucket per depth row, so a single
-    * row's cell sum IS the total token mass — retracted mass over live
-    * mass is two ≤ W-row reads, no corpus scan, no tokenize (the
-    * bm25PolicyServed dead-fraction shape, cheaper still). */
-  def cmsDeadFraction(s: SparkSession, dir: String): Double = {
-    val (base, _) = ensureCmsArtifacts(s, dir)
-    val retract = ensureCmsRetract(s, dir)
-    // sum over an EMPTY slice (no retractions yet, or an all-zero r=0
-    // row) is NULL, not 0 — coalesce so the fraction is 0.0, not an NPE
-    def mass(df: DataFrame): Long =
-      massMemo.getOrElseUpdate(df.filter(col("r") === 0),
-        df.filter(col("r") === 0)
-          .agg(coalesce(sum("cnt"), lit(0L))).head().getLong(0))
-    val live = mass(base)
-    if (live == 0L) 0.0 else mass(retract).toDouble / live.toDouble
-  }
-
   // bounded stats-artifact readout, once per (app, committed artifact)
   // — the bm25PolicyServed dead-fraction memo shape (optimization r16)
   private val massMemo = new PlanMemo[Long]
 
   /** Tombstone-fraction PURGE TRIGGER on the stats axis — the
-    * [[graft.operators.Ingest.bm25PolicyServed]] policy verbatim:
-    * below θ keep serving the subtracted stored cells (snapshot
-    * untouched), at/above θ pay the gen2 rewrite (which here costs only
-    * a ≤ 2·D·W-row job — linearity makes the stats axis the cheapest
-    * purge in the engine, so its θ can sit far lower than an index's).
-    * Returns the served frame plus the decision so the gate pins WHICH
-    * arm ran. */
-  def cmsEstimatePolicyServed(s: SparkSession, dir: String,
-      theta: Double): (DataFrame, Boolean) = {
-    val purge = cmsDeadFraction(s, dir) >= theta
-    (if (purge) cmsEstimatePurged(s, dir) else cmsEstimateForgotten(s, dir),
-      purge)
+    * [[Ingest.bm25PolicyServed]] policy: below θ keep serving Masked
+    * (snapshot untouched), at/above θ pay the Purged rewrite (which
+    * here costs only a ≤ 2·D·W-row job — linearity makes the stats
+    * axis the cheapest purge in the engine, so its θ can sit far lower
+    * than an index's). The dead fraction comes from STORED CELLS alone:
+    * every token lands in exactly one bucket per depth row, so row 0's
+    * cell sum IS the token mass, and retracted over live mass is two
+    * ≤ W-row reads. Returns the served frame plus the decision so the
+    * gate pins WHICH arm ran. */
+  def cmsPolicyServed(s: SparkSession, dir: String, t: Tombstones,
+      theta: Double, probeTerms: Seq[String] = CmsProbeTerms): (DataFrame, Boolean) = {
+    val sk = CellSketch.Cms
+    // sum over an EMPTY slice (no retractions yet, or an all-zero r=0
+    // row) is NULL, not 0 — coalesce so the fraction is 0.0, not an NPE
+    def mass(df: DataFrame): Long = {
+      val row0 = df.filter(col("r") === 0)
+      massMemo.getOrElseUpdate(row0,
+        row0.agg(coalesce(sum("cnt"), lit(0L))).head().getLong(0))
+    }
+    val live = mass(ensureSketchPair(s, dir, sk.stem, sk.build)._1)
+    val dead = mass(retraction(s, dir, sk, t))
+    val purge = (if (live == 0L) 0.0 else dead.toDouble / live) >= theta
+    (cmsServed(s, dir, if (purge) DocGen.Purged(t) else DocGen.Masked(t),
+      probeTerms), purge)
   }
 
   // --- mergeable histogram quantiles (the CMS posture, quantile axis) --
@@ -302,55 +276,27 @@ object CorpusStats {
       expr(s"n_chars div $HistBucketWidth").cast(LongType).as("bucket"))
     .groupBy("shard", "bucket").agg(count(lit(1)).as("n"))
 
-  /** Stored quantile artifacts: BASE per-shard histogram over
-    * `documents`, DELTA over the `% 101` append copies (the CMS
-    * convention). Bucket counts add cell-wise on BOTH axes — across
-    * shards and across base/delta — so quantiles of the grown corpus
-    * come from bounded stored rows alone. */
-  def ensureHistArtifacts(s: SparkSession, dir: String): (DataFrame, DataFrame) = graft.BuildTimer.time {
-    val bPath = scratch(s, dir, "hist_base")
-    val dPath = scratch(s, dir, "hist_delta")
-    buildGate(s, bPath) {
-      histBuild(documents(s, dir))
-        .write.mode("overwrite").parquet(bPath)
-    }
-    buildGate(s, dPath) {
-      histBuild(documents(s, dir).filter(col("doc_id") % 101 === 0))
-        .write.mode("overwrite").parquet(dPath)
-    }
-    (readCommitted(s, bPath), readCommitted(s, dPath))
-  }
-
-  /** Exact histogram quantiles of the GROWN corpus served from the
-    * stored per-shard artifacts: cell-wise merge (shards ∪ delta in one
-    * groupBy over ≤ 2·shards·buckets rows), bounded cumulative window,
+  /** Exact histogram quantiles through one served generation: the
+    * signed sides folded over the shard axis in one bounded groupBy
+    * (zero buckets dropped), a cumulative window over ≤ buckets rows,
     * then for each percentile the smallest bucket whose cumulative
     * count covers it (integer cross-multiplication — no float
-    * boundary). Every frame after the stored scans is ≤ buckets rows:
-    * quantiles over 100 TB with no sort of the corpus and no re-read.
-    * The bucket answer is exact FOR THE HISTOGRAM (value resolution =
-    * [[HistBucketWidth]]), which is the trade every production
-    * quantile sketch makes — made honest here by reporting the bucket
-    * bounds, not an interpolated point. */
-  def histQuantilesStored(s: SparkSession, dir: String): DataFrame = {
-    val (base, delta) = ensureHistArtifacts(s, dir)
-    histQuantileServe(s, base.unionByName(delta))
-  }
-
-  /** Shared quantile tail of every stored-histogram serve (merged,
-    * forgotten, purged): fold the shard/generation axes in one bounded
-    * groupBy, cumulative window over ≤ buckets rows, integer coverage
-    * cut per percentile. */
-  private def histQuantileServe(s: SparkSession, cells: DataFrame): DataFrame = {
+    * boundary). Quantiles over 100 TB with no sort of the corpus and no
+    * re-read. The bucket answer is exact FOR THE HISTOGRAM (value
+    * resolution = [[HistBucketWidth]]), which is the trade every
+    * production quantile sketch makes — made honest here by reporting
+    * the bucket bounds, not an interpolated point. */
+  def histServed(s: SparkSession, dir: String, gen: DocGen): DataFrame = {
     import s.implicits._
-    val merged = cells
+    val buckets = sketchCells(s, dir, CellSketch.Hist, gen).reduce(_.unionByName(_))
       .groupBy("bucket").agg(sum("n").as("n"))
+      .filter(col("n") =!= 0)
     val w = org.apache.spark.sql.expressions.Window.orderBy("bucket")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val cum = merged
+    val cum = buckets
       .withColumn("cum_n", sum("n").over(w).cast(LongType))
       .crossJoin(broadcast(
-        merged.agg(sum("n").cast(LongType).as("total_n"))))
+        buckets.agg(sum("n").cast(LongType).as("total_n"))))
     QuantilePcts.toDF("q_pct")
       .join(cum, col("cum_n") * 100 >= col("q_pct") * col("total_n"))
       .groupBy("q_pct", "total_n")
@@ -362,54 +308,6 @@ object CorpusStats {
         col("total_n"))
       .orderBy("q_pct")
   }
-
-  /** Stored RETRACTION histogram — [[ensureCmsRetract]]'s twin on the
-    * quantile axis, built over ONLY the retracted documents. Histogram
-    * cells are counts, so the same linearity holds: per-(shard, bucket)
-    * subtraction equals the fresh histogram of the reduced corpus,
-    * exactly. */
-  def ensureHistRetract(s: SparkSession, dir: String): DataFrame = graft.BuildTimer.time {
-    val rPath = scratch(s, dir, "hist_retract")
-    buildGate(s, rPath) {
-      histBuild(documents(s, dir)
-        .filter(col("doc_id") % Ingest.ForgetMod === Ingest.ForgetRem))
-        .write.mode("overwrite").parquet(rPath)
-    }
-    readCommitted(s, rPath)
-  }
-
-  /** Cell-wise subtraction keeping the shard axis (the artifact stays
-    * mergeable after a purge); fully-retracted cells drop out. */
-  private def histSubtracted(base: DataFrame, retract: DataFrame): DataFrame =
-    base.unionByName(
-      retract.select(col("shard"), col("bucket"), (-col("n")).as("n")))
-      .groupBy("shard", "bucket").agg(sum("n").as("n"))
-      .filter(col("n") =!= 0)
-
-  /** Quantiles with the retraction SUBTRACTED at serve time — stored
-    * base untouched, every post-scan frame ≤ 2·shards·buckets rows. */
-  def histQuantilesForgotten(s: SparkSession, dir: String): DataFrame = {
-    val (base, _) = ensureHistArtifacts(s, dir)
-    histQuantileServe(s, histSubtracted(base, ensureHistRetract(s, dir)))
-  }
-
-  /** Physical purge on the quantile axis — subtracted cells rewritten
-    * as a new generation from stored rows alone (zero corpus I/O).
-    * q_quantile_purge shares q_quantile_forget's oracle verbatim. */
-  def ensureHistPurged(s: SparkSession, dir: String): DataFrame = graft.BuildTimer.time {
-    val pPath = scratch(s, dir, "hist_gen2")
-    buildGate(s, pPath) {
-      val (base, _) = ensureHistArtifacts(s, dir)
-      histSubtracted(base, ensureHistRetract(s, dir))
-        .write.mode("overwrite").parquet(pPath)
-    }
-    readCommitted(s, pPath)
-  }
-
-  /** Warm quantiles from the PURGED generation — one stored scan, no
-    * negative cells in the plan. */
-  def histQuantilesPurged(s: SparkSession, dir: String): DataFrame =
-    histQuantileServe(s, ensureHistPurged(s, dir))
 
   // --- mergeable HLL cardinality artifacts (the CMS posture, ---------
   // --- distinct axis) -------------------------------------------------
@@ -427,28 +325,10 @@ object CorpusStats {
     .groupBy("lang")
     .agg(hll_sketch_agg(col("term"), HllLgK).as("sk"))
 
-  /** Stored cardinality artifacts: BASE per-lang sketches over
-    * `documents`, DELTA over the `% 101` append copies (the CMS/hist
-    * convention, third axis). HLL registers merge by per-register MAX —
-    * commutative and idempotent, so generations combine in any order
-    * and re-merging a generation is harmless (the property that makes
-    * the artifact safe under retried compactions). */
-  def ensureHllArtifacts(s: SparkSession, dir: String): (DataFrame, DataFrame) = graft.BuildTimer.time {
-    val bPath = scratch(s, dir, "hll_base")
-    val dPath = scratch(s, dir, "hll_delta")
-    buildGate(s, bPath) {
-      hllBuild(documents(s, dir))
-        .write.mode("overwrite").parquet(bPath)
-    }
-    buildGate(s, dPath) {
-      hllBuild(documents(s, dir).filter(col("doc_id") % 101 === 0))
-        .write.mode("overwrite").parquet(dPath)
-    }
-    (readCommitted(s, bPath), readCommitted(s, dPath))
-  }
-
   /** Distinct-vocabulary estimate of the GROWN corpus served from the
-    * stored sketches alone (one union-agg over ≤ 2·|langs| rows). Gate
+    * stored `hll` sketch pair alone (one union-agg over ≤ 2·|langs|
+    * rows; registers merge by per-register MAX — commutative and
+    * idempotent, so generations combine in any order). Gate
     * shape (r13, replacing the constant-true envelope): the EXACT
     * distinct count plus the estimator's 5%-ERROR BAND
     * `floor(|est − exact|·20 / exact)` — 0 means within 5 %, and any
@@ -459,14 +339,12 @@ object CorpusStats {
     * it did not compute. Deterministic for fixed data: Datasketches
     * HLL has no run-time randomness. */
   def hllMergeServe(s: SparkSession, dir: String): DataFrame = {
-    val (base, delta) = ensureHllArtifacts(s, dir)
+    val (base, delta) = ensureSketchPair(s, dir, "hll", hllBuild)
     val est = base.unionByName(delta)
       .groupBy("lang").agg(hll_union_agg(col("sk")).as("sk"))
       .select(col("lang"), hll_sketch_estimate(col("sk")).as("est"))
     val doc2 = documents(s, dir).select("lang", "text")
-      .unionByName(
-        documents(s, dir).filter(col("doc_id") % 101 === 0)
-          .select("lang", "text"))
+      .unionByName(Ingest.appendedDocs(s, dir).select("lang", "text"))
     doc2
       .select(col("lang"), explode(toks(col("text"))).as("term"))
       .groupBy("lang").agg(countDistinct(col("term")).as("exact_terms"))
@@ -537,9 +415,7 @@ object CorpusStats {
     // the corpus, so the gate pins the whole sketch construction (hash,
     // fold, cell sums), not just the probe rows.
     "q_heavy_hitters" -> ((s, dir) => {
-      val cnt = documents(s, dir)
-        .select(explode(toks(col("text"))).as("term"))
-        .groupBy("term").agg(count(lit(1)).as("c"))
+      val cnt = termCounts(documents(s, dir))
         .localCheckpoint() // two consumers: sketch build + probe top-k
       val probes = cnt.orderBy(desc("c"), asc("term")).limit(CmsTopK)
       cmsEstimate(cmsBuild(cnt), probes)
@@ -553,29 +429,32 @@ object CorpusStats {
     // FRESH build over the augmented corpus, so the hash pins
     // merged-from-parts ≡ fresh-over-union (sum associativity made
     // observable), plus the absent-probe zero-cell edge.
-    "q_cms_merge" -> ((s, dir) => cmsEstimateStored(s, dir)),
+    "q_cms_merge" -> ((s, dir) => cmsServed(s, dir, DocGen.Appended)),
 
     // stats-axis DELETION: heavy-hitter estimates with the retraction
     // sketch subtracted cell-wise from the stored base. The oracle
     // replays a fresh sketch over the REDUCED corpus, so the hash IS
     // the proof that CMS subtraction is exact (sketch linearity made
     // observable) — the deletion mirror of q_cms_merge's associativity.
-    "q_cms_forget" -> ((s, dir) => cmsEstimateForgotten(s, dir)),
+    "q_cms_forget" -> ((s, dir) =>
+      cmsServed(s, dir, DocGen.Masked(Tombstones.Stored))),
 
     // physical purge on the stats axis: the subtracted sketch rewritten
-    // as gen2 FROM STORED CELLS ALONE (zero corpus I/O) and served with
-    // no subtraction in the plan; shares q_cms_forget's oracle verbatim
-    // so masked ≡ purged is pinned by one hash.
-    "q_cms_purge" -> ((s, dir) => cmsEstimatePurged(s, dir)),
+    // as the purged generation FROM STORED CELLS ALONE (zero corpus
+    // I/O) and served with no subtraction in the plan; shares
+    // q_cms_forget's oracle verbatim so masked ≡ purged is pinned by
+    // one hash.
+    "q_cms_purge" -> ((s, dir) =>
+      cmsServed(s, dir, DocGen.Purged(Tombstones.Stored))),
 
     // the purge TRIGGER on the stats axis, both arms in one gate (the
     // q_forget_policy convention): dead token mass ≈ 1/13 of the corpus,
     // so θ=0.5 must keep the subtracted serve and θ=0.02 must trip the
-    // gen2 rewrite; the pinned decision booleans catch a policy that
+    // purge rewrite; the pinned decision booleans catch a policy that
     // never (or always) fires even though both arms agree on rows.
     "q_cms_policy" -> ((s, dir) => {
-      val (lo, loPurged) = cmsEstimatePolicyServed(s, dir, theta = 0.5)
-      val (hi, hiPurged) = cmsEstimatePolicyServed(s, dir, theta = 0.02)
+      val (lo, loPurged) = cmsPolicyServed(s, dir, Tombstones.Stored, theta = 0.5)
+      val (hi, hiPurged) = cmsPolicyServed(s, dir, Tombstones.Stored, theta = 0.02)
       lo.withColumn("arm", lit("mask"))
         .withColumn("purged_serving", lit(loPurged))
         .unionByName(hi.withColumn("arm", lit("purge"))
@@ -590,13 +469,15 @@ object CorpusStats {
     // integer coverage cut. The oracle replays a FRESH histogram over
     // the augmented corpus with no shard axis at all, so the hash pins
     // merged-from-parts ≡ fresh-over-union on the quantile surface.
-    "q_quantile_merge" -> ((s, dir) => histQuantilesStored(s, dir)),
+    "q_quantile_merge" -> ((s, dir) => histServed(s, dir, DocGen.Appended)),
 
     // quantile-axis deletion + purge: per-(shard, bucket) count
     // subtraction (exact by linearity, oracle = fresh histogram over
-    // the reduced corpus) and the gen2 rewrite serving it mask-free.
-    "q_quantile_forget" -> ((s, dir) => histQuantilesForgotten(s, dir)),
-    "q_quantile_purge" -> ((s, dir) => histQuantilesPurged(s, dir)),
+    // the reduced corpus) and the purged rewrite serving it mask-free.
+    "q_quantile_forget" -> ((s, dir) =>
+      histServed(s, dir, DocGen.Masked(Tombstones.Stored))),
+    "q_quantile_purge" -> ((s, dir) =>
+      histServed(s, dir, DocGen.Purged(Tombstones.Stored))),
 
     // cardinality-axis LSM: per-lang distinct-vocabulary estimate of
     // base ∪ append batch from the STORED HLL sketches (one union-agg
@@ -728,7 +609,7 @@ object CorpusStats {
          |FROM cells JOIN cms ON cells.r = cms.r AND cells.b = cms.b
          |GROUP BY 1 ORDER BY term""".stripMargin,
     // fresh CMS over the AUGMENTED corpus (base ∪ the % 101 copies) —
-    // the probe list and the zero-cell COALESCE mirror cmsEstimateStored;
+    // the probe list and the zero-cell COALESCE mirror cmsServed;
     // cell-sum associativity makes merged-stored ≡ fresh-replayed exact.
     "q_cms_merge" ->
       s"""WITH doc2 AS (

@@ -829,7 +829,7 @@ object Curation {
     * touched token mass (|leaving| + |entering|, the diff's signed
     * counts in absolute value) over the stored v1 token mass — the
     * classifier axis's analog of the bm25PolicyServed and
-    * cmsDeadFraction dead fractions, the quantity a refresh θ-policy
+    * cmsPolicyServed dead fractions, the quantity a refresh θ-policy
     * triggers on. No corpus scan. */
   def nbDriftFraction(s: SparkSession, dir: String): Double = {
     val live = ensureNbCounts(s, dir)

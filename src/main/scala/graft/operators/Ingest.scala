@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.{Sketch, VectorOps}
-import graft.operators.Artifacts.{buildGate, committed, readCommitted, scratch}
+import graft.operators.Artifacts.{buildGate, committed, readCommitted, scratch,
+  storedTable, writePartitioned}
 import graft.queries.Tables.{documents, embeddings}
 
 /** The STORED-SKETCH ingest path (SURVEY.md §9.2): at 100 TB, sketches
@@ -101,7 +102,7 @@ object Ingest {
     * doc. Returns a reader over the STORED parquet (scan sees only the
     * sketch columns; no text, no sketch expressions in the plan). */
   def ensureSketchedDocs(s: SparkSession, dir: String): DataFrame =
-    docTable(s, scratch(s, dir, "docs_sketched"), bucketed = false)(
+    storedTable(s, scratch(s, dir, "docs_sketched"))(
       sketchProjection(documents(s, dir)))
 
   // --- stored inverted index (sparse / BM25 retrieval) -----------------
@@ -289,9 +290,15 @@ object Ingest {
     * argument IngestSpec pins pairwise. */
   val DocAppendOffset: Long = 10000000L
 
+  /** The append fixture's source rows: every `doc_id % 101 == 0` base
+    * document. The text families re-identify them ([[docAppendBatch]]);
+    * the corpus-stat sketches ([[CorpusStats.ensureSketchPair]]) take
+    * them as they are. */
+  def appendedDocs(s: SparkSession, dir: String): DataFrame =
+    documents(s, dir).filter(col("doc_id") % 101 === 0)
+
   private def docAppendBatch(s: SparkSession, dir: String): DataFrame =
-    documents(s, dir)
-      .filter(col("doc_id") % 101 === 0)
+    appendedDocs(s, dir)
       .select((col("doc_id") + lit(DocAppendOffset)).as("doc_id"), col("text"))
 
   /** Deterministic retraction set (~1/13 of the base corpus) — the
@@ -327,10 +334,19 @@ object Ingest {
   }
 
   /** A tombstone set on the documents axis: what the masked and purged
-    * generations ([[DocGen]]) of every text family subtract. */
+    * generations ([[DocGen]]) of every stored family subtract — the
+    * text indexes here, the CMS and histogram cell sketches
+    * ([[CorpusStats.sketchCells]]) and the media hash index
+    * ([[Multimodal.mediaServed]]). For the media family, [[Stored]]
+    * means that family's own committed fixture,
+    * [[Multimodal.ensureMediaForgetSet]] (`doc_id % 20`): the media
+    * gates' hashes pin that set. */
   sealed trait Tombstones {
     /** The retracted doc_ids, one row per document. */
     def ids(s: SparkSession, dir: String): DataFrame
+    /** The retracted documents, full `documents` rows (what a
+      * retraction sketch is built from). */
+    def docs(s: SparkSession, dir: String): DataFrame
     /** The retraction's NEGATIVE (n_docs, dl_total). */
     def negStats(s: SparkSession, dir: String): DataFrame
     /** How many documents are retracted (the purge policy's numerator). */
@@ -347,6 +363,7 @@ object Ingest {
       * eagerly. */
     case object Stored extends Tombstones {
       def ids(s: SparkSession, dir: String): DataFrame = ensureForgetSet(s, dir)._1
+      def docs(s: SparkSession, dir: String): DataFrame = forgetBatch(s, dir)
       def negStats(s: SparkSession, dir: String): DataFrame =
         ensureForgetSet(s, dir)._2
       def nDocs(s: SparkSession, dir: String): Long =
@@ -372,9 +389,10 @@ object Ingest {
       private lazy val distinctIds =
         dead.select("doc_id").distinct().localCheckpoint(eager = false)
       def ids(s: SparkSession, dir: String): DataFrame = distinctIds
+      def docs(s: SparkSession, dir: String): DataFrame =
+        documents(s, dir).join(broadcast(distinctIds), "doc_id")
       def negStats(s: SparkSession, dir: String): DataFrame =
-        docStats(documents(s, dir).join(broadcast(distinctIds), "doc_id")
-          .select(TextAnalysis.bm25Toks(col("text")).as("t")))
+        docStats(docs(s, dir).select(TextAnalysis.bm25Toks(col("text")).as("t")))
       def nDocs(s: SparkSession, dir: String): Long = distinctIds.count()
       /** `_purged_<hex of the set's 64-bit xxhash64 sum>`: idempotent
         * per set, so re-serving the same takedown state reuses the
@@ -426,25 +444,6 @@ object Ingest {
   private def minus(df: DataFrame, ids: DataFrame): DataFrame =
     df.join(broadcast(ids), Seq("doc_id"), "left_anti")
 
-  /** THE bucket-partitioned write (term postings and positions alike).
-    * Repartitioning on the partition column first makes each write
-    * task own whole buckets, so the layout is ≤ NumTermBuckets files,
-    * not buckets × shuffle tasks (the [[writeCells]] rule). */
-  private def writeBuckets(rows: DataFrame, path: String): Unit =
-    rows.repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(path)
-
-  /** A one-table generation (sketches, positions): gated write, then
-    * the committed reader. `rows` is built only on the cold path. */
-  private def docTable(s: SparkSession, path: String, bucketed: Boolean)(
-      rows: => DataFrame): DataFrame = graft.BuildTimer.time {
-    buildGate(s, path) {
-      if (bucketed) writeBuckets(rows, path)
-      else rows.write.mode("overwrite").parquet(path)
-    }
-    readCommitted(s, path)
-  }
-
   /** One generation of the inverted index, `term_postings<gen>` +
     * `term_stats<gen>`: postings payload first, the stats directory
     * LAST as the generation marker (a torn build recomputes rather than
@@ -457,7 +456,7 @@ object Ingest {
       val sPath = scratch(s, dir, s"term_stats$gen")
       buildGate(s, sPath) {
         val (postings, stats) = build
-        writeBuckets(postings, pPath)
+        writePartitioned(postings, "bucket", pPath)
         stats.write.mode("overwrite").parquet(sPath)
       }
       (readCommitted(s, pPath), readCommitted(s, sPath))
@@ -601,7 +600,7 @@ object Ingest {
     * so deletion has no statistics to correct. */
   def sketchServed(s: SparkSession, dir: String, gen: DocGen): DataFrame = {
     def table(suffix: String)(rows: => DataFrame): DataFrame =
-      docTable(s, scratch(s, dir, s"docs_sketched$suffix"), bucketed = false)(rows)
+      storedTable(s, scratch(s, dir, s"docs_sketched$suffix"))(rows)
     gen match {
       case DocGen.Base => ensureSketchedDocs(s, dir)
       case DocGen.Appended =>
@@ -650,7 +649,7 @@ object Ingest {
     * tokenizer — the same split the index build, the fresh scorer and
     * the oracle replay, so positions cannot drift from terms. */
   def ensurePhraseIndex(s: SparkSession, dir: String): DataFrame =
-    docTable(s, scratch(s, dir, "term_positions"), bucketed = true)(
+    storedTable(s, scratch(s, dir, "term_positions"), Some("bucket"))(
       documents(s, dir)
         .select(col("doc_id"),
           posexplode(TextAnalysis.bm25Toks(col("text"))).as(Seq("pos", "term")))
@@ -665,8 +664,8 @@ object Ingest {
     case DocGen.Base => (ensurePhraseIndex(s, dir), None)
     case DocGen.Masked(t) => (ensurePhraseIndex(s, dir), Some(t.ids(s, dir)))
     case DocGen.Purged(t) =>
-      (docTable(s, scratch(s, dir, s"term_positions${t.purgedGen(s, dir)}"),
-        bucketed = true)(minus(ensurePhraseIndex(s, dir), t.ids(s, dir))), None)
+      (storedTable(s, scratch(s, dir, s"term_positions${t.purgedGen(s, dir)}"),
+        Some("bucket"))(minus(ensurePhraseIndex(s, dir), t.ids(s, dir))), None)
     case other => throw new IllegalArgumentException(
       s"the positional index has no $other generation")
   }
@@ -1139,19 +1138,11 @@ object Ingest {
     scratch(s, dir, s"${l.stem}_$table$gen${l.params}$cellTag")
   }
 
-  /** THE cell-partitioned write. Repartitioning on the partition column
-    * first makes each write task own whole cells, so the layout is
-    * nCells files instead of nCells × shuffle.partitions fragments (the
-    * small-files problem that kills object-store listings at scale). */
-  private def writeCells(rows: DataFrame, path: String): Unit =
-    rows.repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(path)
-
   /** A one-table generation: gated cell-partitioned write (`rows` is
     * built only on the cold path), then the committed reader. */
   private def cellTable(s: SparkSession, path: String)(
       rows: => DataFrame): DataFrame = {
-    buildGate(s, path)(writeCells(rows, path))
+    buildGate(s, path)(writePartitioned(rows, "cell", path))
     readCommitted(s, path)
   }
 
@@ -1165,7 +1156,7 @@ object Ingest {
       build: => (DataFrame, DataFrame)): (DataFrame, DataFrame) = {
     buildGate(s, cPath) {
       val (centroids, rows) = build
-      writeCells(rows, path)
+      writePartitioned(rows, "cell", path)
       centroids.write.mode("overwrite").parquet(cPath)
     }
     (readCommitted(s, cPath), readCommitted(s, path))
@@ -1802,13 +1793,14 @@ object Ingest {
     * deletion sibling of the three e2e pipelines. Per axis, one
     * fingerprint row (axis, n_rows, key_sum, val_sum):
     *
-    *  - bm25 / phrase / sketch / cms / media: the REAL masked serve,
-    *    reduced to
-    *    (count, id-sum, value-sum) — the oracle computes the same three
-    *    numbers from the per-axis reduced-corpus replays (the existing
-    *    forget oracle strings, shared as subqueries — one formula, two
-    *    gates), so a takedown that under- or over-deletes on any axis,
-    *    or skews any corrected statistic, flips that axis's row.
+    *  - bm25 / phrase / sketch / cms / media: the REAL masked serve
+    *    (each family's accessor over one `DocGen.Masked` generation),
+    *    reduced to (count, id-sum, value-sum) — the oracle computes the
+    *    same three numbers from the per-axis reduced-corpus replays (the
+    *    existing forget oracle strings, shared as subqueries — one
+    *    formula, two gates), so a takedown that under- or over-deletes
+    *    on any axis, or skews any corrected statistic, flips that axis's
+    *    row.
     *  - dense / quantized (pq, sq): each retracted document's OWN
     *    embedding queries the masked index (offset q_ids so the
     *    self-exclusion filter is inert). Unmasked, that vector is a
@@ -1832,12 +1824,13 @@ object Ingest {
     * streamed ≡ stored-fixture row-for-row. */
   def takedownE2eWith(s: SparkSession, dir: String,
       dead0: DataFrame): DataFrame = {
-    // distinct at the door: streamed retractions arrive with duplicates,
-    // and while every anti-join downstream is duplicate-free, the query
-    // construction and stat derivations are not
-    val dead = dead0.select("doc_id").distinct()
-      .localCheckpoint() // many consumers
-    val deadVec = dead.select(col("doc_id").as("vec_id"))
+    // ONE tombstone value for every axis: streamed retractions arrive
+    // with duplicates, and Supplied makes its id frame distinct once
+    // (lazily checkpointed — the eager `qs` checkpoint below
+    // materializes it before the Par phase)
+    val t = Tombstones.Supplied(dead0)
+    val masked = DocGen.Masked(t)
+    val deadVec = t.ids(s, dir).select(col("doc_id").as("vec_id"))
     def fp(axis: String, df: DataFrame, key: Column, v: Column): DataFrame =
       df.agg(coalesce(count(lit(1)), lit(0L)).as("n_rows"),
         coalesce(sum(key), lit(0L)).as("key_sum"),
@@ -1868,23 +1861,20 @@ object Ingest {
     // the final union is nine checkpointed one-row frames, which also
     // keeps the optimizer off the former 2155-operator concatenated
     // plan.
-    // one tombstone value for the three text axes: its distinct id
-    // frame is built once and shared
-    val masked = DocGen.Masked(Tombstones.Supplied(dead))
     val axes: Seq[() => DataFrame] = Seq(
       () => fp("bm25",
         bm25Served(s, dir, masked, Seq("table", "scan", "join"), 10),
         col("doc_id"), round(col("score") * 1e6).cast(LongType)),
       () => fp("cms",
-        CorpusStats.cmsEstimateForgottenWith(s, dir, dead),
+        CorpusStats.cmsServed(s, dir, masked),
         lit(0L), col("tf_est")),
       () => denseFp("dense", knnJoinIvfServed(s, dir, IvfLayout.Flat,
         IvfGen.Masked(deadVec), qs, 10)),
       () => fp("media",
-        Multimodal.imageDedupForgottenWith(s, dir, dead),
+        Multimodal.imageDedup(Multimodal.mediaServed(s, dir, masked)),
         col("keep_id"), col("id_sum")),
       () => fp("model",
-        Curation.nbModelRetractedWith(s, dir, dead),
+        Curation.nbModelRetractedWith(s, dir, t.ids(s, dir)),
         col("bucket").cast(LongType), col("w_micro")),
       () => fp("phrase",
         phraseMatchServed(s, dir, masked, PhraseBatch),

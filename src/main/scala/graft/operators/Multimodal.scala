@@ -6,7 +6,8 @@ import org.apache.spark.sql.types._
 
 import graft.functions.MediaFormats
 import graft.queries.Tables.documents
-import graft.operators.Artifacts.{buildGate, readCommitted, scratch}
+import graft.operators.Artifacts.{readCommitted, scratch, storedTable}
+import graft.operators.Ingest.{DocGen, Tombstones}
 
 /** Multimodal-column plumbing (SURVEY.md §2.11): image/audio payloads as
   * `binary` columns with typed metadata, feature extraction as a narrow
@@ -310,9 +311,8 @@ object Multimodal {
     * failure keeps the fresh path's sentinel row pos=-1/phash=0/ok=
     * false so it still reddens any gate it reaches), audio one aHash
     * row per clip. */
-  def ensureMediaHashIndex(s: SparkSession, dir: String): DataFrame = graft.BuildTimer.time {
-    val path = scratch(s, dir, "media_phash_v1")
-    buildGate(s, path) {
+  def ensureMediaHashIndex(s: SparkSession, dir: String): DataFrame =
+    hashTable(s, dir, "_v1") {
       import s.implicits._
       // every row carries src_id — the ORIGINATING document — because a
       // takedown is keyed by the content's source, not the container's
@@ -362,11 +362,13 @@ object Multimodal {
           }
         }).toDF("media_id", "src_id", "modality", "mime", "pos", "phash", "ok")
       img.unionByName(vid).unionByName(aud)
-        .repartition(col("modality"))
-        .write.mode("overwrite").partitionBy("modality").parquet(path)
     }
-    readCommitted(s, path)
-  }
+
+  /** One generation of the hash index, `media_phash<suffix>`,
+    * modality-partitioned. */
+  private def hashTable(s: SparkSession, dir: String, suffix: String)(
+      rows: => DataFrame): DataFrame =
+    storedTable(s, scratch(s, dir, s"media_phash$suffix"), Some("modality"))(rows)
 
   /** Append-batch id offset on the media axis (the DocAppendOffset
     * convention): every `% 101`-th image re-arrives as a CROSS-CONTAINER
@@ -386,26 +388,8 @@ object Multimodal {
   private[graft] val AudioAppendMod: Long = 107L
   private[graft] val AudioAppendOffset: Long = 62000000L
 
-  /** LSM DELTA on the multimodal axis — the arriving batch hashed with
-    * the same ingest kernel and landed as its own generation next to
-    * the base (the text index's DocGen.Appended posture): each `% 101`-th image
-    * re-arrives as a cross-container re-encode (PNG source → BMP copy
-    * and vice versa — every byte differs, the decoded pixels do not),
-    * which is exactly the arriving-duplicate shape a 100 TB media
-    * pipeline must catch: base ∪ delta serving must cluster each copy
-    * with its source WITHOUT re-decoding one byte of the base corpus. */
-  def ensureMediaHashDelta(s: SparkSession, dir: String): DataFrame = graft.BuildTimer.time {
-    val path = scratch(s, dir, "media_phash_delta")
-    buildGate(s, path) {
-      deltaHashKernel(documents(s, dir))
-        .repartition(col("modality"))
-        .write.mode("overwrite").partitionBy("modality").parquet(path)
-    }
-    readCommitted(s, path)
-  }
-
   /** The delta batch's decode+hash INGEST KERNEL over any arriving
-    * `doc_id` frame — batch (ensureMediaHashDelta) and streaming
+    * `doc_id` frame — batch ([[mediaServed]]'s `media_phash_delta`) and streaming
     * (streaming/MediaStream) share this body, so streaming ≡ batch on
     * the media ingest axis is structural. The delta is ONE generation
     * across all modalities (an arriving batch is not modality-siloed):
@@ -455,97 +439,75 @@ object Multimodal {
     img.unionByName(vid).unionByName(aud)
   }
 
-  /** COMPACTION on the multimodal axis: base ∪ delta rewritten as one
-    * merged generation — hashes are container-independent by
-    * construction, so compaction is a pure layout job (16 B/row of
-    * hashes read and written back; zero decode), the same economics as
-    * the IVF-PQ code-table merge. */
-  def compactMediaHashIndex(s: SparkSession, dir: String): DataFrame = graft.BuildTimer.time {
-    val path = scratch(s, dir, "media_phash_compacted")
-    buildGate(s, path) {
-      ensureMediaHashIndex(s, dir)
-        .unionByName(ensureMediaHashDelta(s, dir))
-        .repartition(col("modality"))
-        .write.mode("overwrite").partitionBy("modality").parquet(path)
-    }
-    readCommitted(s, path)
-  }
-
   /** The stored multimodal takedown set (doc-keyed media ids). */
-  def ensureMediaForgetSet(s: SparkSession, dir: String): DataFrame = graft.BuildTimer.time {
-    val path = scratch(s, dir, "media_forget")
-    buildGate(s, path) {
-      documents(s, dir)
-        .filter(col("doc_id") % MediaForgetMod === 0)
-        .select(col("doc_id").as("media_id"))
-        .write.mode("overwrite").parquet(path)
+  def ensureMediaForgetSet(s: SparkSession, dir: String): DataFrame =
+    storedTable(s, scratch(s, dir, "media_forget"))(documents(s, dir)
+      .filter(col("doc_id") % MediaForgetMod === 0)
+      .select(col("doc_id").as("media_id")))
+
+  /** THE served-generation accessor of the stored hash index — the
+    * [[DocGen]] lifecycle on the multimodal axis. Every rewritten
+    * generation lands under its own `media_phash<suffix>` path next to
+    * the frozen base.
+    *
+    *  - Base: `media_phash_v1`.
+    *  - Appended: the base plus `media_phash_delta`, the arriving batch
+    *    hashed by [[deltaHashKernel]]: each `% 101`-th image re-arrives
+    *    as a cross-container re-encode (PNG source → BMP copy and vice
+    *    versa — every byte differs, the decoded pixels do not), plus
+    *    video re-encodes and tagged audio copies — the arriving-
+    *    duplicate shape a 100 TB media pipeline must catch WITHOUT
+    *    re-decoding one byte of the base corpus.
+    *  - Compacted: Appended rewritten as `media_phash_compacted` —
+    *    hashes are container-independent, so compaction is a pure
+    *    layout job (16 B/row read and written back, zero decode).
+    *  - Masked(t): the base minus every row whose SOURCE doc `t`
+    *    retracts — one broadcast anti-join on `src_id`, after the scan
+    *    and before any clustering. A takedown is doc-keyed: a doc's
+    *    video re-encode and tagged audio copy are the same retracted
+    *    content under different bytes, and keying on media_id alone
+    *    would keep serving them. [[Tombstones.Stored]] here is the
+    *    media fixture, [[ensureMediaForgetSet]].
+    *  - Purged(t): Masked rewritten as `media_phash${t.purgedGen}`,
+    *    served mask-free; the purge gates share the forget oracles
+    *    verbatim (masked ≡ purged pinned by one hash). */
+  def mediaServed(s: SparkSession, dir: String, gen: DocGen): DataFrame =
+    gen match {
+      case DocGen.Base => ensureMediaHashIndex(s, dir)
+      case DocGen.Appended => ensureMediaHashIndex(s, dir).unionByName(
+        hashTable(s, dir, "_delta")(deltaHashKernel(documents(s, dir))))
+      case DocGen.Compacted =>
+        hashTable(s, dir, "_compacted")(mediaServed(s, dir, DocGen.Appended))
+      case DocGen.Masked(t) =>
+        val deadSrc = t match {
+          case Tombstones.Stored =>
+            ensureMediaForgetSet(s, dir).select(col("media_id").as("src_id"))
+          case _ => t.ids(s, dir).select(col("doc_id").as("src_id"))
+        }
+        ensureMediaHashIndex(s, dir)
+          .join(broadcast(deadSrc), Seq("src_id"), "left_anti")
+      case DocGen.Purged(t) =>
+        hashTable(s, dir, t.purgedGen(s, dir))(mediaServed(s, dir, DocGen.Masked(t)))
     }
-    readCommitted(s, path)
-  }
 
-  /** Physical PURGE of the stored hash index: gen2 = gen1 minus every
-    * row whose SOURCE doc is tombstoned — all modalities AND all
-    * derived assets at once (a doc's video re-encode and tagged audio
-    * copy are the same retracted content under different bytes; keying
-    * the purge on media_id alone would keep serving them). The purged
-    * serve is mask-free, pinned by sharing the masked oracle verbatim
-    * (the q_bm25_purge convention, 7th axis). */
-  def purgeMediaHashIndex(s: SparkSession, dir: String): DataFrame = graft.BuildTimer.time {
-    val path = scratch(s, dir, "media_phash_gen2")
-    buildGate(s, path) {
-      ensureMediaHashIndex(s, dir)
-        .join(broadcast(ensureMediaForgetSet(s, dir)
-          .select(col("media_id").as("src_id"))),
-          Seq("src_id"), "left_anti")
-        .repartition(col("modality"))
-        .write.mode("overwrite").partitionBy("modality").parquet(path)
-    }
-    readCommitted(s, path)
-  }
+  /** Image dedup over ANY hash-index frame (a [[mediaServed]]
+    * generation, or base ∪ a streamed delta). */
+  def imageDedup(index: DataFrame): DataFrame =
+    imageClusters(index.filter(col("modality") === "image")
+      .select(col("media_id"), col("mime"), col("phash").as("dhash"), col("ok")))
 
-  /** Image dedup over the stored index masked by a CALLER-SUPPLIED
-    * doc-keyed tombstone frame — the composed-takedown entry on the
-    * media axis (q_multimodal_forget's serving body with the set as a
-    * parameter instead of the %20 fixture). The mask keys on src_id, so
-    * derived assets (re-encodes, cross-container copies) of a retracted
-    * doc fall with it. */
-  def imageDedupForgottenWith(s: SparkSession, dir: String,
-      dead: DataFrame): DataFrame =
-    imageClusters(imageRows(maskBySrc(ensureMediaHashIndex(s, dir),
-      dead.select(col("doc_id").as("src_id")))))
+  /** Video-pair dedup over ANY hash-index frame — e.g. base ∪ a delta
+    * landed by the streaming ingest twin ([[graft.streaming.MediaStream]]):
+    * media that arrived VIA A STREAM serve through the identical banded
+    * pair machinery, no batch re-ingest. */
+  def videoDedup(index: DataFrame): DataFrame =
+    videoPairs(index.filter(col("modality") === "video")
+      .select(col("media_id"), col("pos").as("frame"), col("phash").as("dhash")))
 
-  /** [[imageDedupForgottenWith]] on the video surface: the src-keyed
-    * mask drops a retracted doc's clip AND its re-encode (+offset id,
-    * same src_id) before the pair join. */
-  def videoDedupForgottenWith(s: SparkSession, dir: String,
-      dead: DataFrame): DataFrame =
-    videoPairs(videoRows(maskBySrc(ensureMediaHashIndex(s, dir),
-      dead.select(col("doc_id").as("src_id")))))
-
-  /** [[imageDedupForgottenWith]] on the audio surface. */
-  def audioDedupForgottenWith(s: SparkSession, dir: String,
-      dead: DataFrame): DataFrame =
-    audioClusters(audioRows(maskBySrc(ensureMediaHashIndex(s, dir),
-      dead.select(col("doc_id").as("src_id")))))
-
-  /** Video-pair dedup over base ∪ a CALLER-SUPPLIED delta generation —
-    * e.g. one landed by the streaming ingest twin
-    * ([[graft.streaming.MediaStream]]): media that arrived VIA A STREAM
-    * serve through the identical banded pair machinery, no batch
-    * re-ingest (the knnJoinIvfWithDelta posture on the media axis). */
-  def videoDedupAppendedWith(s: SparkSession, dir: String,
-      delta: DataFrame): DataFrame =
-    videoPairs(videoRows(ensureMediaHashIndex(s, dir).unionByName(delta)))
-
-  /** [[videoDedupAppendedWith]] on the audio surface. */
-  def audioDedupAppendedWith(s: SparkSession, dir: String,
-      delta: DataFrame): DataFrame =
-    audioClusters(audioRows(ensureMediaHashIndex(s, dir).unionByName(delta)))
-
-  /** The takedown mask on ANY index generation: one broadcast anti-join
-    * on the SOURCE key, after the scan and before any clustering. */
-  private[graft] def maskBySrc(index: DataFrame, deadSrc: DataFrame): DataFrame =
-    index.join(broadcast(deadSrc.select("src_id")), Seq("src_id"), "left_anti")
+  /** Audio dedup over ANY hash-index frame. */
+  def audioDedup(index: DataFrame): DataFrame =
+    audioClusters(index.filter(col("modality") === "audio")
+      .select(col("media_id"), col("phash").as("ahash"), col("ok")))
 
   /** Image-dedup clustering over ANY (media_id, mime, dhash, ok) frame
     * — freshly decoded or read from the stored index. */
@@ -595,21 +557,6 @@ object Multimodal {
         sum("media_id").as("id_sum"),
         min(col("ok").cast(IntegerType)).cast(BooleanType).as("all_ok"))
       .orderBy("ahash")
-
-  /** ANY index generation's image rows in [[imageClusters]]' shape. */
-  private[graft] def imageRows(index: DataFrame): DataFrame =
-    index.filter(col("modality") === "image")
-      .select(col("media_id"), col("mime"),
-        col("phash").as("dhash"), col("ok"))
-
-  private[graft] def videoRows(index: DataFrame): DataFrame =
-    index.filter(col("modality") === "video")
-      .select(col("media_id"), col("pos").as("frame"),
-        col("phash").as("dhash"))
-
-  private[graft] def audioRows(index: DataFrame): DataFrame =
-    index.filter(col("modality") === "audio")
-      .select(col("media_id"), col("phash").as("ahash"), col("ok"))
 
   /** This module's share of the driver-visible gate surface —
     * bump WITH any gate added here (RegistrySpec sums the
@@ -746,21 +693,20 @@ object Multimodal {
     // twin's formula-replay oracle VERBATIM, so one hash pins
     // stored-index serving ≡ decode-and-hash end to end
     "q_image_dedup_stored" -> ((s, dir) =>
-      imageClusters(imageRows(ensureMediaHashIndex(s, dir)))),
+      imageDedup(mediaServed(s, dir, DocGen.Base))),
     "q_video_dedup_stored" -> ((s, dir) =>
-      videoPairs(videoRows(ensureMediaHashIndex(s, dir)))),
+      videoDedup(mediaServed(s, dir, DocGen.Base))),
     "q_audio_dedup_stored" -> ((s, dir) =>
-      audioClusters(audioRows(ensureMediaHashIndex(s, dir)))),
+      audioDedup(mediaServed(s, dir, DocGen.Base))),
 
     // LSM on the multimodal axis: base ∪ delta serving must cluster
     // every arriving cross-container re-encode with its already-indexed
     // source — no base re-decode (the hashes are stored); compaction
     // shares the append oracle VERBATIM (merged ≡ union, one hash)
     "q_image_dedup_append" -> ((s, dir) =>
-      imageClusters(imageRows(ensureMediaHashIndex(s, dir)
-        .unionByName(ensureMediaHashDelta(s, dir))))),
+      imageDedup(mediaServed(s, dir, DocGen.Appended))),
     "q_image_dedup_compact" -> ((s, dir) =>
-      imageClusters(imageRows(compactMediaHashIndex(s, dir)))),
+      imageDedup(mediaServed(s, dir, DocGen.Compacted))),
 
     // deletion on the multimodal axis — the matrix's SEVENTH axis: the
     // takedown set masks the stored index by a SOURCE-keyed anti-join
@@ -769,32 +715,28 @@ object Multimodal {
     // with it); the oracle replays image dedup over the REDUCED corpus,
     // so the hash pins the mask semantics
     "q_multimodal_forget" -> ((s, dir) =>
-      imageClusters(imageRows(maskBySrc(ensureMediaHashIndex(s, dir),
-        ensureMediaForgetSet(s, dir)
-          .select(col("media_id").as("src_id")))))),
+      imageDedup(mediaServed(s, dir, DocGen.Masked(Tombstones.Stored)))),
 
-    // physical purge: gen2 = gen1 minus tombstones (every modality —
+    // physical purge: base minus tombstones (every modality —
     // a takedown is doc-keyed), served MASK-FREE and sharing the
     // forget oracle verbatim (masked ≡ purged pinned by one hash)
     "q_multimodal_purge" -> ((s, dir) =>
-      imageClusters(imageRows(purgeMediaHashIndex(s, dir)))),
+      imageDedup(mediaServed(s, dir, DocGen.Purged(Tombstones.Stored)))),
 
     // deletion gate-checked on the OTHER two media surfaces (the purge
     // physically drops every modality; these pin that the video pair
     // set and audio clusters actually shrink to the reduced corpus —
     // a retracted doc's re-encode falls with it via the src_id key):
-    // forget = src-keyed mask on gen1, purge = mask-free gen2 serve
+    // forget = src-keyed mask on the base, purge = mask-free serve
     // sharing the forget oracle verbatim
     "q_video_dedup_forget" -> ((s, dir) =>
-      videoDedupForgottenWith(s, dir, ensureMediaForgetSet(s, dir)
-        .select(col("media_id").as("doc_id")))),
+      videoDedup(mediaServed(s, dir, DocGen.Masked(Tombstones.Stored)))),
     "q_video_dedup_purge" -> ((s, dir) =>
-      videoPairs(videoRows(purgeMediaHashIndex(s, dir)))),
+      videoDedup(mediaServed(s, dir, DocGen.Purged(Tombstones.Stored)))),
     "q_audio_dedup_forget" -> ((s, dir) =>
-      audioDedupForgottenWith(s, dir, ensureMediaForgetSet(s, dir)
-        .select(col("media_id").as("doc_id")))),
+      audioDedup(mediaServed(s, dir, DocGen.Masked(Tombstones.Stored)))),
     "q_audio_dedup_purge" -> ((s, dir) =>
-      audioClusters(audioRows(purgeMediaHashIndex(s, dir)))),
+      audioDedup(mediaServed(s, dir, DocGen.Purged(Tombstones.Stored)))),
 
     // LSM append/compact closed across ALL modalities (r13 verdict #3):
     // a video re-encode and a tagged audio copy of STORED sources land
@@ -804,15 +746,13 @@ object Multimodal {
     // bytes were ever decoded, once, in the delta build). Compaction
     // shares the append oracle VERBATIM (merged ≡ union, one hash).
     "q_video_dedup_append" -> ((s, dir) =>
-      videoPairs(videoRows(ensureMediaHashIndex(s, dir)
-        .unionByName(ensureMediaHashDelta(s, dir))))),
+      videoDedup(mediaServed(s, dir, DocGen.Appended))),
     "q_video_dedup_compact" -> ((s, dir) =>
-      videoPairs(videoRows(compactMediaHashIndex(s, dir)))),
+      videoDedup(mediaServed(s, dir, DocGen.Compacted))),
     "q_audio_dedup_append" -> ((s, dir) =>
-      audioClusters(audioRows(ensureMediaHashIndex(s, dir)
-        .unionByName(ensureMediaHashDelta(s, dir))))),
+      audioDedup(mediaServed(s, dir, DocGen.Appended))),
     "q_audio_dedup_compact" -> ((s, dir) =>
-      audioClusters(audioRows(compactMediaHashIndex(s, dir)))),
+      audioDedup(mediaServed(s, dir, DocGen.Compacted))),
 
     // CROSS-VIDEO near-dup — the multimodal analog of q_image_dedup,
     // composed from the two existing pieces the way a 100 TB video

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.CorpusStats
+import graft.operators.Ingest.{DocGen, Tombstones}
 
 /** Corpus-stats tests: the Count-Min guarantees (over-estimate only,
   * cell-wise mergeability) and PMI structure beyond what the corpus
@@ -53,7 +54,7 @@ class CorpusStatsSpec extends SparkSpecBase {
 
   test("stored CMS merge: estimates dominate exact augmented counts; absent probe kept") {
     val dir = TestSpark.Sf0001
-    val est = CorpusStats.cmsEstimateStored(spark, dir)
+    val est = CorpusStats.cmsServed(spark, dir, DocGen.Appended)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(est.keySet == CorpusStats.CmsProbeTerms.toSet,
       "every probe must survive the left-joined estimate, absent ones included")
@@ -79,7 +80,8 @@ class CorpusStatsSpec extends SparkSpecBase {
 
   test("CMS deletion is exact at the CELL level: purged gen2 == fresh build over the reduced corpus") {
     val dir = TestSpark.Sf0001
-    val purged = CorpusStats.ensureCmsPurged(spark, dir)
+    val purged = CorpusStats.sketchCells(spark, dir, CorpusStats.CellSketch.Cms,
+      DocGen.Purged(Tombstones.Stored)).head
     val fresh = CorpusStats.cmsBuild(
       graft.queries.Tables.documents(spark, dir)
         .filter(!(col("doc_id") % graft.operators.Ingest.ForgetMod ===
@@ -96,7 +98,8 @@ class CorpusStatsSpec extends SparkSpecBase {
 
   test("histogram deletion is exact at the cell level, shard axis preserved") {
     val dir = TestSpark.Sf0001
-    val purged = CorpusStats.ensureHistPurged(spark, dir)
+    val purged = CorpusStats.sketchCells(spark, dir, CorpusStats.CellSketch.Hist,
+      DocGen.Purged(Tombstones.Stored)).head
     val fresh = CorpusStats.histBuild(
       graft.queries.Tables.documents(spark, dir)
         .filter(!(col("doc_id") % graft.operators.Ingest.ForgetMod ===
@@ -112,9 +115,11 @@ class CorpusStatsSpec extends SparkSpecBase {
       .filter(col("doc_id") % graft.operators.Ingest.ForgetMod ===
         graft.operators.Ingest.ForgetRem)
       .select("doc_id")
-    val viaIds = CorpusStats.cmsEstimateForgottenWith(spark, dir, dead)
+    val viaIds = CorpusStats.cmsServed(spark, dir,
+      DocGen.Masked(Tombstones.Supplied(dead)))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq.sorted
-    val viaArtifact = CorpusStats.cmsEstimateForgotten(spark, dir)
+    val viaArtifact = CorpusStats.cmsServed(spark, dir,
+      DocGen.Masked(Tombstones.Stored))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq.sorted
     assert(viaIds == viaArtifact,
       "id-frame retraction and stored-artifact retraction must agree")

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.operators.Events
+import graft.operators.Ingest.{DocGen, Tombstones}
 import graft.streaming.EventStream
 
 /** Streaming/batch equivalence: the Structured Streaming pipelines must
@@ -99,8 +100,8 @@ class EventStreamSpec extends SparkSpecBase {
         .collect().map(_.toSeq).toSeq
     val streamedTable = spark.table("media_ingest_test")
     val streamed = canon(streamedTable)
-    val batch = canon(graft.operators.Multimodal
-      .ensureMediaHashDelta(spark, TestSpark.Sf0001))
+    val batch = canon(graft.operators.Multimodal.deltaHashKernel(
+      graft.queries.Tables.documents(spark, TestSpark.Sf0001)))
     assert(streamed.nonEmpty && streamed == batch,
       "per-micro-batch decode+hash must equal the batch delta build row-for-row")
     assert(streamed.map(_(2)).toSet == Set("image", "video", "audio"),
@@ -108,14 +109,15 @@ class EventStreamSpec extends SparkSpecBase {
     // and the STREAMED rows serve dedup: base ∪ streamed-delta through
     // the same pair/cluster machinery equals the stored-delta gates
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
-    val vServed = rows(graft.operators.Multimodal.videoDedupAppendedWith(
-      spark, TestSpark.Sf0001, streamedTable.select(cols.map(col): _*)))
+    val withStreamed = graft.operators.Multimodal
+      .ensureMediaHashIndex(spark, TestSpark.Sf0001)
+      .unionByName(streamedTable.select(cols.map(col): _*))
+    val vServed = rows(graft.operators.Multimodal.videoDedup(withStreamed))
     val vStored = rows(SparkEntry.queries("q_video_dedup_append")(
       spark, TestSpark.Sf0001))
     assert(vServed.nonEmpty && vServed == vStored,
       "stream-landed video re-encodes must serve exactly like the stored delta generation")
-    val aServed = rows(graft.operators.Multimodal.audioDedupAppendedWith(
-      spark, TestSpark.Sf0001, streamedTable.select(cols.map(col): _*)))
+    val aServed = rows(graft.operators.Multimodal.audioDedup(withStreamed))
     val aStored = rows(SparkEntry.queries("q_audio_dedup_append")(
       spark, TestSpark.Sf0001))
     assert(aServed.nonEmpty && aServed == aStored,
@@ -166,11 +168,11 @@ class EventStreamSpec extends SparkSpecBase {
       spark, s"$dir/landing", schema, s"$dir/tomb", s"$dir/ckpt")
       .awaitTermination()
     val dead = spark.read.parquet(s"$dir/tomb")
-    val streamed = graft.operators.CorpusStats
-      .cmsEstimateForgottenWith(spark, TestSpark.Sf0001, dead)
+    val streamed = graft.operators.CorpusStats.cmsServed(spark, TestSpark.Sf0001,
+        DocGen.Masked(Tombstones.Supplied(dead)))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq.sorted
-    val artifact = graft.operators.CorpusStats
-      .cmsEstimateForgotten(spark, TestSpark.Sf0001)
+    val artifact = graft.operators.CorpusStats.cmsServed(spark, TestSpark.Sf0001,
+        DocGen.Masked(Tombstones.Stored))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq.sorted
     assert(streamed == artifact,
       "stream-accumulated retraction must subtract exactly like the stored retraction sketch")
@@ -507,10 +509,11 @@ class EventStreamSpec extends SparkSpecBase {
 
   test("streamed media takedown ≡ batch on ALL three media surfaces, derived assets included") {
     // r13 verdict #5: the MEDIA axis gets the streaming ≡ batch pin by
-    // name — maskBySrc over a ForgetStream-accumulated set, including a
-    // DUPLICATE retraction of a doc that carries derived assets (every
-    // %20 doc is %4==0, so it ships a shifted video re-encode; its
-    // image/audio/video rows AND the re-encode must all fall)
+    // name — the src-keyed Masked generation over a ForgetStream-
+    // accumulated set, including a DUPLICATE retraction of a doc that
+    // carries derived assets (every %20 doc is %4==0, so it ships a
+    // shifted video re-encode; its image/audio/video rows AND the
+    // re-encode must all fall)
     val dir = java.nio.file.Files.createTempDirectory("graft_media_takedown").toString
     import testImplicits._
     val fixture = graft.operators.Multimodal
@@ -535,14 +538,14 @@ class EventStreamSpec extends SparkSpecBase {
     val fx = graft.operators.Multimodal
       .ensureMediaForgetSet(spark, TestSpark.Sf0001)
       .select(col("media_id").as("doc_id"))
+    import graft.operators.Multimodal.{audioDedup, imageDedup, mediaServed, videoDedup}
+    def masked(dead: org.apache.spark.sql.DataFrame) =
+      mediaServed(spark, TestSpark.Sf0001, DocGen.Masked(Tombstones.Supplied(dead)))
     for ((name, serve) <- Seq[(String,
         org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
-      ("image", graft.operators.Multimodal
-        .imageDedupForgottenWith(spark, TestSpark.Sf0001, _)),
-      ("video", graft.operators.Multimodal
-        .videoDedupForgottenWith(spark, TestSpark.Sf0001, _)),
-      ("audio", graft.operators.Multimodal
-        .audioDedupForgottenWith(spark, TestSpark.Sf0001, _)))) {
+      ("image", d => imageDedup(masked(d))),
+      ("video", d => videoDedup(masked(d))),
+      ("audio", d => audioDedup(masked(d))))) {
       val streamed = rows(serve(streamedSet))
       val batch = rows(serve(fx))
       assert(streamed.nonEmpty && streamed == batch,
@@ -551,8 +554,7 @@ class EventStreamSpec extends SparkSpecBase {
     // the derived-asset kill is visible, not vacuous: the retracted
     // doc's re-encode identity appears in NO surviving video pair
     val copyId = withDerived + graft.operators.Multimodal.VideoDupOffset
-    val survivors = rows(graft.operators.Multimodal
-      .videoDedupForgottenWith(spark, TestSpark.Sf0001, streamedSet))
+    val survivors = rows(videoDedup(masked(streamedSet)))
       .flatMap(r => Seq(r(0), r(1)))
     assert(!survivors.contains(withDerived) && !survivors.contains(copyId),
       s"retracted doc $withDerived or its re-encode $copyId survived the streamed mask")

@@ -556,7 +556,8 @@ class MultimodalSpec extends SparkSpecBase {
     val s = spark
     import org.apache.spark.sql.functions._
     val base = graft.operators.Multimodal.ensureMediaHashIndex(s, TestSpark.Sf0001)
-    val delta = graft.operators.Multimodal.ensureMediaHashDelta(s, TestSpark.Sf0001)
+    val delta = graft.operators.Multimodal.deltaHashKernel(
+      graft.queries.Tables.documents(s, TestSpark.Sf0001))
     val copies = delta.filter(col("modality") === "image").collect()
     assert(copies.nonEmpty, "the % 101 image batch must be non-empty at sf0.001")
     // every delta row is a cross-container re-encode: its hash equals
@@ -591,7 +592,8 @@ class MultimodalSpec extends SparkSpecBase {
     val s = spark
     import org.apache.spark.sql.functions._
     val base = graft.operators.Multimodal.ensureMediaHashIndex(s, TestSpark.Sf0001)
-    val delta = graft.operators.Multimodal.ensureMediaHashDelta(s, TestSpark.Sf0001)
+    val delta = graft.operators.Multimodal.deltaHashKernel(
+      graft.queries.Tables.documents(s, TestSpark.Sf0001))
     val vidCopies = delta.filter(col("modality") === "video").collect()
     assert(vidCopies.nonEmpty,
       s"the % ${graft.operators.Multimodal.VideoAppendMod} video batch must be non-empty at sf0.001")
@@ -649,16 +651,17 @@ class MultimodalSpec extends SparkSpecBase {
       "every retracted doc must carry at least its video re-encode in gen1")
     // the purged generation holds NO row of ANY modality or identity
     // whose source is retracted
-    val gen2 = graft.operators.Multimodal.purgeMediaHashIndex(s, TestSpark.Sf0001)
+    val gen2 = graft.operators.Multimodal.mediaServed(s, TestSpark.Sf0001,
+      graft.operators.Ingest.DocGen.Purged(graft.operators.Ingest.Tombstones.Stored))
     assert(gen2.filter(col("src_id").isin(deadIds: _*)).count() == 0,
       "a retracted source survived the purge under a derived identity")
     // the append delta's cross-container copies obey the same mask
-    val delta = graft.operators.Multimodal.ensureMediaHashDelta(s, TestSpark.Sf0001)
+    val delta = graft.operators.Multimodal.deltaHashKernel(
+      graft.queries.Tables.documents(s, TestSpark.Sf0001))
     assert(delta.filter(col("src_id").isin(deadIds: _*)).count() > 0,
       "fixture must include a delta copy of a retracted doc (doc 0)")
-    val masked = graft.operators.Multimodal.maskBySrc(
-      gen1.unionByName(delta),
-      dead.select(col("media_id").as("src_id")))
+    val masked = gen1.unionByName(delta).join(
+      dead.select(col("media_id").as("src_id")), Seq("src_id"), "left_anti")
     assert(masked.filter(col("src_id").isin(deadIds: _*)).count() == 0,
       "the serve-time mask must cover the delta's copies too")
   }

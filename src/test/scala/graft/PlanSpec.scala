@@ -108,9 +108,8 @@ class PlanSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
   }
 
   test("stored-sketch heavy hitters serve from the CMS artifacts alone") {
-    graft.operators.CorpusStats.ensureCmsArtifacts(spark, TestSpark.Sf0001)
-    val df = graft.operators.CorpusStats.cmsEstimateStored(
-      spark, TestSpark.Sf0001)
+    val df = graft.operators.CorpusStats.cmsServed(
+      spark, TestSpark.Sf0001, DocGen.Appended)
     val p = plan(df)
     // warm path = the two stored D×W sketches cell-merged: no corpus
     // scan, no tokenizer, and the merge side rides a broadcast join
@@ -308,21 +307,22 @@ class PlanSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
   }
 
   test("stats-axis deletion: forgotten serve subtracts stored cells; purged serve reads gen2 alone") {
-    val fdf = graft.operators.CorpusStats.cmsEstimateForgotten(spark, TestSpark.Sf0001)
+    val fdf = graft.operators.CorpusStats.cmsServed(spark, TestSpark.Sf0001,
+      DocGen.Masked(Tombstones.Stored))
     val fp = plan(fdf)
     assert(reads(fdf, "cms_base") && reads(fdf, "cms_retract"),
       s"forgotten serve must read base + retraction sketches (and nothing wider):\n$fp")
     assert(!fp.contains("text#"),
       s"stats deletion must never re-tokenize the corpus at serve time:\n$fp")
-    graft.operators.CorpusStats.ensureCmsPurged(spark, TestSpark.Sf0001)
-    val pdf = graft.operators.CorpusStats.cmsEstimatePurged(spark, TestSpark.Sf0001)
+    val pdf = graft.operators.CorpusStats.cmsServed(spark, TestSpark.Sf0001,
+      DocGen.Purged(Tombstones.Stored))
     val pp = plan(pdf)
-    assert(reads(pdf, "cms_gen2") && !reads(pdf, "cms_base") && !reads(pdf, "cms_retract"),
+    assert(reads(pdf, "cms_purged") && !reads(pdf, "cms_base") && !reads(pdf, "cms_retract"),
       s"purged serve must read the rewritten generation only:\n$pp")
-    graft.operators.CorpusStats.ensureHistPurged(spark, TestSpark.Sf0001)
-    val qdf = graft.operators.CorpusStats.histQuantilesPurged(spark, TestSpark.Sf0001)
+    val qdf = graft.operators.CorpusStats.histServed(spark, TestSpark.Sf0001,
+      DocGen.Purged(Tombstones.Stored))
     val qp = plan(qdf)
-    assert(reads(qdf, "hist_gen2") && !reads(qdf, "hist_base") && !reads(qdf, "hist_retract"),
+    assert(reads(qdf, "hist_purged") && !reads(qdf, "hist_base") && !reads(qdf, "hist_retract"),
       s"purged quantile serve must read the rewritten generation only:\n$qp")
   }
 
@@ -768,10 +768,9 @@ class PlanSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     val fp = plan(fdf)
     assert(fp.contains("LeftAnti") && reads(fdf, "media_forget"),
       s"the takedown mask is a broadcast anti-join on the stored set:\n$fp".take(4000))
-    graft.operators.Multimodal.purgeMediaHashIndex(spark, TestSpark.Sf0001)
     val pdf = SparkEntry.queries("q_multimodal_purge")(spark, TestSpark.Sf0001)
     val pp = plan(pdf)
-    assert(reads(pdf, "media_phash_gen2") && !reads(pdf, "media_phash_v1"),
+    assert(reads(pdf, "media_phash_purged") && !reads(pdf, "media_phash_v1"),
       s"purged serve must read the rewritten generation only:\n$pp".take(4000))
     assert(!pp.contains("LeftAnti"),
       s"physical purge must leave no serve-time mask:\n$pp".take(4000))
@@ -782,13 +781,10 @@ class PlanSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     // the delta generation must cluster against the STORED base with no
     // base re-decode — the serve is 16 B/row hash reads of BOTH
     // marker-committed generations. (The video serve's pair join rides
-    // a localCheckpoint, so the pin reads the pre-checkpoint input.)
-    graft.operators.Multimodal.ensureMediaHashIndex(spark, TestSpark.Sf0001)
-    graft.operators.Multimodal.ensureMediaHashDelta(spark, TestSpark.Sf0001)
-    val vdf = graft.operators.Multimodal.videoRows(
-      graft.operators.Multimodal.ensureMediaHashIndex(spark, TestSpark.Sf0001)
-        .unionByName(graft.operators.Multimodal.ensureMediaHashDelta(
-          spark, TestSpark.Sf0001)))
+    // a localCheckpoint, so the pin reads the pre-checkpoint input: the
+    // served generation's video rows.)
+    val vdf = graft.operators.Multimodal.mediaServed(
+      spark, TestSpark.Sf0001, DocGen.Appended).filter(col("modality") === "video")
     val pv = plan(vdf)
     assert(reads(vdf, "media_phash_v1") && reads(vdf, "media_phash_delta"),
       s"video append serve must read base AND delta generations:\n$pv".take(4000))

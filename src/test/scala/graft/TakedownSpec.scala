@@ -28,17 +28,15 @@ class TakedownSpec extends SparkSpecBase {
     * declared module MUST be mapped here (and its axis declared +
     * composed), or the reflection test below names it. Methods serving
     * the same stored surface share an axis (the media modalities; the
-    * trained-artifact family on 'model'). The bm25, phrase and sketch
-    * axes have no per-family entry point: they serve through their
-    * family accessor (`Ingest.bm25Served`, `phraseMatchServed`,
-    * `nearDupServed`) with a `DocGen.Masked(Tombstones.Supplied(…))`
-    * generation, as the dense and quantized axes serve through
-    * `Ingest.knnJoinIvfServed` with an `IvfGen.Masked` generation. */
+    * trained-artifact family on 'model'). The bm25, phrase, sketch,
+    * cms and media axes have no per-family entry point: they serve
+    * through their family accessor (`Ingest.bm25Served`,
+    * `phraseMatchServed`, `nearDupServed`, `CorpusStats.cmsServed`,
+    * `Multimodal.mediaServed`) with a
+    * `DocGen.Masked(Tombstones.Supplied(…))` generation, as the dense
+    * and quantized axes serve through `Ingest.knnJoinIvfServed` with an
+    * `IvfGen.Masked` generation. */
   private val MethodAxis: Map[String, String] = Map(
-    "cmsEstimateForgottenWith" -> "cms",
-    "imageDedupForgottenWith" -> "media",
-    "videoDedupForgottenWith" -> "media",
-    "audioDedupForgottenWith" -> "media",
     "nbModelRetractedWith" -> "model",
     "nbFrozenModelRetractedWith" -> "model",
     "nbClassifyRetractedWith" -> "model",
