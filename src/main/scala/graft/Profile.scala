@@ -238,39 +238,16 @@ object Profile {
       // per-axis serve breakdown of the composed takedown (which of the
       // nine axis sub-serves carries q_takedown_e2e's seconds?)
       case "takedown_phases" =>
-        import org.apache.spark.sql.functions._
         import graft.operators.Ingest
-        val t = Ingest.Tombstones.Supplied(Ingest.ensureForgetSet(spark, sfDir)._1)
-        val masked = Ingest.DocGen.Masked(t)
-        val deadVec = t.ids(spark, sfDir).select(col("doc_id").as("vec_id"))
-        val qs = graft.queries.Tables.embeddings(spark, sfDir)
-          .join(broadcast(deadVec), "vec_id")
-          .orderBy("vec_id").limit(8)
-          .select((col("vec_id") + lit(70000000L)).as("q_id"),
-            col("embedding").as("q_emb"))
-          .localCheckpoint()
         def run(label: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
           time(s"axis:$label warm-build")(df.count())
           val built = time(s"axis:$label construct")(df)
           time(s"axis:$label count")(built.count())
         }
-        run("bm25")(Ingest.bm25Served(
-          spark, sfDir, masked, Seq("table", "scan", "join"), 10))
-        run("cms")(graft.operators.CorpusStats.cmsServed(spark, sfDir, masked))
-        run("dense")(Ingest.knnJoinIvfServed(spark, sfDir,
-          Ingest.IvfLayout.Flat, Ingest.IvfGen.Masked(deadVec), qs, 10))
-        run("media")(graft.operators.Multimodal.imageDedup(
-          graft.operators.Multimodal.mediaServed(spark, sfDir, masked)))
-        run("model")(graft.operators.Curation.nbModelRetractedWith(
-          spark, sfDir, t.ids(spark, sfDir)))
-        run("phrase")(Ingest.phraseMatchServed(
-          spark, sfDir, masked, Ingest.PhraseBatch))
-        run("qpq")(Ingest.knnJoinIvfServed(spark, sfDir,
-          Ingest.IvfLayout.pq(spark, sfDir), Ingest.IvfGen.Masked(deadVec), qs, 10))
-        run("qsq")(Ingest.knnJoinIvfServed(spark, sfDir,
-          Ingest.IvfLayout.sq8(spark, sfDir), Ingest.IvfGen.Masked(deadVec), qs, 10))
-        run("sketch")(Ingest.nearDupServed(spark, sfDir, masked))
-        run("e2e-composed")(graft.operators.Ingest.takedownE2e(spark, sfDir))
+        val t = Ingest.Tombstones.Supplied(Ingest.ensureForgetSet(spark, sfDir)._1)
+        for ((axis, serve) <- Ingest.takedownServes(spark, sfDir, t))
+          run(axis)(serve())
+        run("e2e-composed")(Ingest.takedownE2e(spark, sfDir))
       // round/edge breakdown of the dup-cluster contraction
       case "cc_phases" =>
         import org.apache.spark.sql.functions._

@@ -154,44 +154,49 @@ object CorpusStats {
     *    associative, so merged-from-parts IS the fresh sketch over
     *    base ∪ batch — the merge gates' oracles replay the fresh build
     *    over the augmented corpus).
-    *  - Masked(t): base and the NEGATED retraction sketch of `t` — the
-    *    stored base is untouched (readers keep their snapshot; the
-    *    takedown is effective the instant the retraction commits). The
-    *    retraction tokenizes ONLY the retracted documents, never the
-    *    corpus: stored as `<stem>_retract` for [[Tombstones.Stored]],
-    *    built from [[Tombstones.docs]] at serve time for a supplied
-    *    set. The forget gates' oracles replay a fresh sketch over the
-    *    reduced corpus, so their hashes ARE the linearity proof.
-    *  - Purged(t): one side, `<stem>${t.purgedGen}` — Masked's merged
-    *    non-zero cells written as a new generation from STORED CELLS
-    *    alone (zero corpus I/O: the cheapest purge in the engine, which
-    *    is what linearity buys). The purge gates share the forget
-    *    oracles verbatim, so masked ≡ purged is pinned by one hash.
-    *  - Compacted: rejected — a sketch pair is already one bounded
-    *    table per generation. */
+    *  - Masked(t, over): `over`'s sides and the NEGATED retraction
+    *    sketch of `t` — the stored sides are untouched (readers keep
+    *    their snapshot; the takedown is effective the instant the
+    *    retraction commits). The retraction tokenizes ONLY the retracted
+    *    documents, never the corpus — every copy the chain holds under
+    *    the retracted ids ([[Tombstones.docsIn]]): stored as
+    *    `<stem>_retract` for [[Tombstones.Stored]] on the base chain,
+    *    built at serve time otherwise. The forget gates' oracles replay
+    *    a fresh sketch over the reduced corpus, so their hashes ARE the
+    *    linearity proof.
+    *  - Purged(t, over): one side — Masked's merged non-zero cells
+    *    written as a new generation from STORED CELLS alone (zero corpus
+    *    I/O: the cheapest purge in the engine, which is what linearity
+    *    buys). The purge gates share the forget oracles verbatim, so
+    *    masked ≡ purged is pinned by one hash.
+    *  - Compacted, Retrained: rejected — a sketch pair is already one
+    *    bounded table per generation. */
   def sketchCells(s: SparkSession, dir: String, sk: CellSketch,
       gen: DocGen): Seq[DataFrame] = {
     lazy val (base, delta) = ensureSketchPair(s, dir, sk.stem, sk.build)
     gen match {
       case DocGen.Base => Seq(base)
       case DocGen.Appended => Seq(base, delta)
-      case DocGen.Masked(t) =>
-        Seq(base, retraction(s, dir, sk, t)
-          .select(sk.keys.map(col) :+ (-col(sk.mass)).as(sk.mass): _*))
-      case DocGen.Purged(t) =>
-        Seq(storedTable(s, scratch(s, dir, s"${sk.stem}${t.purgedGen(s, dir)}"))(
-          merged(sk, sketchCells(s, dir, sk, DocGen.Masked(t)))))
-      case DocGen.Compacted => throw new IllegalArgumentException(
+      case DocGen.Masked(t, over) =>
+        sketchCells(s, dir, sk, over) :+ retraction(s, dir, sk, t, over)
+          .select(sk.keys.map(col) :+ (-col(sk.mass)).as(sk.mass): _*)
+      case DocGen.Purged(t, over) =>
+        Seq(storedTable(s, scratch(s, dir,
+            s"${sk.stem}${DocGen.purgedSuffix(s, dir, t, over)}"))(
+          merged(sk, sketchCells(s, dir, sk, DocGen.Masked(t, over)))))
+      case _ => throw new IllegalArgumentException(
         s"the ${sk.stem} sketch has no $gen generation")
     }
   }
 
-  /** The sketch of `t`'s retracted documents. */
+  /** The sketch of `t`'s retracted rows of chain `over` (the corpus,
+    * plus the append batch as it is once the chain has it). */
   private def retraction(s: SparkSession, dir: String, sk: CellSketch,
-      t: Tombstones): DataFrame = t match {
-    case Tombstones.Stored =>
+      t: Tombstones, over: DocGen): DataFrame = (t, over) match {
+    case (Tombstones.Stored, DocGen.Base) =>
       storedTable(s, scratch(s, dir, s"${sk.stem}_retract"))(sk.build(t.docs(s, dir)))
-    case _ => sk.build(t.docs(s, dir))
+    case _ => sk.build(t.docsIn(s, dir, over,
+      documents(s, dir).unionByName(Ingest.appendedDocs(s, dir))))
   }
 
   /** Signed sides summed cell-wise — one bounded groupBy. Cells whose
@@ -250,7 +255,7 @@ object CorpusStats {
         row0.agg(coalesce(sum("cnt"), lit(0L))).head().getLong(0))
     }
     val live = mass(ensureSketchPair(s, dir, sk.stem, sk.build)._1)
-    val dead = mass(retraction(s, dir, sk, t))
+    val dead = mass(retraction(s, dir, sk, t, DocGen.Base))
     val purge = (if (live == 0L) 0.0 else dead.toDouble / live) >= theta
     (cmsServed(s, dir, if (purge) DocGen.Purged(t) else DocGen.Masked(t),
       probeTerms), purge)

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 
 import graft.queries.Tables.documents
 import graft.operators.Artifacts.{buildGate, readCommitted, scratch}
+import graft.operators.Ingest.Tombstones
 
 /** Dataset-curation operators (SURVEY.md §2.11): the reproducibility
   * layer of a training-data pipeline — deterministic splits, PII
@@ -882,27 +883,19 @@ object Curation {
   // docs), the oracle retrains FROM SCRATCH over the surviving corpus,
   // and the hash pins CDC-subtracted ≡ fresh-retrained exactly.
 
-  /** Signed NEGATIVE sufficient statistics of a retraction set —
-    * tokenizes ONLY the retracted documents (bounded by the tombstone
-    * size, never a corpus re-scan); the deletion twin of
-    * [[nbDiffCounts]]'s leaving half, from ANY tombstone frame. */
-  private def nbDeadCounts(s: SparkSession, dir: String,
-      dead: DataFrame): DataFrame =
-    nbCounts(documents(s, dir)
-        .join(broadcast(dead.select("doc_id")), Seq("doc_id")),
-      col("lang") === "en")
-      .select(col("bucket"), (-col("c_t")).as("c_t"),
-        (-col("c_b")).as("c_b"))
-
   /** The RETRACTED model generation: stored v1 counts minus the
-    * retraction's counts, weight readout recomputed. Counts are linear,
-    * so this equals a from-scratch retrain over the surviving corpus
-    * exactly — the ninth takedown axis: after this, a retracted doc's
-    * tokens influence NO weight in the serving model. */
-  def nbModelRetractedWith(s: SparkSession, dir: String,
-      dead: DataFrame): DataFrame =
+    * retraction's signed NEGATIVE counts, weight readout recomputed.
+    * The negative half tokenizes ONLY the retracted documents (bounded
+    * by the tombstone size, never a corpus re-scan; the deletion twin
+    * of [[nbDiffCounts]]'s leaving half). Counts are linear, so this
+    * equals a from-scratch retrain over the surviving corpus exactly —
+    * the ninth takedown axis: after this, a retracted doc's tokens
+    * influence NO weight in the serving model. */
+  def nbModelRetracted(s: SparkSession, dir: String,
+      t: Tombstones): DataFrame =
     nbWeights(ensureNbCounts(s, dir)
-      .unionByName(nbDeadCounts(s, dir, dead))
+      .unionByName(nbCounts(t.docs(s, dir), col("lang") === "en")
+        .select(col("bucket"), (-col("c_t")).as("c_t"), (-col("c_b")).as("c_b")))
       .groupBy("bucket")
       .agg(sum("c_t").as("c_t"), sum("c_b").as("c_b"))
       .filter(col("c_t") =!= 0 || col("c_b") =!= 0))
@@ -914,63 +907,51 @@ object Curation {
     * with the prior's class counts corrected by the retraction's own
     * class counts (all halves bounded: ≤ [[NbBuckets]] weight rows, one
     * meta row, one aggregate over the tombstoned docs). Memoized per
-    * (application, tombstone plan) — the lmTables bounded-model-artifact
-    * convention: q_takedown_model, q_takedown_percentile and the
-    * composed takedown's model axis all freeze the SAME retracted
+    * (application, tombstone id plan) — the lmTables bounded-model-
+    * artifact convention: q_takedown_model, q_takedown_percentile and
+    * the composed takedown's model axis all freeze the SAME retracted
     * generation, and re-deriving it per gate re-ran the dead-doc
     * tokenize + three bounded collects each time (optimization r16). */
-  def nbFrozenModelRetractedWith(s: SparkSession, dir: String,
-      dead: DataFrame): (Map[Int, Long], Long, Long) =
-    retractedModelCache.getOrElseUpdate(dead.select("doc_id"),
-      nbFrozenModelRetractedDerived(s, dir, dead))
-
-  /** The raw derivation of [[nbFrozenModelRetractedWith]] (memo source;
-    * spec reference). */
-  private[graft] def nbFrozenModelRetractedDerived(s: SparkSession,
-      dir: String, dead: DataFrame): (Map[Int, Long], Long, Long) = {
-    val rows = nbModelRetractedWith(s, dir, dead)
-      .select("bucket", "c_t", "c_b", "w_micro").collect()
-    val wmap = rows.map(r => r.getInt(0) -> r.getLong(3)).toMap
-    val (ctT, cbT) = (rows.map(_.getLong(1)).sum, rows.map(_.getLong(2)).sum)
-    def micro(c: Long, tot: Long): Long =
-      math.round(math.log((c + 1).toDouble / (tot + NbBuckets).toDouble) * 1e6)
-    val wOov = micro(0L, ctT) - micro(0L, cbT)
-    val en = col("lang") === "en"
-    val deadPrior = documents(s, dir)
-      .join(broadcast(dead.select("doc_id")), Seq("doc_id"))
-      .agg(coalesce(sum(when(en, 1L).otherwise(0L)), lit(0L)),
-        coalesce(sum(when(en, 0L).otherwise(1L)), lit(0L))).head()
-    val meta = ensureNbModel(s, dir)._2.head()
-    val bias = math.round(math.log(
-      (meta.getLong(0) - deadPrior.getLong(0)).toDouble /
-        (meta.getLong(1) - deadPrior.getLong(1)).toDouble) * 1e6)
-    (wmap, wOov, bias)
-  }
-
-  /** The surviving corpus under a tombstone frame. */
-  private def survivors(s: SparkSession, dir: String,
-      dead: DataFrame): DataFrame =
-    documents(s, dir)
-      .join(broadcast(dead.select("doc_id")), Seq("doc_id"), "left_anti")
+  def nbFrozenModelRetracted(s: SparkSession, dir: String,
+      t: Tombstones): (Map[Int, Long], Long, Long) =
+    retractedModelCache.getOrElseUpdate(t.ids(s, dir), {
+      val rows = nbModelRetracted(s, dir, t)
+        .select("bucket", "c_t", "c_b", "w_micro").collect()
+      val wmap = rows.map(r => r.getInt(0) -> r.getLong(3)).toMap
+      val (ctT, cbT) = (rows.map(_.getLong(1)).sum, rows.map(_.getLong(2)).sum)
+      def micro(c: Long, tot: Long): Long =
+        math.round(math.log((c + 1).toDouble / (tot + NbBuckets).toDouble) * 1e6)
+      val wOov = micro(0L, ctT) - micro(0L, cbT)
+      val en = col("lang") === "en"
+      val deadPrior = t.docs(s, dir)
+        .agg(coalesce(sum(when(en, 1L).otherwise(0L)), lit(0L)),
+          coalesce(sum(when(en, 0L).otherwise(1L)), lit(0L))).head()
+      val meta = ensureNbModel(s, dir)._2.head()
+      val bias = math.round(math.log(
+        (meta.getLong(0) - deadPrior.getLong(0)).toDouble /
+          (meta.getLong(1) - deadPrior.getLong(1)).toDouble) * 1e6)
+      (wmap, wOov, bias)
+    })
 
   /** Classification over the survivors from the RETRACTED model — the
     * stateless fold, zero corpus retrain; the oracle retrains from
     * scratch over the surviving corpus and scores the same docs. */
-  def nbClassifyRetractedWith(s: SparkSession, dir: String,
-      dead: DataFrame): DataFrame = {
-    val (wmap, wOov, bias) = nbFrozenModelRetractedWith(s, dir, dead)
-    nbScoreStateless(survivors(s, dir, dead), wmap, wOov, bias)
-      .orderBy("doc_id")
+  def nbClassifyRetracted(s: SparkSession, dir: String,
+      t: Tombstones): DataFrame = {
+    val (wmap, wOov, bias) = nbFrozenModelRetracted(s, dir, t)
+    nbScoreStateless(Ingest.minus(documents(s, dir), t.ids(s, dir)),
+      wmap, wOov, bias).orderBy("doc_id")
   }
 
   /** Percentile normalization over the survivors under the RETRACTED
     * model: the per-lang rank offsets are recomputed from the surviving
     * corpus (a retracted doc must stop shifting every other doc's
     * percentile), the classifier is the subtracted artifact. */
-  def scorePercentileRetractedWith(s: SparkSession, dir: String,
-      dead: DataFrame): DataFrame = {
-    val (wmap, wOov, bias) = nbFrozenModelRetractedWith(s, dir, dead)
-    scorePercentileWith(survivors(s, dir, dead), wmap, wOov, bias)
+  def scorePercentileRetracted(s: SparkSession, dir: String,
+      t: Tombstones): DataFrame = {
+    val (wmap, wOov, bias) = nbFrozenModelRetracted(s, dir, t)
+    scorePercentileWith(Ingest.minus(documents(s, dir), t.ids(s, dir)),
+      wmap, wOov, bias)
   }
 
   // --- incremental score maintenance (IVM over a corpus snapshot) ------
@@ -1254,14 +1235,13 @@ object Curation {
     // the surviving corpus: hash equality proves a retracted doc's
     // tokens influence neither the weights nor any served score.
     "q_takedown_model" -> ((s, dir) =>
-      nbClassifyRetractedWith(s, dir, Ingest.ensureForgetSet(s, dir)._1)),
+      nbClassifyRetracted(s, dir, Tombstones.Stored)),
 
     // the percentile artifact under the same retraction: per-lang rank
     // offsets recomputed over the survivors (a retracted doc must stop
     // shifting every other doc's percentile), model subtracted as above.
     "q_takedown_percentile" -> ((s, dir) =>
-      scorePercentileRetractedWith(s, dir,
-        Ingest.ensureForgetSet(s, dir)._1)),
+      scorePercentileRetracted(s, dir, Tombstones.Stored)),
 
     // drift-triggered MODEL REFRESH θ-policy (the q_cms_policy
     // convention on the classifier axis): both arms in one gate with

@@ -333,28 +333,46 @@ object Ingest {
     (readCommitted(s, iPath), readCommitted(s, sPath))
   }
 
+  private val PurgedGen = "_purged"
+
   /** A tombstone set on the documents axis: what the masked and purged
     * generations ([[DocGen]]) of every stored family subtract — the
-    * text indexes here, the CMS and histogram cell sketches
-    * ([[CorpusStats.sketchCells]]) and the media hash index
-    * ([[Multimodal.mediaServed]]). For the media family, [[Stored]]
-    * means that family's own committed fixture,
-    * [[Multimodal.ensureMediaForgetSet]] (`doc_id % 20`): the media
-    * gates' hashes pin that set. */
+    * text indexes here, the IVF layouts ([[ivfServed]]), the CMS and
+    * histogram cell sketches ([[CorpusStats.sketchCells]]), the media
+    * hash index ([[Multimodal.mediaServed]]) and the trained model
+    * artifacts ([[Curation.nbModelRetracted]]). For the IVF and media
+    * families, [[Stored]] means that family's own committed fixture
+    * ([[ensureVecForgetSet]], [[Multimodal.ensureMediaForgetSet]]: the
+    * gates' hashes pin those sets), and a supplied doc_id frame is read
+    * under the family's own key ([[keyed]]). */
   sealed trait Tombstones {
     /** The retracted doc_ids, one row per document. */
     def ids(s: SparkSession, dir: String): DataFrame
     /** The retracted documents, full `documents` rows (what a
       * retraction sketch is built from). */
     def docs(s: SparkSession, dir: String): DataFrame
-    /** The retraction's NEGATIVE (n_docs, dl_total). */
-    def negStats(s: SparkSession, dir: String): DataFrame
     /** How many documents are retracted (the purge policy's numerator). */
     def nDocs(s: SparkSession, dir: String): Long
     /** Path suffix of the generations purged of this set. */
     def purgedGen(s: SparkSession, dir: String): String
     /** A masked frame with several consumers, checkpointed. */
     def checkpoint(masked: DataFrame): DataFrame
+    /** The retracted ids under a family's own `key` column; `fixture` is
+      * that family's stored set. */
+    def keyed(s: SparkSession, dir: String, key: String,
+        fixture: => DataFrame): DataFrame = this match {
+      case Tombstones.Stored => fixture
+      case _ => ids(s, dir).select(col("doc_id").as(key))
+    }
+    /** The rows of chain `over` that this set retracts, from `corpus`
+      * (that chain's documents): [[docs]] on the base chain, else every
+      * copy the chain holds under the retracted ids — so a mask's
+      * negative stats or retraction sketch subtract exactly what the
+      * chain serves. */
+    def docsIn(s: SparkSession, dir: String, over: DocGen,
+        corpus: => DataFrame): DataFrame =
+      if (over == DocGen.Base) docs(s, dir)
+      else corpus.join(broadcast(ids(s, dir)), "doc_id")
   }
 
   object Tombstones {
@@ -364,11 +382,9 @@ object Ingest {
     case object Stored extends Tombstones {
       def ids(s: SparkSession, dir: String): DataFrame = ensureForgetSet(s, dir)._1
       def docs(s: SparkSession, dir: String): DataFrame = forgetBatch(s, dir)
-      def negStats(s: SparkSession, dir: String): DataFrame =
-        ensureForgetSet(s, dir)._2
       def nDocs(s: SparkSession, dir: String): Long =
-        headLongOnce(negStats(s, dir).select("n_docs"))
-      def purgedGen(s: SparkSession, dir: String): String = "_purged"
+        headLongOnce(ensureForgetSet(s, dir)._2.select("n_docs"))
+      def purgedGen(s: SparkSession, dir: String): String = PurgedGen
       def checkpoint(masked: DataFrame): DataFrame = masked.localCheckpoint()
     }
 
@@ -391,8 +407,6 @@ object Ingest {
       def ids(s: SparkSession, dir: String): DataFrame = distinctIds
       def docs(s: SparkSession, dir: String): DataFrame =
         documents(s, dir).join(broadcast(distinctIds), "doc_id")
-      def negStats(s: SparkSession, dir: String): DataFrame =
-        docStats(docs(s, dir).select(TextAnalysis.bm25Toks(col("text")).as("t")))
       def nDocs(s: SparkSession, dir: String): Long = distinctIds.count()
       /** `_purged_<hex of the set's 64-bit xxhash64 sum>`: idempotent
         * per set, so re-serving the same takedown state reuses the
@@ -410,39 +424,66 @@ object Ingest {
     }
   }
 
-  /** A served generation of a document-keyed text index. The BM25
-    * postings ([[termServed]]), the sketch table ([[sketchServed]]) and
-    * the positional postings ([[phraseServed]]) share this one
-    * lifecycle. Every rewritten generation lands under its own path
-    * next to the frozen base and is never touched again (snapshot
-    * isolation: in-flight readers keep theirs, and a reader pinned to an
-    * older generation reproduces its results forever — q_bm25_asof). */
+  /** A served generation of a stored index — ONE term for every family:
+    * the document-keyed text indexes ([[termServed]], [[sketchServed]],
+    * [[phraseServed]]), the cell sketches, the media hash index and the
+    * IVF layouts ([[ivfServed]]). Every rewritten generation lands under
+    * its own path next to the frozen base and is never touched again
+    * (snapshot isolation: in-flight readers keep theirs, and a reader
+    * pinned to an older generation reproduces its results forever —
+    * q_bm25_asof). An accessor rejects a generation it has no artifact
+    * for with an IllegalArgumentException. */
   sealed trait DocGen
   object DocGen {
     /** The built index. */
     case object Base extends DocGen
-    /** Base ∪ the append delta: ONLY the append batch is tokenized or
-      * sketched, stored next to the base; the base files are never
-      * touched. */
+    /** Base ∪ the append delta: ONLY the append batch is tokenized,
+      * sketched or assigned, stored next to the base; the base files are
+      * never touched. */
     case object Appended extends DocGen
     /** gen2: Appended rewritten as one table — a pure layout job (no
-      * re-tokenize, no re-sketch) that bounds per-query file counts as
-      * deltas accumulate; the [[ivfCompacted]] posture. */
+      * re-tokenize, no re-sketch, no re-encode) that bounds per-query
+      * file counts as deltas accumulate. */
     case object Compacted extends DocGen
-    /** Base with `t` MASKED at serve time: the index is untouched and
-      * the takedown is effective the instant the tombstones commit. */
-    final case class Masked(t: Tombstones) extends DocGen
-    /** Masked rewritten as the next generation — the physical half of
-      * deletion, after which the retracted bytes are gone from the
-      * serving artifact (the step a compliance deletion requires and
+    /** gen3 of an IVF layout once the served skew passes the threshold
+      * ([[ivfRetrained]]); below it, the appended chain. */
+    final case class Retrained(skewThreshold: Double = 4.0) extends DocGen
+    /** Chain `over` with `t` MASKED at serve time: the index is untouched
+      * and the takedown is effective the instant the tombstones commit.
+      * `t`'s ids leave every side of the chain, and any corrected
+      * statistic subtracts the chain's own rows for them, so
+      * Masked(t, over) ≡ the fresh build over (over's corpus − t). */
+    final case class Masked(t: Tombstones, over: DocGen = Base) extends DocGen {
+      require(unmasked(over), s"a mask applies to an unmasked chain, not $over")
+    }
+    /** Masked(t, over) rewritten as the next generation — the physical
+      * half of deletion, after which the retracted bytes are gone from
+      * the serving artifact (the step a compliance deletion requires and
       * masking alone cannot provide), with no mask left in the plan. At
       * production scale this folds into the scheduled compaction. */
-    final case class Purged(t: Tombstones) extends DocGen
+    final case class Purged(t: Tombstones, over: DocGen = Base) extends DocGen {
+      require(unmasked(over), s"a purge applies to an unmasked chain, not $over")
+    }
+
+    private def unmasked(g: DocGen): Boolean =
+      !g.isInstanceOf[Masked] && !g.isInstanceOf[Purged]
+
+    /** Path suffix of `t` purged out of chain `over`: `<chain
+      * tag><t.purgedGen>`, the tag empty for the base chain (so every
+      * base purge keeps its historical name). */
+    private[graft] def purgedSuffix(s: SparkSession, dir: String,
+        t: Tombstones, over: DocGen): String = (over match {
+      case Appended => "_appended"
+      case Compacted => "_gen2"
+      case Retrained(_) => "_gen3"
+      case _ => "" // the base chain: a mask or purge never nests
+    }) + t.purgedGen(s, dir)
   }
 
-  /** `df` minus the tombstoned documents: one broadcast anti-join. */
-  private def minus(df: DataFrame, ids: DataFrame): DataFrame =
-    df.join(broadcast(ids), Seq("doc_id"), "left_anti")
+  /** `df` minus the tombstoned rows: one broadcast anti-join on `key`. */
+  private[graft] def minus(df: DataFrame, ids: DataFrame,
+      key: String = "doc_id"): DataFrame =
+    df.join(broadcast(ids), Seq(key), "left_anti")
 
   /** One generation of the inverted index, `term_postings<gen>` +
     * `term_stats<gen>`: postings payload first, the stats directory
@@ -514,7 +555,10 @@ object Ingest {
     * rewritten generations materialize another one: gen2 is Appended's
     * sides as one table, a purged generation is Masked's sides with the
     * mask applied — each with that generation's stats, so rewritten ≡
-    * served by construction. */
+    * served by construction. A mask over a chain subtracts the stats of
+    * the chain's own rows for the retracted ids: the stored tombstone's
+    * precomputed negative stats on the base chain, otherwise derived at
+    * serve time (one join bounded by the retraction size). */
   def termServed(s: SparkSession, dir: String, gen: DocGen): TermServed = {
     def rewrite(suffix: String, from: DocGen): TermServed = {
       val (postings, stats) = termGen(s, dir, suffix) {
@@ -534,11 +578,20 @@ object Ingest {
           termGen(s, dir, "_delta")(termBuild(docAppendBatch(s, dir)))
         TermServed(base.sides :+ delta, None, mergedTermStats(base.stats, dStats))
       case DocGen.Compacted => rewrite("_gen2", DocGen.Appended)
-      case DocGen.Masked(t) =>
-        val base = termServed(s, dir, DocGen.Base)
-        TermServed(base.sides, Some(t.ids(s, dir)),
-          subtractedStats(base.stats, t.negStats(s, dir)))
-      case DocGen.Purged(t) => rewrite(t.purgedGen(s, dir), DocGen.Masked(t))
+      case DocGen.Masked(t, over) =>
+        val chain = termServed(s, dir, over)
+        val neg = (t, over) match {
+          case (Tombstones.Stored, DocGen.Base) => ensureForgetSet(s, dir)._2
+          case _ => docStats(t.docsIn(s, dir, over, documents(s, dir)
+              .select("doc_id", "text").unionByName(docAppendBatch(s, dir)))
+            .select(TextAnalysis.bm25Toks(col("text")).as("t")))
+        }
+        TermServed(chain.sides, Some(t.ids(s, dir)),
+          subtractedStats(chain.stats, neg))
+      case DocGen.Purged(t, over) =>
+        rewrite(DocGen.purgedSuffix(s, dir, t, over), DocGen.Masked(t, over))
+      case other => throw new IllegalArgumentException(
+        s"the term index has no $other generation")
     }
   }
 
@@ -614,10 +667,13 @@ object Ingest {
       // (measured 5x on the zipf rehearsal vs the purged generation,
       // whose input is a plain scan). Bounded: the sketch table minus
       // the retraction.
-      case DocGen.Masked(t) =>
-        t.checkpoint(minus(ensureSketchedDocs(s, dir), t.ids(s, dir)))
-      case DocGen.Purged(t) =>
-        table(t.purgedGen(s, dir))(minus(ensureSketchedDocs(s, dir), t.ids(s, dir)))
+      case DocGen.Masked(t, over) =>
+        t.checkpoint(minus(sketchServed(s, dir, over), t.ids(s, dir)))
+      case DocGen.Purged(t, over) =>
+        table(DocGen.purgedSuffix(s, dir, t, over))(
+          minus(sketchServed(s, dir, over), t.ids(s, dir)))
+      case other => throw new IllegalArgumentException(
+        s"the sketch table has no $other generation")
     }
   }
 
@@ -658,13 +714,16 @@ object Ingest {
   /** THE served-generation accessor of the positional index: (positions,
     * optional serve-time tombstone mask). Positions are per-document, so
     * deletion has no statistics to correct. The positional index has no
-    * append batch, so Appended and Compacted are rejected. */
+    * append batch, so only the base chain and its masked and purged
+    * generations exist. */
   def phraseServed(s: SparkSession, dir: String,
       gen: DocGen): (DataFrame, Option[DataFrame]) = gen match {
     case DocGen.Base => (ensurePhraseIndex(s, dir), None)
-    case DocGen.Masked(t) => (ensurePhraseIndex(s, dir), Some(t.ids(s, dir)))
-    case DocGen.Purged(t) =>
-      (storedTable(s, scratch(s, dir, s"term_positions${t.purgedGen(s, dir)}"),
+    case DocGen.Masked(t, DocGen.Base) =>
+      (ensurePhraseIndex(s, dir), Some(t.ids(s, dir)))
+    case DocGen.Purged(t, DocGen.Base) =>
+      (storedTable(s, scratch(s, dir,
+        s"term_positions${DocGen.purgedSuffix(s, dir, t, DocGen.Base)}"),
         Some("bucket"))(minus(ensurePhraseIndex(s, dir), t.ids(s, dir))), None)
     case other => throw new IllegalArgumentException(
       s"the positional index has no $other generation")
@@ -1021,8 +1080,8 @@ object Ingest {
     * what differs between the families — its path stem, how
     * (vec_id, cell, embedding) rows become stored columns, and its
     * batched serve over cell-partitioned sides — so the lifecycle
-    * ([[ivfDelta]] → [[ivfCompacted]] → [[ivfPurged]] /
-    * [[ivfRetrained]]) is written once over it. The SQ8 and PQ layouts
+    * ([[ivfDelta]], [[ivfRetrained]], and the compacted, masked and
+    * purged generations of [[ivfServed]]) is written once over it. The SQ8 and PQ layouts
     * carry their FROZEN models: both are cell-independent (fit to the
     * corpus's per-dimension range / sub-vector distributions, not to
     * the coarse geometry), so every generation — a retrained one
@@ -1061,7 +1120,7 @@ object Ingest {
       def knnJoin(s: SparkSession, dir: String, g: IvfServed,
           queriesDf: DataFrame, k: Int, nProbe: Int): DataFrame =
         knnJoinSqSides(s, dir, g.sides, g.centroids, mins, steps,
-          servedCorpus(s, dir, g.appended), queriesDf, k, expand, nProbe, g.dead)
+          servedCorpus(s, dir, g), queriesDf, k, expand, nProbe, g.dead)
     }
 
     /** m-byte product-quantizer codes under the frozen codebook. */
@@ -1074,7 +1133,7 @@ object Ingest {
       def knnJoin(s: SparkSession, dir: String, g: IvfServed,
           queriesDf: DataFrame, k: Int, nProbe: Int): DataFrame =
         knnJoinPqSides(s, dir, g.sides, g.centroids, cb, dim,
-          servedCorpus(s, dir, g.appended), queriesDf, k, expand, nProbe, m,
+          servedCorpus(s, dir, g), queriesDf, k, expand, nProbe, m,
           kCent, g.dead)
     }
 
@@ -1092,44 +1151,20 @@ object Ingest {
     }
   }
 
-  /** A served generation of an IVF layout ([[ivfServed]]). */
-  sealed trait IvfGen
-  object IvfGen {
-    /** The built index. */
-    case object Base extends IvfGen
-    /** Base ∪ the append delta: two sides, each DPP-pruned. */
-    case object Appended extends IvfGen
-    /** gen2: base ∪ delta merged into one table ([[ivfCompacted]]). */
-    case object Compacted extends IvfGen
-    /** gen3 once the served skew passes the threshold ([[ivfRetrained]]). */
-    final case class Retrained(skewThreshold: Double = 4.0) extends IvfGen
-    /** Base minus the stored tombstones, rewritten ([[ivfPurged]]). */
-    case object Purged extends IvfGen
-    /** Base with `dead` (vec_id rows) masked at serve time: one
-      * broadcast anti-join AFTER each side's DPP cell join (so it cannot
-      * interpose between scan and probe) and, on the code layouts,
-      * BEFORE the ranking (a dead code can neither score nor crowd a
-      * survivor off the expand·k shortlist, and the exact rescore only
-      * sees the shortlist). No statistics to correct: kNN ranking has no
-      * corpus-stat dependency. */
-    final case class Masked(dead: DataFrame) extends IvfGen
-  }
-
   /** What a generation serves: its centroids, its cell-partitioned
-    * sides, whether it holds the append batch (the rescore corpus), and
-    * any serve-time tombstone mask. */
+    * sides, the unmasked chain those sides hold (a below-threshold
+    * retrain holds the appended chain), and any serve-time tombstone
+    * mask (vec_id rows). */
   final case class IvfServed(centroids: DataFrame, sides: Seq[DataFrame],
-      appended: Boolean, dead: Option[DataFrame] = None)
-
-  private val PurgedGen = "_purged"
+      chain: DocGen, dead: Option[DataFrame] = None)
 
   /** Every stored IVF-family path, from (layout, table, generation):
     * `<stem>_<table><gen><params>_c<cells>` — e.g. ivf_assign_c45,
     * ivfsq_delta_c45, ivfpq_codes_gen2_m8_k256_c45,
     * ivf_centroids_gen3_c45. nCells is part of the identity (an unkeyed
     * path would let a non-default geometry silently reuse another's
-    * stored cells); purged generations keep their historical cell-less
-    * names. */
+    * stored cells); the stored set purged from the base chain keeps its
+    * historical cell-less name. */
   private def ivfPath(s: SparkSession, dir: String, l: IvfLayout,
       table: String, gen: String = "", nCells: Int = 0): String = {
     val cells =
@@ -1188,37 +1223,6 @@ object Ingest {
         appendBatch(embeddings(s, dir)), centroids))))
   }
 
-  /** COMPACTION — the scheduled half of the LSM posture: base ∪ delta
-    * merged into generation 2 under a new cell-partitioned path. Model
-    * and centroids are frozen, so payloads merge VERBATIM — a pure
-    * layout job (no re-encode, no re-assign; the code layouts read and
-    * write only their 8–dim B/row codes), which is why the nightly
-    * compaction of a 10⁹-vector index amortizes. Old generation files
-    * are never touched: in-flight readers keep their snapshot, serving
-    * switches once gen2 commits. Returns (centroids, gen2). */
-  def ivfCompacted(s: SparkSession, dir: String, l: IvfLayout)
-      : (DataFrame, DataFrame) = graft.BuildTimer.time {
-    val (centroids, base, delta) = ivfDelta(s, dir, l)
-    (centroids, cellTable(s, ivfPath(s, dir, l, l.table, "_gen2"))(
-      base.unionByName(delta)))
-  }
-
-  /** PURGE — the physical half of deletion ([[DocGen.Purged]]'s
-    * posture): the base minus the stored tombstones
-    * ([[ensureVecForgetSet]]) rewritten as a new cell-partitioned
-    * generation. Centroids and model untouched (deletion never
-    * retrains), no statistics to correct, so the purged generation
-    * serves through the identical DPP probe machinery with NO mask left
-    * in the plan — after this the retracted vectors' bytes are gone from
-    * the serving artifact. Returns (centroids, purged). */
-  def ivfPurged(s: SparkSession, dir: String, l: IvfLayout)
-      : (DataFrame, DataFrame) = graft.BuildTimer.time {
-    val (centroids, base) = l.base(s, dir)
-    (centroids, cellTable(s, ivfPath(s, dir, l, l.table, PurgedGen))(
-      base.join(broadcast(ensureVecForgetSet(s, dir)), Seq("vec_id"),
-        "left_anti")))
-  }
-
   /** RETRAIN — [[retrainOnDrift]] over the served base ∪ delta: past
     * the skew threshold, gen3 is the live corpus re-assigned against the
     * NEW centroids and re-encoded with the frozen model (re-deriving the
@@ -1252,35 +1256,70 @@ object Ingest {
   }
 
   /** THE served-generation accessor: what each generation of a layout
-    * serves. */
+    * serves. The two rewritten generations write another one's sides as
+    * one cell-partitioned table under the same centroids (the
+    * [[termServed]] shape):
+    *
+    *  - Compacted: COMPACTION, the scheduled half of the LSM posture —
+    *    Appended's base ∪ delta as generation 2. Model and centroids are
+    *    frozen, so payloads merge VERBATIM — a pure layout job (no
+    *    re-encode, no re-assign; the code layouts read and write only
+    *    their 8–dim B/row codes), which is why the nightly compaction of
+    *    a 10⁹-vector index amortizes. Old generation files are never
+    *    touched: in-flight readers keep their snapshot, serving switches
+    *    once gen2 commits.
+    *  - Masked(t, over): `over`'s sides with `t`'s vec_ids masked at
+    *    serve time — one broadcast anti-join AFTER each side's DPP cell
+    *    join (so it cannot interpose between scan and probe) and, on the
+    *    code layouts, BEFORE the ranking (a dead code can neither score
+    *    nor crowd a survivor off the expand·k shortlist, and the exact
+    *    rescore only sees the shortlist). No statistics to correct: kNN
+    *    ranking has no corpus-stat dependency. [[Tombstones.Stored]] is
+    *    the dense fixture, [[ensureVecForgetSet]]; a supplied doc_id
+    *    frame is read as vec_ids.
+    *  - Purged(t, over): Masked's sides with the mask applied —
+    *    deletion never retrains, so it serves through the identical DPP
+    *    probe machinery with NO mask left in the plan, and after this
+    *    the retracted vectors' bytes are gone from the serving artifact.
+    *    The stored set purged from the base keeps its historical
+    *    cell-less path (`ivf_assign_purged`). */
   def ivfServed(s: SparkSession, dir: String, l: IvfLayout,
-      gen: IvfGen): IvfServed = gen match {
-    case IvfGen.Base =>
+      gen: DocGen): IvfServed = gen match {
+    case DocGen.Base =>
       val (c, base) = l.base(s, dir)
-      IvfServed(c, Seq(base), appended = false)
-    case IvfGen.Appended =>
+      IvfServed(c, Seq(base), DocGen.Base)
+    case DocGen.Appended =>
       val (c, base, delta) = ivfDelta(s, dir, l)
-      IvfServed(c, Seq(base, delta), appended = true)
-    case IvfGen.Compacted =>
-      val (c, gen2) = ivfCompacted(s, dir, l)
-      IvfServed(c, Seq(gen2), appended = true)
-    case IvfGen.Retrained(skewThreshold) =>
-      val (c, gen3, _) = ivfRetrained(s, dir, l, skewThreshold)
-      IvfServed(c, Seq(gen3), appended = true)
-    case IvfGen.Purged =>
-      val (c, purged) = ivfPurged(s, dir, l)
-      IvfServed(c, Seq(purged), appended = false)
-    case IvfGen.Masked(dead) =>
-      val (c, base) = l.base(s, dir)
-      IvfServed(c, Seq(base), appended = false, Some(dead))
+      IvfServed(c, Seq(base, delta), DocGen.Appended)
+    case DocGen.Compacted => ivfRewrite(s, dir, l,
+      ivfServed(s, dir, l, DocGen.Appended), "_gen2", DocGen.Compacted)
+    case g @ DocGen.Retrained(skewThreshold) =>
+      val (c, gen3, retrained) = ivfRetrained(s, dir, l, skewThreshold)
+      IvfServed(c, Seq(gen3), if (retrained) g else DocGen.Appended)
+    case DocGen.Masked(t, over) =>
+      ivfServed(s, dir, l, over).copy(dead = Some(t.keyed(s, dir, "vec_id",
+        ensureVecForgetSet(s, dir))))
+    case DocGen.Purged(t, over) =>
+      val m = ivfServed(s, dir, l, DocGen.Masked(t, over))
+      ivfRewrite(s, dir, l, m, DocGen.purgedSuffix(s, dir, t, m.chain), m.chain)
   }
 
+  /** `from`'s sides, any mask applied, written as ONE cell-partitioned
+    * generation `<table><suffix>` under the same centroids. */
+  private def ivfRewrite(s: SparkSession, dir: String, l: IvfLayout,
+      from: IvfServed, suffix: String, chain: DocGen): IvfServed =
+    graft.BuildTimer.time {
+      IvfServed(from.centroids, Seq(cellTable(s, ivfPath(s, dir, l, l.table, suffix))(
+        from.sides.map(p => from.dead.fold(p)(minus(p, _, "vec_id")))
+          .reduce(_.unionByName(_)))), chain)
+    }
+
   /** Exact-rescore corpus of a served generation: the indexed corpus,
-    * plus the append batch once the generation holds it. */
+    * plus the append batch once the generation's chain holds it. */
   private def servedCorpus(s: SparkSession, dir: String,
-      appended: Boolean): DataFrame =
-    if (appended) indexedCorpus(s, dir).unionByName(appendBatch(embeddings(s, dir)))
-    else indexedCorpus(s, dir)
+      g: IvfServed): DataFrame =
+    if (g.chain == DocGen.Base) indexedCorpus(s, dir)
+    else indexedCorpus(s, dir).unionByName(appendBatch(embeddings(s, dir)))
 
   /** Batched kNN through one served generation of a layout — the
     * production retrieval shape end to end: the (q_id, cell) probe plan
@@ -1294,7 +1333,7 @@ object Ingest {
     * 10⁴⁺ would bloat the plan; VERDICT r3 "What's wrong #1") — and
     * the probe machinery does not care which generation it reads. */
   def knnJoinIvfServed(s: SparkSession, dir: String, l: IvfLayout,
-      gen: IvfGen, queriesDf: DataFrame, k: Int,
+      gen: DocGen, queriesDf: DataFrame, k: Int,
       nProbe: Int = 0): DataFrame =
     l.knnJoin(s, dir, ivfServed(s, dir, l, gen), queriesDf, k, nProbe)
 
@@ -1316,7 +1355,7 @@ object Ingest {
 
   /** Single-query top-k for the append probe row ([[appendQueryRow]])
     * over a served FLAT generation. */
-  def ivfTopKServed(s: SparkSession, dir: String, gen: IvfGen, k: Int,
+  def ivfTopKServed(s: SparkSession, dir: String, gen: DocGen, k: Int,
       nProbe: Int = 0): DataFrame = {
     val g = ivfServed(s, dir, IvfLayout.Flat, gen)
     val q = appendQueryRow(embeddings(s, dir))
@@ -1332,7 +1371,7 @@ object Ingest {
   /** [[ivfTopKServed]] over a served IVF-PQ generation: ADC tables for
     * the append query, DPP-pruned code scans (16 B/row), bounded exact
     * rescore against the generation's served corpus. */
-  def ivfPqTopKServed(s: SparkSession, dir: String, gen: IvfGen, k: Int,
+  def ivfPqTopKServed(s: SparkSession, dir: String, gen: DocGen, k: Int,
       nProbe: Int = 0, expand: Int = 60, m: Int = 8,
       kCent: Int = 256): DataFrame = {
     val l = IvfLayout.pq(s, dir, m, kCent, expand)
@@ -1340,7 +1379,7 @@ object Ingest {
     val q = appendQueryRow(embeddings(s, dir))
     val (qid, dot, nrm) = Similarity.adcTablesFor(q, l.cb, l.dim, m, kCent)
     val cand = probedSides(s, dir, g, q, k, nProbe, "vec_id", "code")
-    Similarity.pqRescoreFor(servedCorpus(s, dir, g.appended),
+    Similarity.pqRescoreFor(servedCorpus(s, dir, g),
       Similarity.pqRank(cand, qid, dot, nrm, m, kCent, expand * k), k, q)
   }
 
@@ -1532,7 +1571,7 @@ object Ingest {
     * everywhere else. */
   def knnJoinIvfSqStored(s: SparkSession, dir: String, queriesDf: DataFrame,
       k: Int, expand: Int = 8, nProbe: Int = 0): DataFrame =
-    knnJoinIvfServed(s, dir, IvfLayout.sq8(s, dir, expand), IvfGen.Base,
+    knnJoinIvfServed(s, dir, IvfLayout.sq8(s, dir, expand), DocGen.Base,
       queriesDf, k, nProbe)
 
   /** Shared generation-spanning batched-kNN serving scaffold for the
@@ -1558,8 +1597,7 @@ object Ingest {
       // retracted code can neither score nor crowd a survivor out of
       // the expand·k shortlist — and the exact rescore, which only sees
       // the shortlist, cannot resurrect it
-      val masked = dead.fold(pruned)(d =>
-        pruned.join(broadcast(d), Seq("vec_id"), "left_anti"))
+      val masked = dead.fold(pruned)(minus(pruned, _, "vec_id"))
       masked
         .join(broadcast(tables), col("p_qid") === col("tq_id"))
         .filter(col("vec_id") =!= col("tq_id"))
@@ -1620,7 +1658,7 @@ object Ingest {
     * (base ∪ delta) summarized to a bounded report — cell count, row
     * count, the hottest cell, and the max/mean skew ratio. Rising skew
     * as deltas accumulate against drifting data is the trigger for the
-    * next [[ivfCompacted]]-then-retrain cycle; the report reads only
+    * next compact-then-retrain cycle; the report reads only
     * the `cell` partition column (no payload I/O). */
   def ivfOccupancy(s: SparkSession, dir: String): DataFrame = {
     val (_, assign, delta) = ivfDelta(s, dir, IvfLayout.Flat)
@@ -1711,10 +1749,10 @@ object Ingest {
   }
 
   /** Batched kNN through the STORED base IVF index: [[knnJoinIvfServed]]
-    * over [[IvfGen.Base]] of the flat layout. */
+    * over [[DocGen.Base]] of the flat layout. */
   def knnJoinIvfStored(s: SparkSession, dir: String, queriesDf: DataFrame,
       k: Int, nProbe: Int = 0): DataFrame =
-    knnJoinIvfServed(s, dir, IvfLayout.Flat, IvfGen.Base, queriesDf, k, nProbe)
+    knnJoinIvfServed(s, dir, IvfLayout.Flat, DocGen.Base, queriesDf, k, nProbe)
 
   /** Batched (q_id → probed cells) plan — the |Q|-query generalization
     * of [[singleQueryProbePlan]] (per-query top-nProbe over the tiny
@@ -1752,8 +1790,7 @@ object Ingest {
         .join(broadcast(probeCells(probePlan, side)), "cell") // DPP per side
       // tombstone mask AFTER the cell join so it cannot interpose
       // between the scan and its dynamic-partition-pruning filter
-      val masked = dead.fold(pruned)(d =>
-        pruned.join(broadcast(d), Seq("vec_id"), "left_anti"))
+      val masked = dead.fold(pruned)(minus(pruned, _, "vec_id"))
       masked
         .join(broadcast(queriesDf), col("p_qid") === col("q_id"))
         .filter(col("vec_id") =!= col("q_id"))
@@ -1826,29 +1863,9 @@ object Ingest {
       dead0: DataFrame): DataFrame = {
     // ONE tombstone value for every axis: streamed retractions arrive
     // with duplicates, and Supplied makes its id frame distinct once
-    // (lazily checkpointed — the eager `qs` checkpoint below
-    // materializes it before the Par phase)
-    val t = Tombstones.Supplied(dead0)
-    val masked = DocGen.Masked(t)
-    val deadVec = t.ids(s, dir).select(col("doc_id").as("vec_id"))
-    def fp(axis: String, df: DataFrame, key: Column, v: Column): DataFrame =
-      df.agg(coalesce(count(lit(1)), lit(0L)).as("n_rows"),
-        coalesce(sum(key), lit(0L)).as("key_sum"),
-        coalesce(sum(v), lit(0L)).as("val_sum"))
-        .select(lit(axis).as("axis"), col("n_rows"), col("key_sum"),
-          col("val_sum"))
-    // the dense probes: each retracted doc's own embedding, re-keyed
-    val qs = embeddings(s, dir)
-      .join(broadcast(deadVec), "vec_id")
-      .orderBy("vec_id").limit(TakedownDenseProbes)
-      .select((col("vec_id") + lit(TakedownQOffset)).as("q_id"),
-        col("embedding").as("q_emb"))
-      .localCheckpoint() // three masked-index consumers
-    def denseFp(axis: String, served: DataFrame): DataFrame =
-      fp(axis, served.join(broadcast(deadVec.select(
-          col("vec_id").as("dead_id"))),
-          col("vec_id") === col("dead_id"), "left_outer"),
-        lit(0L), when(col("dead_id").isNotNull, 1L).otherwise(0L))
+    // (lazily checkpointed — the eager dense-probe checkpoint in
+    // takedownServes materializes it before the Par phase)
+    val axes = takedownServes(s, dir, Tombstones.Supplied(dead0))
     // The nine axis fingerprints are INDEPENDENT single-row aggregates;
     // each axis's CONSTRUCTION (plan building + any ensure* reads) and
     // MATERIALIZATION both run on a pool thread (guide §2.6 — r15
@@ -1860,41 +1877,61 @@ object Ingest {
     // race a cold artifact write. Par keeps every row on the executors;
     // the final union is nine checkpointed one-row frames, which also
     // keeps the optimizer off the former 2155-operator concatenated
-    // plan.
-    val axes: Seq[() => DataFrame] = Seq(
-      () => fp("bm25",
-        bm25Served(s, dir, masked, Seq("table", "scan", "join"), 10),
-        col("doc_id"), round(col("score") * 1e6).cast(LongType)),
-      () => fp("cms",
-        CorpusStats.cmsServed(s, dir, masked),
-        lit(0L), col("tf_est")),
-      () => denseFp("dense", knnJoinIvfServed(s, dir, IvfLayout.Flat,
-        IvfGen.Masked(deadVec), qs, 10)),
-      () => fp("media",
-        Multimodal.imageDedup(Multimodal.mediaServed(s, dir, masked)),
-        col("keep_id"), col("id_sum")),
-      () => fp("model",
-        Curation.nbModelRetractedWith(s, dir, t.ids(s, dir)),
-        col("bucket").cast(LongType), col("w_micro")),
-      () => fp("phrase",
-        phraseMatchServed(s, dir, masked, PhraseBatch),
-        col("phrase_id") * lit(1000000L) + col("doc_id"), col("n_hits")),
-      () => denseFp("quantized_pq", knnJoinIvfServed(s, dir,
-        IvfLayout.pq(s, dir), IvfGen.Masked(deadVec), qs, 10)),
-      () => denseFp("quantized_sq", knnJoinIvfServed(s, dir,
-        IvfLayout.sq8(s, dir), IvfGen.Masked(deadVec), qs, 10)),
-      () => fp("sketch",
-        nearDupServed(s, dir, masked),
-        col("doc1") + col("doc2"),
-        round(col("jaccard") * 1e6).cast(LongType)))
-    // parallelism = |axes|: the default 8-thread pool queued the ninth
-    // axis behind the first finisher, stretching the composed wall by a
-    // whole branch (Par debug: branch 8 started at 0.38 s, finished at
-    // 1.51 s while the other eight overlapped from 0)
+    // plan. parallelism = |axes|: the default 8-thread pool queued the
+    // ninth axis behind the first finisher, stretching the composed
+    // wall by a whole branch (Par debug: branch 8 started at 0.38 s,
+    // finished at 1.51 s while the other eight overlapped from 0)
     graft.Par.run(s.sparkContext,
-        axes.map(a => () => a().localCheckpoint()), parallelism = axes.size)
+        axes.map { case (_, fp) => () => fp().localCheckpoint() },
+        parallelism = axes.size)
       .reduce(_.unionByName(_))
       .orderBy("axis")
+  }
+
+  /** The composed takedown's axes under `t`, in axis order: each axis's
+    * one-row fingerprint (axis, n_rows, key_sum, val_sum) of its masked
+    * serve (see [[takedownE2e]]). Building the list materializes the
+    * dense probe batch once; each serve is constructed when its thunk
+    * runs. [[takedownE2eWith]] unions them, and `graft.Profile`'s
+    * `takedown_phases` times them one by one. */
+  def takedownServes(s: SparkSession, dir: String,
+      t: Tombstones): Seq[(String, () => DataFrame)] = {
+    val masked = DocGen.Masked(t)
+    val dead = t.ids(s, dir)
+    def fp(axis: String, key: Column, v: Column)(
+        df: => DataFrame): (String, () => DataFrame) = axis -> (() =>
+      df.agg(coalesce(count(lit(1)), lit(0L)).as("n_rows"),
+        coalesce(sum(key), lit(0L)).as("key_sum"),
+        coalesce(sum(v), lit(0L)).as("val_sum"))
+        .select(lit(axis).as("axis"), col("n_rows"), col("key_sum"),
+          col("val_sum")))
+    // the dense probes: each retracted doc's own embedding, re-keyed
+    val qs = embeddings(s, dir)
+      .join(broadcast(dead), col("vec_id") === col("doc_id"))
+      .orderBy("vec_id").limit(TakedownDenseProbes)
+      .select((col("vec_id") + lit(TakedownQOffset)).as("q_id"),
+        col("embedding").as("q_emb"))
+      .localCheckpoint() // three masked-index consumers
+    // val_sum = retracted vectors served, which must be 0
+    def dense(axis: String, l: => IvfLayout) =
+      fp(axis, lit(0L), when(col("doc_id").isNotNull, 1L).otherwise(0L))(
+        knnJoinIvfServed(s, dir, l, masked, qs, 10)
+          .join(broadcast(dead), col("vec_id") === col("doc_id"), "left_outer"))
+    Seq(
+      fp("bm25", col("doc_id"), round(col("score") * 1e6).cast(LongType))(
+        bm25Served(s, dir, masked, Seq("table", "scan", "join"), 10)),
+      fp("cms", lit(0L), col("tf_est"))(CorpusStats.cmsServed(s, dir, masked)),
+      dense("dense", IvfLayout.Flat),
+      fp("media", col("keep_id"), col("id_sum"))(
+        Multimodal.imageDedup(Multimodal.mediaServed(s, dir, masked))),
+      fp("model", col("bucket").cast(LongType), col("w_micro"))(
+        Curation.nbModelRetracted(s, dir, t)),
+      fp("phrase", col("phrase_id") * lit(1000000L) + col("doc_id"), col("n_hits"))(
+        phraseMatchServed(s, dir, masked, PhraseBatch)),
+      dense("quantized_pq", IvfLayout.pq(s, dir)),
+      dense("quantized_sq", IvfLayout.sq8(s, dir)),
+      fp("sketch", col("doc1") + col("doc2"),
+        round(col("jaccard") * 1e6).cast(LongType))(nearDupServed(s, dir, masked)))
   }
 
   /** Mean measured recall@k of the stored IVF index vs the in-engine
@@ -2065,7 +2102,7 @@ object Ingest {
       k: Int, expand: Int = 60, nProbe: Int = 0, m: Int = 8,
       kCent: Int = 256): DataFrame =
     knnJoinIvfServed(s, dir, IvfLayout.pq(s, dir, m, kCent, expand),
-      IvfGen.Base, queriesDf, k, nProbe)
+      DocGen.Base, queriesDf, k, nProbe)
 
   private def knnJoinPqSides(s: SparkSession, dir: String,
       sides: Seq[DataFrame], centroids: DataFrame, cb: Array[Float],
@@ -2236,10 +2273,10 @@ object Ingest {
     * merge verbatim, so any re-encode or layout bug diverges), plus the
     * append canary recall through the compacted generation. */
   private def compactDifferential(s: SparkSession, dir: String,
-      serve: IvfGen => DataFrame): DataFrame = {
+      serve: DocGen => DataFrame): DataFrame = {
     val Seq(appended, compacted) = graft.Par.run(s.sparkContext, Seq(
-      () => serve(IvfGen.Appended).localCheckpoint(),
-      () => serve(IvfGen.Compacted).localCheckpoint()))
+      () => serve(DocGen.Appended).localCheckpoint(),
+      () => serve(DocGen.Compacted).localCheckpoint()))
     val diverging = appended.exceptAll(compacted)
       .unionByName(compacted.exceptAll(appended))
     appendRecall(s, dir, compacted)
@@ -2258,8 +2295,8 @@ object Ingest {
     * independent and overlap (guide §2.6), checkpointing only the two
     * 1-row aggregates — the code tables never enter the block manager. */
   private def retrainCheck(s: SparkSession, dir: String, l: IvfLayout,
-      serve: IvfGen => DataFrame): DataFrame = {
-    val forced = IvfGen.Retrained(skewThreshold = 0.0)
+      serve: DocGen => DataFrame): DataFrame = {
+    val forced = DocGen.Retrained(skewThreshold = 0.0)
     val (_, gen3, _) = ivfRetrained(s, dir, l, forced.skewThreshold)
     val (_, base, delta) = ivfDelta(s, dir, l)
     val served = base.drop("cell").unionByName(delta.drop("cell"))
@@ -2535,7 +2572,7 @@ object Ingest {
     // mask doesn't over-delete.
     "q_knn_ivf_forget" -> ((s, dir) => forgetOutcome(s, dir,
       knnJoinIvfServed(s, dir, IvfLayout.Flat,
-        IvfGen.Masked(ensureVecForgetSet(s, dir)),
+        DocGen.Masked(Tombstones.Stored),
         canaryQueries(s, dir), 10))),
 
     // the same retraction held through the QUANTIZED families: a
@@ -2549,12 +2586,12 @@ object Ingest {
     // shortlist.
     "q_knn_ivfpq_forget" -> ((s, dir) => forgetOutcome(s, dir,
       knnJoinIvfServed(s, dir, IvfLayout.pq(s, dir),
-        IvfGen.Masked(ensureVecForgetSet(s, dir)),
+        DocGen.Masked(Tombstones.Stored),
         canaryQueries(s, dir), 10))),
 
     "q_knn_ivfsq_forget" -> ((s, dir) => forgetOutcome(s, dir,
       knnJoinIvfServed(s, dir, IvfLayout.sq8(s, dir),
-        IvfGen.Masked(ensureVecForgetSet(s, dir)),
+        DocGen.Masked(Tombstones.Stored),
         canaryQueries(s, dir), 10))),
 
     // the physical half on the dense axis: the purged generation serves
@@ -2563,7 +2600,7 @@ object Ingest {
     // q_knn_ivf_forget's oracle verbatim — masked ≡ purged pinned by
     // one hash.
     "q_ivf_purge" -> ((s, dir) => forgetOutcome(s, dir,
-      knnJoinIvfServed(s, dir, IvfLayout.Flat, IvfGen.Purged,
+      knnJoinIvfServed(s, dir, IvfLayout.Flat, DocGen.Purged(Tombstones.Stored),
         canaryQueries(s, dir), 10))),
 
     // physical purge on the quantized layouts: after the code-table
@@ -2572,11 +2609,11 @@ object Ingest {
     // oracle verbatim, completing the 3-axis × 2-half deletion matrix
     // (BM25, sketches, dense/PQ/SQ — mask and purge everywhere).
     "q_ivfpq_purge" -> ((s, dir) => forgetOutcome(s, dir,
-      knnJoinIvfServed(s, dir, IvfLayout.pq(s, dir), IvfGen.Purged,
+      knnJoinIvfServed(s, dir, IvfLayout.pq(s, dir), DocGen.Purged(Tombstones.Stored),
         canaryQueries(s, dir), 10))),
 
     "q_ivfsq_purge" -> ((s, dir) => forgetOutcome(s, dir,
-      knnJoinIvfServed(s, dir, IvfLayout.sq8(s, dir), IvfGen.Purged,
+      knnJoinIvfServed(s, dir, IvfLayout.sq8(s, dir), DocGen.Purged(Tombstones.Stored),
         canaryQueries(s, dir), 10))),
 
     // batched kNN over the APPENDED index: 8 queries = the append-batch
@@ -2585,7 +2622,7 @@ object Ingest {
     // the batched probe plan, per-side DPP on base AND delta, and the
     // per-query top-k, all through the generation-aware serving path.
     "q_knn_ivf_append" -> ((s, dir) => appendRecall(s, dir,
-      knnJoinIvfServed(s, dir, IvfLayout.Flat, IvfGen.Appended,
+      knnJoinIvfServed(s, dir, IvfLayout.Flat, DocGen.Appended,
         appendQueries(s, dir), 10))),
 
     // batched kNN through the STORED IVF-PQ index: 8 queries share one
@@ -2610,7 +2647,7 @@ object Ingest {
     // delta-only canaries through base ∪ delta with per-side DPP —
     // frozen model + centroids encode/assign the landing batch.
     "q_knn_ivfsq_append" -> ((s, dir) => appendRecall(s, dir,
-      knnJoinIvfServed(s, dir, IvfLayout.sq8(s, dir), IvfGen.Appended,
+      knnJoinIvfServed(s, dir, IvfLayout.sq8(s, dir), DocGen.Appended,
         appendQueries(s, dir), 10))),
 
     // IVF-SQ8 compaction: the same 8-query batch through the merged
@@ -2646,7 +2683,7 @@ object Ingest {
     // probe plan, per-side DPP on both code scans, per-query ADC
     // tables, shortlist + rescore over the appended corpus.
     "q_knn_ivfpq_append" -> ((s, dir) => appendRecall(s, dir,
-      knnJoinIvfServed(s, dir, IvfLayout.pq(s, dir), IvfGen.Appended,
+      knnJoinIvfServed(s, dir, IvfLayout.pq(s, dir), DocGen.Appended,
         appendQueries(s, dir), 10))),
 
     // the same 8-query batch through the COMPACTED generation, plus the
@@ -2703,7 +2740,7 @@ object Ingest {
     // unioned pruned-scan path — without rebuilding or touching the
     // base index files.
     "q_ivf_append" -> ((s, dir) =>
-      appendRecall(s, dir, ivfTopKServed(s, dir, IvfGen.Appended, 10))),
+      appendRecall(s, dir, ivfTopKServed(s, dir, DocGen.Appended, 10))),
 
     // IVF-PQ APPEND: the combined index's delta path — frozen codebook
     // AND frozen centroids encode/assign the landing batch, both scans
@@ -2711,7 +2748,7 @@ object Ingest {
     // appended canary's code exists only in the delta; the pinned 1.0
     // proves the whole composed warm path over base ∪ delta.
     "q_ivfpq_append" -> ((s, dir) =>
-      appendRecall(s, dir, ivfPqTopKServed(s, dir, IvfGen.Appended, 10))),
+      appendRecall(s, dir, ivfPqTopKServed(s, dir, DocGen.Appended, 10))),
 
     // COMPACTION: the merged generation must serve EXACTLY what the
     // base∪delta path serves — a cross-path differential gate (the two

@@ -461,16 +461,18 @@ object Multimodal {
     *  - Compacted: Appended rewritten as `media_phash_compacted` —
     *    hashes are container-independent, so compaction is a pure
     *    layout job (16 B/row read and written back, zero decode).
-    *  - Masked(t): the base minus every row whose SOURCE doc `t`
-    *    retracts — one broadcast anti-join on `src_id`, after the scan
-    *    and before any clustering. A takedown is doc-keyed: a doc's
+    *  - Masked(t, over): chain `over` minus every row whose SOURCE doc
+    *    `t` retracts — one broadcast anti-join on `src_id`, after the
+    *    scan and before any clustering, so the delta's copies of a
+    *    retracted doc go with it. A takedown is doc-keyed: a doc's
     *    video re-encode and tagged audio copy are the same retracted
     *    content under different bytes, and keying on media_id alone
     *    would keep serving them. [[Tombstones.Stored]] here is the
     *    media fixture, [[ensureMediaForgetSet]].
-    *  - Purged(t): Masked rewritten as `media_phash${t.purgedGen}`,
-    *    served mask-free; the purge gates share the forget oracles
-    *    verbatim (masked ≡ purged pinned by one hash). */
+    *  - Purged(t, over): Masked rewritten as its own `media_phash`
+    *    generation, served mask-free; the purge gates share the forget
+    *    oracles verbatim (masked ≡ purged pinned by one hash).
+    *  - Retrained: rejected. */
   def mediaServed(s: SparkSession, dir: String, gen: DocGen): DataFrame =
     gen match {
       case DocGen.Base => ensureMediaHashIndex(s, dir)
@@ -478,16 +480,14 @@ object Multimodal {
         hashTable(s, dir, "_delta")(deltaHashKernel(documents(s, dir))))
       case DocGen.Compacted =>
         hashTable(s, dir, "_compacted")(mediaServed(s, dir, DocGen.Appended))
-      case DocGen.Masked(t) =>
-        val deadSrc = t match {
-          case Tombstones.Stored =>
-            ensureMediaForgetSet(s, dir).select(col("media_id").as("src_id"))
-          case _ => t.ids(s, dir).select(col("doc_id").as("src_id"))
-        }
-        ensureMediaHashIndex(s, dir)
-          .join(broadcast(deadSrc), Seq("src_id"), "left_anti")
-      case DocGen.Purged(t) =>
-        hashTable(s, dir, t.purgedGen(s, dir))(mediaServed(s, dir, DocGen.Masked(t)))
+      case DocGen.Masked(t, over) =>
+        Ingest.minus(mediaServed(s, dir, over), t.keyed(s, dir, "src_id",
+          ensureMediaForgetSet(s, dir).select(col("media_id").as("src_id"))), "src_id")
+      case DocGen.Purged(t, over) =>
+        hashTable(s, dir, DocGen.purgedSuffix(s, dir, t, over))(
+          mediaServed(s, dir, DocGen.Masked(t, over)))
+      case other => throw new IllegalArgumentException(
+        s"the media hash index has no $other generation")
     }
 
   /** Image dedup over ANY hash-index frame (a [[mediaServed]]

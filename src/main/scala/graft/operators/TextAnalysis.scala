@@ -299,10 +299,9 @@ object TextAnalysis {
   /** [[dsirWeights]] with the retraction excluded from BOTH training
     * and scoring — the takedown posture of the DSIR artifact (see
     * q_takedown_dsir for why this retrains rather than subtracts). */
-  def dsirWeightsRetractedWith(s: SparkSession, dir: String,
-      dead: DataFrame): DataFrame = {
-    val surv = documents(s, dir)
-      .join(broadcast(dead.select("doc_id")), Seq("doc_id"), "left_anti")
+  def dsirWeightsRetracted(s: SparkSession, dir: String,
+      t: Ingest.Tombstones): DataFrame = {
+    val surv = Ingest.minus(documents(s, dir), t.ids(s, dir))
     val (rawU, rawB, tgtU, tgtB) = lmTablesDual(surv, col("lang") === "en")
     dsirWeights(surv, rawU, rawB, tgtU, tgtB).orderBy("doc_id")
   }
@@ -645,7 +644,7 @@ object TextAnalysis {
     // from scratch: no retracted doc influences vocabulary, counts,
     // weights, or the selection mean.
     "q_takedown_dsir" -> ((s, dir) =>
-      dsirWeightsRetractedWith(s, dir, Ingest.ensureForgetSet(s, dir)._1)),
+      dsirWeightsRetracted(s, dir, Ingest.Tombstones.Stored)),
 
     // Gopher-style repetition quality signals (Rae et al. 2021 §A1.1):
     // per-doc top-word count, duplicate-word and duplicate-2-gram counts,

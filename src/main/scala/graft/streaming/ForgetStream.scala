@@ -13,15 +13,15 @@ import org.apache.spark.sql.types.StructType
   * are semantically free — so there is no read-modify-write, no state
   * store, no distinct, just one idempotent `batch=<id>` overwrite per
   * trigger (foreachBatch is at-least-once; the CrawlStream sink rule).
-  * Every serve AFTER a trigger masks the grown set: the text, sketch
-  * and media accessors (`Ingest.bm25Served`, `CorpusStats.cmsServed` /
-  * `histServed`, `Multimodal.mediaServed`, …) over
-  * `DocGen.Masked(Tombstones.Supplied(…))`, and the `IvfGen.Masked`
-  * generation of the kNN serves, take the accumulated directory as
-  * their tombstone frame. Supplied makes the ids distinct once and
-  * derives the negative stats and retraction sketches from them at
-  * serve time — bounded by the retraction size, never a corpus
-  * re-scan. */
+  * Every serve AFTER a trigger masks the grown set: every stored
+  * family's accessor (`Ingest.bm25Served`, `Ingest.knnJoinIvfServed`,
+  * `CorpusStats.cmsServed` / `histServed`, `Multimodal.mediaServed`,
+  * …) over `DocGen.Masked(Tombstones.Supplied(…))`, and the model-axis
+  * retractions (`Curation.nbModelRetracted`, …) over the same
+  * `Tombstones.Supplied`, take the accumulated directory as their
+  * tombstone frame. Supplied makes the ids distinct once and derives
+  * the negative stats and retraction sketches from them at serve time
+  * — bounded by the retraction size, never a corpus re-scan. */
 object ForgetStream {
 
   /** `compactAtBatches` (VERDICT r14 #8, the last manual step in the

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Curation, TextAnalysis}
+import graft.operators.{Curation, Ingest, TextAnalysis}
+import graft.operators.Ingest.Tombstones
 
 /** Curation operator tests: connected-component edge cases the corpus
   * gate can't isolate (chains, singleton edges, convergence), split
@@ -528,4 +529,29 @@ class CurationSpec extends SparkSpecBase {
     assert(!p.contains("Exchange") && !p.contains("BatchEvalPython") &&
       !p.toLowerCase.contains("scalaudf"), p)
   }
+
+  // the model-axis retractions under a duplicated supplied set: the
+  // dead counts and the prior read the set's documents once each, so a
+  // doc retracted twice subtracts once, and the survivors do not move
+  private val modelRetractions: Seq[(String, Tombstones => org.apache.spark.sql.DataFrame)] =
+    Seq(
+      "nbModelRetracted" -> (t => Curation.nbModelRetracted(spark, TestSpark.Sf0001, t)),
+      "nbClassifyRetracted" -> (t => Curation.nbClassifyRetracted(spark, TestSpark.Sf0001, t)),
+      "scorePercentileRetracted" ->
+        (t => Curation.scorePercentileRetracted(spark, TestSpark.Sf0001, t)),
+      "dsirWeightsRetracted" ->
+        (t => TextAnalysis.dsirWeightsRetracted(spark, TestSpark.Sf0001, t)))
+
+  for ((name, retract) <- modelRetractions)
+    test(s"model axis: $name serves Supplied(ids ∪ ids) ≡ Supplied(ids) ≡ Stored") {
+      def rows(t: Tombstones) =
+        retract(t).collect().map(_.toSeq.mkString("|")).toSeq.sorted
+      val ids = Ingest.ensureForgetSet(spark, TestSpark.Sf0001)._1
+      val once = rows(Tombstones.Supplied(ids))
+      assert(once.nonEmpty, s"$name served nothing")
+      assert(rows(Tombstones.Supplied(ids.unionByName(ids))) == once,
+        s"$name: a duplicated retraction must not count a document twice")
+      assert(rows(Tombstones.Stored) == once,
+        s"$name: the stored set must serve like a supplied frame of its ids")
+    }
 }

@@ -170,7 +170,8 @@ class IngestSpec extends SparkSpecBase {
     assert(unmasked >= 8,
       s"each dense probe must surface its retracted vector unmasked: $unmasked")
     val masked = Ingest.knnJoinIvfServed(spark, dir, Ingest.IvfLayout.Flat,
-      Ingest.IvfGen.Masked(dead), qs, 10)
+      Ingest.DocGen.Masked(Ingest.Tombstones.Supplied(Ingest.ensureForgetSet(spark, dir)._1)),
+      qs, 10)
       .localCheckpoint()
     assert(masked.join(broadcast(dead), "vec_id").count() == 0,
       "a retracted vector surfaced through the masked serve")

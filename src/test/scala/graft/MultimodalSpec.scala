@@ -660,10 +660,14 @@ class MultimodalSpec extends SparkSpecBase {
       graft.queries.Tables.documents(s, TestSpark.Sf0001))
     assert(delta.filter(col("src_id").isin(deadIds: _*)).count() > 0,
       "fixture must include a delta copy of a retracted doc (doc 0)")
-    val masked = gen1.unionByName(delta).join(
-      dead.select(col("media_id").as("src_id")), Seq("src_id"), "left_anti")
+    val masked = graft.operators.Multimodal.mediaServed(s, TestSpark.Sf0001,
+      graft.operators.Ingest.DocGen.Masked(graft.operators.Ingest.Tombstones.Stored,
+        graft.operators.Ingest.DocGen.Appended))
     assert(masked.filter(col("src_id").isin(deadIds: _*)).count() == 0,
       "the serve-time mask must cover the delta's copies too")
+    assert(masked.count() ==
+      gen1.unionByName(delta).filter(!col("src_id").isin(deadIds: _*)).count(),
+      "the mask over the appended chain must keep every surviving row, delta included")
   }
 
   test("metadata-only query never reads payload bytes from the stored frame") {

@@ -330,8 +330,7 @@ class PlanSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     val emb = Tables.embeddings(spark, TestSpark.Sf0001)
     val qs = emb.orderBy("vec_id").limit(2)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val forgotten = Ingest.IvfGen.Masked(
-      Ingest.ensureVecForgetSet(spark, TestSpark.Sf0001))
+    val forgotten = Ingest.DocGen.Masked(Ingest.Tombstones.Stored)
     val df = Ingest.knnJoinIvfServed(spark, TestSpark.Sf0001,
       Ingest.IvfLayout.Flat, forgotten, qs, 5)
     val p = plan(df)
@@ -345,8 +344,7 @@ class PlanSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     val emb = Tables.embeddings(spark, TestSpark.Sf0001)
     val qs = emb.orderBy("vec_id").limit(2)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val forgotten = Ingest.IvfGen.Masked(
-      Ingest.ensureVecForgetSet(spark, TestSpark.Sf0001))
+    val forgotten = Ingest.DocGen.Masked(Ingest.Tombstones.Stored)
     for (l <- Seq(Ingest.IvfLayout.pq(spark, TestSpark.Sf0001),
         Ingest.IvfLayout.sq8(spark, TestSpark.Sf0001))) {
       val df = Ingest.knnJoinIvfServed(spark, TestSpark.Sf0001, l, forgotten, qs, 5)
@@ -366,10 +364,11 @@ class PlanSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
       "ivf_assign_purged" -> Ingest.IvfLayout.Flat,
       "ivfpq_codes_purged" -> Ingest.IvfLayout.pq(spark, TestSpark.Sf0001),
       "ivfsq_codes_purged" -> Ingest.IvfLayout.sq8(spark, TestSpark.Sf0001))
-    for ((_, l) <- layouts) Ingest.ivfPurged(spark, TestSpark.Sf0001, l)
+    for ((_, l) <- layouts)
+      Ingest.ivfServed(spark, TestSpark.Sf0001, l, Ingest.DocGen.Purged(Ingest.Tombstones.Stored))
     val served = layouts.map { case (gen, l) =>
       gen -> Ingest.knnJoinIvfServed(spark, TestSpark.Sf0001, l,
-        Ingest.IvfGen.Purged, qs, 5)
+        Ingest.DocGen.Purged(Ingest.Tombstones.Stored), qs, 5)
     }
     for ((gen, df) <- served) {
       val p = plan(df)
@@ -430,7 +429,7 @@ class PlanSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
   }
 
   test("appended IVF probe prunes base AND delta scans via their own DPP") {
-    val df = Ingest.ivfTopKServed(spark, TestSpark.Sf0001, Ingest.IvfGen.Appended, 10)
+    val df = Ingest.ivfTopKServed(spark, TestSpark.Sf0001, Ingest.DocGen.Appended, 10)
     val p = plan(df)
     // the union must sit ABOVE two independently-pruned scans: one
     // dynamic-pruning partition filter per side (a union under the
@@ -501,7 +500,7 @@ class PlanSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     val qs = emb.orderBy("vec_id").limit(3)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     val p = plan(Ingest.knnJoinIvfServed(spark, TestSpark.Sf0001,
-      Ingest.IvfLayout.Flat, Ingest.IvfGen.Appended, qs, 5, nProbe = 4))
+      Ingest.IvfLayout.Flat, Ingest.DocGen.Appended, qs, 5, nProbe = 4))
     assert("dynamicpruning".r.findAllIn(p).size >= 2,
       s"base AND delta scans must each carry a DPP filter:\n$p")
     assert(!p.contains("cell IN ("),

@@ -435,7 +435,7 @@ class SimilaritySpec extends SparkSpecBase {
     // canary at cosine 1.0 (the q_ivf_append gate shape)
     val emb = Tables.embeddings(s, dir)
     val q = Ingest.appendQueryRow(emb)
-    val top = Ingest.ivfTopKServed(s, dir, Ingest.IvfGen.Appended, 10)
+    val top = Ingest.ivfTopKServed(s, dir, Ingest.DocGen.Appended, 10)
     val hit = top.join(q,
         col("vec_id") === col("q_id") + lit(Ingest.AppendOffset))
       .collect()
@@ -449,7 +449,7 @@ class SimilaritySpec extends SparkSpecBase {
   // for the append probe row, where one exists.
   private case class IvfCase(label: String,
       layout: (org.apache.spark.sql.SparkSession, String) => Ingest.IvfLayout,
-      single: Option[Ingest.IvfGen => org.apache.spark.sql.DataFrame])
+      single: Option[Ingest.DocGen => org.apache.spark.sql.DataFrame])
 
   private def ivfCases: Seq[IvfCase] = Seq(
     IvfCase("IVF", (_, _) => Ingest.IvfLayout.Flat,
@@ -500,23 +500,23 @@ class SimilaritySpec extends SparkSpecBase {
       val dir = TestSpark.Sf0001
       val l = c.layout(s, dir)
       val (_, base, delta) = Ingest.ivfDelta(s, dir, l)
-      val (_, gen2) = Ingest.ivfCompacted(s, dir, l)
+      val Seq(gen2) = Ingest.ivfServed(s, dir, l, Ingest.DocGen.Compacted).sides
       // the merge is a pure layout job: gen2 holds EXACTLY the
       // base∪delta rows — payloads verbatim, nothing re-encoded
       assert(rowsOf(gen2, "vec_id") == rowsOf(base.unionByName(delta), "vec_id"))
       // serving differential: the compacted scan returns the appended
       // path's top-10 bit-for-bit, including every delta-only canary
       val qs = appendSources(s, dir)
-      def serve(g: Ingest.IvfGen) = Ingest.knnJoinIvfServed(s, dir, l, g, qs, 10)
-      val appended = rowsOf(serve(Ingest.IvfGen.Appended), "q_id", "rnk")
-      val compacted = rowsOf(serve(Ingest.IvfGen.Compacted), "q_id", "rnk")
+      def serve(g: Ingest.DocGen) = Ingest.knnJoinIvfServed(s, dir, l, g, qs, 10)
+      val appended = rowsOf(serve(Ingest.DocGen.Appended), "q_id", "rnk")
+      val compacted = rowsOf(serve(Ingest.DocGen.Compacted), "q_id", "rnk")
       assert(compacted == appended && compacted.nonEmpty)
-      assertAppendCanaries(serve(Ingest.IvfGen.Compacted), "compacted")
+      assertAppendCanaries(serve(Ingest.DocGen.Compacted), "compacted")
       for (one <- c.single) {
-        val a1 = one(Ingest.IvfGen.Appended).collect().map(_.toSeq).toSeq
-        val c1 = one(Ingest.IvfGen.Compacted).collect().map(_.toSeq).toSeq
+        val a1 = one(Ingest.DocGen.Appended).collect().map(_.toSeq).toSeq
+        val c1 = one(Ingest.DocGen.Compacted).collect().map(_.toSeq).toSeq
         assert(c1 == a1 && c1.nonEmpty)
-        assertSingleCanary(one(Ingest.IvfGen.Compacted), "compacted")
+        assertSingleCanary(one(Ingest.DocGen.Compacted), "compacted")
       }
     }
 
@@ -538,11 +538,46 @@ class SimilaritySpec extends SparkSpecBase {
         cents3.collect().map(_.toSeq).toSet != cents2.collect().map(_.toSeq).toSet)
       // append canaries at 1.0 through the retrained serve path
       assertAppendCanaries(Ingest.knnJoinIvfServed(s, dir, l,
-        Ingest.IvfGen.Retrained(skewThreshold = 0.0), appendSources(s, dir), 10),
+        Ingest.DocGen.Retrained(skewThreshold = 0.0), appendSources(s, dir), 10),
         "retrained")
       for (one <- c.single)
-        assertSingleCanary(one(Ingest.IvfGen.Retrained(skewThreshold = 0.0)),
+        assertSingleCanary(one(Ingest.DocGen.Retrained(skewThreshold = 0.0)),
           "retrained")
+    }
+
+    test(s"${c.label} masked append: Masked(t, Appended) serves no retracted vec_id, surviving canaries top-1, ≡ Purged") {
+      val s = spark
+      val dir = TestSpark.Sf0001
+      val l = c.layout(s, dir)
+      val qs = appendSources(s, dir)
+      // the first half of the delta-only append copies plus the stored
+      // canary twins, as a supplied doc_id frame
+      val copies = qs.orderBy("q_id").limit(Ingest.NumCanaries / 2)
+        .select((col("q_id") + lit(Ingest.AppendOffset)).as("doc_id"))
+      val ids = copies.unionByName(
+        Ingest.ensureVecForgetSet(s, dir).select(col("vec_id").as("doc_id")))
+      def idsOf(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.getLong(0)).toSet
+      val stored = Ingest.ensureVecForgetSet(s, dir)
+      for ((t, dead) <- Seq(Ingest.Tombstones.Stored -> idsOf(stored),
+          Ingest.Tombstones.Supplied(ids) -> idsOf(ids))) {
+        def serve(g: Ingest.DocGen) = Ingest.knnJoinIvfServed(s, dir, l, g, qs, 10)
+        val masked = serve(Ingest.DocGen.Masked(t, Ingest.DocGen.Appended)).localCheckpoint()
+        assert(masked.filter(col("vec_id").isin(dead.toSeq: _*)).isEmpty,
+          s"a retracted vec_id surfaced through Masked($t, Appended)")
+        // every append source whose copy survives still finds it: an
+        // exact copy, cosine 1.0, so its query's rank 1
+        val surviving = idsOf(qs.select("q_id"))
+          .filterNot(q => dead.contains(q + Ingest.AppendOffset))
+        val hits = masked.filter(col("vec_id") === col("q_id") + lit(Ingest.AppendOffset))
+          .select("q_id", "rnk").collect()
+        assert(surviving.nonEmpty && hits.map(_.getLong(0)).toSet == surviving,
+          s"surviving append canaries missing from Masked($t, Appended): ${hits.toSeq}")
+        assert(hits.forall(_.getInt(1) == 1),
+          s"a surviving append canary is not its query's top-1: ${hits.toSeq}")
+        assert(rowsOf(masked, "q_id", "rnk") ==
+          rowsOf(serve(Ingest.DocGen.Purged(t, Ingest.DocGen.Appended)), "q_id", "rnk"),
+          s"Purged($t, Appended) must serve Masked's rows")
+      }
     }
 
     test(s"${c.label} purge: purged generation == base minus the tombstones, none served") {
@@ -550,7 +585,8 @@ class SimilaritySpec extends SparkSpecBase {
       val dir = TestSpark.Sf0001
       val l = c.layout(s, dir)
       val (_, base) = l.base(s, dir)
-      val (_, purged) = Ingest.ivfPurged(s, dir, l)
+      val purged = Ingest.ivfServed(s, dir, l,
+        Ingest.DocGen.Purged(Ingest.Tombstones.Stored)).sides.head
       val dead = Ingest.ensureVecForgetSet(s, dir)
       // the tombstones are really in the base (the check discriminates)
       assert(base.join(dead, "vec_id").count() == dead.count() && dead.count() > 0)
@@ -570,8 +606,8 @@ class SimilaritySpec extends SparkSpecBase {
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("q_id", "rnk").collect().map(_.toSeq).toSeq
     val l = Ingest.IvfLayout.pq(s, dir)
-    val appended = canon(Ingest.knnJoinIvfServed(s, dir, l, Ingest.IvfGen.Appended, qs, 5))
-    val compacted = canon(Ingest.knnJoinIvfServed(s, dir, l, Ingest.IvfGen.Compacted, qs, 5))
+    val appended = canon(Ingest.knnJoinIvfServed(s, dir, l, Ingest.DocGen.Appended, qs, 5))
+    val compacted = canon(Ingest.knnJoinIvfServed(s, dir, l, Ingest.DocGen.Compacted, qs, 5))
     assert(appended == compacted && appended.nonEmpty)
   }
 
