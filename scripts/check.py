@@ -41,6 +41,11 @@ def main():
 
     sql_cache = {}
     n_pass = n_fail = n_noora = 0
+    # every oracle key is a gate the dump was asked for: one without an
+    # output directory threw in graft.Verify and must fail the tally
+    for q in sorted(set(oracle_sql) - {n.split("/")[-1] for n in glob.glob(f"{OUT}/q_*")}):
+        print(f"{q}: NO SPARK OUTPUT")
+        n_fail += 1
     for name in sorted(glob.glob(f"{OUT}/q_*")):
         q = name.split("/")[-1]
         files = glob.glob(f"{name}/*.parquet")

@@ -4,12 +4,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
-  * `queries` is the union of the parity surface (graft.queries.Parity —
-  * one named query per reference operator row, SURVEY.md §2) and the
-  * large-scale extension operators (dedup / similarity / text analysis /
-  * multimodal — SURVEY.md §2.11). Every SQL-expressible query has a
-  * DuckDB oracle in `oracleSql` with identical column names and total
-  * ordering (the driver's hash compare requires both).
+  * `queries` and `oracleSql` are the two halves of one gate table,
+  * [[graft.gates.Gates.all]]: the parity surface (one named query per
+  * reference operator row, SURVEY.md §2) and the large-scale extension
+  * operators (dedup / similarity / text analysis / multimodal —
+  * SURVEY.md §2.11). Every query has a DuckDB oracle with identical
+  * column names and total ordering (the DuckDB hash compare requires
+  * both).
   */
 object SparkEntry {
 
@@ -20,25 +21,16 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q_saldo_per_konto")(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = {
-    val m = graft.queries.Registry.unionDistinct(
-      "Parity" -> graft.queries.Parity.queries,
-      "Extensions" -> graft.queries.Extensions.queries)
-    // every gate must carry an oracle and vice versa — a one-sided key
-    // is a silently weaker (or dead) gate, refused at assembly
-    graft.queries.Registry.requireAligned(m.keySet, oracleSql.keySet)
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
     // every entry installs graft's SQL functions and plan rules on its
     // session first, so plan shape never depends on session history
-    m.map { case (name, q) =>
+    graft.gates.Gates.all.map { case (name, g) =>
       name -> ((s: SparkSession, dir: String) => {
         GraftExtensions.install(s)
-        q(s, dir)
+        g.query(s, dir)
       })
     }
-  }
 
   def oracleSql: Map[String, String] =
-    graft.queries.Registry.unionDistinct(
-      "Parity" -> graft.queries.Parity.oracles,
-      "Extensions" -> graft.queries.Extensions.oracles)
+    graft.gates.Gates.all.map { case (name, g) => name -> g.oracle }
 }

@@ -9,6 +9,13 @@ object Verify {
     // a subset for targeted re-checks; default is the full surface.
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
+    // a typo in a filter would otherwise dump nothing for that name
+    val unknown = only -- SparkEntry.oracleSql.keySet
+    if (unknown.nonEmpty) {
+      System.err.println(
+        s"[verify] not a gate: ${unknown.toSeq.sorted.mkString(" ")}")
+      sys.exit(2)
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = LocalScratch.configure(SparkSession.builder()
         .master(s"local[$cpus]")
@@ -39,7 +46,10 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+    // filtered: the requested gates' oracles only, so check.py's
+    // per-oracle tally counts a gate that threw as NO SPARK OUTPUT
     val json = SparkEntry.oracleSql
+      .filter { case (name, _) => only.isEmpty || only(name) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

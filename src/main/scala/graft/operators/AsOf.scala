@@ -1,10 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.queries.Tables.events
 
 /** AS-OF join — "for each left row, the latest right row at or before
   * its timestamp, per key". Spark has no native operator (SPARK-22947);
@@ -62,52 +60,4 @@ object AsOf {
       .filter(col("__tag") === 1)
       .drop("__tag", "__asof_row")
   }
-
-  // --- query surface ---------------------------------------------------
-
-  /** This module's share of the driver-visible gate surface —
-    * bump WITH any gate added here (RegistrySpec sums the
-    * module-local declarations; no global count exists). */
-  val declaredGates: Int = 1
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // for every click, the value of the user's most recent error at or
-    // before it — validated against DuckDB's native ASOF JOIN. The right
-    // side is pre-deduped to ONE row per (user_id, ts) — keep the max
-    // event_id's value — because DuckDB's ASOF JOIN leaves the row choice
-    // UNSPECIFIED on tied right timestamps, while asofJoin breaks ties
-    // deterministically; canonicalizing the input makes both engines
-    // compare the same thing (ADVICE r2).
-    "q_asof_join" -> ((s, dir) => {
-      val ev = events(s, dir)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          unix_micros(col("ts")).as("tus"), col("value"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select("user_id", "event_id", "tus")
-      val errors = ev.filter(col("event_type") === "error")
-        .groupBy("user_id", "tus")
-        .agg(max("event_id").as("event_id"),
-          max_by(col("value"), col("event_id")).as("value"))
-      asofJoin(clicks, errors, key = "user_id", ts = "tus", id = "event_id",
-        valueCol = "value")
-        .select(col("user_id"), col("event_id"), col("asof_value"))
-        .orderBy("user_id", "event_id")
-    })
-  )
-
-  val oracles: Map[String, String] = Map(
-    // epoch_us on both sides: Spark timestamps are µs while the source
-    // parquet is ns — comparing at the same precision keeps the >=
-    // boundary identical. Right side deduped to one row per (user_id, ts)
-    // (max event_id's value) to mirror the Spark query's canonicalization.
-    "q_asof_join" ->
-      """SELECT c.user_id, c.event_id, e.value AS asof_value
-        |FROM (SELECT user_id, event_id, epoch_us(ts) AS tus FROM events
-        |      WHERE event_type = 'click') c
-        |ASOF LEFT JOIN
-        |     (SELECT user_id, epoch_us(ts) AS tus, arg_max(value, event_id) AS value
-        |      FROM events WHERE event_type = 'error' GROUP BY 1, 2) e
-        |ON c.user_id = e.user_id AND c.tus >= e.tus
-        |ORDER BY c.user_id, c.event_id""".stripMargin
-  )
 }

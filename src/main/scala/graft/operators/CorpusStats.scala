@@ -46,7 +46,7 @@ object CorpusStats {
 
   /** The corpus tokenizer — same whitespace normalization as the BM25 /
     * term-stats family so frequency surfaces agree across operators. */
-  private def toks(text: Column): Column =
+  private[graft] def toks(text: Column): Column =
     split(lower(regexp_replace(trim(text), "\\s+", " ")), " ")
 
   /** Row-r CMS bucket of a term: the first md5 hex byte of
@@ -115,7 +115,7 @@ object CorpusStats {
       storedTable(s, scratch(s, dir, s"${stem}_delta"))(build(Ingest.appendedDocs(s, dir))))
 
   /** (term, c) counts of a document frame under the corpus tokenizer. */
-  private def termCounts(docs: DataFrame): DataFrame = docs
+  private[graft] def termCounts(docs: DataFrame): DataFrame = docs
     .select(explode(toks(col("text"))).as("term"))
     .groupBy("term").agg(count(lit(1)).as("c"))
 
@@ -402,353 +402,7 @@ object CorpusStats {
       .orderBy("lang")
   }
 
-  // --- query surface ----------------------------------------------------
-
-  /** This module's share of the driver-visible gate surface —
-    * bump WITH any gate added here (RegistrySpec sums the
-    * module-local declarations; no global count exists). */
-  val declaredGates: Int = 11
-
   /** Deletion surface this module contributes to the composed takedown
     * (TakedownSpec derives the expected axis set from these). */
   val takedownAxes: Seq[String] = Seq("cms")
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // heavy hitters through the sketch: exact top-10 terms with their
-    // exact counts AND their CMS estimates. The estimate of every probe
-    // is a min over bucket sums that include every colliding term in
-    // the corpus, so the gate pins the whole sketch construction (hash,
-    // fold, cell sums), not just the probe rows.
-    "q_heavy_hitters" -> ((s, dir) => {
-      val cnt = termCounts(documents(s, dir))
-        .localCheckpoint() // two consumers: sketch build + probe top-k
-      val probes = cnt.orderBy(desc("c"), asc("term")).limit(CmsTopK)
-      cmsEstimate(cmsBuild(cnt), probes)
-        .select(col("term"), col("c").as("tf_exact"), col("tf_est"))
-        .orderBy("term")
-    }),
-
-    // stats-axis LSM: heavy-hitter estimates over base ∪ append batch,
-    // served from the two STORED sketches via cell-wise merge — no
-    // corpus scan, no tokenize in the warm path. The oracle replays the
-    // FRESH build over the augmented corpus, so the hash pins
-    // merged-from-parts ≡ fresh-over-union (sum associativity made
-    // observable), plus the absent-probe zero-cell edge.
-    "q_cms_merge" -> ((s, dir) => cmsServed(s, dir, DocGen.Appended)),
-
-    // stats-axis DELETION: heavy-hitter estimates with the retraction
-    // sketch subtracted cell-wise from the stored base. The oracle
-    // replays a fresh sketch over the REDUCED corpus, so the hash IS
-    // the proof that CMS subtraction is exact (sketch linearity made
-    // observable) — the deletion mirror of q_cms_merge's associativity.
-    "q_cms_forget" -> ((s, dir) =>
-      cmsServed(s, dir, DocGen.Masked(Tombstones.Stored))),
-
-    // physical purge on the stats axis: the subtracted sketch rewritten
-    // as the purged generation FROM STORED CELLS ALONE (zero corpus
-    // I/O) and served with no subtraction in the plan; shares
-    // q_cms_forget's oracle verbatim so masked ≡ purged is pinned by
-    // one hash.
-    "q_cms_purge" -> ((s, dir) =>
-      cmsServed(s, dir, DocGen.Purged(Tombstones.Stored))),
-
-    // the purge TRIGGER on the stats axis, both arms in one gate (the
-    // q_forget_policy convention): dead token mass ≈ 1/13 of the corpus,
-    // so θ=0.5 must keep the subtracted serve and θ=0.02 must trip the
-    // purge rewrite; the pinned decision booleans catch a policy that
-    // never (or always) fires even though both arms agree on rows.
-    "q_cms_policy" -> ((s, dir) => {
-      val (lo, loPurged) = cmsPolicyServed(s, dir, Tombstones.Stored, theta = 0.5)
-      val (hi, hiPurged) = cmsPolicyServed(s, dir, Tombstones.Stored, theta = 0.02)
-      lo.withColumn("arm", lit("mask"))
-        .withColumn("purged_serving", lit(loPurged))
-        .unionByName(hi.withColumn("arm", lit("purge"))
-          .withColumn("purged_serving", lit(hiPurged)))
-        .select("arm", "purged_serving", "term", "tf_est")
-        .orderBy("arm", "term")
-    }),
-
-    // quantile-axis LSM: exact histogram quantiles of base ∪ append
-    // batch from the STORED per-shard artifacts — cell-wise merge on
-    // both axes (shards, generations), bounded cumulative window,
-    // integer coverage cut. The oracle replays a FRESH histogram over
-    // the augmented corpus with no shard axis at all, so the hash pins
-    // merged-from-parts ≡ fresh-over-union on the quantile surface.
-    "q_quantile_merge" -> ((s, dir) => histServed(s, dir, DocGen.Appended)),
-
-    // quantile-axis deletion + purge: per-(shard, bucket) count
-    // subtraction (exact by linearity, oracle = fresh histogram over
-    // the reduced corpus) and the purged rewrite serving it mask-free.
-    "q_quantile_forget" -> ((s, dir) =>
-      histServed(s, dir, DocGen.Masked(Tombstones.Stored))),
-    "q_quantile_purge" -> ((s, dir) =>
-      histServed(s, dir, DocGen.Purged(Tombstones.Stored))),
-
-    // cardinality-axis LSM: per-lang distinct-vocabulary estimate of
-    // base ∪ append batch from the STORED HLL sketches (one union-agg
-    // over bounded binary rows); gate = exact count both engines + 5%
-    // integer envelope on the merged estimate (the q_hll_distinct
-    // convention — the estimate is implementation-specific, the
-    // envelope is not).
-    "q_hll_merge" -> ((s, dir) => hllMergeServe(s, dir)),
-
-    // the data card: per-lang docs/tokens/mean-length/vocab (exact +
-    // HLL-in-envelope)/median-length-bucket in one frame — the summary
-    // a dataset release ships, composed from the gated generators.
-    "q_lang_card" -> ((s, dir) => dataCard(s, dir)),
-
-    // document-level PMI: for term pairs co-occurring in a majority of
-    // documents (integer cut 2·df_ab ≥ N), the pointwise mutual
-    // information ln(N·df_ab / (df_a·df_b)), rounded 6 dp before the
-    // hash compare (the round-before-rank convention).
-    "q_pmi_pairs" -> ((s, dir) => {
-      val docs = documents(s, dir)
-      val terms = docs
-        .select(col("doc_id"),
-          explode(slice(array_sort(array_distinct(toks(col("text")))),
-            1, PmiMaxDocTerms)).as("term"))
-        .localCheckpoint() // three consumers: df + both pair sides
-      val df = terms.groupBy("term").agg(count(lit(1)).as("df"))
-      val pairs = terms.as("x")
-        .join(terms.as("y"),
-          col("x.doc_id") === col("y.doc_id") && col("x.term") < col("y.term"))
-        .groupBy(col("x.term").as("t1"), col("y.term").as("t2"))
-        .agg(count(lit(1)).as("df_ab"))
-      val n = docs.agg(count(lit(1)).as("n_docs"))
-      pairs.crossJoin(broadcast(n))
-        .filter(col("df_ab") * 2 >= col("n_docs"))
-        .join(df.withColumnRenamed("term", "t1").withColumnRenamed("df", "df_a"), "t1")
-        .join(df.withColumnRenamed("term", "t2").withColumnRenamed("df", "df_b"), "t2")
-        .select(col("t1"), col("t2"), col("df_ab"),
-          round(log((col("n_docs") * col("df_ab")).cast(DoubleType) /
-            (col("df_a") * col("df_b")).cast(DoubleType)), 6).as("pmi"))
-        .orderBy("t1", "t2")
-    })
-  )
-
-  private val TokCte =
-    """SELECT doc_id,
-      |       unnest(string_split(lower(regexp_replace(trim(text), '\s+', ' ', 'g')), ' ')) AS term
-      |FROM documents""".stripMargin
-
-  /** Shared forget/purge oracle on the stats axis: a FRESH sketch over
-    * the reduced corpus (`NOT doc_id % ForgetMod = ForgetRem`) probed
-    * with the fixed list — subtracted-stored and purged-generation
-    * serves must both hash-match it, which pins CMS linearity AND
-    * masked ≡ purged in two gates over one SQL string. */
-  private val CmsForgetCtes: String =
-    s"""doc2 AS (
-       |  SELECT text FROM documents
-       |  WHERE NOT (doc_id % ${Ingest.ForgetMod} = ${Ingest.ForgetRem})),
-       |tok AS (
-       |  SELECT unnest(string_split(lower(regexp_replace(trim(text), '\\s+', ' ', 'g')), ' ')) AS term
-       |  FROM doc2),
-       |cnt AS (SELECT term, count(*) AS c FROM tok GROUP BY 1),
-       |cms AS (
-       |  SELECT r, ${cmsBucketSql("r", "term")} AS b,
-       |         CAST(sum(c) AS BIGINT) AS cnt
-       |  FROM cnt CROSS JOIN (SELECT unnest(range(0, $CmsDepth)) AS r) u
-       |  GROUP BY 1, 2),
-       |probe AS (SELECT unnest([${CmsProbeTerms.map("'" + _ + "'").mkString(", ")}]) AS term),
-       |cells AS (
-       |  SELECT p.term, u.r, ${cmsBucketSql("u.r", "p.term")} AS b
-       |  FROM probe p CROSS JOIN (SELECT unnest(range(0, $CmsDepth)) AS r) u),
-       |est AS (
-       |  SELECT cells.term,
-       |         CAST(min(COALESCE(cms.cnt, 0)) AS BIGINT) AS tf_est
-       |  FROM cells LEFT JOIN cms ON cells.r = cms.r AND cells.b = cms.b
-       |  GROUP BY 1)""".stripMargin
-
-  private[operators] val CmsForgetOracle: String =
-    s"WITH $CmsForgetCtes\nSELECT term, tf_est FROM est ORDER BY term"
-
-  /** Policy oracle — the forget body served through both arms with the
-    * decision booleans as literals (mask below θ, purge above). */
-  private val CmsPolicyOracle: String =
-    s"""WITH $CmsForgetCtes
-       |SELECT arm, purged_serving, term, tf_est FROM (
-       |  SELECT 'mask' AS arm, FALSE AS purged_serving, term, tf_est FROM est
-       |  UNION ALL
-       |  SELECT 'purge' AS arm, TRUE AS purged_serving, term, tf_est FROM est)
-       |ORDER BY arm, term""".stripMargin
-
-  /** Shared forget/purge oracle on the quantile axis — fresh histogram
-    * quantiles over the reduced corpus, shard axis absent. */
-  private val QuantileForgetOracle: String =
-    s"""WITH doc2 AS (
-       |  SELECT n_chars FROM documents
-       |  WHERE NOT (doc_id % ${Ingest.ForgetMod} = ${Ingest.ForgetRem})),
-       |h AS (
-       |  SELECT CAST(n_chars // $HistBucketWidth AS BIGINT) AS bucket,
-       |         count(*) AS n
-       |  FROM doc2 GROUP BY 1),
-       |c AS (
-       |  SELECT bucket, n,
-       |         CAST(sum(n) OVER (ORDER BY bucket) AS BIGINT) AS cum_n,
-       |         CAST((SELECT sum(n) FROM h) AS BIGINT) AS total_n
-       |  FROM h),
-       |q AS (SELECT unnest([${QuantilePcts.mkString(", ")}]) AS q_pct)
-       |SELECT CAST(q.q_pct AS INT) AS q_pct,
-       |       min(c.bucket) AS bucket,
-       |       CAST(min(c.bucket) * $HistBucketWidth AS BIGINT) AS lo_chars,
-       |       CAST(min_by(c.cum_n, c.bucket) AS BIGINT) AS cum_n,
-       |       max(c.total_n) AS total_n
-       |FROM q JOIN c ON c.cum_n * 100 >= q.q_pct * c.total_n
-       |GROUP BY 1 ORDER BY q_pct""".stripMargin
-
-  val oracles: Map[String, String] = Map(
-    "q_heavy_hitters" ->
-      s"""WITH tok AS ($TokCte),
-         |cnt AS (SELECT term, count(*) AS c FROM tok GROUP BY 1),
-         |cms AS (
-         |  SELECT r, ${cmsBucketSql("r", "term")} AS b,
-         |         CAST(sum(c) AS BIGINT) AS cnt
-         |  FROM cnt CROSS JOIN (SELECT unnest(range(0, $CmsDepth)) AS r) u
-         |  GROUP BY 1, 2),
-         |probe AS (SELECT term, c FROM cnt ORDER BY c DESC, term LIMIT $CmsTopK),
-         |cells AS (
-         |  SELECT p.term, p.c, u.r, ${cmsBucketSql("u.r", "p.term")} AS b
-         |  FROM probe p CROSS JOIN (SELECT unnest(range(0, $CmsDepth)) AS r) u)
-         |SELECT cells.term, CAST(max(cells.c) AS BIGINT) AS tf_exact,
-         |       min(cms.cnt) AS tf_est
-         |FROM cells JOIN cms ON cells.r = cms.r AND cells.b = cms.b
-         |GROUP BY 1 ORDER BY term""".stripMargin,
-    // fresh CMS over the AUGMENTED corpus (base ∪ the % 101 copies) —
-    // the probe list and the zero-cell COALESCE mirror cmsServed;
-    // cell-sum associativity makes merged-stored ≡ fresh-replayed exact.
-    "q_cms_merge" ->
-      s"""WITH doc2 AS (
-         |  SELECT text FROM documents
-         |  UNION ALL
-         |  SELECT text FROM documents WHERE doc_id % 101 = 0),
-         |tok AS (
-         |  SELECT unnest(string_split(lower(regexp_replace(trim(text), '\\s+', ' ', 'g')), ' ')) AS term
-         |  FROM doc2),
-         |cnt AS (SELECT term, count(*) AS c FROM tok GROUP BY 1),
-         |cms AS (
-         |  SELECT r, ${cmsBucketSql("r", "term")} AS b,
-         |         CAST(sum(c) AS BIGINT) AS cnt
-         |  FROM cnt CROSS JOIN (SELECT unnest(range(0, $CmsDepth)) AS r) u
-         |  GROUP BY 1, 2),
-         |probe AS (SELECT unnest([${CmsProbeTerms.map("'" + _ + "'").mkString(", ")}]) AS term),
-         |cells AS (
-         |  SELECT p.term, u.r, ${cmsBucketSql("u.r", "p.term")} AS b
-         |  FROM probe p CROSS JOIN (SELECT unnest(range(0, $CmsDepth)) AS r) u)
-         |SELECT cells.term,
-         |       CAST(min(COALESCE(cms.cnt, 0)) AS BIGINT) AS tf_est
-         |FROM cells LEFT JOIN cms ON cells.r = cms.r AND cells.b = cms.b
-         |GROUP BY 1 ORDER BY term""".stripMargin,
-
-    "q_cms_forget" -> CmsForgetOracle,
-    "q_cms_purge" -> CmsForgetOracle,
-    "q_cms_policy" -> CmsPolicyOracle,
-    "q_quantile_forget" -> QuantileForgetOracle,
-    "q_quantile_purge" -> QuantileForgetOracle,
-
-    // exact per-lang distinct vocabulary over the augmented corpus,
-    // plus the 5%-error band of DuckDB's OWN HLL
-    // (approx_count_distinct) — each engine independently computes its
-    // estimator's band (both 0 = both within 5 %), so the oracle
-    // asserts a quantity it computed, not a constant
-    "q_hll_merge" ->
-      """WITH doc2 AS (
-        |  SELECT lang, text FROM documents
-        |  UNION ALL
-        |  SELECT lang, text FROM documents WHERE doc_id % 101 = 0),
-        |tok AS (
-        |  SELECT lang,
-        |         unnest(string_split(lower(regexp_replace(trim(text), '\s+', ' ', 'g')), ' ')) AS term
-        |  FROM doc2)
-        |SELECT lang, CAST(count(DISTINCT term) AS BIGINT) AS exact_terms,
-        |       CAST(floor(abs(CAST(approx_count_distinct(term) AS DOUBLE)
-        |                      - count(DISTINCT term)) * 20
-        |                  / count(DISTINCT term)) AS BIGINT) AS err_band_5pct
-        |FROM tok GROUP BY 1 ORDER BY lang""".stripMargin,
-
-    // per-lang card replay: exact counts, DuckDB's own HLL error band
-    // (the two-sided q_hll_merge convention), median bucket by the
-    // same integer coverage cut
-    "q_lang_card" ->
-      s"""WITH tok AS (
-         |  SELECT lang,
-         |         unnest(string_split(lower(regexp_replace(trim(text), '\\s+', ' ', 'g')), ' ')) AS term
-         |  FROM documents),
-         |base AS (
-         |  SELECT lang, count(*) AS n_docs,
-         |         CAST(sum(n_chars) AS BIGINT) AS sum_chars
-         |  FROM documents GROUP BY 1),
-         |voc AS (
-         |  SELECT lang, CAST(count(*) AS BIGINT) AS n_tokens,
-         |         CAST(count(DISTINCT term) AS BIGINT) AS distinct_terms,
-         |         approx_count_distinct(term) AS est
-         |  FROM tok GROUP BY 1),
-         |h AS (
-         |  SELECT lang, CAST(n_chars // $HistBucketWidth AS BIGINT) AS bucket,
-         |         count(*) AS n
-         |  FROM documents GROUP BY 1, 2),
-         |c AS (
-         |  SELECT lang, bucket,
-         |         CAST(sum(n) OVER (PARTITION BY lang ORDER BY bucket) AS BIGINT) AS cum_n,
-         |         CAST(sum(n) OVER (PARTITION BY lang) AS BIGINT) AS total_n
-         |  FROM h),
-         |med AS (
-         |  SELECT lang, CAST(min(bucket) * $HistBucketWidth AS BIGINT) AS p50_chars_lo
-         |  FROM c WHERE cum_n * 2 >= total_n GROUP BY 1)
-         |SELECT b.lang, b.n_docs, v.n_tokens,
-         |       CAST(b.sum_chars // b.n_docs AS BIGINT) AS mean_chars,
-         |       v.distinct_terms,
-         |       CAST(floor(abs(CAST(v.est AS DOUBLE) - v.distinct_terms) * 20
-         |                  / v.distinct_terms) AS BIGINT) AS vocab_err_band_5pct,
-         |       m.p50_chars_lo
-         |FROM base b JOIN voc v USING (lang) JOIN med m USING (lang)
-         |ORDER BY b.lang""".stripMargin,
-
-    // fresh histogram over the augmented corpus, shard axis absent —
-    // equality with the stored-merge serve IS the associativity proof
-    "q_quantile_merge" ->
-      s"""WITH doc2 AS (
-         |  SELECT n_chars FROM documents
-         |  UNION ALL
-         |  SELECT n_chars FROM documents WHERE doc_id % 101 = 0),
-         |h AS (
-         |  SELECT CAST(n_chars // $HistBucketWidth AS BIGINT) AS bucket,
-         |         count(*) AS n
-         |  FROM doc2 GROUP BY 1),
-         |c AS (
-         |  SELECT bucket, n,
-         |         CAST(sum(n) OVER (ORDER BY bucket) AS BIGINT) AS cum_n,
-         |         CAST((SELECT sum(n) FROM h) AS BIGINT) AS total_n
-         |  FROM h),
-         |q AS (SELECT unnest([${QuantilePcts.mkString(", ")}]) AS q_pct)
-         |SELECT CAST(q.q_pct AS INT) AS q_pct,
-         |       min(c.bucket) AS bucket,
-         |       CAST(min(c.bucket) * $HistBucketWidth AS BIGINT) AS lo_chars,
-         |       CAST(min_by(c.cum_n, c.bucket) AS BIGINT) AS cum_n,
-         |       max(c.total_n) AS total_n
-         |FROM q JOIN c ON c.cum_n * 100 >= q.q_pct * c.total_n
-         |GROUP BY 1 ORDER BY q_pct""".stripMargin,
-
-    "q_pmi_pairs" ->
-      s"""WITH tok0 AS ($TokCte),
-         |tok AS (
-         |  SELECT doc_id, term FROM (
-         |    SELECT DISTINCT doc_id, term FROM tok0)
-         |  QUALIFY row_number() OVER (PARTITION BY doc_id ORDER BY term)
-         |          <= $PmiMaxDocTerms),
-         |dfc AS (SELECT term, count(*) AS df FROM tok GROUP BY 1),
-         |p AS (
-         |  SELECT a.term AS t1, b.term AS t2, count(*) AS df_ab
-         |  FROM tok a JOIN tok b ON a.doc_id = b.doc_id AND a.term < b.term
-         |  GROUP BY 1, 2),
-         |n AS (SELECT count(*) AS n_docs FROM documents)
-         |SELECT p.t1, p.t2, p.df_ab,
-         |       round(ln(CAST(n.n_docs * p.df_ab AS DOUBLE) /
-         |                CAST(da.df * db.df AS DOUBLE)), 6) AS pmi
-         |FROM p
-         |JOIN dfc da ON da.term = p.t1
-         |JOIN dfc db ON db.term = p.t2
-         |CROSS JOIN n
-         |WHERE 2 * p.df_ab >= n.n_docs
-         |ORDER BY t1, t2""".stripMargin
-  )
 }

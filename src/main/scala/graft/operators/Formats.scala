@@ -35,14 +35,6 @@ object Formats {
     conv(substring(md5(concat_ws("#", lang, source, text)), 1, 8), 16, 10)
       .cast(LongType)
 
-  /** DuckDB twin of [[rowFp]] (no conv() there — exact digit fold). */
-  private def rowFpSql: String =
-    """list_sum(list_transform(range(8),
-      |  i -> (strpos('0123456789abcdef',
-      |          substr(md5(lang || '#' || source || '#' || text),
-      |                 CAST(i + 1 AS INT), 1)) - 1)
-      |       * (CAST(1 AS BIGINT) << CAST(4 * (7 - i) AS INT))))""".stripMargin
-
   /** Write documents through each format's writer, read back through
     * its reader, fingerprint. Returns one row per format. */
   def formatRoundtrip(s: SparkSession, dir: String): DataFrame = {
@@ -60,29 +52,4 @@ object Formats {
       .unionByName(fp(s.read.schema(schema).orc(s"$root/orc"), "orc"))
       .orderBy("format")
   }
-
-  /** This module's share of the driver-visible gate surface —
-    * bump WITH any gate added here (RegistrySpec sums the
-    * module-local declarations; no global count exists). */
-  val declaredGates: Int = 1
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // writer∘reader = identity per landing format, pinned against the
-    // ORIGINAL parquet by an order-independent exact fingerprint.
-    "q_format_roundtrip" -> ((s, dir) => formatRoundtrip(s, dir))
-  )
-
-  val oracles: Map[String, String] = Map(
-    // the same counts + fingerprint straight off the parquet table,
-    // replicated per format label: any escaping/type/null divergence in
-    // either engine's idea of the text breaks the BIGINT sum.
-    "q_format_roundtrip" ->
-      s"""WITH fp AS (
-         |  SELECT count(*) AS n_docs, CAST(sum(doc_id) AS BIGINT) AS sum_ids,
-         |         CAST(sum($rowFpSql) AS BIGINT) AS sum_fp
-         |  FROM documents)
-         |SELECT f.format, fp.n_docs, fp.sum_ids, fp.sum_fp
-         |FROM (SELECT unnest(['jsonl', 'orc']) AS format) f, fp
-         |ORDER BY format""".stripMargin
-  )
 }

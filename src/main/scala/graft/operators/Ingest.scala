@@ -51,7 +51,7 @@ object Ingest {
     * metadata-count job the first time, a map lookup after. */
   private val embCounts =
     scala.collection.concurrent.TrieMap.empty[(String, String), Long]
-  private[operators] def embeddingCount(s: SparkSession, dir: String): Long =
+  private[graft] def embeddingCount(s: SparkSession, dir: String): Long =
     embCounts.getOrElseUpdate((s.sparkContext.applicationId, dir),
       embeddings(s, dir).count())
 
@@ -2124,8 +2124,6 @@ object Ingest {
       rescoreCorpus, queriesDf, k, expand, nProbe, dead)
   }
 
-  // --- query surface ---------------------------------------------------
-
   /** Fixed probe set of the batched BM25 gate: 4 term-set queries over
     * the synthetic vocabulary, including one term ('state') that occurs
     * nowhere in the corpus — the zero-postings edge the join must drop
@@ -2160,57 +2158,6 @@ object Ingest {
     7L -> "table", 7L -> "join",
     8L -> "scan", 8L -> "hash")
 
-  /** Number of probes in the batched evaluation gate. */
-  private[graft] val NdcgBatchProbes: Int = 8
-
-  /** Evaluation depth of the batched-nDCG gate — interpolated into BOTH
-    * the Spark chain and the oracle SQL (generate-from-constants rule:
-    * tuning the depth may not silently desynchronize the two sides). */
-  private[graft] val NdcgBatchK: Int = 10
-
-  /** The hybrid evaluation suite's two lists — fused (RRF over dense ⊕
-    * batched stored-index BM25) and dense ideal — shared by the nDCG
-    * and MRR gates so both metrics always judge the SAME ranking.
-    * dense: q_id = probe vec_id through the kNN join (self-exclusion
-    * stays vec_id ≠ probe), relabeled 1..8 by vec_id rank to align with
-    * the sparse q_ids (an 8-row window); checkpointed — three consumers
-    * (fusion + relevance + idcg/rel-set). */
-  private def hybridRankedLists(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
-    import s.implicits._
-    val emb = embeddings(s, dir)
-    // bounded probe batch → literal relation (collected once per app):
-    // qmap's window and every broadcast referencing the probes otherwise
-    // re-evaluate the TakeOrdered corpus subplan per consumer
-    val probes = Similarity.localizedQueryBatch(
-      emb.orderBy("vec_id").limit(NdcgBatchProbes)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb")))
-    val qmap = probes.select(col("q_id"),
-      row_number().over(Window.orderBy("q_id")).cast(LongType).as("eq"))
-    // the dense (exact kNN) and sparse (stored-index BM25) arms are
-    // independent — construct AND materialize each on a pool thread
-    // (guide §2.6; BuildTimer interval-union + buildGate make the
-    // sparse arm's ensureTermIndex concurrent-safe, optimization r16)
-    val Seq(dense, sparse) = graft.Par.run(s.sparkContext, Seq(
-      () => Similarity.knnJoin(emb, probes, NdcgBatchK)
-        .join(broadcast(qmap), "q_id")
-        .select(col("eq").as("q_id"), col("vec_id").as("id"),
-          col("rnk").as("rank")).localCheckpoint(),
-      () => bm25TopKBatch(s, dir,
-          NdcgBatchTerms.toDF("q_id", "term"), NdcgBatchK)
-        .select(col("q_id"), col("doc_id").as("id"), col("rnk").as("rank"))
-        .localCheckpoint()))
-    val ranked = Similarity.rrfFuseBatch(Seq(dense, sparse), NdcgBatchK)
-      .select("q_id", "id", "rank")
-    (ranked, dense)
-  }
-
-  /** This module's share of the driver-visible gate surface —
-    * bump WITH any gate added here (RegistrySpec sums the
-    * module-local declarations; no global count exists). */
-  val declaredGates: Int = 52
-
   /** Deletion surfaces this module contributes to the composed takedown
     * (TakedownSpec derives the expected axis set from these and asserts
     * [[takedownE2e]] serves exactly their union — planting a new
@@ -2218,1070 +2165,8 @@ object Ingest {
   val takedownAxes: Seq[String] =
     Seq("bm25", "dense", "phrase", "quantized_pq", "quantized_sq", "sketch")
 
-  /** The 8 base-canary sources as a (q_id, q_emb) batch: each query's
-    * exact-copy twin rides the base at +[[TwinOffset]]. */
-  private def canaryQueries(s: SparkSession, dir: String): DataFrame =
-    embeddings(s, dir).orderBy("vec_id").limit(NumCanaries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-
-  /** The 8 append sources as a batch: each query's exact copy lives ONLY
-    * in the delta, at +[[AppendOffset]]. */
-  private def appendQueries(s: SparkSession, dir: String): DataFrame =
-    embeddings(s, dir).orderBy("vec_id").offset(NumCanaries).limit(NumCanaries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-
-  /** The forget/purge gates' outcome over a [[canaryQueries]] serve with
-    * the first half's twins tombstoned: a retracted twin was its query's
-    * guaranteed top-1, so n_retracted_served == 0 pins the mask (or the
-    * purge) across probe/DPP/shortlist/top-k, and the surviving half's
-    * recall 1.0 pins that deletion removed nothing else. */
-  private def forgetOutcome(s: SparkSession, dir: String,
-      served: DataFrame): DataFrame = {
-    val dead = ensureVecForgetSet(s, dir)
-      .select(col("vec_id").as("dead_id"))
-    served
-      .join(broadcast(dead), col("vec_id") === col("dead_id"), "left_outer")
-      .agg(
-        (count(when(col("vec_id") === col("q_id") + lit(TwinOffset),
-          lit(1))).cast(DoubleType) / (NumCanaries / 2).toDouble)
-          .as("recall_surviving"),
-        count(col("dead_id")).as("n_retracted_served"))
-  }
-
-  /** recall_at_10 of the delta-only append canaries: a batched serve
-    * (q_id per row, over [[appendQueries]]) must hold each query's
-    * +AppendOffset copy; a single-query serve must hold the
-    * [[appendQueryRow]]'s. Pinned 1.0, it proves the frozen-centroid
-    * assignment, the delta's cell layout and the generation's pruned
-    * scans — without rebuilding or touching the base index files. */
-  private def appendRecall(s: SparkSession, dir: String,
-      served: DataFrame): DataFrame =
-    if (served.columns.contains("q_id"))
-      served.filter(col("vec_id") === col("q_id") + lit(AppendOffset))
-        .agg((count(lit(1)).cast(DoubleType) / NumCanaries.toDouble)
-          .as("recall_at_10"))
-    else
-      served.join(broadcast(appendQueryRow(embeddings(s, dir))),
-          col("vec_id") === col("q_id") + lit(AppendOffset))
-        .agg(count(lit(1)).cast(DoubleType).as("recall_at_10"))
-
-  /** The compact gates: the appended and the compacted serve, each
-    * constructed AND materialized on a pool thread (guide §2.6 — both
-    * are bounded, k rows per query, so the differential reads two tiny
-    * checkpoints instead of re-executing each serve in both exceptAll
-    * directions), compared row-for-row (n_diverging pinned 0: payloads
-    * merge verbatim, so any re-encode or layout bug diverges), plus the
-    * append canary recall through the compacted generation. */
-  private def compactDifferential(s: SparkSession, dir: String,
-      serve: DocGen => DataFrame): DataFrame = {
-    val Seq(appended, compacted) = graft.Par.run(s.sparkContext, Seq(
-      () => serve(DocGen.Appended).localCheckpoint(),
-      () => serve(DocGen.Compacted).localCheckpoint()))
-    val diverging = appended.exceptAll(compacted)
-      .unionByName(compacted.exceptAll(appended))
-    appendRecall(s, dir, compacted)
-      .crossJoin(diverging.agg(count(lit(1)).cast(LongType)
-        .as("n_diverging")))
-  }
-
-  /** The retrain gates: skewThreshold = 0 forces the drift response
-    * deterministically (occupancy skew is ≥ 1 by construction), so a
-    * COLD run exercises the full retrain — k-means on the live sample,
-    * gen3 under the NEW centroids, codes re-derived with the FROZEN
-    * model — and warm runs serve the monotone gen3. Pinned every run:
-    * per-vec_id gen3 codes ≡ the served base ∪ delta codes
-    * (n_code_diverging 0) and the append canaries surface through the
-    * retrained geometry. The serve and the corpus-sized differential are
-    * independent and overlap (guide §2.6), checkpointing only the two
-    * 1-row aggregates — the code tables never enter the block manager. */
-  private def retrainCheck(s: SparkSession, dir: String, l: IvfLayout,
-      serve: DocGen => DataFrame): DataFrame = {
-    val forced = DocGen.Retrained(skewThreshold = 0.0)
-    val (_, gen3, _) = ivfRetrained(s, dir, l, forced.skewThreshold)
-    val (_, base, delta) = ivfDelta(s, dir, l)
-    val served = base.drop("cell").unionByName(delta.drop("cell"))
-    val g3 = gen3.drop("cell")
-    val diverging = g3.exceptAll(served).unionByName(served.exceptAll(g3))
-    val Seq(recall, nDiv) = graft.Par.run(s.sparkContext, Seq(
-      () => appendRecall(s, dir, serve(forced)).localCheckpoint(),
-      () => diverging.agg(count(lit(1)).cast(LongType)
-        .as("n_code_diverging")).localCheckpoint()))
-    recall.crossJoin(nDiv)
-  }
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // the ingest step itself: materialize both stored layouts, report
-    // row counts (oracle-checked). In the sorted bench order this runs
-    // before the *_stored queries, so they measure the WARM path.
-    "q_ingest_sketches" -> ((s, dir) => {
-      import s.implicits._
-      val nDocs = ensureSketchedDocs(s, dir).count()
-      val nVecs = ensureIvfIndex(s, dir)._2.count()
-      Seq(("docs_sketched", nDocs), ("ivf_assign", nVecs))
-        .toDF("stored_table", "n_rows")
-        .orderBy("stored_table")
-    }),
-
-    // near-dup from STORED sketches: identical output (and identical
-    // brute-force DuckDB oracle) to q_near_dup_minhash, but the plan
-    // reads stored sig/sh_set columns — no tokenization, no sketch
-    // expressions (PlanSpec asserts), no text I/O.
-    "q_near_dup_minhash_stored" -> ((s, dir) =>
-      nearDupServed(s, dir, DocGen.Base)),
-
-    // sketch-index LSM: near-dup pairs over base ∪ delta served from
-    // the TWO stored sketch tables (base never re-sketched, batch
-    // sketched alone). Every appended exact copy must pair with its
-    // source at jaccard 1.0 — the oracle is the brute-force all-pairs
-    // twin over the augmented corpus, so recall through the grown index
-    // is pinned BY the hash.
-    "q_near_dup_append" -> ((s, dir) =>
-      nearDupServed(s, dir, DocGen.Appended)),
-
-    // compacted generation serves the same grown corpus from ONE sketch
-    // table; shares q_near_dup_append's oracle VERBATIM, so appended ≡
-    // compacted ≡ brute force is pinned by the hash (the q_bm25_compact
-    // rule).
-    "q_near_dup_compact" -> ((s, dir) =>
-      nearDupServed(s, dir, DocGen.Compacted)),
-
-    // BM25 from the STORED inverted index: identical query, identical
-    // oracle (the shared Bm25CtesSql string) as q_bm25_topk — the gate
-    // IS the fresh-vs-stored differential, pinned 0 by the hash compare
-    // (the q_near_dup_minhash_stored precedent). The warm plan reads
-    // only the query terms' bucket directories (PlanSpec: DPP partition
-    // filter, no text column, no corpus tokenize).
-    "q_bm25_topk_stored" -> ((s, dir) =>
-      bm25TopKStored(s, dir, Seq("table", "scan", "join"), 10)),
-
-    // TIME TRAVEL / snapshot isolation made observable: the compacted
-    // gen2 (base ∪ append) is FORCED to exist first, then the query
-    // serves the ORIGINAL generation and must still hash-match the
-    // plain base-corpus oracle (shared verbatim with q_bm25_topk_stored)
-    // — later generations never leak into an older snapshot's serve, so
-    // a reader pinned to gen1 reproduces its results forever (the
-    // reproducibility contract a training run depends on).
-    "q_bm25_asof" -> ((s, dir) => {
-      termServed(s, dir, DocGen.Compacted) // gen2 committed before the gen1 read
-      bm25TopKStored(s, dir, Seq("table", "scan", "join"), 10)
-    }),
-
-    // inverted-index LSM: warm BM25 over base ∪ delta — the corpus grew
-    // by the append batch, so N, Σdl and every df shift, and an appended
-    // exact copy scores identically to its source. The oracle replays
-    // fresh BM25 over the AUGMENTED corpus (same shared CTE block).
-    "q_bm25_append" -> ((s, dir) =>
-      bm25Served(s, dir, DocGen.Appended, Seq("table", "scan", "join"), 10)),
-
-    // compacted generation serves the same augmented corpus from ONE
-    // bucket-pruned scan; shares q_bm25_append's oracle VERBATIM, so
-    // appended ≡ compacted ≡ DuckDB is pinned by the hash.
-    "q_bm25_compact" -> ((s, dir) =>
-      bm25Served(s, dir, DocGen.Compacted, Seq("table", "scan", "join"), 10)),
-
-    // deletion, logical half: warm BM25 with the tombstoned docs masked
-    // at serve time — anti-join on the pruned tf frame + SUBTRACTED
-    // (N, Σdl). Oracle = fresh BM25 over the corpus minus the
-    // retraction predicate, so the hash pins the mask AND both stat
-    // corrections (a stale N shifts every surviving idf).
-    "q_bm25_forget" -> ((s, dir) =>
-      bm25Served(s, dir, DocGen.Masked(Tombstones.Stored),
-        Seq("table", "scan", "join"), 10)),
-
-    // deletion, physical half: the purged generation serves the same
-    // reduced corpus from one pruned scan with no anti-join left;
-    // shares q_bm25_forget's oracle VERBATIM (masked ≡ purged ≡ DuckDB
-    // pinned by one hash — the append/compact pairing, on deletion).
-    "q_bm25_purge" -> ((s, dir) =>
-      bm25Served(s, dir, DocGen.Purged(Tombstones.Stored),
-        Seq("table", "scan", "join"), 10)),
-
-    // the tombstone-fraction PURGE TRIGGER, both arms in one gate: the
-    // fixture's dead fraction is 1/13 ≈ 7.7%, so θ=0.5 must keep the
-    // masked snapshot and θ=0.02 must trip the generation rewrite. The
-    // two arms share one reduced-corpus oracle (serving equivalence),
-    // and the purged_serving booleans — pinned FALSE for the mask arm,
-    // TRUE for the purge arm — are the decision itself, so a policy
-    // that never fires (or always fires) goes red even though both
-    // serving paths agree on rows.
-    "q_forget_policy" -> ((s, dir) => {
-      val terms = Seq("table", "scan", "join")
-      def policy(theta: Double) =
-        bm25PolicyServed(s, dir, Tombstones.Stored, terms, 10, theta)
-      val (lo, loPurged) = policy(0.5)
-      val (hi, hiPurged) = policy(0.02)
-      lo.withColumn("arm", lit("mask"))
-        .withColumn("purged_serving", lit(loPurged))
-        .unionByName(hi.withColumn("arm", lit("purge"))
-          .withColumn("purged_serving", lit(hiPurged)))
-        .select("arm", "purged_serving", "doc_id", "score")
-        .orderBy(col("arm"), desc("score"), col("doc_id"))
-    }),
-
-    // deletion on the dedup axis: near-dup pairs over the stored sketch
-    // index with retracted docs masked — pairs touching a retracted doc
-    // vanish, survivor pairs untouched (brute-force oracle over the
-    // filtered corpus pins both directions).
-    "q_near_dup_forget" -> ((s, dir) =>
-      nearDupServed(s, dir, DocGen.Masked(Tombstones.Stored))),
-
-    // ONE takedown request propagated through EVERY serving axis at
-    // once (bm25, phrase, dense, quantized ×2, sketch, stats) — the
-    // deletion sibling of the three e2e pipelines; per-axis fingerprint
-    // rows share the per-axis reduced-corpus replays as subqueries
-    "q_takedown_e2e" -> ((s, dir) => takedownE2e(s, dir)),
-
-    // physical purge on the dedup axis: the rewritten sketch generation
-    // serves the same reduced pair set from one scan with no mask left;
-    // shares q_near_dup_forget's oracle VERBATIM.
-    "q_near_dup_purge" -> ((s, dir) =>
-      nearDupServed(s, dir, DocGen.Purged(Tombstones.Stored))),
-
-    // span-level ADMISSION against the stored block index: 50 probes,
-    // each = the first 10 tokens of a stored doc (its stored block 0 —
-    // must be DROPPED) + 10 novel tokens (must SURVIVE); probes whose
-    // source doc has <10 tokens form a mixed first block that matches
-    // nothing and survives whole — deterministic either way, and the
-    // oracle replays the same construction.
-    "q_dedup_paragraph_stored" -> ((s, dir) => {
-      val toks = graft.operators.Curation.gramToks(col("text"))
-      val probes = documents(s, dir).orderBy("doc_id").limit(50)
-        .select((col("doc_id") + lit(10000000L)).as("doc_id"),
-          concat(
-            array_join(slice(toks, 1, Dedup.ParaBlockLen), " "), lit(" "),
-            // lateral column alias: this doc_id is the RE-ID'D probe id
-            // from the first projection (Spark 3.4+ resolution order)
-            array_join(transform(sequence(lit(1), lit(Dedup.ParaBlockLen)),
-              i => concat(lit("nv"), col("doc_id").cast(StringType),
-                lit("x"), i.cast(StringType))), " ")).as("text"))
-      paragraphAdmit(s, dir, probes).orderBy("doc_id")
-    }),
-
-    // batched BM25 serving: the whole 4-query probe frame (incl. one
-    // term absent from the corpus — the zero-postings edge) answered in
-    // ONE pass over the pruned postings; per-query top-5 via the
-    // two-phase scan-pid rank.
-    "q_bm25_batch" -> ((s, dir) => {
-      import s.implicits._
-      bm25TopKBatch(s, dir, BatchQueryTerms.toDF("q_id", "term"), 5)
-        .orderBy("q_id", "rnk")
-    }),
-
-    // batched EXACT PHRASE search from the stored positional index:
-    // the three-phrase probe set answered in one pass over the pruned
-    // positional postings — adjacency votes keyed by (doc, start), a
-    // full house of offsets = one occurrence.
-    "q_phrase_search" -> ((s, dir) =>
-      phraseMatchBatch(s, dir, PhraseBatch)
-        .orderBy("phrase_id", "doc_id")),
-
-    // deletion on the POSITIONAL axis — the last stored index family to
-    // get the verb: masked serving (anti-join on the bucket-pruned
-    // postings; positions are per-document so there are no stats to
-    // correct) and the purged generation sharing the same
-    // reduced-corpus oracle verbatim.
-    "q_phrase_forget" -> ((s, dir) =>
-      phraseMatchServed(s, dir, DocGen.Masked(Tombstones.Stored), PhraseBatch)
-        .orderBy("phrase_id", "doc_id")),
-    "q_phrase_purge" -> ((s, dir) =>
-      phraseMatchServed(s, dir, DocGen.Purged(Tombstones.Stored), PhraseBatch)
-        .orderBy("phrase_id", "doc_id")),
-
-    // BATCHED retrieval evaluation (ADVICE r9 #5): mean nDCG@10 over 8
-    // probes, each probe = RRF fusion of its dense (exact kNN) and
-    // sparse (stored-index batched BM25) top-10 lists, evaluated
-    // against the dense ideal — the q_ndcg_rrf pipeline generalized to
-    // q_id-keyed frames so a whole evaluation suite runs as ONE batch
-    // (one corpus pass per side) instead of |Q| single-query jobs.
-    // MRR over the SAME hybrid suite (shared list construction AND
-    // shared oracle CTE chain with q_ndcg_batch — the two metrics can
-    // never judge different rankings).
-    "q_mrr_batch" -> ((s, dir) => {
-      val (ranked, dense) = hybridRankedLists(s, dir)
-      val perQ = Similarity.mrrBatch(ranked, dense).localCheckpoint()
-      perQ.crossJoin(broadcast(
-          perQ.agg(round(avg("mrr"), 6).as("mean_mrr"))))
-        .orderBy("q_id")
-    }),
-
-    "q_ndcg_batch" -> ((s, dir) => {
-      val (ranked, dense) = hybridRankedLists(s, dir)
-      // two consumers (mean + final projection): checkpoint the 8 rows
-      val perQ = Similarity.ndcgAtKBatch(ranked, dense, NdcgBatchK)
-        .localCheckpoint()
-      perQ.crossJoin(broadcast(
-          perQ.agg(round(avg(s"ndcg_at_$NdcgBatchK"), 6)
-            .as(s"mean_ndcg_at_$NdcgBatchK"))))
-        .orderBy("q_id")
-    }),
-
-    // batched kNN through the stored IVF index, canary forced-recall
-    // gate under REAL pruning (see [[TwinOffset]]): each of the 8 gate
-    // queries has an exact-copy canary planted in the index at
-    // q_id + TwinOffset, provably sitting in that query's FIRST-probed
-    // cell with cosine 1.0 — so every query's top-10 must contain its
-    // canary at any probe width, and a probe-planning, DPP, or top-k
-    // mistake drops one and flips the 1.0 red. Geometry and probe width
-    // both derive from corpus size (Similarity.ivfNumCells/ivfNumProbe
-    // — nCells ≈ √N, probe to a max(50·k, N/10) candidate scan), so
-    // unlike the fixed-16-cell era this gate runs with most of the
-    // corpus genuinely UNSCANNED.
-    "q_knn_ivf_stored" -> ((s, dir) =>
-      knnJoinIvfStored(s, dir, canaryQueries(s, dir), 10)
-        .filter(col("vec_id") === col("q_id") + lit(TwinOffset))
-        .agg((count(lit(1)).cast(DoubleType) / NumCanaries.toDouble)
-          .as("recall_at_10"))),
-
-    // MEASURED recall at the serving paths' ACTUAL operating point (the
-    // occupancy-sized ivfNumProbe default — 27% of cells at sf0.1,
-    // legitimately all cells at a few hundred vectors, per its
-    // docstring): 16 fixture-free queries, recall@10 vs the in-engine
-    // exact top-10, gated as a >= 0.9 envelope — the accuracy half of
-    // the IVF story, complementing the pinned-1.0 canary gates which
-    // certify machinery but can't measure the trade (measured: 0.956 at
-    // sf0.1's 12-of-45-cell probe). SimilaritySpec carries the negative
-    // control: nProbe = 1 on a skewed two-cell corpus fails this
-    // envelope, so the gate demonstrably discriminates.
-    "q_ivf_recall_envelope" -> ((s, dir) =>
-      ivfRecallEnvelope(s, dir, 10, nProbe = 0, 16, 0.9)),
-
-    // the same measurement through the LOSSY code families at their
-    // real defaults (probe width AND quantizer geometry AND expand·k
-    // shortlist): the quantization-distortion trade the 1.0-canary
-    // gates certify machinery for but cannot measure. SimilaritySpec
-    // carries the discriminating negative controls — m=1 / expand=1
-    // drop true neighbors and fail the envelope.
-    "q_ivfpq_recall_envelope" -> ((s, dir) =>
-      ivfPqRecallEnvelope(s, dir, 10, nProbe = 0, 16, 0.9)),
-    "q_ivfsq_recall_envelope" -> ((s, dir) =>
-      ivfSqRecallEnvelope(s, dir, 10, nProbe = 0, 16, 0.9)),
-
-    // the QUANTIZER-BOUND regime the 0.956 envelopes never enter: a
-    // coarse-m geometry where ADC-only ordering visibly loses the true
-    // top-k with EVERY cell probed, and the exact rescore wins a
-    // measured chunk back — so the envelope family spans both the
-    // probe-bound and the quantizer-bound constraint (r13 verdict #8)
-    "q_pq_distortion_envelope" -> ((s, dir) =>
-      pqDistortionEnvelope(s, dir)),
-
-    // deletion on the dense axis: 8 canary queries against the stored
-    // IVF index with the first half's twins TOMBSTONED. A retracted
-    // twin was its query's guaranteed top-1, so n_retracted_served == 0
-    // pins the mask across probe/DPP/top-k; the surviving half must
-    // still hit 1.0 (deletion only removes competitors), pinning the
-    // mask doesn't over-delete.
-    "q_knn_ivf_forget" -> ((s, dir) => forgetOutcome(s, dir,
-      knnJoinIvfServed(s, dir, IvfLayout.Flat,
-        DocGen.Masked(Tombstones.Stored),
-        canaryQueries(s, dir), 10))),
-
-    // the same retraction held through the QUANTIZED families: a
-    // takedown must mask every serving representation, and the code
-    // tables carry their own copy of the retracted vectors (8–16 B
-    // codes), so an unmasked ADC/SQ path would keep surfacing them.
-    // Same fixture, same pinned outcome: a retracted twin was its
-    // query's guaranteed top-1, n_retracted_served == 0 pins the mask
-    // across probe/DPP/shortlist/rescore; the surviving half's 1.0 pins
-    // that the mask neither over-deletes nor lets a dead code crowd the
-    // shortlist.
-    "q_knn_ivfpq_forget" -> ((s, dir) => forgetOutcome(s, dir,
-      knnJoinIvfServed(s, dir, IvfLayout.pq(s, dir),
-        DocGen.Masked(Tombstones.Stored),
-        canaryQueries(s, dir), 10))),
-
-    "q_knn_ivfsq_forget" -> ((s, dir) => forgetOutcome(s, dir,
-      knnJoinIvfServed(s, dir, IvfLayout.sq8(s, dir),
-        DocGen.Masked(Tombstones.Stored),
-        canaryQueries(s, dir), 10))),
-
-    // the physical half on the dense axis: the purged generation serves
-    // the identical canary batch through the identical probe machinery
-    // with no mask anywhere in the plan (PlanSpec pins that), and shares
-    // q_knn_ivf_forget's oracle verbatim — masked ≡ purged pinned by
-    // one hash.
-    "q_ivf_purge" -> ((s, dir) => forgetOutcome(s, dir,
-      knnJoinIvfServed(s, dir, IvfLayout.Flat, DocGen.Purged(Tombstones.Stored),
-        canaryQueries(s, dir), 10))),
-
-    // physical purge on the quantized layouts: after the code-table
-    // generation rewrite, the retracted vectors' code bytes are gone
-    // from the serving artifact — each gate shares its masked twin's
-    // oracle verbatim, completing the 3-axis × 2-half deletion matrix
-    // (BM25, sketches, dense/PQ/SQ — mask and purge everywhere).
-    "q_ivfpq_purge" -> ((s, dir) => forgetOutcome(s, dir,
-      knnJoinIvfServed(s, dir, IvfLayout.pq(s, dir), DocGen.Purged(Tombstones.Stored),
-        canaryQueries(s, dir), 10))),
-
-    "q_ivfsq_purge" -> ((s, dir) => forgetOutcome(s, dir,
-      knnJoinIvfServed(s, dir, IvfLayout.sq8(s, dir), DocGen.Purged(Tombstones.Stored),
-        canaryQueries(s, dir), 10))),
-
-    // batched kNN over the APPENDED index: 8 queries = the append-batch
-    // SOURCES, whose exact copies live ONLY in the delta — each query's
-    // top-10 must contain its +AppendOffset canary, so one 1.0 proves
-    // the batched probe plan, per-side DPP on base AND delta, and the
-    // per-query top-k, all through the generation-aware serving path.
-    "q_knn_ivf_append" -> ((s, dir) => appendRecall(s, dir,
-      knnJoinIvfServed(s, dir, IvfLayout.Flat, DocGen.Appended,
-        appendQueries(s, dir), 10))),
-
-    // batched kNN through the STORED IVF-PQ index: 8 queries share one
-    // DPP-pruned 16 B/row code scan; each query ADC-ranks against its
-    // own broadcast tables and its planted exact-copy canary (riding
-    // the code table at +TwinOffset) must survive the ADC shortlist and
-    // top the exact rescore — recall pinned 1.0 proves the batched
-    // probe plan, the per-query table join, the column-table ADC
-    // kernel, and the two-phase top-k composed under real pruning.
-    // batched kNN through the stored IVF-SQ8 index: 8 canary-source
-    // queries in ONE probe plan — DPP-pruned byte-code scan, per-query
-    // (alpha, beta) tables broadcast, shared model half in the codegen
-    // reference array, shortlist + exact rescore. Each query must
-    // retrieve its planted exact-copy twin at rank 1; pinned 1.0.
-    "q_knn_ivfsq_stored" -> ((s, dir) =>
-      knnJoinIvfSqStored(s, dir, canaryQueries(s, dir), 10)
-        .filter(col("vec_id") === col("q_id") + lit(TwinOffset))
-        .agg((count(lit(1)).cast(DoubleType) / NumCanaries.toDouble)
-          .as("recall_at_10"))),
-
-    // the IVF-SQ8 delta path: the 8 append-source queries find their
-    // delta-only canaries through base ∪ delta with per-side DPP —
-    // frozen model + centroids encode/assign the landing batch.
-    "q_knn_ivfsq_append" -> ((s, dir) => appendRecall(s, dir,
-      knnJoinIvfServed(s, dir, IvfLayout.sq8(s, dir), DocGen.Appended,
-        appendQueries(s, dir), 10))),
-
-    // IVF-SQ8 compaction: the same 8-query batch through the merged
-    // gen2 must equal appended serving ROW-FOR-ROW (codes merge
-    // verbatim — any re-encode or layout bug diverges; n_diverging
-    // pinned 0) and still surface every delta-only canary (1.0).
-    "q_knn_ivfsq_compact" -> ((s, dir) => {
-      val (l, qs) = (IvfLayout.sq8(s, dir), appendQueries(s, dir))
-      compactDifferential(s, dir, g => knnJoinIvfServed(s, dir, l, g, qs, 10))
-    }),
-
-    // IVF-SQ8 RETRAIN: skewThreshold = 0 forces the drift response
-    // deterministically (same forced-drift fixture as q_ivfpq_retrain);
-    // cold runs k-means the live sample, re-assign under the new
-    // centroids, re-encode with the FROZEN (min, step) model; warm runs
-    // serve the monotone gen3. Pinned every run: per-vec_id gen3 codes
-    // ≡ served base ∪ delta codes (model frozen ⇒ re-encode
-    // deterministic; n_code_diverging 0), and the 8 delta-only append
-    // canaries surface through the retrained geometry (1.0).
-    "q_ivfsq_retrain" -> ((s, dir) => {
-      val (l, qs) = (IvfLayout.sq8(s, dir), appendQueries(s, dir))
-      retrainCheck(s, dir, l, g => knnJoinIvfServed(s, dir, l, g, qs, 10))
-    }),
-
-    "q_knn_ivfpq_stored" -> ((s, dir) =>
-      knnJoinIvfPqStored(s, dir, canaryQueries(s, dir), 10)
-        .filter(col("vec_id") === col("q_id") + lit(TwinOffset))
-        .agg((count(lit(1)).cast(DoubleType) / NumCanaries.toDouble)
-          .as("recall_at_10"))),
-
-    // batched IVF-PQ kNN over base ∪ delta: the 8 append-source queries
-    // find their delta-only canaries through the composed path — batch
-    // probe plan, per-side DPP on both code scans, per-query ADC
-    // tables, shortlist + rescore over the appended corpus.
-    "q_knn_ivfpq_append" -> ((s, dir) => appendRecall(s, dir,
-      knnJoinIvfServed(s, dir, IvfLayout.pq(s, dir), DocGen.Appended,
-        appendQueries(s, dir), 10))),
-
-    // the same 8-query batch through the COMPACTED generation, plus the
-    // cross-path differential: compacted serving must equal appended
-    // serving row-for-row for every query (n_diverging pinned 0).
-    "q_knn_ivf_compact" -> ((s, dir) => {
-      val qs = appendQueries(s, dir)
-      compactDifferential(s, dir,
-        g => knnJoinIvfServed(s, dir, IvfLayout.Flat, g, qs, 10))
-    }),
-
-    // warm-path IVF-PQ: both prunings composed (DPP cell pruning + ADC
-    // over stored codes) plus the bounded rescore, certified by the
-    // single-query canary: the canary's code is the query's own code
-    // (ADC rank ≈ top), it sits in the first-probed cell, and exact
-    // rescore scores it 1.0 — losing it anywhere flips the gate.
-    "q_ivfpq_topk_stored" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      ivfPqTopKStored(s, dir, 10)
-        .join(broadcast(Similarity.queryRow(emb)),
-          col("vec_id") === col("q_id") + lit(TwinOffset))
-        .agg(count(lit(1)).cast(DoubleType).as("recall_at_10"))
-    }),
-
-    // warm-path PQ: stored codes + stored codebook, same forced-recall
-    // gate; a stale or retrained codebook desynchronizing the codes
-    // turns the 1.0 red.
-    "q_pq_topk_stored" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      pqTopKStored(s, dir, 10).select("vec_id")
-        .join(Similarity.cosineTopK(emb, 10).select("vec_id"), "vec_id")
-        .agg((count(lit(1)).cast(DoubleType) / 10.0).as("recall_at_10"))
-    }),
-
-    // SQ8 stored-index serving: approximate-cosine ranking over the
-    // byte-per-dim code table + bounded exact rescore, recall@10 vs the
-    // in-engine brute force (itself hash-verified by q_cosine_topk),
-    // oracle pins the literal 1.0 — any encode/score/model bug that
-    // perturbs the candidate window turns the gate red. The rank-10/11
-    // cosine gap at the verify SFs (>1e-3) dwarfs SQ8's reconstruction
-    // error (~1e-4), so 1.0 is the deterministic outcome, not luck.
-    "q_sq_topk_stored" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      sqTopKStored(s, dir, 10).select("vec_id")
-        .join(Similarity.cosineTopK(emb, 10).select("vec_id"), "vec_id")
-        .agg((count(lit(1)).cast(DoubleType) / 10.0).as("recall_at_10"))
-    }),
-
-    // INDEX APPEND: a delta batch assigned against the FROZEN stored
-    // centroids and served from base ∪ delta (each side DPP-pruned by
-    // the same probe plan). The appended exact copy of the query vector
-    // exists ONLY in the delta, so the pinned 1.0 proves the
-    // frozen-centroid assignment, the delta's cell layout, and the
-    // unioned pruned-scan path — without rebuilding or touching the
-    // base index files.
-    "q_ivf_append" -> ((s, dir) =>
-      appendRecall(s, dir, ivfTopKServed(s, dir, DocGen.Appended, 10))),
-
-    // IVF-PQ APPEND: the combined index's delta path — frozen codebook
-    // AND frozen centroids encode/assign the landing batch, both scans
-    // DPP-pruned before the union, ADC + bounded rescore unchanged. The
-    // appended canary's code exists only in the delta; the pinned 1.0
-    // proves the whole composed warm path over base ∪ delta.
-    "q_ivfpq_append" -> ((s, dir) =>
-      appendRecall(s, dir, ivfPqTopKServed(s, dir, DocGen.Appended, 10))),
-
-    // COMPACTION: the merged generation must serve EXACTLY what the
-    // base∪delta path serves — a cross-path differential gate (the two
-    // top-10 sets are compared row-for-row, n_diverging pinned to 0)
-    // plus the append canary's pinned 1.0 through the compacted scan.
-    "q_ivf_compact" -> ((s, dir) =>
-      compactDifferential(s, dir, g => ivfTopKServed(s, dir, g, 10))),
-
-    // IVF-PQ COMPACTION: same differential posture as q_ivf_compact for
-    // the combined index — gen2 (codes merged verbatim, frozen codebook
-    // and centroids) must serve EXACTLY what base ∪ delta serves
-    // (n_diverging pinned to 0), and the append canary's code — now
-    // living only inside gen2 — must surface through the single
-    // DPP-pruned compacted scan (pinned 1.0).
-    "q_ivfpq_compact" -> ((s, dir) =>
-      compactDifferential(s, dir, g => ivfPqTopKServed(s, dir, g, 10))),
-
-    // IVF-PQ RETRAIN: skewThreshold = 0 forces the drift response
-    // deterministically (occupancy skew is ≥ 1 by construction), so the
-    // COLD run exercises the full retrain path — k-means on the live
-    // sample, gen3 assignment under the NEW centroids, codes re-derived
-    // with the FROZEN codebook — and warm runs serve the monotone gen3
-    // like production would. Pinned EVERY run: the gen3 code SET is
-    // bit-identical per vec_id to the served base ∪ delta (codebook
-    // frozen ⇒ re-encode is deterministic; n_code_diverging 0) and the
-    // append canary surfaces through the retrained geometry (1.0).
-    "q_ivfpq_retrain" -> ((s, dir) => retrainCheck(s, dir,
-      IvfLayout.pq(s, dir), g => ivfPqTopKServed(s, dir, g, 10))),
-
-    // SemDeDup from the STORED index: survivors of the keep-first
-    // policy over the indexed corpus (embeddings ∪ the 8 exact-copy
-    // canaries). The canaries are bit-identical to their sources, so
-    // their cosines to every centroid match bit-for-bit and the stored
-    // cell assignment provably co-locates each (source, canary) pair —
-    // recall 1.0 by construction — while the kernel's exact in-cluster
-    // verification admits nothing else (non-twin pairs ≤ 0.61 on this
-    // corpus). The DuckDB oracle brute-forces the same keep-first
-    // survivor set from scratch, certifying that dedup riding a stored
-    // index ≡ dedup computed fresh.
-    "q_semdedup_stored" -> ((s, dir) =>
-      semDedupSurvivorsStored(s, dir, 0.99).orderBy("vec_id")),
-
-    // IVF from the STORED index, single-query canary gate: the probe
-    // runs at the derived geometry with real pruning, and the planted
-    // exact copy of the query must surface in the top-10 (oracle pins
-    // 1.0; a probe miss or DPP mistake turns the gate red).
-    "q_ivf_topk_stored" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      ivfTopKStored(s, dir, 10)
-        .join(broadcast(Similarity.queryRow(emb)),
-          col("vec_id") === col("q_id") + lit(TwinOffset))
-        .agg(count(lit(1)).cast(DoubleType).as("recall_at_10"))
-    }),
-
-    // diversified serving COMPOSED over the stored IVF index (full
-    // probe, the forced-parameter convention): shares q_mmr_rerank's
-    // oracle verbatim — index-served ≡ brute-force-served diversified
-    // top-k, pinned by one hash.
-    "q_mmr_ivf" -> ((s, dir) => mmrTopKStored(s, dir)),
-
-    // the approximate regime of the same composition: diversified
-    // serving from the DEFAULT pruned probe's pool, set-overlap vs the
-    // exact-pool picks gated >= 0.9 (q_ivf_recall_envelope convention;
-    // q_mmr_ivf above stays the hash-exact pin)
-    "q_mmr_ivf_envelope" -> ((s, dir) => mmrIvfEnvelope(s, dir))
-  )
-
-  /** q_id-keyed BM25 oracle CTE chain (q → toks → tf → stats → qtf →
-    * dfreq → scored), parameterized by the probe term list so the
-    * VALUES block is GENERATED from the same Scala constant the Spark
-    * side consumes — one string, two gates (q_bm25_batch /
-    * q_ndcg_batch; the Bm25CtesSql rule), and no hand-copied term list
-    * that could drift. */
-  private def bm25BatchCtesSql(ts: Seq[(Long, String)]): String =
-    s"""q AS (
-      |  SELECT CAST(q_id AS BIGINT) AS q_id, term FROM (VALUES
-      |    ${ts.map { case (q, t) => s"($q,'$t')" }.mkString(",")}) t(q_id, term)),
-      |toks AS (
-      |  SELECT doc_id,
-      |         string_split(lower(regexp_replace(trim(text), '\\s+', ' ', 'g')), ' ') AS t
-      |  FROM documents),
-      |tf AS (SELECT doc_id, term, count(*) AS tf, max(dl) AS dl
-      |       FROM (SELECT doc_id, len(t) AS dl, unnest(t) AS term FROM toks)
-      |       WHERE term IN (SELECT term FROM q) GROUP BY 1, 2),
-      |stats AS (SELECT count(*) AS n_docs, CAST(sum(len(t)) AS BIGINT) AS dl_total FROM toks),
-      |qtf AS (SELECT q.q_id, tf.doc_id, tf.term, tf.tf, tf.dl
-      |        FROM q JOIN tf USING (term)),
-      |dfreq AS (SELECT q_id, term, count(*) AS df FROM qtf GROUP BY 1, 2),
-      |scored AS (
-      |  SELECT q_id, doc_id, round(sum(s), 6) AS score FROM (
-      |    SELECT qtf.q_id, qtf.doc_id,
-      |           ln((stats.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0) *
-      |           (qtf.tf * (1.2 + 1.0)) /
-      |           (qtf.tf + 1.2 * ((1.0 - 0.75) + 0.75 * qtf.dl /
-      |              (CAST(stats.dl_total AS DOUBLE) / CAST(stats.n_docs AS DOUBLE)))) AS s
-      |    FROM qtf JOIN dfreq d USING (q_id, term), stats)
-      |  GROUP BY 1, 2)""".stripMargin
-
-  /** The full hybrid-retrieval ranking replay (sparse BM25 top-k +
-    * dense exact-kNN top-k + RRF fusion) for the batched evaluation
-    * gates — ONE generated chain ending in `dense` (the ideal list) and
-    * `ranked` (the fused list), shared by q_ndcg_batch and q_mrr_batch
-    * so the two metrics can never disagree about what was ranked. */
-  private def hybridRankedCtesSql: String =
-    s"""${bm25BatchCtesSql(NdcgBatchTerms)},
-      |sparse AS (
-      |  SELECT q_id, doc_id AS id,
-      |         row_number() OVER (PARTITION BY q_id
-      |                            ORDER BY score DESC, doc_id) AS rank
-      |  FROM scored QUALIFY rank <= $NdcgBatchK),
-      |probes AS (
-      |  SELECT CAST(row_number() OVER (ORDER BY vec_id) AS BIGINT) AS eq,
-      |         vec_id, embedding
-      |  FROM (SELECT vec_id, embedding FROM embeddings
-      |        ORDER BY vec_id LIMIT $NdcgBatchProbes)),
-      |dense AS (
-      |  SELECT q_id, id, rank FROM (
-      |    SELECT p.eq AS q_id, e.vec_id AS id,
-      |           row_number() OVER (PARTITION BY p.eq ORDER BY
-      |             round(list_cosine_similarity(e.embedding, p.embedding), 6) DESC,
-      |             e.vec_id) AS rank
-      |    FROM embeddings e, probes p WHERE e.vec_id <> p.vec_id)
-      |  WHERE rank <= $NdcgBatchK),
-      |fused AS (
-      |  SELECT q_id, id,
-      |         CAST(1.0 AS DOUBLE) / (CAST(60.0 AS DOUBLE) + rank) AS contrib
-      |  FROM dense
-      |  UNION ALL
-      |  SELECT q_id, id,
-      |         CAST(1.0 AS DOUBLE) / (CAST(60.0 AS DOUBLE) + rank) AS contrib
-      |  FROM sparse),
-      |ranked AS (
-      |  SELECT q_id, id,
-      |         row_number() OVER (PARTITION BY q_id
-      |                            ORDER BY rrf DESC, id) AS rank
-      |  FROM (SELECT q_id, id, round(sum(contrib), 6) AS rrf
-      |        FROM fused GROUP BY 1, 2)
-      |  QUALIFY rank <= $NdcgBatchK)""".stripMargin
-
-  /** Fresh BM25 replayed over the AUGMENTED corpus (base ∪ append
-    * batch) — shared by q_bm25_append and q_bm25_compact. Derived from
-    * [[TextAnalysis.Bm25CtesSql]] by rewriting the toks CTE's source
-    * from `documents` to the union with the `% 101` copies at
-    * +[[DocAppendOffset]] — the formula, tokenization, rounding and tie
-    * order stay the ONE shared string, and the append-batch definition
-    * is generated from the same Scala constants the Spark delta build
-    * uses (the bm25BatchCtesSql rule). */
-  /** Brute-force all-pairs Jaccard replayed over the AUGMENTED corpus —
-    * the q_near_dup_minhash oracle with its toks CTE's source rewritten
-    * to the union with the `% 101` copies (the Bm25AppendOracleSql
-    * rule: one shared CTE string, the batch definition generated from
-    * the same constants the Spark delta build uses). */
-  private val NearDupAppendOracleSql: String = {
-    val src = "FROM documents),"
-    require(Dedup.allPairsJaccardCtes.contains(src),
-      "allPairsJaccardCtes drifted: toks source not found for append rewrite")
-    val augmented =
-      s"""FROM (SELECT doc_id, text FROM documents
-         |        UNION ALL
-         |        SELECT doc_id + $DocAppendOffset AS doc_id, text
-         |        FROM documents WHERE doc_id % 101 = 0)),""".stripMargin
-    s"""WITH ${Dedup.allPairsJaccardCtes.replace(src, augmented)}
-       |SELECT doc1, doc2, ni::DOUBLE / nu::DOUBLE AS jaccard
-       |FROM jpairs ORDER BY doc1, doc2""".stripMargin
-  }
-
-  private val Bm25AppendOracleSql: String = {
-    val src = "FROM documents)"
-    require(TextAnalysis.Bm25CtesSql.contains(src),
-      "Bm25CtesSql drifted: toks source not found for append rewrite")
-    val augmented =
-      s"""FROM (SELECT doc_id, text FROM documents
-         |        UNION ALL
-         |        SELECT doc_id + $DocAppendOffset AS doc_id, text
-         |        FROM documents WHERE doc_id % 101 = 0))""".stripMargin
-    s"""WITH ${TextAnalysis.Bm25CtesSql.replace(src, augmented)}
-       |SELECT doc_id, score FROM bm ORDER BY score DESC, doc_id""".stripMargin
-  }
-
-  /** Fresh BM25 replayed over the corpus MINUS the retraction set —
-    * shared by q_bm25_forget and q_bm25_purge. Same source-rewrite
-    * mechanism as [[Bm25AppendOracleSql]]: the toks CTE's `documents`
-    * becomes the filtered subquery, with the retraction predicate
-    * generated from the SAME Scala constants the tombstone build uses. */
-  private val Bm25ForgetCtes: String = {
-    val src = "FROM documents)"
-    require(TextAnalysis.Bm25CtesSql.contains(src),
-      "Bm25CtesSql drifted: toks source not found for forget rewrite")
-    val reduced =
-      s"""FROM (SELECT doc_id, text FROM documents
-         |        WHERE NOT (doc_id % $ForgetMod = $ForgetRem)))""".stripMargin
-    TextAnalysis.Bm25CtesSql.replace(src, reduced)
-  }
-
-  private val Bm25ForgetOracleSql: String =
-    s"""WITH $Bm25ForgetCtes
-       |SELECT doc_id, score FROM bm ORDER BY score DESC, doc_id""".stripMargin
-
   /** Dense-axis probe cap in [[takedownE2eWith]] — shared with the
     * oracle so the expected row count derives from the fixture instead
     * of hardcoding |Q|. */
-  private val TakedownDenseProbes: Int = 8
-
-  /** Expected dense/quantized fingerprint row count: |Q|·k where
-    * |Q| = min(probe cap, retracted docs that have embeddings) — derived
-    * on the oracle side so a smaller SF (or a changed ForgetMod) shrinks
-    * the expectation with the fixture instead of reddening the gate on a
-    * stale literal. Full k=10 survivor backfill per probe stays pinned
-    * deliberately: an under-filled top-k after masking IS a bug. */
-  private lazy val TakedownDenseRowsSql: String =
-    s"""CAST((SELECT LEAST($TakedownDenseProbes, count(*)) * 10
-       |       FROM embeddings e JOIN documents d ON e.vec_id = d.doc_id
-       |       WHERE d.doc_id % $ForgetMod = $ForgetRem) AS BIGINT)""".stripMargin
-
-  /** The composed-takedown oracle: every verifiable axis's fingerprint
-    * computed FROM the per-axis reduced-corpus replay strings shared as
-    * subqueries (one formula per axis, two gates each); the dense /
-    * quantized axes pin the canary outcome (|Q|·k survivors, zero
-    * retracted ids served) — the Spark side measures both for real. */
-  private lazy val TakedownE2eOracleSql: String =
-    s"""SELECT 'bm25' AS axis, CAST(count(*) AS BIGINT) AS n_rows,
-       |       CAST(coalesce(sum(doc_id), 0) AS BIGINT) AS key_sum,
-       |       CAST(coalesce(sum(CAST(round(score * 1e6) AS BIGINT)), 0) AS BIGINT) AS val_sum
-       |FROM ($Bm25ForgetOracleSql)
-       |UNION ALL
-       |SELECT 'cms', CAST(count(*) AS BIGINT),
-       |       CAST(0 AS BIGINT),
-       |       CAST(coalesce(sum(tf_est), 0) AS BIGINT)
-       |FROM (${CorpusStats.CmsForgetOracle})
-       |UNION ALL
-       |SELECT 'dense', $TakedownDenseRowsSql, CAST(0 AS BIGINT), CAST(0 AS BIGINT)
-       |UNION ALL
-       |SELECT 'media', CAST(count(*) AS BIGINT),
-       |       CAST(coalesce(sum(keep_id), 0) AS BIGINT),
-       |       CAST(coalesce(sum(id_sum), 0) AS BIGINT)
-       |FROM (${Multimodal.imageDedupOracle(
-      s" AND NOT (doc_id % $ForgetMod = $ForgetRem)")})
-       |UNION ALL
-       |SELECT 'model', CAST(count(*) AS BIGINT),
-       |       CAST(coalesce(sum(bucket), 0) AS BIGINT),
-       |       CAST(coalesce(sum(w_micro), 0) AS BIGINT)
-       |FROM (${Curation.nbRetractedModelOracleSql})
-       |UNION ALL
-       |SELECT 'phrase', CAST(count(*) AS BIGINT),
-       |       CAST(coalesce(sum(phrase_id * 1000000 + doc_id), 0) AS BIGINT),
-       |       CAST(coalesce(sum(n_hits), 0) AS BIGINT)
-       |FROM (${phraseOracleSql(
-      s"""FROM (SELECT doc_id, text FROM documents
-         |        WHERE NOT (doc_id % $ForgetMod = $ForgetRem))""".stripMargin)})
-       |UNION ALL
-       |SELECT 'quantized_pq', $TakedownDenseRowsSql, CAST(0 AS BIGINT), CAST(0 AS BIGINT)
-       |UNION ALL
-       |SELECT 'quantized_sq', $TakedownDenseRowsSql, CAST(0 AS BIGINT), CAST(0 AS BIGINT)
-       |UNION ALL
-       |SELECT 'sketch', CAST(count(*) AS BIGINT),
-       |       CAST(coalesce(sum(doc1 + doc2), 0) AS BIGINT),
-       |       CAST(coalesce(sum(CAST(round(jaccard * 1e6) AS BIGINT)), 0) AS BIGINT)
-       |FROM ($NearDupForgetOracleSql)
-       |ORDER BY axis""".stripMargin
-
-  /** The policy gate's oracle: BOTH arms must serve the identical
-    * reduced-corpus ranking (one shared CTE block — the q_bm25_purge
-    * convention extended to the trigger), and the pinned booleans are
-    * the policy decision itself: 'mask' must come from the sub-θ arm,
-    * 'purge' from the tripped one. */
-  private val Bm25PolicyOracleSql: String =
-    s"""WITH $Bm25ForgetCtes,
-       |res AS (SELECT doc_id, score FROM bm)
-       |SELECT arm, purged_serving, doc_id, score
-       |FROM res CROSS JOIN (VALUES ('mask', FALSE), ('purge', TRUE))
-       |  AS arms(arm, purged_serving)
-       |ORDER BY arm, score DESC, doc_id""".stripMargin
-
-  /** Brute-force all-pairs Jaccard over the corpus minus the retraction
-    * set — the [[NearDupAppendOracleSql]] mechanism on the deletion
-    * axis. */
-  private val NearDupForgetOracleSql: String = {
-    val src = "FROM documents),"
-    require(Dedup.allPairsJaccardCtes.contains(src),
-      "allPairsJaccardCtes drifted: toks source not found for forget rewrite")
-    val reduced =
-      s"""FROM (SELECT doc_id, text FROM documents
-         |        WHERE NOT (doc_id % $ForgetMod = $ForgetRem))),""".stripMargin
-    s"""WITH ${Dedup.allPairsJaccardCtes.replace(src, reduced)}
-       |SELECT doc1, doc2, ni::DOUBLE / nu::DOUBLE AS jaccard
-       |FROM jpairs ORDER BY doc1, doc2""".stripMargin
-  }
-
-  /** The batched phrase-adjacency oracle over a caller-chosen corpus
-    * source — shared by q_phrase_search (full corpus) and the
-    * forget/purge pair (reduced corpus), so the three gates can never
-    * drift on anything but the corpus predicate. */
-  private def phraseOracleSql(from: String): String = {
-    val spec = PhraseBatch.flatMap { case (pid, toks) =>
-      toks.zipWithIndex.map { case (t, i) => s"($pid, '$t', $i)" } }
-      .mkString(", ")
-    s"""WITH toks AS (
-       |  SELECT doc_id, string_split(lower(regexp_replace(trim(text), '\\s+', ' ', 'g')), ' ') AS t
-       |  $from),
-       |pos AS (SELECT doc_id, unnest(t) AS term, generate_subscripts(t, 1) AS pos FROM toks),
-       |spec(phrase_id, term, off) AS (VALUES $spec),
-       |lens AS (SELECT phrase_id, count(*) AS n_off FROM spec GROUP BY 1),
-       |starts AS (
-       |  SELECT phrase_id, doc_id, pos - off AS start,
-       |         count(DISTINCT off) AS got
-       |  FROM pos JOIN spec USING (term) GROUP BY 1, 2, 3)
-       |SELECT CAST(phrase_id AS BIGINT) AS phrase_id, doc_id,
-       |       CAST(count(*) AS BIGINT) AS n_hits
-       |FROM starts JOIN lens USING (phrase_id)
-       |WHERE got = n_off
-       |GROUP BY 1, 2 ORDER BY phrase_id, doc_id""".stripMargin
-  }
-
-  // lazy: this map embeds oracle strings from TextAnalysis AND (since
-  // the model axis) Curation, while Curation's own init references
-  // Ingest constants — evaluating it at Ingest's <clinit> closes an
-  // init cycle whose losing order is a null MODULE$. Deferring to first
-  // access (SparkEntry assembly, long after every <clinit>) breaks it.
-  lazy val oracles: Map[String, String] = Map(
-    // ivf_assign = corpus + the 8 planted canary rows (see TwinOffset)
-    "q_ingest_sketches" ->
-      """SELECT 'docs_sketched' AS stored_table, count(*) AS n_rows FROM documents
-        |UNION ALL
-        |SELECT 'ivf_assign', count(*) + 8 FROM embeddings
-        |ORDER BY stored_table""".stripMargin,
-    "q_near_dup_minhash_stored" -> Dedup.oracles("q_near_dup_minhash"),
-    // the sketch-LSM gate: brute force over the augmented corpus —
-    // appended-copy pairs (J = 1.0) and their cross-neighbor pairs are
-    // all in the replay, so grown-index recall is the hash equality.
-    "q_near_dup_append" -> NearDupAppendOracleSql,
-    // shares the append oracle VERBATIM: appended ≡ compacted pinned.
-    "q_near_dup_compact" -> NearDupAppendOracleSql,
-    // the stored-index gate shares the fresh gate's oracle VERBATIM —
-    // that hash equality IS the fresh-vs-stored differential, pinned 0.
-    "q_bm25_topk_stored" -> TextAnalysis.oracles("q_bm25_topk"),
-    "q_bm25_asof" -> TextAnalysis.oracles("q_bm25_topk"),
-    // LSM append gate: fresh BM25 replayed over the AUGMENTED corpus —
-    // the toks CTE's source is rewritten from the shared Bm25CtesSql
-    // string (no second copy of the formula to drift), and the append
-    // batch VALUES nothing: it's the same `% 101` predicate the Spark
-    // delta build uses, so a batch-definition change edits one constant.
-    "q_bm25_append" -> Bm25AppendOracleSql,
-    // shares the append oracle VERBATIM (the q_bm25_topk_stored rule):
-    // the hash equality IS the appended-vs-compacted differential.
-    "q_bm25_compact" -> Bm25AppendOracleSql,
-    // deletion gates: fresh replay over the REDUCED corpus; purge
-    // shares the mask oracle VERBATIM (masked ≡ purged pinned).
-    "q_bm25_forget" -> Bm25ForgetOracleSql,
-    "q_bm25_purge" -> Bm25ForgetOracleSql,
-    "q_forget_policy" -> Bm25PolicyOracleSql,
-    "q_near_dup_forget" -> NearDupForgetOracleSql,
-    "q_takedown_e2e" -> TakedownE2eOracleSql,
-    "q_near_dup_purge" -> NearDupForgetOracleSql,
-    // brute-force twin of ensureBlockIndex + paragraphAdmit: corpus
-    // blocks → distinct digests; probes rebuilt by the same keep-first
-    // + anti-membership rules (q_dedup_paragraph's CTE shapes)
-    "q_dedup_paragraph_stored" -> {
-      val L = Dedup.ParaBlockLen
-      s"""WITH toks AS (
-         |  SELECT doc_id, string_split(lower(regexp_replace(trim(text), '\\s+', ' ', 'g')), ' ') AS t
-         |  FROM documents),
-         |cb AS (
-         |  SELECT unnest(list_transform(range(CAST((len(t) + ${L - 1}) // $L AS INT)),
-         |         i -> array_to_string(t[i*$L+1:i*$L+$L], ' '))) AS blk
-         |  FROM toks),
-         |stored AS (SELECT DISTINCT substr(md5(blk), 1, 16) AS w FROM cb),
-         |probe AS (
-         |  SELECT doc_id + 10000000 AS doc_id,
-         |         array_to_string(t[1:$L], ' ') || ' ' ||
-         |         array_to_string(list_transform(range(1, ${L + 1}),
-         |           i -> 'nv' || (doc_id + 10000000) || 'x' || i), ' ') AS text
-         |  FROM toks
-         |  WHERE doc_id IN (SELECT doc_id FROM documents ORDER BY doc_id LIMIT 50)),
-         |pbase AS (
-         |  SELECT doc_id,
-         |         string_split(lower(regexp_replace(trim(text), '\\s+', ' ', 'g')), ' ') AS t,
-         |         CAST((len(string_split(lower(regexp_replace(trim(text), '\\s+', ' ', 'g')), ' ')) + ${L - 1}) // $L AS INT) AS nb
-         |  FROM probe),
-         |pblocks AS (
-         |  SELECT doc_id, unnest(range(nb)) AS pos,
-         |         unnest(list_transform(range(nb),
-         |                i -> array_to_string(t[i*$L+1:i*$L+$L], ' '))) AS blk
-         |  FROM pbase),
-         |kept AS (
-         |  SELECT f.doc_id AS doc_id, f.pos AS pos, blk FROM (
-         |    SELECT min(struct_pack(doc_id := doc_id, pos := pos)) AS f, blk
-         |    FROM pblocks GROUP BY blk)
-         |  WHERE substr(md5(blk), 1, 16) NOT IN (SELECT w FROM stored)),
-         |rebuilt AS (
-         |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-         |         string_agg(blk, ' ' ORDER BY pos) AS admit_text
-         |  FROM kept GROUP BY doc_id)
-         |SELECT b.doc_id, CAST(b.nb AS BIGINT) AS n_blocks,
-         |       CAST(COALESCE(r.n_kept, 0) AS BIGINT) AS n_kept,
-         |       COALESCE(r.admit_text, '') AS admit_text
-         |FROM pbase b LEFT JOIN rebuilt r USING (doc_id) ORDER BY b.doc_id""".stripMargin
-    },
-    // batched phrase search: the oracle replays the SAME adjacency
-    // algorithm over the SAME tokenizer (spec VALUES generated from
-    // PhraseBatch — the bm25BatchCtesSql rule, no hand-copied phrase
-    // list to drift). generate_subscripts is 1-based where posexplode
-    // is 0-based: `start` shifts by a constant but is grouping-only.
-    "q_phrase_search" -> phraseOracleSql("FROM documents"),
-    // the forget/purge pair replays the identical adjacency chain over
-    // the REDUCED corpus (predicate from the same Scala constants);
-    // purge shares the forget oracle VERBATIM — masked ≡ purged on the
-    // positional axis, pinned by one hash
-    "q_phrase_forget" -> phraseOracleSql(
-      s"""FROM (SELECT doc_id, text FROM documents
-         |        WHERE NOT (doc_id % $ForgetMod = $ForgetRem))""".stripMargin),
-    "q_phrase_purge" -> phraseOracleSql(
-      s"""FROM (SELECT doc_id, text FROM documents
-         |        WHERE NOT (doc_id % $ForgetMod = $ForgetRem))""".stripMargin),
-
-    // batched BM25: per-query replay of the shared formula — tf/df per
-    // (q_id, term), the same (N, Σdl) stats, rounded scores, per-query
-    // row_number rank. q_id cast BIGINT (Spark lit(1L)); the absent
-    // term 'state' matches no postings and silently contributes 0.
-    "q_bm25_batch" ->
-      s"""WITH ${bm25BatchCtesSql(BatchQueryTerms)}
-        |SELECT q_id, rnk, doc_id FROM (
-        |  SELECT q_id, doc_id,
-        |         row_number() OVER (PARTITION BY q_id
-        |                            ORDER BY score DESC, doc_id) AS rnk
-        |  FROM scored)
-        |WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin,
-
-    // batched evaluation: per-query fusion + metric + mean in ONE
-    // statement — sparse = the SHARED q_id-keyed BM25 CTE chain (the
-    // Bm25CtesSql rule), dense = the q_knn_join oracle's rounded
-    // ranking relabeled 1..8 by probe vec_id rank, RRF and nDCG
-    // arithmetic identical to q_rrf_fusion / q_ndcg_rrf, DOUBLE-cast.
-    // same CTE chain as q_ndcg_batch through `ranked`/`dense`; MRR =
-    // 1/min rank of a relevant hit, 0 on a miss, mean over queries.
-    "q_mrr_batch" ->
-      s"""WITH $hybridRankedCtesSql,
-        |hits AS (
-        |  SELECT ranked.q_id, min(ranked.rank) AS first_rel
-        |  FROM ranked JOIN dense USING (q_id, id) GROUP BY 1),
-        |perq AS (
-        |  SELECT q.q_id,
-        |         round(COALESCE(CAST(1.0 AS DOUBLE) / h.first_rel,
-        |                        CAST(0.0 AS DOUBLE)), 6) AS mrr
-        |  FROM (SELECT DISTINCT q_id FROM dense) q
-        |  LEFT JOIN hits h USING (q_id)),
-        |m AS (SELECT round(avg(mrr), 6) AS mean_mrr FROM perq)
-        |SELECT q_id, mrr, mean_mrr FROM perq, m ORDER BY q_id""".stripMargin,
-
-    "q_ndcg_batch" ->
-      s"""WITH $hybridRankedCtesSql,
-        |rel AS (SELECT q_id, id,
-        |        CAST(${NdcgBatchK + 1} - rank AS DOUBLE) AS rel FROM dense),
-        |dcg AS (
-        |  SELECT ranked.q_id,
-        |         sum(COALESCE(rel.rel, CAST(0.0 AS DOUBLE)) /
-        |             log2(ranked.rank + 1)) AS dcg
-        |  FROM ranked LEFT JOIN rel USING (q_id, id) GROUP BY 1),
-        |idcg AS (
-        |  SELECT q_id,
-        |         sum(CAST(${NdcgBatchK + 1} - rank AS DOUBLE) / log2(rank + 1)) AS idcg
-        |  FROM dense GROUP BY 1),
-        |perq AS (
-        |  SELECT q_id, round(dcg.dcg / idcg.idcg, 6) AS ndcg_at_$NdcgBatchK
-        |  FROM dcg JOIN idcg USING (q_id)),
-        |m AS (SELECT round(avg(ndcg_at_$NdcgBatchK), 6)
-        |      AS mean_ndcg_at_$NdcgBatchK FROM perq)
-        |SELECT q_id, ndcg_at_$NdcgBatchK, mean_ndcg_at_$NdcgBatchK FROM perq, m
-        |ORDER BY q_id""".stripMargin,
-    "q_ivf_append" -> "SELECT CAST(1.0 AS DOUBLE) AS recall_at_10",
-    "q_ivf_compact" ->
-      "SELECT CAST(1.0 AS DOUBLE) AS recall_at_10, CAST(0 AS BIGINT) AS n_diverging",
-    "q_ivfpq_append" -> "SELECT CAST(1.0 AS DOUBLE) AS recall_at_10",
-    "q_ivfpq_compact" ->
-      "SELECT CAST(1.0 AS DOUBLE) AS recall_at_10, CAST(0 AS BIGINT) AS n_diverging",
-    "q_ivfpq_retrain" ->
-      "SELECT CAST(1.0 AS DOUBLE) AS recall_at_10, CAST(0 AS BIGINT) AS n_code_diverging",
-    "q_ivf_topk_stored" -> "SELECT CAST(1.0 AS DOUBLE) AS recall_at_10",
-    "q_mmr_ivf" -> Similarity.MmrOracle,
-    "q_mmr_ivf_envelope" ->
-      "SELECT CAST(5 AS BIGINT) AS n_picks, TRUE AS overlap_ge_090",
-    "q_semdedup_stored" ->
-      """WITH corpus AS (
-        |  SELECT vec_id, embedding FROM embeddings
-        |  UNION ALL
-        |  SELECT vec_id + 10000000, embedding FROM (
-        |    SELECT vec_id, embedding FROM embeddings
-        |    ORDER BY vec_id LIMIT 8)),
-        |dropped AS (
-        |  SELECT DISTINCT b.vec_id
-        |  FROM corpus a JOIN corpus b ON a.vec_id < b.vec_id
-        |  WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.99)
-        |SELECT vec_id FROM corpus
-        |WHERE vec_id NOT IN (SELECT vec_id FROM dropped)
-        |ORDER BY vec_id""".stripMargin,
-    "q_pq_topk_stored" -> "SELECT CAST(1.0 AS DOUBLE) AS recall_at_10",
-    "q_sq_topk_stored" -> "SELECT CAST(1.0 AS DOUBLE) AS recall_at_10",
-    "q_knn_ivfsq_stored" -> "SELECT CAST(1.0 AS DOUBLE) AS recall_at_10",
-    "q_knn_ivfsq_append" -> "SELECT CAST(1.0 AS DOUBLE) AS recall_at_10",
-    "q_knn_ivfsq_compact" ->
-      "SELECT CAST(1.0 AS DOUBLE) AS recall_at_10, CAST(0 AS BIGINT) AS n_diverging",
-    "q_ivfsq_retrain" ->
-      "SELECT CAST(1.0 AS DOUBLE) AS recall_at_10, CAST(0 AS BIGINT) AS n_code_diverging",
-    "q_ivfpq_topk_stored" -> "SELECT CAST(1.0 AS DOUBLE) AS recall_at_10",
-    "q_knn_ivf_stored" -> "SELECT CAST(1.0 AS DOUBLE) AS recall_at_10",
-    // envelope convention (q_hll_merge): the oracle pins the PROPERTY
-    // (all 16 queries landed hits, measured recall >= 0.9); the Spark
-    // side computes the measured quantity for real
-    "q_ivf_recall_envelope" ->
-      "SELECT CAST(16 AS BIGINT) AS n_queries, TRUE AS recall_ge_090",
-    "q_ivfpq_recall_envelope" ->
-      "SELECT CAST(16 AS BIGINT) AS n_queries, TRUE AS recall_ge_090",
-    "q_ivfsq_recall_envelope" ->
-      "SELECT CAST(16 AS BIGINT) AS n_queries, TRUE AS recall_ge_090",
-    "q_pq_distortion_envelope" ->
-      "SELECT CAST(16 AS BIGINT) AS n_queries, TRUE AS adc_lossy, TRUE AS rescore_recovers",
-    "q_knn_ivf_forget" ->
-      "SELECT CAST(1.0 AS DOUBLE) AS recall_surviving, CAST(0 AS BIGINT) AS n_retracted_served",
-    "q_knn_ivfpq_forget" ->
-      "SELECT CAST(1.0 AS DOUBLE) AS recall_surviving, CAST(0 AS BIGINT) AS n_retracted_served",
-    "q_knn_ivfsq_forget" ->
-      "SELECT CAST(1.0 AS DOUBLE) AS recall_surviving, CAST(0 AS BIGINT) AS n_retracted_served",
-    // shares q_knn_ivf_forget's oracle VERBATIM: masked ≡ purged on the
-    // dense axis, pinned by one hash (the q_bm25_purge convention)
-    "q_ivf_purge" ->
-      "SELECT CAST(1.0 AS DOUBLE) AS recall_surviving, CAST(0 AS BIGINT) AS n_retracted_served",
-    "q_ivfpq_purge" ->
-      "SELECT CAST(1.0 AS DOUBLE) AS recall_surviving, CAST(0 AS BIGINT) AS n_retracted_served",
-    "q_ivfsq_purge" ->
-      "SELECT CAST(1.0 AS DOUBLE) AS recall_surviving, CAST(0 AS BIGINT) AS n_retracted_served",
-    "q_knn_ivf_append" -> "SELECT CAST(1.0 AS DOUBLE) AS recall_at_10",
-    "q_knn_ivfpq_stored" -> "SELECT CAST(1.0 AS DOUBLE) AS recall_at_10",
-    "q_knn_ivfpq_append" -> "SELECT CAST(1.0 AS DOUBLE) AS recall_at_10",
-    "q_knn_ivf_compact" ->
-      "SELECT CAST(1.0 AS DOUBLE) AS recall_at_10, CAST(0 AS BIGINT) AS n_diverging"
-  )
+  private[graft] val TakedownDenseProbes: Int = 8
 }

@@ -21,7 +21,7 @@ import org.apache.spark.sql.DataFrame
   * measured at +0.3–0.8 s per memo-using serve, defeating the memo;
   * `canonicalized` itself is a lazy val the semanticHash already
   * forces, so the object compare adds no canonicalization work. */
-private[operators] object PlanMemo {
+private[graft] object PlanMemo {
 
   private val counts = new PlanMemo[Long]
 

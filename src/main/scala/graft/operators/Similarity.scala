@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.VectorOps
-import graft.queries.Tables.embeddings
 
 /** Similarity search over the `embeddings` table (vec_id,
   * embedding `array<float>`, label) — SURVEY.md §2.11.
@@ -49,7 +48,7 @@ object Similarity {
     * so it collects ONCE per (app, source plan) — the embeddingCount
     * memo precedent — and serves as a literal one-row relation: same
     * row, same schema, zero corpus subplans in the serving plan. */
-  private[operators] def queryRow(emb: DataFrame): DataFrame =
+  private[graft] def queryRow(emb: DataFrame): DataFrame =
     localizedBatchFrame(emb.sparkSession,
       collectOneProbe(queryRowDerived(emb)).toArray)
 
@@ -572,35 +571,6 @@ object Similarity {
       .select(round(col("dcg") / col("idcg"), 6).as(s"ndcg_at_$k"))
   }
 
-  /** The hybrid-retrieval input pair shared by q_rrf_fusion and
-    * q_ndcg_rrf: dense = knnJoin's ROUNDED two-phase top-10 for the
-    * min-id probe; sparse = the BM25 top-10. Both checkpointed — each
-    * is a 10-row frame consumed by several downstream shapes, and
-    * without materialization every consumer re-runs the corpus pass
-    * behind it (the jaccardPairsExact rule). */
-  private def hybridLists(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
-    val emb = embeddings(s, dir)
-    // bounded probe → literal relation (collected once per app)
-    val qs = localizedQueryBatch(emb.orderBy("vec_id").limit(1)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb")))
-    // dense and sparse arms are independent — construct AND materialize
-    // each on a pool thread (guide §2.6; same treatment as the batched
-    // hybridRankedLists; meter/write safety via BuildTimer interval
-    // union + Artifacts.buildGate, optimization r16)
-    val Seq(dense, sparse) = graft.Par.run(s.sparkContext, Seq(
-      () => knnJoin(emb, qs, 10)
-        .select(col("vec_id").as("id"), col("rnk").as("rank"))
-        .localCheckpoint(),
-      () => TextAnalysis.bm25TopK(
-          graft.queries.Tables.documents(s, dir), Seq("table", "scan", "join"), 10)
-        .withColumn("rank", row_number().over(
-          Window.orderBy(desc("score"), asc("doc_id")))) // 10-row frame
-        .select(col("doc_id").as("id"), col("rank"))
-        .localCheckpoint()))
-    (dense, sparse)
-  }
-
   /** Embedding near-dup candidate pairs: SRP band self-join + exact
     * cosine verification. The banding bounds the quadratic rescore step;
     * the caller applies a threshold or takes the top pairs.
@@ -768,7 +738,7 @@ object Similarity {
     * rule on the similarity axis: one exact-input double, one rounding,
     * then all downstream arithmetic (weighting, penalties, argmax) is
     * integer and order-independent. */
-  private[operators] def cosMicro(a: Column, b: Column): Column =
+  private[graft] def cosMicro(a: Column, b: Column): Column =
     round(VectorOps.cosine(a, b) * lit(1e6)).cast(org.apache.spark.sql.types.LongType)
 
   /** Maximal Marginal Relevance reranking (Carbonell & Goldstein,
@@ -885,81 +855,6 @@ object Similarity {
         org.apache.spark.sql.Row(p._1, p._2, p._3, p._4)).asJava, schema)
       .orderBy("pick")
   }
-
-  /** DuckDB twin of [[cosMicro]] — replays the kernel term-by-term:
-    * per-element double products, sequential list_sum, dot/sqrt(na·nb),
-    * micro rounding. Exact-input doubles through the identical
-    * association, so the result is bit-identical to the Scala loop
-    * (q_cosine_micro_parity pins this over the whole corpus). The
-    * zero-norm branch mirrors VectorOps.cosine's guard (0, not NaN) so
-    * a zero embedding in a future fixture cannot hash-diverge the
-    * engines. */
-  private[operators] def cosMicroSql(a: String, b: String): String =
-    s"""CAST(round(
-       |  CASE WHEN
-       |      list_sum(list_transform(range(1, len($a) + 1),
-       |        i -> CAST($a[i] AS DOUBLE) * CAST($a[i] AS DOUBLE))) = 0
-       |    OR
-       |      list_sum(list_transform(range(1, len($b) + 1),
-       |        i -> CAST($b[i] AS DOUBLE) * CAST($b[i] AS DOUBLE))) = 0
-       |  THEN 0 ELSE
-       |  list_sum(list_transform(range(1, len($a) + 1),
-       |    i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))
-       |  / sqrt(
-       |      list_sum(list_transform(range(1, len($a) + 1),
-       |        i -> CAST($a[i] AS DOUBLE) * CAST($a[i] AS DOUBLE)))
-       |    * list_sum(list_transform(range(1, len($b) + 1),
-       |        i -> CAST($b[i] AS DOUBLE) * CAST($b[i] AS DOUBLE))))
-       |  END
-       |  * 1e6) AS BIGINT)""".stripMargin
-
-  /** The MMR oracle: the greedy recurrence UNROLLED — pool, pairwise
-    * micro-sims, then one CTE per selection step, each excluding and
-    * penalizing against the union of all previous picks. Generated from
-    * the same (n, k, λ) constants the operator uses. */
-  /** The unrolled greedy-MMR oracle over ANY pool: `poolCtes` is a CTE
-    * chain ending in `pool(vec_id, embedding, rel6)` — brute-force
-    * cosine for q_mmr_rerank/q_mmr_ivf, the RRF-fused hybrid list for
-    * the retrieval e2e. One greedy-replay string, three gates. */
-  private[operators] def mmrGreedyOracleFrom(poolCtes: String): String = {
-    val l = MmrLambdaX10
-    val l1 = 10L - MmrLambdaX10
-    val head =
-      s"""WITH $poolCtes,
-         |sims AS (
-         |  SELECT a.vec_id AS d, b.vec_id AS s,
-         |         ${cosMicroSql("a.embedding", "b.embedding")} AS sim6
-         |  FROM pool a JOIN pool b ON a.vec_id <> b.vec_id),
-         |sel1 AS (
-         |  SELECT vec_id, rel6, 1 AS pick, $l * rel6 AS mmr6
-         |  FROM pool ORDER BY rel6 DESC, vec_id LIMIT 1)""".stripMargin
-    val steps = (2 to MmrK).map { i =>
-      val acc = (1 until i).map(j => s"SELECT vec_id FROM sel$j")
-        .mkString(" UNION ALL ")
-      s"""sel$i AS (
-         |  SELECT vec_id, rel6, $i AS pick, mmr6 FROM (
-         |    SELECT p.vec_id, p.rel6,
-         |           $l * p.rel6 - $l1 * max(sm.sim6) AS mmr6
-         |    FROM pool p JOIN sims sm ON sm.d = p.vec_id
-         |    WHERE sm.s IN ($acc) AND p.vec_id NOT IN ($acc)
-         |    GROUP BY 1, 2)
-         |  ORDER BY mmr6 DESC, vec_id LIMIT 1)""".stripMargin
-    }
-    val union = (1 to MmrK).map(i => s"SELECT * FROM sel$i")
-      .mkString(" UNION ALL ")
-    (head +: steps).mkString(",\n") +
-      s"\nSELECT vec_id, rel6, pick, mmr6 FROM ($union) ORDER BY pick"
-  }
-
-  private[operators] val MmrOracle: String = mmrGreedyOracleFrom(
-    s"""q AS (SELECT embedding AS q_emb FROM embeddings
-       |           WHERE vec_id = (SELECT min(vec_id) FROM embeddings)),
-       |pool AS (
-       |  SELECT vec_id, embedding,
-       |         ${cosMicroSql("embedding", "q_emb")} AS rel6
-       |  FROM embeddings, q
-       |  WHERE vec_id <> (SELECT min(vec_id) FROM embeddings)
-       |  ORDER BY rel6 DESC, vec_id LIMIT $MmrPoolN)""".stripMargin)
 
   // --- product quantization (PQ) ---------------------------------------
 
@@ -1156,383 +1051,4 @@ object Similarity {
         VectorOps.cosine(col("embedding"), col("q_emb")).as("score"))
       .orderBy(desc("score"), asc("vec_id"))
       .limit(k)
-
-  // --- query surface ---------------------------------------------------
-
-  /** This module's share of the driver-visible gate surface —
-    * bump WITH any gate added here (RegistrySpec sums the
-    * module-local declarations; no global count exists). */
-  val declaredGates: Int = 16
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // brute-force exact top-10 (vec_id set is float-robust: the rank-10/11
-    // score gap is >1e-3 at both verify SFs, far above double-vs-float
-    // rounding).
-    "q_cosine_topk" -> ((s, dir) =>
-      cosineTopK(embeddings(s, dir), 10)
-        .select("vec_id")
-        .orderBy("vec_id")),
-
-    // micro-quantized cosine for EVERY vector against the probe — the
-    // cross-engine bit-exactness pin for the cosine kernel itself
-    // (sequential double accumulation, dot/sqrt(na*nb), micro rounding).
-    // This is what licenses emitting micro-cosine VALUES (not just
-    // ranks) from the MMR gate: the oracle replays the arithmetic
-    // element-by-element and the hash must match on the whole corpus.
-    "q_cosine_micro_parity" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      emb.crossJoin(broadcast(queryRow(emb)))
-        .select(col("vec_id"),
-          cosMicro(col("embedding"), col("q_emb")).as("rel6"))
-        .orderBy("vec_id")
-    }),
-
-    // MMR diversified top-k: greedy λ·rel − (1−λ)·max-sim selection over
-    // the bounded rerank pool, all arithmetic in integer micro-cosine.
-    // The oracle unrolls the entire greedy recurrence (pool, pairwise
-    // sims, k selection steps) — the hash pins every pick AND its score.
-    "q_mmr_rerank" -> ((s, dir) => mmrRerank(embeddings(s, dir))),
-
-    // ANN path: band prefilter + exact rescoring. Emits recall@10 against
-    // the in-engine brute-force top-10 (itself hash-verified against
-    // DuckDB by q_cosine_topk), oracle = the literal 1.0 row — so the
-    // hash compare FORCES perfect recall: any prefilter miss turns the
-    // 1.0 into 0.9 and the gate red. The rank-10/11 score gap is > 1e-3
-    // at the verify SFs, far above float rounding, so the exact set is
-    // tie-free.
-    // expand=100: the 64-bit-sketch hamming ranking is a loose cosine
-    // proxy on this near-continuum corpus, and the default ×40 window
-    // drops to recall 0.8 at sf0.1 (×60 is the measured knee; ×100 adds
-    // margin). The operator's tie-inclusive cutoff + N/10 floor carry
-    // the gate through the 10× rehearsal (a hard 1000-row cut measured
-    // 0.7 there); the rescore stays narrow and bounded.
-    "q_ann_topk" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      annTopK(emb, 10, expand = 100,
-        corpusRows = Ingest.embeddingCount(s, dir)).select("vec_id")
-        .join(cosineTopK(emb, 10).select("vec_id"), "vec_id")
-        .agg((count(lit(1)).cast(DoubleType) / 10.0).as("recall_at_10"))
-    }),
-
-    // IVF coarse-quantization path: same forced-recall gate as
-    // q_ann_topk. nProbe=8 of 16 cells is the measured operating point
-    // for recall 1.0 at every verify SF (at sf0.001 the corpus is 100
-    // vectors, ~6 per cell, so the true top-10 spreads across ~8 cells;
-    // at production cell counts the probe fraction falls, not the probe
-    // count). A probe miss flips the 1.0 red — which is the point.
-    "q_ivf_topk" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      ivfTopK(emb, 10, nProbe = 8).select("vec_id")
-        .join(cosineTopK(emb, 10).select("vec_id"), "vec_id")
-        .agg((count(lit(1)).cast(DoubleType) / 10.0).as("recall_at_10"))
-    }),
-
-    // IVF with a TRAINED quantizer (spherical k-means, 3 Lloyd
-    // iterations): same forced-recall gate. Trained centroids partition
-    // the sphere better than the id-seeded ones, so recall 1.0 at
-    // nProbe=8 holds with more margin, not less; a training bug that
-    // degrades the quantizer (collapsed cells, NaN coordinates) breaks
-    // recall and turns the gate red.
-    "q_ivf_trained" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      ivfTopKFrom(emb, kmeansCentroids(emb, 16, iters = 3), 10, nProbe = 8)
-        .select("vec_id")
-        .join(cosineTopK(emb, 10).select("vec_id"), "vec_id")
-        .agg((count(lit(1)).cast(DoubleType) / 10.0).as("recall_at_10"))
-    }),
-
-    // embedding-cosine near-dup, oracle-checked: the corpus is unioned
-    // with a ×2-scaled copy of itself (ids offset by 10M). Scaling by a
-    // power of two commutes with float rounding, so each copy's SRP
-    // sketch is BIT-IDENTICAL to its original's — every (orig, copy)
-    // pair collides in every band and recall of the band prefilter is
-    // provably 1.0, while cosine is scale-invariant (≈1 for the planted
-    // pairs vs ≤ 0.61 for everything else on this corpus — no float
-    // boundary anywhere near the 0.99 cut). DuckDB brute-forces all
-    // pairs of the same doubled corpus, so the gate certifies the whole
-    // pipeline: sketch, banding, self-join, verify, threshold, and
-    // no-false-positives.
-    "q_near_dup_embedding" -> ((s, dir) => {
-      val emb = embeddings(s, dir).select("vec_id", "embedding")
-      val scaled = emb.select((col("vec_id") + lit(10000000L)).as("vec_id"),
-        transform(col("embedding"), x => x * lit(2.0f)).as("embedding"))
-      nearDupPairs(emb.unionByName(scaled))
-        .filter(col("cosine") >= 0.99)
-        .select("v1", "v2")
-        .orderBy("v1", "v2")
-    }),
-
-    // SemDeDup semantic dedup, oracle-checked end-to-end with the same
-    // doubled-corpus construction as q_near_dup_embedding: each ×2-scaled
-    // copy (ids +10M) has BIT-IDENTICAL cosines to every centroid and
-    // seed (power-of-two scaling commutes with IEEE rounding), so every
-    // planted twin provably lands in its original's cluster at every
-    // split depth — recall 1.0 by construction, while exact in-kernel
-    // verification keeps non-twin pairs (cosine ≤ 0.61 on this corpus)
-    // out. Survivors under keep-first are then exactly the vectors with
-    // no ≥0.99 partner at a smaller id — brute-force expressible in
-    // DuckDB, certifying clustering, kernel, threshold, and policy.
-    "q_semdedup" -> ((s, dir) => {
-      val emb = embeddings(s, dir).select("vec_id", "embedding")
-      val scaled = emb.select((col("vec_id") + lit(10000000L)).as("vec_id"),
-        transform(col("embedding"), x => x * lit(2.0f)).as("embedding"))
-      val corpus = emb.unionByName(scaled)
-      semDedupSurvivors(corpus, 0.99, ivfNumCells(PlanMemo.countOnce(corpus)))
-        .orderBy("vec_id")
-    }),
-
-    // batched kNN join: exact top-10 per query over the 8 lowest-id
-    // query vectors (deterministic, sf-stable probe set). Oracle is the
-    // same cross-score + per-query rank in DuckDB; both engines rank
-    // over the ROUNDED score with vec_id tiebreak.
-    "q_knn_join" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val qs = emb.orderBy("vec_id").limit(8)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      knnJoin(emb, qs, 10).orderBy("q_id", "rnk")
-    }),
-
-    // hybrid retrieval: RRF-fuse the dense cosine top-10 (query = the
-    // min-id vector) with the BM25 lexical top-10 — the synthetic corpus
-    // pairs documents.doc_id 1:1 with embeddings.vec_id, which is the
-    // production shape too (the embedding table carries the doc id).
-    // Both inputs are 10-row frames; ranks derive from each list's own
-    // total order, so fusion adds no corpus-scale work at all.
-    "q_rrf_fusion" -> ((s, dir) => {
-      // dense ranks come from knnJoin's ROUNDED two-phase ranking (the
-      // round-6-before-rank rule every ranked gate follows): raw-float
-      // rank order between the two engines' cosine implementations is
-      // exactly the cross-engine coupling the rule exists to remove
-      val (dense, sparse) = hybridLists(s, dir)
-      rrfFuse(Seq(dense, sparse), 10)
-    }),
-
-    // the retrieval wave composed END TO END in one plan: dense kNN +
-    // sparse BM25 → reciprocal-rank fusion → MMR diversification over
-    // the fused candidates (rel = the exactly-integral micro-RRF, sims
-    // = the pinned micro-cosine kernel). The serving-side sibling of
-    // the crawl and curation e2e gates — every stage's arithmetic rides
-    // one hash through the shared greedy-replay oracle.
-    "q_retrieval_pipeline_e2e" -> ((s, dir) => {
-      val (dense, sparse) = hybridLists(s, dir)
-      val pool = rrfFuse(Seq(dense, sparse), 10)
-        .join(embeddings(s, dir), col("id") === col("vec_id"))
-        .select(col("vec_id"), col("embedding"),
-          round(col("rrf") * lit(1e6))
-            .cast(org.apache.spark.sql.types.LongType).as("rel6"))
-      mmrRerankPool(pool, MmrK)
-    }),
-
-    // retrieval evaluation: nDCG@10 of the fused hybrid list against the
-    // dense ideal — fusion deliberately reorders, so the metric pins the
-    // REAL cross-list behavior, not a trivial 1.0.
-    "q_ndcg_rrf" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val (dense, sparse) = hybridLists(s, dir)
-      val ranked = rrfFuse(Seq(dense, sparse), 10)
-        .withColumn("rank", row_number().over(
-          Window.orderBy(desc("rrf"), asc("id")))) // 10-row frame
-        .select("id", "rank")
-      ndcgAtK(ranked, dense, 10)
-    }),
-
-    // kNN label propagation: the lowest-id 400 of the vec_id%5 hold-out
-    // classified by majority vote of their 10 nearest labeled neighbors
-    // (the bounded broadcast batch — one linear pass per batch).
-    "q_knn_classify" -> ((s, dir) =>
-      knnClassify(embeddings(s, dir), 10).orderBy("vec_id")),
-
-    // PQ path: 8-byte-code ADC ranking + exact rescore, same
-    // forced-recall gate as q_ann_topk/q_ivf_topk. Operating point
-    // measured at sf0.1 on this near-continuum synthetic corpus:
-    // K=16 codebooks rank too coarsely (recall 0.7-0.8 even at
-    // expand=60), K=256 (the standard 8-bit PQ setting) holds recall
-    // 1.0 at every verify SF with the 600-candidate rescore window.
-    "q_pq_topk" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      pqTopK(emb, 10, expand = 60).select("vec_id")
-        .join(cosineTopK(emb, 10).select("vec_id"), "vec_id")
-        .agg((count(lit(1)).cast(DoubleType) / 10.0).as("recall_at_10"))
-    }),
-
-    // contrastive hard-negative mining: top-5 cross-label neighbors per
-    // anchor (the % 7 slice, budget-bounded). Oracle = brute-force
-    // replay with the identical slice, label filter, rounding and tie
-    // order — recall is pinned 1.0 BY the hash, not sampled.
-    "q_hard_negatives" -> ((s, dir) =>
-      hardNegatives(embeddings(s, dir), 5).orderBy("q_id", "rnk")),
-
-    // per-label corpus stats (int-only: oracle-safe).
-    "q_embed_stats" -> ((s, dir) =>
-      embeddings(s, dir)
-        .groupBy("label")
-        .agg(count(lit(1)).as("n_vecs"),
-          sum(size(col("embedding"))).as("total_dims"))
-        .orderBy("label"))
-  )
-
-  /** Shared RRF oracle CTE block (`q`/`dense`/BM25 CTEs/`sparse`/
-    * `fusedtop`), spliced into q_rrf_fusion and q_ndcg_rrf — one string,
-    * two gates (the Bm25CtesSql rule, one level up). `fusedtop` ends as
-    * the rounded fused top-10 with its vote count. */
-  val RrfCtesSql: String =
-    s"""q AS (SELECT embedding AS q_emb FROM embeddings
-      |           WHERE vec_id = (SELECT min(vec_id) FROM embeddings)),
-      |dense AS (
-      |  SELECT vec_id AS id,
-      |         row_number() OVER (ORDER BY score DESC, vec_id) AS rank
-      |  FROM (
-      |    SELECT vec_id, round(list_cosine_similarity(embedding, q_emb), 6) AS score
-      |    FROM embeddings, q WHERE vec_id <> (SELECT min(vec_id) FROM embeddings))
-      |  QUALIFY rank <= 10),
-      |${graft.operators.TextAnalysis.Bm25CtesSql},
-      |sparse AS (
-      |  SELECT doc_id AS id,
-      |         row_number() OVER (ORDER BY score DESC, doc_id) AS rank
-      |  FROM bm),
-      |fused AS (
-      |  SELECT id, CAST(1.0 AS DOUBLE) / (CAST(60.0 AS DOUBLE) + rank) AS contrib FROM dense
-      |  UNION ALL
-      |  SELECT id, CAST(1.0 AS DOUBLE) / (CAST(60.0 AS DOUBLE) + rank) AS contrib FROM sparse),
-      |fusedtop AS (
-      |  SELECT id, round(sum(contrib), 6) AS rrf,
-      |         CAST(count(*) AS BIGINT) AS n_lists
-      |  FROM fused GROUP BY 1 ORDER BY rrf DESC, id LIMIT 10)""".stripMargin
-
-  val oracles: Map[String, String] = Map(
-    // forced-recall gates: the Spark side measures recall@10 of the
-    // approximate path against the exact brute-force top-10; the oracle
-    // pins it to exactly 1.0.
-    "q_ann_topk" -> "SELECT CAST(1.0 AS DOUBLE) AS recall_at_10",
-    "q_ivf_topk" -> "SELECT CAST(1.0 AS DOUBLE) AS recall_at_10",
-    "q_ivf_trained" -> "SELECT CAST(1.0 AS DOUBLE) AS recall_at_10",
-    "q_pq_topk" -> "SELECT CAST(1.0 AS DOUBLE) AS recall_at_10",
-    "q_near_dup_embedding" ->
-      """WITH corpus AS (
-        |  SELECT vec_id, embedding FROM embeddings
-        |  UNION ALL
-        |  SELECT vec_id + 10000000, list_transform(embedding, x -> x * 2)
-        |  FROM embeddings)
-        |SELECT a.vec_id AS v1, b.vec_id AS v2
-        |FROM corpus a JOIN corpus b ON a.vec_id < b.vec_id
-        |WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.99
-        |ORDER BY v1, v2""".stripMargin,
-    "q_semdedup" ->
-      """WITH corpus AS (
-        |  SELECT vec_id, embedding FROM embeddings
-        |  UNION ALL
-        |  SELECT vec_id + 10000000, list_transform(embedding, x -> x * 2)
-        |  FROM embeddings),
-        |dropped AS (
-        |  SELECT DISTINCT b.vec_id
-        |  FROM corpus a JOIN corpus b ON a.vec_id < b.vec_id
-        |  WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.99)
-        |SELECT vec_id FROM corpus
-        |WHERE vec_id NOT IN (SELECT vec_id FROM dropped)
-        |ORDER BY vec_id""".stripMargin,
-    "q_cosine_topk" ->
-      """WITH q AS (SELECT embedding AS q_emb FROM embeddings
-        |           WHERE vec_id = (SELECT min(vec_id) FROM embeddings))
-        |SELECT vec_id FROM (
-        |  SELECT vec_id, list_cosine_similarity(embedding, q_emb) AS score
-        |  FROM embeddings, q WHERE vec_id <> (SELECT min(vec_id) FROM embeddings)
-        |  ORDER BY score DESC, vec_id LIMIT 10)
-        |ORDER BY vec_id""".stripMargin,
-
-    "q_cosine_micro_parity" ->
-      s"""WITH q AS (SELECT embedding AS q_emb FROM embeddings
-         |           WHERE vec_id = (SELECT min(vec_id) FROM embeddings))
-         |SELECT vec_id, ${cosMicroSql("embedding", "q_emb")} AS rel6
-         |FROM embeddings, q
-         |ORDER BY vec_id""".stripMargin,
-
-    "q_mmr_rerank" -> MmrOracle,
-    "q_knn_join" ->
-      """WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb
-        |           FROM embeddings ORDER BY vec_id LIMIT 8),
-        |scored AS (
-        |  SELECT q.q_id, e.vec_id,
-        |         round(list_cosine_similarity(e.embedding, q.q_emb), 6) AS score
-        |  FROM embeddings e, q WHERE e.vec_id <> q.q_id)
-        |SELECT q_id, rnk, vec_id FROM (
-        |  SELECT q_id, vec_id,
-        |         row_number() OVER (PARTITION BY q_id
-        |                            ORDER BY score DESC, vec_id) AS rnk
-        |  FROM scored)
-        |WHERE rnk <= 10 ORDER BY q_id, rnk""".stripMargin,
-    // RRF: dense list = the q_knn_join oracle's ROUNDED ranking with one
-    // query; sparse list = the SHARED BM25 CTE block (one string, two
-    // gates); fusion arithmetic identical, DOUBLE-cast.
-    "q_rrf_fusion" ->
-      s"""WITH $RrfCtesSql
-        |SELECT id, rrf, n_lists FROM fusedtop ORDER BY rrf DESC, id""".stripMargin,
-
-    // fused-pool greedy replay: the RRF chain feeds the shared MMR
-    // oracle builder — the same greedy steps as q_mmr_rerank, pool
-    // swapped for the hybrid fused list
-    "q_retrieval_pipeline_e2e" -> mmrGreedyOracleFrom(
-      s"""$RrfCtesSql,
-         |pool AS (
-         |  SELECT e.vec_id, e.embedding,
-         |         CAST(round(f.rrf * 1e6) AS BIGINT) AS rel6
-         |  FROM fusedtop f JOIN embeddings e ON e.vec_id = f.id)""".stripMargin),
-    // nDCG@10 of the fused hybrid list against the dense ideal: graded
-    // relevance 11−ideal_rank, log2 discount, one rounded division.
-    "q_ndcg_rrf" ->
-      s"""WITH $RrfCtesSql,
-        |ranked AS (
-        |  SELECT id, row_number() OVER (ORDER BY rrf DESC, id) AS rank
-        |  FROM fusedtop),
-        |rel AS (SELECT id, CAST(11 - rank AS DOUBLE) AS rel FROM dense),
-        |dcg AS (
-        |  SELECT sum(COALESCE(rel.rel, CAST(0.0 AS DOUBLE)) /
-        |             log2(ranked.rank + 1)) AS dcg
-        |  FROM ranked LEFT JOIN rel USING (id)),
-        |idcg AS (
-        |  SELECT sum(CAST(11 - rank AS DOUBLE) / log2(rank + 1)) AS idcg
-        |  FROM dense)
-        |SELECT round(dcg.dcg / idcg.idcg, 6) AS ndcg_at_10 FROM dcg, idcg""".stripMargin,
-    "q_knn_classify" ->
-      """WITH u AS (SELECT vec_id AS q_id, embedding AS q_emb, label AS true_label
-        |           FROM embeddings WHERE vec_id % 5 = 0
-        |           ORDER BY vec_id LIMIT 400),
-        |l AS (SELECT vec_id, embedding, label FROM embeddings WHERE vec_id % 5 <> 0),
-        |scored AS (
-        |  SELECT u.q_id, l.vec_id, l.label,
-        |         round(list_cosine_similarity(l.embedding, u.q_emb), 6) AS score
-        |  FROM l, u),
-        |nn AS (SELECT q_id, label FROM (
-        |  SELECT q_id, label,
-        |         row_number() OVER (PARTITION BY q_id
-        |                            ORDER BY score DESC, vec_id) AS rnk
-        |  FROM scored) WHERE rnk <= 10),
-        |votes AS (SELECT q_id, label, count(*) AS n_votes FROM nn GROUP BY 1, 2),
-        |pred AS (SELECT q_id, label AS pred_label, n_votes FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY q_id
-        |                               ORDER BY n_votes DESC, label) AS rn
-        |  FROM votes) WHERE rn = 1)
-        |SELECT u.q_id AS vec_id, u.true_label, p.pred_label,
-        |       CAST(p.n_votes AS BIGINT) AS n_votes,
-        |       (u.true_label = p.pred_label) AS correct
-        |FROM u JOIN pred p USING (q_id) ORDER BY vec_id""".stripMargin,
-    "q_hard_negatives" ->
-      """WITH a AS (SELECT vec_id AS q_id, embedding AS q_emb, label AS q_label
-        |           FROM embeddings WHERE vec_id % 7 = 0
-        |           ORDER BY vec_id LIMIT 200),
-        |scored AS (
-        |  SELECT a.q_id, a.q_label, e.vec_id, e.label,
-        |         round(list_cosine_similarity(e.embedding, a.q_emb), 6) AS score
-        |  FROM embeddings e, a WHERE e.label <> a.q_label)
-        |SELECT q_id, q_label, CAST(rnk AS INT) AS rnk,
-        |       vec_id AS neg_id, label AS neg_label
-        |FROM (SELECT *, row_number() OVER (PARTITION BY q_id
-        |                                   ORDER BY score DESC, vec_id) AS rnk
-        |      FROM scored)
-        |WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin,
-
-    "q_embed_stats" ->
-      """SELECT label, count(*) AS n_vecs,
-        |       CAST(sum(len(embedding)) AS BIGINT) AS total_dims
-        |FROM embeddings GROUP BY 1 ORDER BY label""".stripMargin
-  )
 }

@@ -120,7 +120,7 @@ class BpeSpec extends SparkSpecBase {
 
   test("encoding compresses the corpus and never crosses word boundaries") {
     val dir = "/root/testdata/sf0.001"
-    val row = Bpe.queries("q_bpe_encode")(spark, dir)
+    val row = SparkEntry.queries("q_bpe_encode")(spark, dir)
       .agg(sum("n_units").as("u"), sum("n_words").as("w"))
       .as[(Long, Long)].collect().head
     val chars = graft.queries.Tables.documents(spark, dir)

@@ -510,7 +510,7 @@ class CurationSpec extends SparkSpecBase {
     val dir = "/root/testdata/sf0.001"
     val docs = graft.queries.Tables.documents(spark, dir).limit(50)
       .select("doc_id", "text").as[(Long, String)].collect().toMap
-    val got = Curation.queries("q_html_extract")(spark, dir)
+    val got = SparkEntry.queries("q_html_extract")(spark, dir)
       .filter(col("doc_id").isin(docs.keys.toSeq: _*))
       .select("doc_id", "extracted", "n_boilerplate_lines")
       .as[(Long, String, Long)].collect()

@@ -66,7 +66,7 @@ class EventStreamSpec extends SparkSpecBase {
     q.awaitTermination()
     val streamed = spark.table("win_test")
       .orderBy("h", "event_type").collect().map(_.toSeq).toSeq
-    val batch = Events.queries("q_events_window")(spark, TestSpark.Sf0001)
+    val batch = SparkEntry.queries("q_events_window")(spark, TestSpark.Sf0001)
       .collect().map(_.toSeq).toSeq
     assert(streamed == batch)
   }
@@ -85,7 +85,7 @@ class EventStreamSpec extends SparkSpecBase {
       .orderBy("event_id").collect().map(_.toSeq).toSeq
     assert(streamed == batch && streamed.nonEmpty)
     // the aggregate over the same join is the oracle-gated batch twin
-    val agg = Events.queries("q_enrich_events")(spark, TestSpark.Sf0001)
+    val agg = SparkEntry.queries("q_enrich_events")(spark, TestSpark.Sf0001)
       .agg(sum("n_events")).collect().head.getLong(0)
     assert(agg == streamed.size)
   }
@@ -786,7 +786,7 @@ class EventStreamSpec extends SparkSpecBase {
       .agg(org.apache.spark.sql.functions.max("n_events").as("n_events"),
         org.apache.spark.sql.functions.max("n_sessions").as("n_sessions"))
       .orderBy("user_id").collect().map(_.toSeq).toSeq
-    val batch = Events.queries("q_sessionize")(spark, TestSpark.Sf0001)
+    val batch = SparkEntry.queries("q_sessionize")(spark, TestSpark.Sf0001)
       .collect().map(_.toSeq).toSeq
     assert(streamed == batch)
   }
@@ -801,7 +801,7 @@ class EventStreamSpec extends SparkSpecBase {
     // finalized prefix: every emitted session must match the batch
     // session set exactly, and the emitted count must cover all batch
     // sessions that END more than 1h+gap before the max event time.
-    val batchSessions = Events.queries("q_session_window")(spark, TestSpark.Sf0001)
+    val batchSessions = SparkEntry.queries("q_session_window")(spark, TestSpark.Sf0001)
       .agg(sum("n_sessions")).collect().head.getLong(0)
     val streamedRows = spark.table("sw_test")
     val streamed = streamedRows.count()
@@ -832,7 +832,7 @@ class EventStreamSpec extends SparkSpecBase {
     val streamed = spark.table("funnel_test")
       .groupBy("user_id").agg(count(lit(1)).as("n_attributed"))
       .orderBy("user_id").collect().map(_.toSeq).toSeq
-    val batch = Events.queries("q_funnel_attrib")(spark, TestSpark.Sf0001)
+    val batch = SparkEntry.queries("q_funnel_attrib")(spark, TestSpark.Sf0001)
       .collect().map(_.toSeq).toSeq
     assert(streamed == batch)
   }

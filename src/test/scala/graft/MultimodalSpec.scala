@@ -543,7 +543,7 @@ class MultimodalSpec extends SparkSpecBase {
   }
 
   test("video dedup plan: candidate join is a shuffled equi-join, counts broadcast, no cartesian") {
-    val df = Multimodal.queries("q_video_dedup")(spark, TestSpark.Sf0001)
+    val df = SparkEntry.queries("q_video_dedup")(spark, TestSpark.Sf0001)
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"),
@@ -674,7 +674,7 @@ class MultimodalSpec extends SparkSpecBase {
     // the media frame is STORED once (ensureMediaFrame); the metadata
     // aggregation's scan must prune the binary payload column — the
     // whole point of columnar multimodal storage at 100 TB
-    val df = Multimodal.queries("q_multimodal_meta")(spark, TestSpark.Sf0001)
+    val df = SparkEntry.queries("q_multimodal_meta")(spark, TestSpark.Sf0001)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("ReadSchema: struct<mime:string,n_bytes:bigint>"),
       s"stored-frame scan must read only (mime, n_bytes):\n$plan")

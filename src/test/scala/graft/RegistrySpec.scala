@@ -2,15 +2,16 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.Registry
+import graft.gates.{Gates, Registry}
 
-/** Registry-integrity guard (round-13 verdict #2): the query surface
-  * is a 16-way map union and a plain `++` silently keeps the
+/** Registry-integrity guard (round-13 verdict #2): the gate surface is
+  * a union of per-file row lists, and a plain `++` silently keeps the
   * right-most binding on a key collision — round 12's per-lang card
   * shadowed round 7's per-source one exactly this way. These tests
-  * plant deliberate collisions/holes to prove assembly fails LOUDLY,
-  * and pin the real surface's size so the gate count is asserted, not
-  * hand-counted. */
+  * plant deliberate collisions to prove assembly fails LOUDLY, and pin
+  * the real surface's size so the gate count is asserted, not
+  * hand-counted. A query without an oracle cannot be written: both
+  * halves are fields of one `Gate`. */
 class RegistrySpec extends AnyFunSuite {
 
   test("unionDistinct refuses a planted duplicate key, naming key and owners") {
@@ -31,63 +32,14 @@ class RegistrySpec extends AnyFunSuite {
     assert(m == Map("q_x" -> 1, "q_y" -> 2))
   }
 
-  test("requireAligned refuses a query without an oracle and vice versa") {
-    val e1 = intercept[IllegalStateException] {
-      Registry.requireAligned(Set("q_a", "q_orphan"), Set("q_a"))
-    }
-    assert(e1.getMessage.contains("q_orphan"), e1.getMessage)
-    val e2 = intercept[IllegalStateException] {
-      Registry.requireAligned(Set("q_a"), Set("q_a", "q_dead_oracle"))
-    }
-    assert(e2.getMessage.contains("q_dead_oracle"), e2.getMessage)
-    Registry.requireAligned(Set("q_a"), Set("q_a")) // aligned = silent
-  }
-
   test("the real registry assembles: aligned keys, derived gate count") {
     val qs = SparkEntry.queries.keySet
-    val os = SparkEntry.oracleSql.keySet
-    assert(qs == os, s"queries/oracles diverge: ${(qs diff os) ++ (os diff qs)}")
-    // the driver-visible gate surface, derived from MODULE-LOCAL
-    // declarations (r13 verdict #6): each module asserts its own share
-    // next to its map, so a forgotten bump reds out naming the module
-    // that drifted instead of a bare global number
-    val declared = Seq[(String, Int, Int)](
-      ("Parity", graft.queries.Parity.declaredGates,
-        graft.queries.Parity.queries.size),
-      ("TextAnalysis", graft.operators.TextAnalysis.declaredGates,
-        graft.operators.TextAnalysis.queries.size),
-      ("Dedup", graft.operators.Dedup.declaredGates,
-        graft.operators.Dedup.queries.size),
-      ("Similarity", graft.operators.Similarity.declaredGates,
-        graft.operators.Similarity.queries.size),
-      ("Events", graft.operators.Events.declaredGates,
-        graft.operators.Events.queries.size),
-      ("Multimodal", graft.operators.Multimodal.declaredGates,
-        graft.operators.Multimodal.queries.size),
-      ("ScalePatterns", graft.operators.ScalePatterns.declaredGates,
-        graft.operators.ScalePatterns.queries.size),
-      ("AsOf", graft.operators.AsOf.declaredGates,
-        graft.operators.AsOf.queries.size),
-      ("Ingest", graft.operators.Ingest.declaredGates,
-        graft.operators.Ingest.queries.size),
-      ("Curation", graft.operators.Curation.declaredGates,
-        graft.operators.Curation.queries.size),
-      ("Crawl", graft.operators.Crawl.declaredGates,
-        graft.operators.Crawl.queries.size),
-      ("CorpusStats", graft.operators.CorpusStats.declaredGates,
-        graft.operators.CorpusStats.queries.size),
-      ("Spectral", graft.operators.Spectral.declaredGates,
-        graft.operators.Spectral.queries.size),
-      ("Bpe", graft.operators.Bpe.declaredGates,
-        graft.operators.Bpe.queries.size),
-      ("Formats", graft.operators.Formats.declaredGates,
-        graft.operators.Formats.queries.size))
-    val drifted = declared.collect { case (m, want, got) if want != got =>
-      s"$m declares $want gates but registers $got" }
-    assert(drifted.isEmpty, drifted.mkString("; "))
-    // unionDistinct proves pairwise disjointness, so Σ declared == |union|
-    assert(qs.size == declared.map(_._2).sum,
-      s"surface ${qs.size} != Σ module declarations ${declared.map(_._2).sum}" +
-        " — a module is missing from this table")
+    assert(qs == SparkEntry.oracleSql.keySet)
+    // the whole gate surface; the message names every gates
+    // file's row count, so a dropped or added gate reds out pointing
+    // at the file that moved
+    val perFile = Gates.files.map { case (f, gs) => s"$f=${gs.size}" }
+    assert(qs.size == 224,
+      s"gate surface ${qs.size} != 224: ${perFile.mkString(", ")}")
   }
 }
